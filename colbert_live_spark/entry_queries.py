@@ -493,8 +493,9 @@ def q_bm25_phrase_wand(spark, sf_dir):
 
 def q_bm25_filtered_wand(spark, sf_dir):
     """F1 at scale: the metadata predicate composed with the COMPRESSED
-    index path — the filter-id set shuffles by doc shard and cogroups with
-    the matched blocks (never collected to the driver; see wand_search).
+    index path — the filter-id set shuffles by doc shard and each shard's
+    task scores that shard's postings file (never collected to the driver;
+    see wand_search).
     Corpus statistics stay global (reference semantics: the tag filter of
     `example/cmdline/db.py:82-88` narrows candidates, not the model)."""
     from colbert_live_spark.operators.wand import wand_search
@@ -529,7 +530,7 @@ def built_deleted_root(spark, sf_dir: str) -> str:
     import hashlib
     import os
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_segdel_v3_{tag}"
+    root = f"/tmp/cls_segdel_v5_{tag}"
     ready = f"{root}/_READY"
     if not os.path.exists(ready):
         # sentinel-guarded: a process killed mid-setup must not leave a
@@ -552,7 +553,7 @@ def built_live_root(spark, sf_dir: str) -> str:
     import hashlib
     import os
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_seglive_v3_{tag}"
+    root = f"/tmp/cls_seglive_v5_{tag}"
     ready = f"{root}/_READY"
     if not os.path.exists(ready):
         import shutil
@@ -606,7 +607,7 @@ def built_compacted_root(spark, sf_dir: str) -> str:
     import hashlib
     import os
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_segcomp_v3_{tag}"
+    root = f"/tmp/cls_segcomp_v5_{tag}"
     ready = f"{root}/_READY"
     if not os.path.exists(ready):
         import shutil
@@ -645,7 +646,7 @@ def built_streamed_root(spark, sf_dir: str) -> str:
     import hashlib
     import os
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_segstream_v4_{tag}"
+    root = f"/tmp/cls_segstream_v5_{tag}"
     ready = f"{root}/_READY"
     if not os.path.exists(ready):
         import shutil
@@ -683,7 +684,7 @@ def built_updated_root(spark, sf_dir: str) -> str:
     import hashlib
     import os
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_segupd_v4_{tag}"
+    root = f"/tmp/cls_segupd_v5_{tag}"
     ready = f"{root}/_READY"
     if not os.path.exists(ready):
         import shutil

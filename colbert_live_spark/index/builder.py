@@ -25,11 +25,11 @@ The doc-shard salt serves two masters at once:
 - **skew**: ``doc_shards >= ceil(max df / salt_rows)`` splits every posting
   list into doc-disjoint sub-lists of ≤ ``salt_rows`` rows, so the largest
   (term, salt) merge group is bounded regardless of Zipf head terms;
-- **batched serving**: because the shard is doc-complete across terms, query
-  evaluation groups blocks by shard (not by query) — each shard scores ALL
-  queries of a batch locally and only k rows per (query, shard) merge
-  globally. Compressed blocks move exactly once per batch, independent of
-  batch size (the round-1 per-query replication fix; see operators/wand.py).
+- **batched serving**: because the shard is doc-complete across terms and
+  written as one file, one serving task per file scores ALL queries of a
+  batch locally and only k rows per (query, shard) merge globally.
+  Compressed blocks never move, independent of batch size (see
+  operators/wand.py).
 
 Scale notes:
 - the ONLY large shuffle is the hash repartition of runs on (term_id, salt);
@@ -491,7 +491,7 @@ def merge_index(
     # mini-index of its doc subset — serving then assigns one task per
     # FILE, each reading its own blocks directly (term_id predicate pushed
     # to parquet row-group pruning) with NO shuffle of block bytes
-    # (operators/wand.py fast path). Partition volume stays balanced under
+    # (operators/wand.py). Partition volume stays balanced under
     # Zipf skew because hash(doc_id) spreads every term's postings
     # uniformly across the doc_shards salts; the per-(term,salt) group
     # bound (≤ salt_rows) is unchanged.
@@ -650,29 +650,28 @@ def merge_index(
             schema=BLOCK_SCHEMA)
     # partitionBy(salt): EXACTLY one file per doc shard (each shuffle
     # partition holds whole salts, so each salt is written by exactly one
-    # task into its own salt=<s>/ directory). The serving file-tasks then
-    # get D equal-volume units of work — hash occupancy of D salts into D
-    # hash partitions would otherwise leave ~1/e of files empty-sized and
-    # some with 2-3 salts (measured max/mean 1.69 at 1M docs → straggler
-    # tail at high core counts). Readers: Spark partition discovery
-    # restores the salt column for the cogroup path; the pyarrow file
-    # tasks don't need it (scoring is salt-oblivious within a file).
-    blocks_df.write.partitionBy("salt").mode("overwrite").parquet(
-        f"{out_dir}/postings")
+    # task into its own salt=<s>/ directory; maxRecordsPerFile=0 overrides
+    # any session-level split). The serving file tasks then get D
+    # equal-volume units of work — hash occupancy of D salts into D hash
+    # partitions would otherwise leave ~1/e of files empty-sized and some
+    # with 2-3 salts (measured max/mean 1.69 at 1M docs → straggler tail at
+    # high core counts). Scoring is salt-oblivious within a file.
+    (blocks_df.write.partitionBy("salt").option("maxRecordsPerFile", 0)
+     .mode("overwrite").parquet(f"{out_dir}/postings"))
 
-    # VERIFY the one-file-per-salt invariant before stamping layout salt_v3:
-    # the serving fast path scores each postings file independently, so a
-    # salt split across two files (spark.sql.files.maxRecordsPerFile set in
-    # the session, speculative writes, a future writer change) would emit
-    # partial per-file scores and merge them as duplicates SILENTLY. If any
-    # salt directory holds >1 file, stamp the layout as salt_v2 — serving
-    # then takes the groupBy(salt) path, which is slower but correct.
+    # VERIFY the one-file-per-salt invariant before stamping salt_v3: each
+    # serving task scores one postings file, so a salt split across two
+    # files (speculative writes, a future writer change) would emit partial
+    # per-file scores and merge them as duplicates silently.
     per_salt: dict[str, int] = {}
     for f in fsio.list_files(f"{out_dir}/postings", ".parquet"):
         key = f.rsplit("/", 2)[-2]
         per_salt[key] = per_salt.get(key, 0) + 1
-    layout = ("salt_v3" if all(c == 1 for c in per_salt.values())
-              else "salt_v2")
+    split = sorted(k for k, c in per_salt.items() if c > 1)
+    if split:
+        raise RuntimeError(
+            f"{out_dir}/postings: {split} hold several files each; every "
+            "doc shard must be written as one file")
 
     n_blocks = _parquet_rows(f"{out_dir}/postings")
     _append_ledger(spark, out_dir, (
@@ -684,10 +683,9 @@ def merge_index(
                     "block_size": block_size, "n_docs": int(n_docs),
                     "avgdl": avgdl, "sum_dl": sum_dl,
                     "doc_shards": int(doc_shards),
-                    # salt_v3 ⟺ every doc shard's blocks live wholly in ONE
-                    # postings file (verified above) → the shuffle-free
-                    # file-task serving path applies
-                    "layout": layout}))
+                    # salt_v3: every doc shard's blocks live wholly in ONE
+                    # postings file (verified above)
+                    "layout": "salt_v3"}))
     # release the dense-id persist (it leaked one cached DataFrame per
     # merge_index call — one per segment / streaming micro-batch)
     cached = getattr(raw_dict, "_cls_persisted", None)

@@ -9,58 +9,50 @@ the Lucene/LSM pattern:
 - ``add_segment``: each ingest batch becomes an independent mini-index
   (built with the same two-stage builder), registered in a root MANIFEST.
   Doc ids are made globally unique by a per-segment base offset. All
-  segments share the root's ``doc_shards`` so the doc-shard key is
-  consistent across the whole root (batched serving + distributed
-  tombstone/filter cogroups depend on this).
-- ``delete_docs``: deletes are tombstones — a doc-id set plus *exact*
-  per-term df deltas and dl sums captured from the checkpointed stage-1
-  runs at delete time. Queries anti-filter tombstoned ids inside the
-  scorer and correct N / avgdl / df→idf, so results are exactly what a
-  from-scratch rebuild without those docs would produce (tested).
+  segments share the root's ``doc_shards``, so one doc-shard key (salt)
+  holds across the whole root.
+- ``delete_docs``: deletes are tombstones — a doc-id set partitioned by
+  doc shard (``shard=<salt>/``) plus *exact* per-term df deltas and dl sums
+  captured from the checkpointed stage-1 runs at delete time. Queries
+  exclude tombstoned ids inside the scorer and correct N / avgdl / df→idf,
+  so results are exactly what a from-scratch rebuild without those docs
+  would produce (tested).
 - ``update_docs`` = delete + re-add as a new segment ("modify"), committed
   as ONE atomic manifest swap: both phases stage data files first and a
   single manifest write makes them visible together, so a crash mid-update
   can never expose the deleted-but-not-re-added intermediate state (the
   reference's per-row upsert has no such window; tested by killing between
   the phases).
-- ``segment_search``: queries union all active segments' matched posting
-  blocks; **corpus statistics (N, avgdl, df→idf) are computed globally
-  across segments (minus tombstones) at query time**. Blocks store the
-  idf-free BM25 weight, so stored data stays valid as global df changes;
-  because the stored block ``max_weight`` was computed with the segment's
-  own avgdl, it is scaled by max(1, avgdl_global/avgdl_segment) before
-  pruning — w(avgdl) grows at most linearly in avgdl, so the scaled bound
-  remains a true upper bound (safe pruning under avgdl drift).
+- ``segment_search`` / ``segment_search_local``: the serving core of
+  operators/wand.py — one driver-side plan with corpus statistics computed
+  globally across segments minus tombstones, run as one Spark task per
+  (segment, postings file) or in-process.
 - ``compact``: folds all segments' stage-1 runs into one new segment via
   the ordinary merge (the LSM compaction), physically dropping tombstoned
-  docs, then swaps the manifest.
+  docs, then swaps the manifest. It also migrates roots whose tombstones
+  predate shard partitioning (serving refuses those).
 
 Scale: a segment is the unit of ingest atomicity; query cost grows with
-segment count only in the tiny dictionary-lookup phase (ONE unioned Spark
-job over all segment dictionaries, not one job per segment), and compaction
-bounds segment count. Tombstones shuffle by doc shard and cogroup with the
-matched blocks — nothing is collected to the driver.
+segment count only in the driver-side dictionary point-reads (concurrent,
+row-group pruned, cached per manifest), and compaction bounds segment
+count. Nothing is collected to the driver except tiny metadata.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import shutil
 import time
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from colbert_live_spark.functions.tokenize import py_tokenize
 from colbert_live_spark.index import fsio
 from colbert_live_spark.index.builder import build_index, merge_index
 from colbert_live_spark.operators.wand import (
-    OUT_SCHEMA, PARTIAL_SCHEMA, build_qmeta, merge_topk, pruning_isin,
-    score_shard_queries, shard_expr)
+    resolve, run_local, run_spark, shard_expr)
 
 MANIFEST = "MANIFEST.json"
 DEFAULT_DOC_SHARDS = 16
@@ -217,11 +209,11 @@ def _stage_add(
     seg = f"seg{m['seq']:05d}"
     seg_dir = f"{root}/segments/{seg}"
     shifted = docs.withColumn(id_col, F.col(id_col).cast("long") + F.lit(base))
-    # ALL segments of a root must share one doc-shard modulus (tombstone/
-    # filter cogroups key on it). The first ingest fixes it: explicit
-    # doc_shards if given, else auto-sized by the first batch's df_max with
-    # 8x headroom so the salt_rows merge bound keeps holding as the root
-    # grows well beyond that batch (builder.merge_index docstring).
+    # ALL segments of a root must share one doc-shard modulus (tombstone
+    # partitions and filter groups key on it). The first ingest fixes it:
+    # explicit doc_shards if given, else auto-sized by the first batch's
+    # df_max with 8x headroom so the salt_rows merge bound keeps holding as
+    # the root grows well beyond that batch (builder.merge_index docstring).
     first = m["doc_shards"] is None
     build_index(spark, shifted, seg_dir, id_col=id_col, text_col=text_col,
                 n_groups=1, n_shards=n_shards, salt_rows=salt_rows,
@@ -297,7 +289,10 @@ def _tombstone_ids(spark: SparkSession, root: str, m: dict) -> DataFrame | None:
     files = m["tombstones"]["files"]
     if not files:
         return None
-    return spark.read.parquet(*[f"{root}/{f}" for f in files])
+    # recursive: reads shard-partitioned and older flat tombstone dirs alike
+    # (compact() is the migration path for the latter)
+    return (spark.read.option("recursiveFileLookup", "true")
+            .parquet(*[f"{root}/{f}" for f in files]).select("doc_id"))
 
 
 def delete_docs(spark: SparkSession, root: str,
@@ -367,8 +362,12 @@ def _stage_delete(spark: SparkSession, root: str, m: dict,
     tag = f"{m['seq']:05d}-{len(m['tombstones']['files']):04d}"
     tomb_rel = f"tombstones/tomb-{tag}"
     delta_rel = f"tombstones/delta-{tag}"
-    docdl.select("doc_id").repartition(1).write.mode("overwrite").parquet(
-        f"{root}/{tomb_rel}")
+    # partitioned by doc shard (= the postings salt), so each serving file
+    # task reads only its own salt's slice of the tombstones
+    (docdl.select("doc_id")
+     .withColumn("shard", shard_expr(F.col("doc_id"), m["doc_shards"]))
+     .repartition(1).write.partitionBy("shard").mode("overwrite")
+     .parquet(f"{root}/{tomb_rel}"))
     agg.repartition(1).write.mode("overwrite").parquet(
         f"{root}/{delta_rel}")
     t = m["tombstones"]
@@ -418,134 +417,6 @@ def update_docs(spark: SparkSession, docs: DataFrame, root: str,
     return seg
 
 
-def _df_deltas(spark: SparkSession, root: str, m: dict,
-               terms: list[str]) -> dict[str, int]:
-    files = m["tombstones"]["delta_files"]
-    if not files or not terms:
-        return {}
-    d = (spark.read.parquet(*[f"{root}/{f}" for f in files])
-         .filter(F.col("term").isin(terms))
-         .groupBy("term").agg(F.sum("ddf").alias("ddf")).collect())
-    return {r.term: int(r.ddf) for r in d}
-
-
-# a tombstone set up to this size is broadcast to the file tasks (8 B/id →
-# ≤16 MB); larger sets fall back to the cogroup topology (and are the signal
-# to compact() anyway)
-TOMBSTONE_BROADCAST_MAX = 2_000_000
-
-
-def _fast_path_search(spark, root, m, seg_dicts, gterm_id, bc, avgdl, k,
-                      prune, conjunctive):
-    """Shuffle-free segmented serving: ONE task per (segment, postings
-    file). Valid because doc ids are globally unique across segments (a
-    doc's complete postings live wholly inside one segment's one salt_v3
-    file), so per-file exact top-k candidates union to a superset of the
-    global top-k, exactly like the monolithic fast path
-    (`operators/wand.py`). Block bytes never enter an Exchange; the only
-    shuffle is the D·S·k-candidate merge.
-
-    Requires every segment to carry the verified ``salt_v3`` layout and the
-    tombstone set to fit the broadcast cap. Returns None when inapplicable
-    (caller falls back to the cogroup-by-shard topology)."""
-    seg_info: list[tuple[str, str, float, dict[int, int], list[int]]] = []
-    for s in m["segments"]:
-        sd = seg_dicts.get(s["name"], {})
-        mapping = {int(tid): gterm_id[t] for t, (tid, _df) in sd.items()
-                   if t in gterm_id}
-        if not mapping:
-            continue
-        try:
-            meta = json.loads(fsio.read_text(
-                f"{root}/segments/{s['name']}/_INDEX_META.json"))
-        except FileNotFoundError:
-            return None
-        if meta.get("layout") != "salt_v3":
-            return None
-        w_scale = max(1.0, avgdl / float(s["avgdl"])) if s["avgdl"] else 1.0
-        files = fsio.list_files(f"{root}/segments/{s['name']}/postings",
-                                ".parquet")
-        for f in files:
-            seg_info.append((s["name"], f, w_scale, mapping,
-                             sorted(mapping)))
-    if not seg_info:
-        return spark.createDataFrame([], OUT_SCHEMA)
-
-    if m["tombstones"]["n_deleted"] > TOMBSTONE_BROADCAST_MAX:
-        return None
-    excl = None
-    if m["tombstones"]["files"]:
-        cols = []
-        for f in m["tombstones"]["files"]:
-            t = fsio.read_parquet_table(f"{root}/{f}", columns=["doc_id"])
-            cols.append(t.column("doc_id").to_numpy())
-        excl = np.unique(np.concatenate(cols)).astype(np.int64)
-
-    # ship per-file scoring context through ONE broadcast (mapping dicts are
-    # |matched terms|-sized per segment — tiny); one Spark partition per
-    # (segment, file) so every file is its own task
-    ctx = spark.sparkContext.broadcast(
-        ([(path, w_scale, mapping, tids)
-          for _seg, path, w_scale, mapping, tids in seg_info], excl))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(i,) for i in range(len(seg_info))],
-                                       len(seg_info)), "i int")
-
-    def run_files(it):
-        import pyarrow.dataset as pads
-        qm, nq = bc.value
-        infos, excl_ids = ctx.value
-        for pdf in it:
-            for i in pdf["i"]:
-                path, w_scale, mapping, tids = infos[int(i)]
-                fs, p = fsio.resolve(path)
-                tab = (pads.dataset(p, format="parquet", filesystem=fs)
-                       .to_table(filter=pruning_isin("term_id", tids)))
-                blocks = tab.to_pandas()
-                if not len(blocks):
-                    continue
-                # remap the segment-local term ids to the global ids the
-                # query metadata speaks, and rescale the stored block-max
-                # bound for global-avgdl drift (true upper bound: w grows
-                # at most linearly in avgdl)
-                blocks["term_id"] = (
-                    blocks["term_id"].map(mapping).astype(np.int64))
-                if w_scale != 1.0:
-                    blocks["max_weight"] = blocks["max_weight"] * w_scale
-                out = score_shard_queries(blocks, qm, nq, avgdl, k, prune,
-                                          conjunctive, exclude_ids=excl_ids)
-                if len(out):
-                    yield out
-
-    partial = fdf.mapInPandas(run_files, schema=PARTIAL_SCHEMA)
-    return merge_topk(partial, k)
-
-
-def _segment_dicts(root: str, seg_names: list[str], terms: list[str],
-                   max_workers: int = 16) -> dict[str, dict]:
-    """{segment -> {term -> (term_id, df)}} via concurrent driver-side
-    pyarrow point-reads of each segment's term-sorted dictionary."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.dataset as pads
-    if not terms or not seg_names:
-        return {s: {} for s in seg_names}
-
-    def one(seg: str) -> tuple[str, dict]:
-        fs, p = fsio.resolve(f"{root}/segments/{seg}/dict")
-        t = (pads.dataset(p, format="parquet", filesystem=fs)
-             .to_table(filter=pruning_isin("term", terms),
-                       columns=["term", "term_id", "df"]))
-        return seg, {term: (int(tid), int(df)) for term, tid, df in
-                     zip(t.column("term").to_pylist(),
-                         t.column("term_id").to_pylist(),
-                         t.column("df").to_pylist())}
-
-    with ThreadPoolExecutor(max_workers=min(max_workers,
-                                            len(seg_names))) as ex:
-        return dict(ex.map(one, seg_names))
-
-
 def segment_search(
     spark: SparkSession,
     root: str,
@@ -555,206 +426,11 @@ def segment_search(
     conjunctive: bool = False,
 ) -> DataFrame:
     """Batched top-k across all active segments, scores identical to a
-    monolithic index rebuilt over exactly the live (non-deleted) docs.
-
-    Same doc-sharded topology as :func:`~colbert_live_spark.operators.wand.
-    wand_search`: matched blocks group by the root-wide doc shard; each
-    shard scores all queries once; tombstone ids cogroup by the same shard
-    key (never collected to the driver)."""
-    m = _read_manifest(root)
-    if not m["segments"]:
-        return spark.createDataFrame([], OUT_SCHEMA)
-    _require_doc_sharded(m, "segment_search")
-    n_docs, avgdl = _global_stats(m)
-    if n_docs <= 0:
-        return spark.createDataFrame([], OUT_SCHEMA)
-    doc_shards = m["doc_shards"] or DEFAULT_DOC_SHARDS
-
-    all_terms = sorted({t for _, q in queries for t in py_tokenize(q)})
-    # Per-segment dictionary lookups as DRIVER-SIDE pyarrow point-reads
-    # (same row-group-pruned pruning_isin path as the monolithic serving
-    # dictionary), fanned out over a thread pool — pyarrow releases the
-    # GIL, so segments resolve concurrently. This replaced a single
-    # unioned Spark job: that job was ~0.5-1 s of fixed per-batch overhead
-    # that is the same at 2 and at 8 cores (it directly ate query scaling
-    # efficiency), while the point-read is O(matched row groups) per
-    # segment and a few ms each.
-    seg_dicts = _segment_dicts(root, [s["name"] for s in m["segments"]],
-                               all_terms)
-    global_df: dict[str, int] = {}
-    for sd in seg_dicts.values():
-        for term, (_tid, df) in sd.items():
-            global_df[term] = global_df.get(term, 0) + df
-    # subtract tombstoned occurrences (exact deltas captured at delete time)
-    for term, ddf in _df_deltas(spark, root, m, list(global_df)).items():
-        global_df[term] = global_df.get(term, 0) - ddf
-    global_df = {t: df for t, df in global_df.items() if df > 0}
-    if not global_df:
-        return spark.createDataFrame([], OUT_SCHEMA)
-
-    gterm_id = {t: i for i, t in enumerate(sorted(global_df))}
-    idf = {t: math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-           for t, df in global_df.items()}
-
-    qmeta, nq_map = build_qmeta(
-        queries, lambda t: ((gterm_id[t], idf[t]) if t in global_df
-                            else None))
-    if not qmeta:
-        return spark.createDataFrame([], OUT_SCHEMA)
-    bc = spark.sparkContext.broadcast((qmeta, nq_map))
-
-    fast = _fast_path_search(spark, root, m, seg_dicts, gterm_id, bc, avgdl,
-                             k, prune, conjunctive)
-    if fast is not None:
-        return fast
-
-    parts = []
-    for s in m["segments"]:
-        sd = seg_dicts.get(s["name"], {})
-        mapping = [(tid, gterm_id[t]) for t, (tid, _df) in sd.items()
-                   if t in gterm_id]
-        if not mapping:
-            continue
-        map_df = spark.createDataFrame(mapping, "term_id long, gterm long")
-        # pruning-safety under avgdl drift: stored max_weight used the
-        # segment's own avgdl; w is increasing in avgdl with ratio bounded
-        # by avgdl_g/avgdl_s, so scaling keeps it a true upper bound
-        w_scale = max(1.0, avgdl / float(s["avgdl"])) if s["avgdl"] else 1.0
-        p = (spark.read.parquet(f"{root}/segments/{s['name']}/postings")
-             .filter(F.col("term_id").isin([t for t, _ in mapping]))
-             .join(F.broadcast(map_df), "term_id")
-             .select(F.col("gterm").alias("term_id"), "salt", "first_doc",
-                     "last_doc", "n",
-                     (F.col("max_weight") * F.lit(w_scale))
-                     .alias("max_weight"),
-                     "docs", "tfs", "dls"))
-        parts.append(p)
-    if not parts:
-        return spark.createDataFrame([], OUT_SCHEMA)
-    blocks = parts[0]
-    for p in parts[1:]:
-        blocks = blocks.unionByName(p)
-
-    tombs = _tombstone_ids(spark, root, m)
-    if tombs is not None:
-        tdf = tombs.withColumn("shard",
-                               shard_expr(F.col("doc_id"), doc_shards))
-
-        def run2(blocks_pdf: pd.DataFrame,
-                 tomb_pdf: pd.DataFrame) -> pd.DataFrame:
-            qm, nq = bc.value
-            ex = np.unique(tomb_pdf["doc_id"].to_numpy(np.int64))
-            return score_shard_queries(blocks_pdf, qm, nq, avgdl, k,
-                                       prune, conjunctive, exclude_ids=ex)
-
-        partial = (blocks.groupBy("salt").cogroup(tdf.groupBy("shard"))
-                   .applyInPandas(run2, schema=PARTIAL_SCHEMA))
-    else:
-        def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            qm, nq = bc.value
-            return score_shard_queries(pdf, qm, nq, avgdl, k, prune,
-                                       conjunctive)
-
-        partial = blocks.groupBy("salt").applyInPandas(
-            run, schema=PARTIAL_SCHEMA)
-    return merge_topk(partial, k)
-
-
-# Live local-serving caches, keyed per root and VALIDATED against the
-# manifest text on every call (one tiny file read — the same freshness
-# discipline as wand._local_dict's _INDEX_META check): any commit rewrites
-# the manifest, so a changed text drops the whole entry and ingest
-# invalidates naturally. Entries:
-#   "terms":  {term -> {segment -> (term_id, df)}} — positive AND negative
-#             (term absent everywhere = {}) hits, LRU-bounded like
-#             wand._DICT_CACHE so an adversarial stream of distinct absent
-#             terms cannot grow driver memory;
-#   "delta":  {term -> summed tombstone df delta} (delta files are
-#             immutable for a given manifest);
-#   "excl":   the tombstoned doc-id array (or None), loaded once.
-# The r5 bench measured the uncached segmented local p50 at 3x the
-# monolithic path's (0.064s vs 0.020s) — the gap was exactly these
-# per-call point-reads (VERDICT r5 ask #5).
-_SEG_LOCAL_CACHE: dict[str, dict] = {}
-_SEG_LOCAL_CACHE_MAX = 65536
-
-
-def _seg_local_cache(root: str, m_text: str) -> dict:
-    hit = _SEG_LOCAL_CACHE.get(root)
-    if hit is None or hit["manifest"] != m_text:
-        hit = {"manifest": m_text, "terms": {}, "delta": {}, "excl": False}
-        _SEG_LOCAL_CACHE[root] = hit
-    return hit
-
-
-def _cached_seg_dicts(root: str, m_text: str, seg_names: list[str],
-                      terms: list[str]) -> dict[str, dict]:
-    """{segment -> {term -> (term_id, df)}} through the manifest-validated
-    term cache; cache misses fan out to the same thread-pooled row-group-
-    pruned point-reads as the uncached path."""
-    cache = _seg_local_cache(root, m_text)["terms"]
-    misses = [t for t in terms if t not in cache]
-    if misses:
-        found = _segment_dicts(root, seg_names, misses)
-        for t in misses:
-            per_seg = {}
-            for seg, sd in found.items():
-                if t in sd:
-                    per_seg[seg] = sd[t]
-            cache[t] = per_seg  # {} = negative entry (absent everywhere)
-    out: dict[str, dict] = {s: {} for s in seg_names}
-    for t in terms:
-        per_seg = cache.pop(t)  # LRU touch (dict insertion order)
-        cache[t] = per_seg
-        for seg, v in per_seg.items():
-            if seg in out:
-                out[seg][t] = v
-    while len(cache) > _SEG_LOCAL_CACHE_MAX:
-        cache.pop(next(iter(cache)))
-    return out
-
-
-def _cached_df_deltas(root: str, m_text: str, m: dict,
-                      terms: list[str]) -> dict[str, int]:
-    cache = _seg_local_cache(root, m_text)["delta"]
-    misses = [t for t in terms if t not in cache]
-    if misses:
-        found = _df_deltas_local(root, m, misses)
-        for t in misses:
-            cache[t] = found.get(t, 0)
-    return {t: cache[t] for t in terms if cache[t]}
-
-
-def _cached_excl(root: str, m_text: str, m: dict):
-    ent = _seg_local_cache(root, m_text)
-    if ent["excl"] is False:
-        excl = None
-        if m["tombstones"]["files"]:
-            cols = [fsio.read_parquet_table(f"{root}/{f}",
-                                            columns=["doc_id"])
-                    .column("doc_id").to_numpy()
-                    for f in m["tombstones"]["files"]]
-            excl = np.unique(np.concatenate(cols)).astype(np.int64)
-        ent["excl"] = excl
-    return ent["excl"]
-
-
-def _df_deltas_local(root: str, m: dict, terms: list[str]) -> dict[str, int]:
-    """Driver-side twin of :func:`_df_deltas`: tombstone df-delta files are
-    |matched terms per delete|-sized, so a pyarrow read + pandas filter is
-    microseconds — no Spark job."""
-    files = m["tombstones"]["delta_files"]
-    if not files or not terms:
-        return {}
-    want = set(terms)
-    out: dict[str, int] = {}
-    for f in files:
-        t = fsio.read_parquet_table(f"{root}/{f}", columns=["term", "ddf"])
-        for term, ddf in zip(t.column("term").to_pylist(),
-                             t.column("ddf").to_pylist()):
-            if term in want:
-                out[term] = out.get(term, 0) + int(ddf)
-    return out
+    monolithic index rebuilt over exactly the live (non-deleted) docs:
+    :func:`~colbert_live_spark.operators.wand.resolve` + one Spark task
+    per (segment, postings file), each excluding its own salt's slice of
+    the tombstones."""
+    return run_spark(spark, resolve(root, queries), k, prune, conjunctive)
 
 
 def segment_search_local(
@@ -764,97 +440,13 @@ def segment_search_local(
     prune: bool = True,
     conjunctive: bool = False,
 ) -> pd.DataFrame:
-    """Low-latency serving for a LIVE (segmented) root with ZERO Spark jobs
-    — the segmented twin of :func:`~colbert_live_spark.operators.wand.
+    """Low-latency serving for a LIVE root with ZERO Spark jobs — the
+    segmented twin of :func:`~colbert_live_spark.operators.wand.
     wand_search_local`, covering the reference's headline use (one user
-    queries a continuously-updated index and waits, README.md:21-23).
-
-    Everything runs on the driver: per-segment dictionaries resolve via the
-    thread-pooled row-group-pruned point-reads (:func:`_segment_dicts`),
-    global statistics (N, avgdl, df→idf minus tombstone deltas) come from
-    the manifest plus the tiny delta files, matched blocks are read per
-    segment with a term_id predicate, remapped to global term ids, bound-
-    rescaled for avgdl drift, and scored as ONE logical shard by the exact
-    shard scorer with tombstones excluded — so results are identical to
-    :func:`segment_search` (tested). Appropriate while Σ matched-list
-    bytes fit one process; batched workloads use the cluster path."""
-    import pyarrow.dataset as pads
-
-    m_text = _manifest_text(root)
-    m = _parse_manifest(m_text)
-    empty = pd.DataFrame({"query_id": pd.array([], dtype="str"),
-                          "rank": pd.array([], dtype="int32"),
-                          "doc_id": pd.array([], dtype="int64"),
-                          "score": pd.array([], dtype="float64")})
-    if not m["segments"]:
-        return empty
-    _require_doc_sharded(m, "segment_search_local")
-    n_docs, avgdl = _global_stats(m)
-    if n_docs <= 0:
-        return empty
-
-    all_terms = sorted({t for _, q in queries for t in py_tokenize(q)})
-    # dictionary/delta/tombstone lookups go through the manifest-validated
-    # per-root LRU cache (see _SEG_LOCAL_CACHE above): a hot serving loop
-    # pays the point-reads once per (root, manifest, term), and any commit
-    # — ingest, delete, compact — rewrites the manifest and invalidates
-    seg_dicts = _cached_seg_dicts(root, m_text,
-                                  [s["name"] for s in m["segments"]],
-                                  all_terms)
-    global_df: dict[str, int] = {}
-    for sd in seg_dicts.values():
-        for term, (_tid, df) in sd.items():
-            global_df[term] = global_df.get(term, 0) + df
-    for term, ddf in _cached_df_deltas(root, m_text, m,
-                                       list(global_df)).items():
-        global_df[term] = global_df.get(term, 0) - ddf
-    global_df = {t: df for t, df in global_df.items() if df > 0}
-    if not global_df:
-        return empty
-    gterm_id = {t: i for i, t in enumerate(sorted(global_df))}
-    idf = {t: math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-           for t, df in global_df.items()}
-    qmeta, nq_map = build_qmeta(
-        queries, lambda t: ((gterm_id[t], idf[t]) if t in global_df
-                            else None))
-    if not qmeta:
-        return empty
-
-    excl = _cached_excl(root, m_text, m)
-
-    frames = []
-    for s in m["segments"]:
-        sd = seg_dicts.get(s["name"], {})
-        mapping = {int(tid): gterm_id[t] for t, (tid, _df) in sd.items()
-                   if t in gterm_id}
-        if not mapping:
-            continue
-        fs, p = fsio.resolve(f"{root}/segments/{s['name']}/postings")
-        tab = (pads.dataset(p, format="parquet", filesystem=fs)
-               .to_table(filter=pruning_isin("term_id", sorted(mapping))))
-        blocks = tab.to_pandas()
-        if not len(blocks):
-            continue
-        blocks["term_id"] = blocks["term_id"].map(mapping).astype(np.int64)
-        w_scale = max(1.0, avgdl / float(s["avgdl"])) if s["avgdl"] else 1.0
-        if w_scale != 1.0:
-            blocks["max_weight"] = blocks["max_weight"] * w_scale
-        frames.append(blocks)
-    if not frames:
-        return empty
-    partial = score_shard_queries(
-        pd.concat(frames, ignore_index=True), qmeta, nq_map, avgdl, k,
-        prune=prune, conjunctive=conjunctive, exclude_ids=excl)
-    if not len(partial):
-        return empty
-    out = []
-    for qid, g in partial.groupby("query_id", sort=True):
-        order = np.lexsort((g["doc_id"].to_numpy(),
-                            -g["score"].to_numpy()))[:k]
-        gg = g.iloc[order].reset_index(drop=True)
-        gg.insert(1, "rank", np.arange(1, len(gg) + 1, dtype=np.int32))
-        out.append(gg)
-    return pd.concat(out, ignore_index=True)
+    queries a continuously-updated index and waits, README.md:21-23). Same
+    plan as :func:`segment_search`, scored in-process as one logical shard,
+    so results are identical (tested)."""
+    return run_local(resolve(root, queries), k, prune, conjunctive)
 
 
 def compact(spark: SparkSession, root: str, n_shards: int = 4,
@@ -900,7 +492,7 @@ def compact(spark: SparkSession, root: str, n_shards: int = 4,
     # (pre-doc-shard) root compacted here must come out fully migrated, or
     # segment_search/delete_docs keep refusing it and a later add_segment
     # would auto-size a DIFFERENT modulus than the compacted segment's
-    # stored salts (silently wrong cogroup keys).
+    # stored salts (silently wrong tombstone and filter shard keys).
     m["doc_shards"] = int(meta["doc_shards"])
     m["segments"] = [{"name": seg, "n_docs": meta["n_docs"],
                       "avgdl": meta["avgdl"], "sum_dl": meta.get("sum_dl"),

@@ -1,49 +1,58 @@
-"""Query serving over the compressed term-sharded index with block-max
-pruning — the scale path for the reference's search
-(`colbert_live/colbert_live.py:146-208`).
+"""The serving core: BM25 top-k over the compressed doc-sharded index — the
+scale path for the reference's search (`colbert_live/colbert_live.py:146-208`).
 
-Plan shape per batch of queries (salt_v3 file-task topology):
-1. driver tokenizes queries (tiny; T1 analog `colbert_live/models.py:92-93`),
-2. driver-side dictionary point-lookup for matched terms (pyarrow, zero
-   Spark jobs; OR-of-equality predicate → parquet row-group pruning — the
-   analog of the reference's per-token index probe,
-   `colbert_live/db/astra.py:235-247`),
-3. the query-term table (query_id, term_id, qtf·idf) is broadcast to every
-   task as a plain broadcast variable — it never joins against blocks, so
-   NO per-query replication of compressed data ever happens,
-4. ONE TASK PER POSTINGS FILE — the build wrote each doc shard
-   (salt = hash(doc_id) mod D, index/builder.py) wholly into one file, so a
-   file is the complete mini-index of its doc subset. Each task
-   pyarrow-reads its own file (term_id predicate → row-group pruning),
-   decodes every matched list at most ONCE (term-level decode+weight
-   cache), and scores ALL queries of the batch with local-θ MaxScore
-   pruning. Compressed block bytes NEVER enter a Spark Exchange — with a
-   doc_filter, only the 8-byte filter ids shuffle (grouped by shard) and
-   each group task reads its shard's file the same way.
-5. each (query, file) emits ≤ k exact-scored candidates (a doc's whole
-   score is computed inside its shard, so the global top-k is a subset of
-   the per-shard top-k union); the global merge ranks ≤ D·k tiny rows via
-   WindowGroupLimit (partial top-k before the merge shuffle).
-Non-salt_v3 layouts (builder's one-file-per-salt check failed) fall back
-to ``groupBy(salt).applyInPandas`` / cogroup — blocks shuffle once per
-batch; correct, plan-distinct, result-identical (tested).
+One query path serves both a monolithic index and a live segment root
+(index/segments.py). A monolithic index is a one-segment root with no
+tombstones, an identity term map and weight scale 1.
+
+1. :func:`resolve` turns the source plus a batch of queries into one
+   :class:`Plan`, entirely on the driver with zero Spark jobs:
+   - the queries are tokenized (T1 analog `colbert_live/models.py:92-93`);
+   - each segment's dictionary is point-read with pyarrow (an OR-of-equality
+     predicate prunes parquet row groups — the analog of the reference's
+     per-token index probe, `colbert_live/db/astra.py:235-247`) through the
+     driver-side term cache;
+   - corpus statistics (N, avgdl, df minus the tombstone df deltas, idf)
+     are global across segments, so answers equal a rebuild over the live
+     docs;
+   - the plan lists every postings file with its salt (doc shard), the
+     segment-to-global term-id map, the ``w_scale`` bound factor and the
+     tombstone files of that salt.
+2. Two executors run a plan:
+   - :func:`run_local` scores all files as ONE logical shard in-process
+     (zero Spark jobs — the "one user waits" path);
+   - :func:`run_spark` runs ONE TASK PER POSTINGS FILE (``mapInPandas``).
+     A doc's postings live wholly inside one file (the builder writes each
+     doc shard, salt = hash(doc_id) mod D, into exactly one file, and doc
+     ids are unique across segments), so per-file exact top-k candidates
+     union to a superset of the global top-k. With a ``doc_filter`` the
+     8-byte filter ids group by doc shard and each group task scores that
+     shard's files; it is the only shuffle before the D·k-per-query merge.
+     Compressed block bytes never enter an Exchange.
+
+The layout is checked, never worked around: a shard split across several
+postings files, or tombstones not partitioned by ``shard=<salt>``, raises
+and asks for a rebuild or a compact().
 
 Safe-pruning invariant (tested): pruned output == unpruned output exactly.
-The pruning logic: process term lists in descending list-max-impact order,
-maintaining a sorted accumulator of (doc_id, partial score). θ = k-th largest
+Term lists are processed in one global order per query; θ = k-th largest
 accumulated score (a valid lower bound: scores only grow). New docs are
 admitted only while Σ max-impact of the remaining lists ≥ θ — a doc first
-seen later can never reach θ. Once admission closes, a block is decoded only
-if its [first_doc, last_doc] range intersects the accumulator (skip
-pointers); accumulated docs always receive exact contributions, so surviving
-scores are exact. This is the inverted-index re-expression of the
-reference's two-phase cheap-candidates→exact-rescore design
-(`colbert_live/colbert_live.py:189-204`).
+seen later can never reach θ; accumulated docs always receive exact
+contributions, so surviving scores are exact. This is the inverted-index
+re-expression of the reference's two-phase cheap-candidates→exact-rescore
+design (`colbert_live/colbert_live.py:189-204`).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
+import math
+import re
+import threading
+from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -51,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_live_spark.functions.tokenize import py_tokenize
+from colbert_live_spark.index import fsio
 from colbert_live_spark.index.codec import bm25_weight_np
 
 OUT_SCHEMA = "query_id string, rank int, doc_id long, score double"
@@ -64,7 +74,6 @@ def expand_budget(k: int, a: float = 94.9, b: float = 11.0,
     give f(10)=171). Used to cap the scorer's accumulator between term
     lists: docs outside the top expand_budget(k) by upper bound can never
     enter the final top-k."""
-    import math
     return int(max(k, a + b * k + c * k * math.log(max(k, 2))))
 
 
@@ -103,209 +112,6 @@ def _merge_acc(acc_d, acc_s, new_d, new_s):
     return out_d, out_s
 
 
-def intersect_query_blocks(
-    pdf: pd.DataFrame,
-    avgdl: float,
-    k: int,
-    n_query_terms: int,
-    stats: dict | None = None,
-) -> pd.DataFrame:
-    """Exact conjunctive (posting-list intersection) top-k for one query.
-
-    Classic merge-based intersection with skip pointers: start from the
-    smallest list; every other list decodes only blocks whose
-    [first_doc, last_doc] range intersects the surviving candidate set
-    (the north rule's 'posting-list intersection' with block skipping).
-    If any query term is absent from the index (matched terms <
-    n_query_terms) the intersection is empty.
-    """
-    qid = pdf["query_id"].iloc[0]
-    empty = pd.DataFrame({"query_id": pd.array([], dtype="str"),
-                          "rank": pd.array([], dtype="int32"),
-                          "doc_id": pd.array([], dtype="int64"),
-                          "score": pd.array([], dtype="float64")})
-    if pdf["term_id"].nunique() < n_query_terms:
-        return empty
-    # smallest list first: order terms by total postings (ties on term_id
-    # for shuffle-order-independent float summation)
-    sizes = pdf.groupby("term_id", sort=False)["n"].sum()
-    term_order = sizes.index.to_numpy()[np.lexsort(
-        (sizes.index.to_numpy(), sizes.to_numpy()))]
-    cand_d = None
-    cand_s = None
-    decoded = 0
-    for term_id in term_order:
-        rows = pdf[pdf["term_id"] == term_id]
-        qtf = float(rows["qtf"].iloc[0])
-        idf = float(rows["idf"].iloc[0])
-        if cand_d is not None:
-            if cand_d.size == 0:
-                break
-            lo = np.searchsorted(cand_d, rows["first_doc"].to_numpy())
-            hi = np.searchsorted(cand_d, rows["last_doc"].to_numpy(),
-                                 side="right")
-            rows = rows[hi > lo]
-        decoded += len(rows)
-        d, tf, dl = _decode_many(rows["first_doc"].to_numpy(),
-                                 rows["n"].to_numpy(),
-                                 rows["docs"].to_list(),
-                                 rows["tfs"].to_list(),
-                                 rows["dls"].to_list())
-        if d.size and not np.all(d[:-1] <= d[1:]):
-            order = np.argsort(d, kind="stable")
-            d, tf, dl = d[order], tf[order], dl[order]
-        w = qtf * idf * bm25_weight_np(tf, dl, avgdl) if d.size else d.astype(np.float64)
-        if cand_d is None:
-            cand_d, cand_s = d, w
-        else:
-            pos = np.searchsorted(d, cand_d)
-            pos_c = np.minimum(pos, max(d.size - 1, 0))
-            hit = (d[pos_c] == cand_d) if d.size else np.zeros(cand_d.size, bool)
-            cand_d = cand_d[hit]
-            cand_s = cand_s[hit] + w[pos_c[hit]]
-    if stats is not None:
-        stats["blocks_total"] = stats.get("blocks_total", 0) + len(pdf)
-        stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + decoded
-    if cand_d is None or cand_d.size == 0:
-        return empty
-    kk = min(k, cand_d.size)
-    order = np.lexsort((cand_d, -cand_s))[:kk]
-    return pd.DataFrame({
-        "query_id": qid,
-        "rank": np.arange(1, kk + 1, dtype=np.int32),
-        "doc_id": cand_d[order],
-        "score": cand_s[order],
-    })
-
-
-def score_query_blocks(
-    pdf: pd.DataFrame,
-    avgdl: float,
-    k: int,
-    prune: bool = True,
-    stats: dict | None = None,
-    filter_ids=None,
-) -> pd.DataFrame:
-    """Exact top-k for one query from its matched compressed blocks.
-
-    pdf columns: term_id, salt, block_id, first_doc, last_doc, n, max_weight,
-    docs, tfs, dls, qtf, idf, query_id.
-
-    ``filter_ids``: optional sorted int64 array of permitted doc ids — the
-    query-time metadata predicate (reference analog: tag filter inside the
-    ANN scan, `example/cmdline/db.py:82-88`). Corpus statistics stay global,
-    matching the reference's semantics (the model's weights don't change
-    when a filter is applied).
-    """
-    qid = pdf["query_id"].iloc[0]
-    doc_filter = None
-    if filter_ids is not None:
-        doc_filter = np.asarray(filter_ids, dtype=np.int64)
-    # per-term list-level max impact σ_t = qtf·idf·max(block max_weight);
-    # σ-ties break on term_id so the float summation order (and hence the
-    # bit-exact scores) is independent of shuffle row order
-    g = pdf.groupby("term_id", sort=False)
-    sigma = (g["max_weight"].max() * g["qtf"].first() * g["idf"].first())
-    sigma = sigma.iloc[np.lexsort((sigma.index.to_numpy(),
-                                   -sigma.to_numpy()))]
-    term_order = sigma.index.to_numpy()
-    sigma_v = sigma.to_numpy()
-    suffix = np.concatenate([np.cumsum(sigma_v[::-1])[::-1], [0.0]])
-
-    acc_d = np.zeros(0, dtype=np.int64)
-    acc_s = np.zeros(0, dtype=np.float64)
-    total_blocks = len(pdf)
-    decoded_blocks = 0
-    admission = True
-    for ti, term_id in enumerate(term_order):
-        rows = pdf[pdf["term_id"] == term_id]
-        qtf = float(rows["qtf"].iloc[0])
-        idf = float(rows["idf"].iloc[0])
-        theta = (np.partition(acc_s, acc_s.size - k)[acc_s.size - k]
-                 if acc_s.size >= k else 0.0)
-        if prune and admission and suffix[ti] < theta:
-            admission = False
-        if prune and not admission:
-            if acc_d.size == 0:
-                break
-            lo = np.searchsorted(acc_d, rows["first_doc"].to_numpy())
-            hi = np.searchsorted(acc_d, rows["last_doc"].to_numpy(), side="right")
-            keep = hi > lo
-            # block-max refinement: a surviving block still can't matter if
-            # θ already dominates every accumulated doc's bound... exactness
-            # for accumulated docs forbids skipping intersecting blocks.
-            rows = rows[keep]
-        decoded_blocks += len(rows)
-        d, tf, dl = _decode_many(rows["first_doc"].to_numpy(),
-                                 rows["n"].to_numpy(),
-                                 rows["docs"].to_list(),
-                                 rows["tfs"].to_list(),
-                                 rows["dls"].to_list())
-        if d.size == 0:
-            continue
-        # salted sub-lists are doc-disjoint but interleaved: sort for merge
-        if not np.all(d[:-1] <= d[1:]):
-            order = np.argsort(d, kind="stable")
-            d, tf, dl = d[order], tf[order], dl[order]
-        if doc_filter is not None and d.size:
-            pos = np.searchsorted(doc_filter, d)
-            pos_c = np.minimum(pos, doc_filter.size - 1)
-            ok = doc_filter[pos_c] == d
-            d, tf, dl = d[ok], tf[ok], dl[ok]
-            if d.size == 0:
-                continue
-        if prune and not admission:
-            # search the small accumulator into the big decoded list and
-            # weight only the hits (same values/order as the full-list
-            # form — elementwise BM25 on the hit subset)
-            pos = np.minimum(np.searchsorted(d, acc_d), d.size - 1)
-            hit = d[pos] == acc_d
-            if hit.any():
-                ph = pos[hit]
-                acc_s[hit] += qtf * idf * bm25_weight_np(tf[ph], dl[ph],
-                                                         avgdl)
-        else:
-            w = qtf * idf * bm25_weight_np(tf, dl, avgdl)
-            acc_d, acc_s = _merge_acc(acc_d, acc_s, d, w)
-        # safe accumulator cap (C2 _expand analog): a doc whose score plus
-        # every remaining list's max impact is below θ can never reach the
-        # top-k — drop it. Bounds scorer memory on huge disjunctions.
-        cap = max(4 * k, expand_budget(k))
-        if prune and acc_s.size > cap:
-            th = np.partition(acc_s, acc_s.size - k)[acc_s.size - k]
-            keep = acc_s + suffix[ti + 1] >= th
-            if int(keep.sum()) >= k:
-                acc_d, acc_s = acc_d[keep], acc_s[keep]
-    if stats is not None:
-        stats["blocks_total"] = stats.get("blocks_total", 0) + total_blocks
-        stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + decoded_blocks
-    if acc_d.size == 0:
-        return pd.DataFrame({"query_id": pd.array([], dtype="str"),
-                             "rank": pd.array([], dtype="int32"),
-                             "doc_id": pd.array([], dtype="int64"),
-                             "score": pd.array([], dtype="float64")})
-    kk = min(k, acc_d.size)
-    # top-k with deterministic (score DESC, doc_id ASC) order
-    order = np.lexsort((acc_d, -acc_s))[:kk]
-    return pd.DataFrame({
-        "query_id": qid,
-        "rank": np.arange(1, kk + 1, dtype=np.int32),
-        "doc_id": acc_d[order],
-        "score": acc_s[order],
-    })
-
-
-def matched_query_terms(spark: SparkSession, index_dir: str,
-                        queries: list[tuple[str, str]]) -> DataFrame:
-    """(query_id, term_id, qtf, idf) for terms present in the dictionary.
-    One driver job (dictionary point-lookup, term-pruned by parquet stats);
-    the per-query expansion happens driver-side — queries are tiny (the T1
-    query-encode analog, `colbert_live/models.py:92-93`)."""
-    return spark.createDataFrame(
-        _matched_query_rows(spark, index_dir, queries),
-        "query_id string, term_id long, qtf int, idf double")
-
-
 def pruning_isin(field: str, values):
     """A pyarrow predicate equivalent to ``field.isin(values)`` that
     actually PRUNES parquet row groups. pyarrow evaluates only
@@ -327,54 +133,6 @@ def pruning_isin(field: str, values):
             operator.or_, [pads.field(field) == v for v in vals])
     return ((pads.field(field) >= vals[0]) & (pads.field(field) <= vals[-1])
             & pads.field(field).isin(vals))
-
-
-def _dict_point_lookup(index_dir: str, terms: list[str]) -> dict:
-    """term -> (term_id, idf) for the given terms — a DRIVER-SIDE pyarrow
-    point-lookup, zero Spark jobs.
-
-    A Spark job here was ~0.5-1 s of fixed per-batch overhead that does not
-    parallelize (it is the same at 2 and at 8 cores), directly eating
-    scaling efficiency. The dictionary files are term-sorted, so the isin
-    predicate prunes to the row groups containing the queried terms — the
-    read is O(matched row groups), not O(vocabulary), which is what keeps
-    this driver-side lookup viable at a 10^8-term web vocabulary (the same
-    access path a dedicated serving tier would use)."""
-    import pyarrow.dataset as pads
-
-    from colbert_live_spark.index import fsio
-    if not terms:
-        return {}
-    fs, p = fsio.resolve(f"{index_dir}/dict")
-    t = (pads.dataset(p, format="parquet", filesystem=fs)
-         .to_table(filter=pruning_isin("term", terms),
-                   columns=["term", "term_id", "idf"]))
-    return {term: (int(tid), float(idf)) for term, tid, idf in
-            zip(t.column("term").to_pylist(),
-                t.column("term_id").to_pylist(),
-                t.column("idf").to_pylist())}
-
-
-def _matched_terms(spark, index_dir, queries) -> dict:
-    """term -> (term_id, idf) for every query term present in the
-    dictionary (cluster serving path — one uncached point-lookup per
-    batch)."""
-    all_terms = sorted({t for _, q in queries for t in py_tokenize(q)})
-    return _dict_point_lookup(index_dir, all_terms)
-
-
-def _matched_query_rows(spark, index_dir, queries):
-    matched = _matched_terms(spark, index_dir, queries)
-    rows = []
-    for qid, qtext in queries:
-        counts: dict[str, int] = {}
-        for t in py_tokenize(qtext):
-            counts[t] = counts.get(t, 0) + 1
-        for term, qtf in sorted(counts.items()):
-            if term in matched:
-                tid, idf = matched[term]
-                rows.append((qid, tid, qtf, float(idf)))
-    return rows
 
 
 def build_qmeta(queries: list[tuple[str, str]], resolve) -> tuple[dict, dict]:
@@ -603,19 +361,6 @@ def score_shard_queries(
                          "score": np.concatenate(out_s)})
 
 
-def _salt_file_map(files: list[str]) -> dict[int, str]:
-    """salt → its single postings file, parsed from the ``salt=<s>/``
-    partition directories of a salt_v3 layout (one file per salt, verified
-    at build time before the layout tag is stamped)."""
-    import re
-    out: dict[int, str] = {}
-    for f in files:
-        m = re.search(r"salt=(\d+)/", f)
-        if m is not None:
-            out[int(m.group(1))] = f
-    return out
-
-
 def shard_expr(doc_id_col, doc_shards: int):
     """The doc-shard assignment expression — MUST match the build-side salt
     (index/builder.py merge_index)."""
@@ -629,56 +374,345 @@ def merge_topk(partial: DataFrame, k: int) -> DataFrame:
     return topk(partial, k)
 
 
-# ------------------------------------------------- low-latency local serving
+# ------------------------------------------------------ driver-side cache
 
-# index_dir -> (meta_text, hot-term cache {term: (tid, idf) | None}, avgdl).
-# ``None`` entries are negative hits (term absent from the index) so
-# repeated unknown-term queries don't re-read the dictionary. The per-index
-# cache is an LRU bounded at _DICT_CACHE_MAX entries (positive AND negative
-# alike — an adversarial stream of distinct absent terms must not grow
-# driver memory without bound, advice r4); evicted terms simply fall back
-# to the point-lookup path on their next appearance.
-_DICT_CACHE: dict[str, tuple[str, dict, float]] = {}
-_DICT_CACHE_MAX = 65536  # ~hot web working set; ≈4 MB of (term, id, idf)
+# One entry per index dir or segment root, valid for ONE meta/manifest text:
+# every rebuild or commit rewrites that text, so a changed text drops the
+# entry (identical text implies the same deterministic build, hence the same
+# dictionaries). Reads happen outside the lock; the lock only guards the
+# LRU bookkeeping, so concurrent callers never see a half-updated map.
+# Bounded three ways — roots, terms and tombstone df deltas — so neither a
+# driver serving many roots nor an adversarial stream of distinct (absent)
+# terms grows memory; an evicted entry is simply point-read again.
+_CACHE: OrderedDict[str, _Source] = OrderedDict()
+_CACHE_LOCK = threading.Lock()
+_CACHE_ROOTS_MAX = 64
+_CACHE_TERMS_MAX = 65536  # ~hot web working set; a few MB per root
 
 
-def _local_dict(index_dir: str, terms: list[str]) -> tuple[dict, float]:
-    """({term -> (term_id, idf) | None for each requested term}, avgdl).
+class _Source:
+    """Cached reads of one index or root state."""
 
-    Scale shape: this NEVER loads the dictionary table — cache misses go
-    through the same row-group-pruned pyarrow point-lookup as the cluster
-    path (:func:`_dict_point_lookup`), so driver memory holds only the
-    hot-term working set, not the 10^8-term web vocabulary. The cache is
-    validated against the index's ``_INDEX_META.json`` content on every
-    call (one tiny file read): if the index at this path was rebuilt by a
-    long-lived serving process, term_ids may have been reassigned, and
-    applying stale entries to freshly-read postings would silently
-    mis-score. Identical meta content implies the same deterministic build
-    inputs, hence the same dictionary."""
-    from colbert_live_spark.index import fsio
-    meta_text = fsio.read_text(f"{index_dir}/_INDEX_META.json")
-    hit = _DICT_CACHE.get(index_dir)
-    if hit is None or hit[0] != meta_text:
-        meta = json.loads(meta_text)
-        hit = (meta_text, {}, float(meta["avgdl"]))
-        _DICT_CACHE[index_dir] = hit
-    _, cache, avgdl = hit
-    misses = [t for t in terms if t not in cache]
-    if misses:
-        found = _dict_point_lookup(index_dir, misses)
-        for t in misses:
-            cache[t] = found.get(t)  # None = negative cache entry
+    def __init__(self, text: str):
+        self.text = text
+        # term -> {segment dir: (term_id, df)}; {} caches an absent term
+        self.terms: OrderedDict[str, dict] = OrderedDict()
+        self.deltas: OrderedDict[str, int] = OrderedDict()  # tombstoned df
+        self.tombs: dict[int, tuple[str, ...]] | None = None  # salt -> files
+        self.excl: np.ndarray | None = None  # every tombstoned id, sorted
+
+
+def _source(path: str, text: str) -> _Source:
+    with _CACHE_LOCK:
+        src = _CACHE.pop(path, None)
+        if src is None or src.text != text:
+            src = _Source(text)
+        _CACHE[path] = src
+        while len(_CACHE) > _CACHE_ROOTS_MAX:
+            _CACHE.popitem(last=False)
+    return src
+
+
+def _cached(lru: OrderedDict, keys: list, load) -> dict:
+    """{key: value} through a bounded LRU; ``load(misses)`` must return a
+    value for every miss and runs outside the lock."""
     out = {}
-    for t in terms:
-        # LRU touch: dicts iterate in insertion order, so re-inserting a
-        # hit moves it to the back; eviction pops the front (oldest)
-        v = cache.pop(t)
-        cache[t] = v
-        out[t] = v
-    while len(cache) > _DICT_CACHE_MAX:
-        cache.pop(next(iter(cache)))
-    return out, avgdl
+    with _CACHE_LOCK:
+        for key in keys:
+            if key in lru:
+                lru.move_to_end(key)
+                out[key] = lru[key]
+    misses = [key for key in keys if key not in out]
+    if misses:
+        found = load(misses)
+        with _CACHE_LOCK:
+            for key in misses:
+                out[key] = lru[key] = found[key]
+            while len(lru) > _CACHE_TERMS_MAX:
+                lru.popitem(last=False)
+    return out
 
+
+def _point_lookup(dirs: list[str], terms: list[str]) -> dict[str, dict]:
+    """{term -> {dir: (term_id, df)}} from each index dir's term-sorted
+    dictionary. The predicate prunes to the row groups holding the queried
+    terms, so the read is O(matched row groups), not O(vocabulary) — what
+    keeps a driver-side lookup viable at a 10^8-term web vocabulary.
+    Segments are read concurrently (pyarrow releases the GIL)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.dataset as pads
+
+    def one(d: str):
+        fs, p = fsio.resolve(f"{d}/dict")
+        t = (pads.dataset(p, format="parquet", filesystem=fs)
+             .to_table(filter=pruning_isin("term", terms),
+                       columns=["term", "term_id", "df"]))
+        return d, zip(t.column("term").to_pylist(),
+                      t.column("term_id").to_pylist(),
+                      t.column("df").to_pylist())
+
+    if len(dirs) == 1:
+        found = [one(dirs[0])]
+    else:
+        with ThreadPoolExecutor(max_workers=min(16, len(dirs))) as ex:
+            found = list(ex.map(one, dirs))
+    out: dict[str, dict] = {t: {} for t in terms}
+    for d, rows in found:
+        for term, tid, df in rows:
+            out[term][d] = (int(tid), int(df))
+    return out
+
+
+def _df_deltas(root: str, delta_files: list[str],
+               terms: list[str]) -> dict[str, int]:
+    """{term -> df removed by tombstones}: the delete-time delta files are
+    |terms of the deleted docs|-sized, so a driver-side read is cheap."""
+    import pyarrow.dataset as pads
+    out = dict.fromkeys(terms, 0)
+    for rel in delta_files:
+        fs, p = fsio.resolve(f"{root}/{rel}")
+        t = (pads.dataset(p, format="parquet", filesystem=fs)
+             .to_table(filter=pads.field("term").isin(terms),
+                       columns=["term", "ddf"]))
+        for term, ddf in zip(t.column("term").to_pylist(),
+                             t.column("ddf").to_pylist()):
+            out[term] += int(ddf)
+    return out
+
+
+def _partition_files(path: str, key: str) -> dict[int, list[str]]:
+    """{n -> parquet files under ``<key>=<n>/``} of a partitioned dir."""
+    out: dict[int, list[str]] = {}
+    for f in fsio.list_files(path, ".parquet"):
+        m = re.search(rf"/{key}=(\d+)/[^/]+$", f)
+        if m is None:
+            raise ValueError(
+                f"{f} is not under a {key}=<n> directory: the layout "
+                "predates doc-shard partitioning; rebuild the index or "
+                "compact() the root")
+        out.setdefault(int(m.group(1)), []).append(f)
+    return out
+
+
+# ------------------------------------------------------------ the plan
+
+class FileTask(NamedTuple):
+    """One postings file = one doc shard of one index/segment."""
+    path: str
+    salt: int
+    part: int               # which index/segment of the source
+    tids: list[int]         # the part's matched term ids (read predicate)
+    term_map: dict | None   # part term id -> global term id; None = same
+    w_scale: float          # stored block-max bound factor (avgdl drift)
+    tombs: tuple[str, ...]  # tombstone files of this salt
+
+
+class Plan(NamedTuple):
+    qmeta: dict[str, list[tuple[int, float]]]
+    nq_map: dict[str, int]
+    avgdl: float
+    doc_shards: int
+    files: list[FileTask]
+    source: _Source
+
+
+def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
+    """The plan for ``queries`` over an index dir or a segment root (told
+    apart by its MANIFEST.json); None when nothing can match.
+
+    Stored block ``max_weight`` bounds were computed with the segment's own
+    avgdl; w grows at most linearly in avgdl, so scaling by
+    max(1, avgdl_global / avgdl_segment) keeps it a true upper bound (safe
+    pruning under avgdl drift)."""
+    from colbert_live_spark.index import segments
+    text = segments._manifest_text(path)
+    if text is None:
+        text = fsio.read_text(f"{path}/_INDEX_META.json")
+        meta = json.loads(text)
+        if meta.get("doc_shards") is None or meta.get("layout") != "salt_v3":
+            raise ValueError(
+                f"{path} has layout {meta.get('layout')!r} (doc_shards="
+                f"{meta.get('doc_shards')}), not one postings file per doc "
+                "shard; rebuild the index with the current builder")
+        m = None
+        n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
+        doc_shards = int(meta["doc_shards"])
+        parts = [(path, avgdl)]
+    else:
+        m = segments._parse_manifest(text)
+        if not m["segments"]:
+            return None
+        segments._require_doc_sharded(m, "search")
+        n_docs, avgdl = segments._global_stats(m)
+        doc_shards = m["doc_shards"]
+        parts = [(f"{path}/segments/{s['name']}", float(s["avgdl"]))
+                 for s in m["segments"]]
+    if n_docs <= 0:
+        return None
+
+    src = _source(path, text)
+    dirs = [d for d, _ in parts]
+    terms = sorted({t for _, q in queries for t in py_tokenize(q)})
+    hits = _cached(src.terms, terms, lambda ts: _point_lookup(dirs, ts))
+    df = {t: sum(v for _, v in per.values()) for t, per in hits.items()
+          if per}
+    if m is not None and m["tombstones"]["delta_files"] and df:
+        gone = _cached(src.deltas, sorted(df), lambda ts: _df_deltas(
+            path, m["tombstones"]["delta_files"], ts))
+        df = {t: v - gone[t] for t, v in df.items() if v > gone[t]}
+    if len(parts) == 1:
+        gid = {t: hits[t][dirs[0]][0] for t in df}
+    else:
+        gid = {t: i for i, t in enumerate(sorted(df))}
+    idf = {t: math.log(1.0 + (n_docs - v + 0.5) / (v + 0.5))
+           for t, v in df.items()}
+    qmeta, nq_map = build_qmeta(
+        queries, lambda t: (gid[t], idf[t]) if t in df else None)
+    if not qmeta:
+        return None
+
+    if src.tombs is None:
+        tombs: dict[int, list[str]] = {}
+        for rel in (m["tombstones"]["files"] if m is not None else []):
+            for salt, fs in _partition_files(f"{path}/{rel}",
+                                             "shard").items():
+                tombs.setdefault(salt, []).extend(fs)
+        src.tombs = {s: tuple(fs) for s, fs in tombs.items()}
+    files = []
+    for i, (d, part_avgdl) in enumerate(parts):
+        tmap = {hits[t][d][0]: gid[t] for t in df if d in hits[t]}
+        if not tmap:
+            continue
+        w_scale = max(1.0, avgdl / part_avgdl) if part_avgdl else 1.0
+        for salt, fs in sorted(_partition_files(f"{d}/postings",
+                                                "salt").items()):
+            if len(fs) > 1:
+                raise ValueError(
+                    f"{d}: doc shard {salt} spans {len(fs)} postings files; "
+                    "rebuild the index or compact() the root")
+            files.append(FileTask(fs[0], salt, i, sorted(tmap),
+                                  None if len(parts) == 1 else tmap,
+                                  w_scale, src.tombs.get(salt, ())))
+    return Plan(qmeta, nq_map, avgdl, doc_shards, files, src)
+
+
+def _read_blocks(tasks: list[FileTask]) -> pd.DataFrame:
+    """The matched blocks of ``tasks``' files in global term ids, with the
+    block-max bounds scaled; one pyarrow read per index/segment."""
+    import pyarrow.dataset as pads
+    frames = []
+    for _, grp in itertools.groupby(tasks, key=lambda f: f.part):
+        grp = list(grp)
+        f0 = grp[0]
+        fs, _ = fsio.resolve(f0.path)
+        blocks = (pads.dataset([fsio.resolve(f.path)[1] for f in grp],
+                               format="parquet", filesystem=fs)
+                  .to_table(filter=pruning_isin("term_id", f0.tids))
+                  .to_pandas())
+        if f0.term_map is not None:
+            blocks["term_id"] = (blocks["term_id"].map(f0.term_map)
+                                 .astype(np.int64))
+        if f0.w_scale != 1.0:
+            blocks["max_weight"] = blocks["max_weight"] * f0.w_scale
+        frames.append(blocks)
+    return frames[0] if len(frames) == 1 else pd.concat(frames,
+                                                        ignore_index=True)
+
+
+def _read_ids(paths) -> np.ndarray:
+    """Sorted unique doc ids of tombstone files (empty for none)."""
+    if not paths:
+        return np.zeros(0, dtype=np.int64)
+    return np.unique(np.concatenate([
+        fsio.read_parquet_table(p, columns=["doc_id"]).column("doc_id")
+        .to_numpy() for p in paths])).astype(np.int64)
+
+
+# ----------------------------------------------------------- executors
+
+def _empty_ranked() -> pd.DataFrame:
+    return pd.DataFrame({"query_id": pd.array([], dtype="str"),
+                         "rank": pd.array([], dtype="int32"),
+                         "doc_id": pd.array([], dtype="int64"),
+                         "score": pd.array([], dtype="float64")})
+
+
+def run_local(plan: Plan | None, k: int, prune: bool = True,
+              conjunctive: bool = False,
+              filter_ids: np.ndarray | None = None) -> pd.DataFrame:
+    """In-process executor: every file of the plan scored as ONE logical
+    shard, then one top-k finalisation — zero Spark jobs."""
+    if plan is None or not plan.files:
+        return _empty_ranked()
+    src = plan.source
+    if src.excl is None:
+        src.excl = _read_ids([f for fs in src.tombs.values() for f in fs])
+    partial = score_shard_queries(_read_blocks(plan.files), plan.qmeta,
+                                  plan.nq_map, plan.avgdl, k, prune,
+                                  conjunctive, filter_ids, src.excl)
+    if not len(partial):
+        return _empty_ranked()
+    # (query_id, score DESC, doc_id) order; ≤ k rows per query already
+    qids, q = np.unique(partial["query_id"].to_numpy(), return_inverse=True)
+    d, s = partial["doc_id"].to_numpy(), partial["score"].to_numpy()
+    order = np.lexsort((d, -s, q))
+    q = q[order]
+    rank = np.arange(q.size) - np.searchsorted(q, q) + 1
+    return pd.DataFrame({"query_id": qids[q], "rank": rank.astype(np.int32),
+                         "doc_id": d[order], "score": s[order]})
+
+
+def run_spark(spark: SparkSession, plan: Plan | None, k: int,
+              prune: bool = True, conjunctive: bool = False,
+              doc_filter: DataFrame | None = None) -> DataFrame:
+    """Spark executor: one ``mapInPandas`` task per postings file; with a
+    ``doc_filter``, one ``groupBy(shard)`` task per shard over that
+    shard's files. Both end in :func:`merge_topk`."""
+    if plan is None or not plan.files:
+        return spark.createDataFrame([], OUT_SCHEMA)
+    avgdl, n = plan.avgdl, len(plan.files)
+    bc = spark.sparkContext.broadcast((plan.qmeta, plan.nq_map, plan.files))
+
+    def score(tasks: list[FileTask], filter_ids=None) -> pd.DataFrame:
+        qm, nq, _ = bc.value
+        return score_shard_queries(_read_blocks(tasks), qm, nq, avgdl, k,
+                                   prune, conjunctive, filter_ids,
+                                   _read_ids(tasks[0].tombs))
+
+    if doc_filter is None:
+        def run_files(it):
+            files = bc.value[2]
+            for pdf in it:
+                for i in pdf["i"]:
+                    out = score([files[int(i)]])
+                    if len(out):
+                        yield out
+
+        idx = spark.createDataFrame(
+            spark.sparkContext.parallelize([(i,) for i in range(n)], n),
+            "i int")
+        partial = idx.mapInPandas(run_files, schema=PARTIAL_SCHEMA)
+    else:
+        # A doc only scores in its own shard: shards without permitted ids
+        # are never read.
+        def run_shard(key: tuple, filt: pd.DataFrame) -> pd.DataFrame:
+            mine = [f for f in bc.value[2] if f.salt == int(key[0])]
+            if not mine:
+                return _empty_partial()
+            return score(mine, np.unique(filt["doc_id"].to_numpy(np.int64)))
+
+        partial = (doc_filter
+                   .select(F.col(doc_filter.columns[0]).cast("long")
+                           .alias("doc_id"))
+                   .withColumn("shard", shard_expr(F.col("doc_id"),
+                                                   plan.doc_shards))
+                   .groupBy("shard")
+                   .applyInPandas(run_shard, schema=PARTIAL_SCHEMA))
+    return merge_topk(partial, k)
+
+
+# ------------------------------------------------------- public entry points
 
 def wand_search_local(
     index_dir: str,
@@ -688,53 +722,19 @@ def wand_search_local(
     conjunctive: bool = False,
     filter_ids=None,
 ) -> pd.DataFrame:
-    """Low-latency serving mode: score on the driver with ZERO Spark jobs —
-    the answer to "a user issues one query and waits". The dictionary is
-    cached in-process; matched blocks are read via pyarrow with a term_id
-    predicate (pushed to parquet row-group pruning, same pruning the
-    cluster path gets); scoring reuses the exact shard scorer as one
-    logical shard, so results are identical to :func:`wand_search`
-    (tested). Appropriate while Σ matched-list bytes fit one process —
-    p50 ≈ tens of ms vs the ~1 s Spark job round trip; beyond that, use
-    the batched cluster path. Reference cost-model analog:
-    O(log n) probe + O(candidates) rescore, colbert_live.py:167-169."""
-    import pyarrow.dataset as ds
-
-    from colbert_live_spark.index import fsio
-
-    all_terms = sorted({t for _, q in queries for t in py_tokenize(q)})
-    dct, avgdl = _local_dict(index_dir, all_terms)
-    qmeta, nq_map = build_qmeta(queries, dct.get)
-    term_ids = {tid for terms in qmeta.values() for tid, _ in terms}
-    empty = pd.DataFrame({"query_id": pd.array([], dtype="str"),
-                          "rank": pd.array([], dtype="int32"),
-                          "doc_id": pd.array([], dtype="int64"),
-                          "score": pd.array([], dtype="float64")})
-    if not qmeta:
-        return empty
-    _pfs, _ppath = fsio.resolve(f"{index_dir}/postings")
-    dataset = ds.dataset(_ppath, format="parquet", filesystem=_pfs)
-    blocks = dataset.to_table(
-        filter=pruning_isin("term_id", term_ids)).to_pandas()
+    """Low-latency serving with ZERO Spark jobs — "a user issues one query
+    and waits": :func:`resolve` + :func:`run_local`, results identical to
+    :func:`wand_search` (tested). Appropriate while Σ matched-list bytes
+    fit one process — p50 ≈ tens of ms vs the ~1 s Spark job round trip.
+    ``filter_ids``: any iterable of permitted doc ids. Reference cost-model
+    analog: O(log n) probe + O(candidates) rescore, colbert_live.py:167-169.
+    """
     fids = None
     if filter_ids is not None:
-        # accept any iterable of ids (set/list/array — the oracle-side
-        # filter API is a set, so mirror that tolerance)
         fids = np.unique(np.fromiter((int(x) for x in filter_ids),
                                      dtype=np.int64))
-    partial = score_shard_queries(blocks, qmeta, nq_map, avgdl, k,
-                                  prune=prune, conjunctive=conjunctive,
-                                  filter_ids=fids)
-    if not len(partial):
-        return empty
-    out = []
-    for qid, g in partial.groupby("query_id", sort=True):
-        order = np.lexsort((g["doc_id"].to_numpy(),
-                            -g["score"].to_numpy()))[:k]
-        gg = g.iloc[order].reset_index(drop=True)
-        gg.insert(1, "rank", np.arange(1, len(gg) + 1, dtype=np.int32))
-        out.append(gg)
-    return pd.concat(out, ignore_index=True)
+    return run_local(resolve(index_dir, queries), k, prune, conjunctive,
+                     fids)
 
 
 def wand_search(
@@ -746,131 +746,15 @@ def wand_search(
     conjunctive: bool = False,
     doc_filter: DataFrame | None = None,
 ) -> DataFrame:
-    """Batched top-k over a built index. Returns
-    (query_id, rank, doc_id, score). ``conjunctive=True`` switches to
-    posting-list-intersection semantics (AND across query terms); it
-    composes with ``doc_filter`` (intersection ∩ filter).
+    """Batched top-k over a built index: :func:`resolve` +
+    :func:`run_spark`. Returns (query_id, rank, doc_id, score).
+    ``conjunctive=True`` switches to posting-list-intersection semantics
+    (AND across query terms); it composes with ``doc_filter``.
 
     ``doc_filter``: optional single-column (doc_id) DataFrame of permitted
-    docs — the composable metadata predicate. It is distributed end-to-end:
-    filter ids shuffle by the same doc-shard key as the index, so nothing
-    is ever collected to the driver (reference analog: tag filter inside
-    the ANN scan, `example/cmdline/db.py:82-88`; corpus statistics stay
-    GLOBAL, matching the reference's semantics).
-
-    Topology: on a ``salt_v3`` index (every doc shard's blocks wholly
-    inside one postings file — verified at build time) NO path ever
-    shuffles block bytes:
-    - unfiltered: ONE TASK PER FILE — each task pyarrow-reads its own file
-      with the term_id predicate pushed to row-group pruning, scores all
-      queries, and emits ≤ k candidates per query;
-    - filtered: the filter ids (8-byte rows — the minimum possible shuffle)
-      group by their doc shard; each shard's group task reads that shard's
-      ONE postings file directly and scores under the filter. A shard with
-      no permitted ids is never read at all (filter-directed pruning).
-    Non-salt_v3 layouts fall back to the groupBy(salt) / cogroup topology
-    (blocks shuffle once per batch — correct, but the old scaling cost)."""
-    from colbert_live_spark.index import fsio
-    meta = json.loads(fsio.read_text(f"{index_dir}/_INDEX_META.json"))
-    avgdl = float(meta["avgdl"])
-    doc_shards = meta.get("doc_shards")
-    if doc_shards is None:
-        raise ValueError(
-            f"{index_dir} uses the pre-doc-shard layout (no 'doc_shards' in "
-            "_INDEX_META.json); rebuild the index with the current builder")
-
-    matched = _matched_terms(spark, index_dir, queries)
-    qmeta, nq_map = build_qmeta(queries, matched.get)
-    if not qmeta:
-        return spark.createDataFrame([], OUT_SCHEMA)
-    term_ids = sorted({tid for terms in qmeta.values() for tid, _ in terms})
-    bc = spark.sparkContext.broadcast((qmeta, nq_map))
-
-    if meta.get("layout") == "salt_v3":
-        files = fsio.list_files(f"{index_dir}/postings", ".parquet")
-        if not files:
-            return spark.createDataFrame([], OUT_SCHEMA)
-
-        if doc_filter is None:
-            # one row per file, one PARTITION per file (parallelize slices
-            # the list evenly) → mapInPandas runs one scoring task per file
-            # with no shuffle anywhere before the tiny D·k-per-query merge
-            fdf = spark.createDataFrame(
-                spark.sparkContext.parallelize([(f,) for f in files],
-                                               len(files)),
-                "path string")
-
-            def run_files(it):
-                import pyarrow.dataset as pads
-                qm, nq = bc.value
-                for pdf in it:
-                    for path in pdf["path"]:
-                        fs, p = fsio.resolve(path)
-                        tab = (pads.dataset(p, format="parquet",
-                                            filesystem=fs)
-                               .to_table(filter=pruning_isin(
-                                   "term_id", term_ids)))
-                        out = score_shard_queries(tab.to_pandas(), qm, nq,
-                                                  avgdl, k, prune,
-                                                  conjunctive)
-                        if len(out):
-                            yield out
-
-            partial = fdf.mapInPandas(run_files, schema=PARTIAL_SCHEMA)
-            return merge_topk(partial, k)
-
-        # filtered fast path: group the PERMITTED ids by doc shard (the only
-        # Exchange — id rows, never block bytes); each group task reads its
-        # shard's single postings file via pyarrow. A doc can only score in
-        # its own shard, so shards absent from the filter contribute nothing
-        # and are skipped entirely.
-        salt_files = _salt_file_map(files)
-        fdf = (doc_filter
-               .select(F.col(doc_filter.columns[0]).cast("long")
-                       .alias("doc_id"))
-               .withColumn("shard", shard_expr(F.col("doc_id"), doc_shards)))
-
-        def run_salt(key: tuple, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.dataset as pads
-            qm, nq = bc.value
-            path = salt_files.get(int(key[0]))
-            if path is None:
-                return _empty_partial()
-            fs, p = fsio.resolve(path)
-            tab = (pads.dataset(p, format="parquet", filesystem=fs)
-                   .to_table(filter=pruning_isin("term_id", term_ids)))
-            fids = np.unique(filt_pdf["doc_id"].to_numpy(np.int64))
-            return score_shard_queries(tab.to_pandas(), qm, nq, avgdl, k,
-                                       prune, conjunctive, filter_ids=fids)
-
-        partial = fdf.groupBy("shard").applyInPandas(
-            run_salt, schema=PARTIAL_SCHEMA)
-        return merge_topk(partial, k)
-
-    postings = (spark.read.parquet(f"{index_dir}/postings")
-                .filter(F.col("term_id").isin(term_ids)))
-
-    if doc_filter is not None:
-        fdf = doc_filter.select(
-            F.col(doc_filter.columns[0]).cast("long").alias("doc_id"))
-        fdf = fdf.withColumn("shard", shard_expr(F.col("doc_id"), doc_shards))
-
-        def run2(blocks_pdf: pd.DataFrame,
-                 filt_pdf: pd.DataFrame) -> pd.DataFrame:
-            qm, nq = bc.value
-            fids = np.unique(filt_pdf["doc_id"].to_numpy(np.int64))
-            return score_shard_queries(blocks_pdf, qm, nq, avgdl, k, prune,
-                                       conjunctive, filter_ids=fids)
-
-        partial = (postings.groupBy("salt")
-                   .cogroup(fdf.groupBy("shard"))
-                   .applyInPandas(run2, schema=PARTIAL_SCHEMA))
-    else:
-        def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            qm, nq = bc.value
-            return score_shard_queries(pdf, qm, nq, avgdl, k, prune,
-                                       conjunctive)
-
-        partial = postings.groupBy("salt").applyInPandas(
-            run, schema=PARTIAL_SCHEMA)
-    return merge_topk(partial, k)
+    docs — the composable metadata predicate, distributed end to end (the
+    ids shuffle by doc shard, never to the driver; reference analog: tag
+    filter inside the ANN scan, `example/cmdline/db.py:82-88`). Corpus
+    statistics stay GLOBAL, matching the reference's semantics."""
+    return run_spark(spark, resolve(index_dir, queries), k, prune,
+                     conjunctive, doc_filter)

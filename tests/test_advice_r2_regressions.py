@@ -78,7 +78,7 @@ def test_local_dict_cache_invalidated_on_rebuild(spark, documents,
                 n_shards=2, salt_rows=100)
     got = wand_search_local(out, DOC_QUERIES, k=K)
     from colbert_live_spark.operators import wand as wand_mod
-    wand_mod._DICT_CACHE.clear()
+    wand_mod._CACHE.clear()
     fresh = wand_search_local(out, DOC_QUERIES, k=K)
     assert got.equals(fresh)
     assert not got.equals(first)

@@ -1,8 +1,8 @@
 """Regressions for the round-4 ADVICE findings.
 
-- _local_dict's hot-term cache must be bounded (LRU): an adversarial
-  stream of distinct absent terms must not grow driver memory without
-  bound, and evicted terms must still resolve via the point-lookup path.
+- the serving term cache must be bounded (LRU): an adversarial stream of
+  distinct absent terms must not grow driver memory without bound, and
+  evicted terms must still resolve via the point-lookup path.
 - legacy-root stream migration: a root whose batches were committed before
   stream-id namespacing (no ns_version marker) must seed a newly named
   stream's namespace from the legacy token, so a replayed micro-batch is
@@ -38,25 +38,35 @@ def small_index(spark, documents, tmp_path_factory):
     return out
 
 
-def test_local_dict_cache_is_bounded_lru(small_index, monkeypatch):
-    monkeypatch.setattr(wand, "_DICT_CACHE_MAX", 8)
-    wand._DICT_CACHE.clear()
+def test_local_dict_cache_is_bounded_lru(small_index, tmp_path, monkeypatch):
+    """The driver-side serving cache is bounded per root (terms, absent
+    terms included) and across roots; evicted entries are point-read
+    again with the same answer."""
+    monkeypatch.setattr(wand, "_CACHE_TERMS_MAX", 8)
+    wand._CACHE.clear()
     # flood with distinct absent terms — every one is a negative entry
     for i in range(50):
-        wand._local_dict(small_index, [f"zz_absent_{i:04d}"])
-    cache = wand._DICT_CACHE[small_index][1]
-    assert len(cache) <= 8
+        assert wand.resolve(small_index, [("q", f"zz_absent_{i:04d}")]) \
+            is None
+    assert len(wand._CACHE[small_index].terms) <= 8
     # a real term evicted earlier must still resolve correctly (falls back
     # to the point-lookup path), and LRU touch keeps it resident
-    d1, _ = wand._local_dict(small_index, ["spark"])
-    assert d1["spark"] is not None
-    tid, idf = d1["spark"]
+    first = wand.resolve(small_index, [("q", "spark")]).qmeta
+    assert first["q"]
     for i in range(20):
-        wand._local_dict(small_index, [f"zz_more_{i:04d}", "spark"])
-    d2, _ = wand._local_dict(small_index, ["spark"])
-    assert d2["spark"] == (tid, idf)
-    assert len(wand._DICT_CACHE[small_index][1]) <= 8
-    wand._DICT_CACHE.clear()
+        wand.resolve(small_index, [("q", f"zz_more_{i:04d} spark")])
+    assert "spark" in wand._CACHE[small_index].terms
+    assert wand.resolve(small_index, [("q", "spark")]).qmeta == first
+    assert len(wand._CACHE[small_index].terms) <= 8
+    # the root map is an LRU too: a second index evicts the first
+    monkeypatch.setattr(wand, "_CACHE_ROOTS_MAX", 1)
+    import shutil
+    other = str(tmp_path / "copy")
+    shutil.copytree(small_index, other)
+    wand.resolve(other, [("q", "spark")])
+    assert list(wand._CACHE) == [other]
+    assert wand.resolve(small_index, [("q", "spark")]).qmeta == first
+    wand._CACHE.clear()
 
 
 def test_legacy_root_stream_namespace_seeded(spark, documents, tmp_path):

@@ -72,22 +72,6 @@ def test_delete_equals_rebuild(spark, documents, del_root, reduced_oracle):
     assert m["tombstones"]["n_deleted"] == len(ids)
 
 
-def test_local_serving_matches_cluster_with_tombstones(spark, del_root):
-    """segment_search_local (zero Spark jobs) on a TOMBSTONED live root ==
-    the cluster path, rank and score (VERDICT r4 ask #4: live roots get a
-    low-latency serving mode)."""
-    from colbert_live_spark.index.segments import segment_search_local
-    cluster = _collect(segment_search(spark, del_root, DOC_QUERIES, k=K))
-    local = {}
-    for r in segment_search_local(del_root, DOC_QUERIES, k=K).itertuples():
-        local.setdefault(r.query_id, []).append((r.doc_id, r.score))
-    assert local.keys() == cluster.keys()
-    for qid in cluster:
-        assert [d for d, _ in local[qid]] == [d for d, _ in cluster[qid]]
-        for (_, s1), (_, s2) in zip(local[qid], cluster[qid]):
-            assert math.isclose(s1, s2, abs_tol=ATOL)
-
-
 def test_compact_drops_tombstones(spark, del_root, reduced_oracle):
     before = _collect(segment_search(spark, del_root, DOC_QUERIES, k=K))
     compact(spark, del_root, salt_rows=100)

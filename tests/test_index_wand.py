@@ -1,5 +1,6 @@
 """Compressed-index build + WAND query path: rank-identity vs oracle,
-pruned == unpruned (safe pruning), checkpoint/resume equivalence."""
+pruned == unpruned (safe pruning), checkpoint/resume equivalence, the
+one-file-per-salt layout invariant."""
 from __future__ import annotations
 
 import math
@@ -48,41 +49,6 @@ def test_pruned_equals_unpruned(spark, index_dir):
     assert pruned == full  # exact float equality — WAND is safe pruning
 
 
-def test_pruning_skips_blocks():
-    """The pruning machinery must actually skip block decodes on a
-    skew-shaped query (rare high-idf term + common low-idf term, small k) —
-    a pure unit test over synthetic encoded lists."""
-    import numpy as np
-    import pandas as pd
-    from colbert_live_spark.index.codec import encode_posting_list
-    from colbert_live_spark.operators.wand import score_query_blocks
-
-    rng = np.random.default_rng(7)
-    n_docs, avgdl = 20_000, 100.0
-
-    def make_blocks(term_id, doc_ids, tf_hi, idf, qtf=1):
-        tfs = rng.integers(1, tf_hi + 1, doc_ids.size).astype(np.int64)
-        dls = rng.integers(50, 200, doc_ids.size).astype(np.int64)
-        blocks = encode_posting_list(doc_ids, tfs, dls, avgdl, block_size=64)
-        pdf = pd.DataFrame(blocks)
-        pdf.insert(0, "salt", 0)
-        pdf.insert(0, "term_id", term_id)
-        pdf["qtf"], pdf["idf"], pdf["query_id"] = qtf, idf, "p1"
-        return pdf
-
-    rare = np.sort(rng.choice(n_docs, 40, replace=False)).astype(np.int64)
-    common = np.sort(rng.choice(n_docs, 8000, replace=False)).astype(np.int64)
-    blocks = pd.concat([make_blocks(1, rare, 3, idf=6.0),
-                        make_blocks(2, common, 5, idf=0.4)], ignore_index=True)
-
-    stats: dict = {}
-    pruned = score_query_blocks(blocks, avgdl=avgdl, k=3, prune=True,
-                                stats=stats)
-    full = score_query_blocks(blocks, avgdl=avgdl, k=3, prune=False)
-    assert stats["blocks_decoded"] < stats["blocks_total"], stats
-    assert pruned.equals(full)
-
-
 def test_checkpoint_resume_equivalence(spark, documents, tmp_path_factory,
                                        oracle_index):
     """Kill after 2 of 4 run groups, resume, assert (a) only pending groups
@@ -127,48 +93,6 @@ def test_conjunctive_wand_matches_oracle(spark, index_dir, oracle_index):
             assert math.isclose(gs, es, abs_tol=ATOL), (qid, gd)
 
 
-def test_intersection_skips_blocks():
-    """Intersection must decode only candidate-overlapping blocks of the
-    larger lists (skip-pointer evidence) — pure pandas unit test."""
-    import numpy as np
-    import pandas as pd
-    from colbert_live_spark.index.codec import encode_posting_list
-    from colbert_live_spark.operators.wand import intersect_query_blocks
-
-    rng = np.random.default_rng(11)
-    avgdl = 100.0
-
-    def make(term_id, doc_ids, idf):
-        tfs = rng.integers(1, 4, doc_ids.size).astype(np.int64)
-        dls = rng.integers(50, 200, doc_ids.size).astype(np.int64)
-        out = pd.DataFrame(encode_posting_list(doc_ids, tfs, dls, avgdl,
-                                               block_size=64))
-        out.insert(0, "salt", 0)
-        out.insert(0, "term_id", term_id)
-        out["qtf"], out["idf"], out["query_id"] = 1, idf, "c1"
-        return out, dict(zip(doc_ids.tolist(), tfs.tolist())), dict(
-            zip(doc_ids.tolist(), dls.tolist()))
-
-    small = np.sort(rng.choice(50_000, 30, replace=False)).astype(np.int64)
-    big = np.sort(rng.choice(50_000, 20_000, replace=False)).astype(np.int64)
-    b1, tf1, dl1 = make(1, small, idf=5.0)
-    b2, tf2, dl2 = make(2, big, idf=0.5)
-    stats: dict = {}
-    res = intersect_query_blocks(pd.concat([b1, b2], ignore_index=True),
-                                 avgdl=avgdl, k=10, n_query_terms=2,
-                                 stats=stats)
-    assert stats["blocks_decoded"] < stats["blocks_total"], stats
-    # brute-force expected intersection
-    from colbert_live_spark.oracle import bm25_term_weight
-    inter = sorted(set(small) & set(big))
-    scores = {d: 5.0 * bm25_term_weight(tf1[d], dl1[d], avgdl)
-              + 0.5 * bm25_term_weight(tf2[d], dl2[d], avgdl) for d in inter}
-    expect = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert list(res["doc_id"]) == [d for d, _ in expect]
-    for got_s, (_, exp_s) in zip(res["score"], expect):
-        assert math.isclose(got_s, exp_s, abs_tol=1e-9)
-
-
 def test_query_time_doc_filter_matches_oracle(spark, index_dir, documents,
                                               oracle_index):
     """Composable metadata predicate at query time — global stats preserved
@@ -185,27 +109,6 @@ def test_query_time_doc_filter_matches_oracle(spark, index_dir, documents,
         for (gd, gs), (ed, es) in zip(g, expect):
             assert math.isclose(gs, es, abs_tol=ATOL)
         assert all(d in en_ids for d, _ in g)
-
-
-def test_local_mode_matches_cluster(spark, index_dir):
-    """Low-latency driver-local serving returns exactly what the cluster
-    path returns (same ranks, same float scores) — disjunctive and
-    conjunctive, including the all-terms-missing empty path."""
-    from colbert_live_spark.operators.wand import wand_search_local
-    for conj in (False, True):
-        cluster = _collect(wand_search(spark, index_dir, DOC_QUERIES, k=K,
-                                       conjunctive=conj))
-        local = wand_search_local(index_dir, DOC_QUERIES, k=K,
-                                  conjunctive=conj)
-        got = {}
-        for r in local.itertuples():
-            got.setdefault(r.query_id, []).append((r.doc_id, r.score))
-        assert got.keys() == cluster.keys()
-        for qid in cluster:
-            assert [d for d, _ in got[qid]] == [d for d, _ in cluster[qid]]
-            for (_, s1), (_, s2) in zip(got[qid], cluster[qid]):
-                assert math.isclose(s1, s2, abs_tol=ATOL)
-    assert len(wand_search_local(index_dir, [("qx", "zzzmissing")], k=K)) == 0
 
 
 def test_local_mode_doc_filter(spark, index_dir, documents, oracle_index):
@@ -233,8 +136,8 @@ def test_local_mode_doc_filter(spark, index_dir, documents, oracle_index):
 def test_doc_filter_is_distributed(spark, index_dir, documents):
     """The filtered path must shuffle the filter ids by doc shard (a
     FlatMapGroupsInPandas over the id rows), never collect them to the
-    driver — and on salt_v3 it must NOT move block bytes (no cogroup of
-    the postings scan)."""
+    driver — and it must NOT move block bytes (no cogroup of the postings
+    scan)."""
     from pyspark.sql import functions as F
     en = documents.filter(F.col("lang") == "en").select("doc_id")
     df = wand_search(spark, index_dir, DOC_QUERIES, k=K, doc_filter=en)
@@ -255,49 +158,70 @@ def test_dictionary_ids_unique(spark, index_dir):
     assert ids == list(range(n))  # dense 0..V-1
 
 
-def test_intersection_missing_term_empty():
-    import pandas as pd
-    import numpy as np
-    from colbert_live_spark.index.codec import encode_posting_list
-    from colbert_live_spark.operators.wand import intersect_query_blocks
-    d = np.arange(10, dtype=np.int64)
-    blocks = pd.DataFrame(encode_posting_list(
-        d, np.ones(10, np.int64), np.full(10, 100, np.int64), 100.0))
-    blocks.insert(0, "salt", 0)
-    blocks.insert(0, "term_id", 1)
-    blocks["qtf"], blocks["idf"], blocks["query_id"] = 1, 1.0, "q"
-    # query had 2 distinct terms but only 1 matched the dictionary
-    res = intersect_query_blocks(blocks, avgdl=100.0, k=5, n_query_terms=2)
-    assert len(res) == 0
+def test_intersection_missing_term_empty(spark, index_dir):
+    """A conjunctive query with one term absent from the index matches no
+    doc, on both executors."""
+    from colbert_live_spark.operators.wand import wand_search_local
+    qs = [("qc", "spark zzzmissing")]
+    assert wand_search(spark, index_dir, qs, k=K,
+                       conjunctive=True).count() == 0
+    assert len(wand_search_local(index_dir, qs, k=K, conjunctive=True)) == 0
+    # the present term alone does match
+    assert len(wand_search_local(index_dir, [("q", "spark")], k=K,
+                                 conjunctive=True))
 
 
-def test_file_task_path_identical_to_cogroup_path(spark, index_dir,
-                                                  documents,
-                                                  tmp_path_factory):
-    """The salt_v3 shuffle-free topologies (file tasks; filter-group tasks)
-    and the groupBy(salt)/cogroup shuffle topologies must produce
-    byte-identical results. Downgrading the layout tag to salt_v2 forces
-    the fallback on a copy of the same index — this is exactly what the
-    builder stamps when the one-file-per-salt invariant fails, so it also
-    proves the fallback serves correctly."""
-    import json as _json
-    import shutil as _shutil
+def test_postings_one_file_per_salt_despite_session_split(
+        spark, documents, tmp_path_factory):
+    """A session-level file split (spark.sql.files.maxRecordsPerFile) must
+    not split a doc shard's postings: the build stays salt_v3 with one
+    file per salt dir and answers identically to a clean build."""
+    import json
+    import os
+
     from pyspark.sql import functions as F
-    legacy = str(tmp_path_factory.mktemp("legacy") / "idx")
-    _shutil.copytree(index_dir, legacy)
-    meta = _json.loads(open(f"{legacy}/_INDEX_META.json").read())
-    meta["layout"] = "salt_v2"
-    open(f"{legacy}/_INDEX_META.json", "w").write(_json.dumps(meta))
+    docs = documents.filter(F.col("doc_id") < 300)
+    split_out = str(tmp_path_factory.mktemp("msalt") / "idx")
+    clean_out = str(tmp_path_factory.mktemp("msalt") / "clean")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "7")
+    try:
+        build_index(spark, docs, split_out, n_groups=2, n_shards=4,
+                    salt_rows=100)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    build_index(spark, docs, clean_out, n_groups=2, n_shards=4,
+                salt_rows=100)
+    meta = json.loads(open(f"{split_out}/_INDEX_META.json").read())
+    assert meta["layout"] == "salt_v3"
+    salts = [d for d in os.listdir(f"{split_out}/postings")
+             if d.startswith("salt=")]
+    assert salts
+    for d in salts:
+        files = [f for f in os.listdir(f"{split_out}/postings/{d}")
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    got = _collect(wand_search(spark, split_out, DOC_QUERIES, k=K))
+    want = _collect(wand_search(spark, clean_out, DOC_QUERIES, k=K))
+    assert got == want
 
-    en = documents.filter(F.col("lang") == "en").select("doc_id")
-    fast = _collect(wand_search(spark, index_dir, DOC_QUERIES, k=10))
-    slow = _collect(wand_search(spark, legacy, DOC_QUERIES, k=10))
-    assert fast == slow
-    fast_f = _collect(wand_search(spark, index_dir, DOC_QUERIES, k=10,
-                                  doc_filter=en))
-    slow_f = _collect(wand_search(spark, legacy, DOC_QUERIES, k=10,
-                                  doc_filter=en))
-    assert fast_f == slow_f
+
+def test_unverified_layout_raises(spark, index_dir, tmp_path):
+    """An index whose meta is not salt_v3 (a doc shard may span several
+    postings files) is refused on both executors, never served through a
+    slower path."""
+    import json
+    import shutil
+
+    from colbert_live_spark.operators.wand import wand_search_local
+    legacy = str(tmp_path / "idx")
+    shutil.copytree(index_dir, legacy)
+    meta = json.loads(open(f"{legacy}/_INDEX_META.json").read())
+    meta["layout"] = "salt_v2"
+    open(f"{legacy}/_INDEX_META.json", "w").write(json.dumps(meta))
+    with pytest.raises(ValueError, match="rebuild"):
+        wand_search(spark, legacy, DOC_QUERIES, k=K)
+    with pytest.raises(ValueError, match="rebuild"):
+        wand_search_local(legacy, DOC_QUERIES, k=K)
 
 
 def test_local_dict_point_lookup_prunes_rowgroups(tmp_path):
@@ -312,12 +236,11 @@ def test_local_dict_point_lookup_prunes_rowgroups(tmp_path):
     terms = [f"term{i:05d}" for i in range(1000)]
     t = pa.table({"term": terms,
                   "term_id": pa.array(range(1000), pa.int64()),
-                  "idf": pa.array([1.5] * 1000, pa.float64())})
+                  "df": pa.array([3] * 1000, pa.int64())})
     (tmp_path / "dict").mkdir()
     pq.write_table(t, tmp_path / "dict" / "part-0.parquet",
                    row_group_size=50)  # 20 term-sorted row groups
-    from colbert_live_spark.operators.wand import (_dict_point_lookup,
-                                                   pruning_isin)
+    from colbert_live_spark.operators.wand import _point_lookup, pruning_isin
     ds = pads.dataset(str(tmp_path / "dict"), format="parquet")
     frag = next(iter(ds.get_fragments()))
     # a bare isin does NOT prune (pyarrow only evaluates eq/range
@@ -330,9 +253,10 @@ def test_local_dict_point_lookup_prunes_rowgroups(tmp_path):
     big = [f"term{i:05d}" for i in range(100, 300)]
     span = list(frag.split_by_row_group(pruning_isin("term", big)))
     assert len(span) <= 5, "range conjunct did not prune outside the span"
-    found = _dict_point_lookup(str(tmp_path),
-                               ["term00007", "term00953", "zzzabsent"])
-    assert found == {"term00007": (7, 1.5), "term00953": (953, 1.5)}
+    d = str(tmp_path)
+    found = _point_lookup([d], ["term00007", "term00953", "zzzabsent"])
+    assert found == {"term00007": {d: (7, 3)}, "term00953": {d: (953, 3)},
+                     "zzzabsent": {}}
 
 
 def test_local_dict_hot_cache(index_dir, monkeypatch):
@@ -340,15 +264,15 @@ def test_local_dict_hot_cache(index_dir, monkeypatch):
     negative entries for absent terms) with zero dictionary reads."""
     from colbert_live_spark.operators import wand as wand_mod
     from colbert_live_spark.operators.wand import wand_search_local
-    wand_mod._DICT_CACHE.clear()
+    wand_mod._CACHE.clear()
     calls: list[list[str]] = []
-    orig = wand_mod._dict_point_lookup
+    orig = wand_mod._point_lookup
 
-    def spy(ix, terms):
+    def spy(dirs, terms):
         calls.append(list(terms))
-        return orig(ix, terms)
+        return orig(dirs, terms)
 
-    monkeypatch.setattr(wand_mod, "_dict_point_lookup", spy)
+    monkeypatch.setattr(wand_mod, "_point_lookup", spy)
     qs = DOC_QUERIES + [("qx", "zzzmissing keyword")]
     r1 = wand_search_local(index_dir, qs, k=K)
     n1 = len(calls)

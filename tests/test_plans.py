@@ -54,7 +54,7 @@ def test_no_row_python_in_all_entry_queries(spark):
 
 
 def test_wand_search_plan(spark):
-    """Serving plan shape (salt_v3 fast path): one MapInPandas task per
+    """Serving plan shape: one MapInPandas task per
     postings file, NO shuffle of block bytes anywhere — the only Exchange
     in the plan is the tiny D·k-per-query merge keyed on query_id."""
     from colbert_live_spark.entry_queries import built_index
@@ -76,7 +76,7 @@ def test_wand_search_plan(spark):
 
 
 def test_wand_search_filtered_plan(spark):
-    """The doc_filter fast path shuffles ONLY the 8-byte filter-id rows
+    """The doc_filter path shuffles ONLY the 8-byte filter-id rows
     (grouped by doc shard); blocks are pyarrow-read inside each group task
     — no cogroup, no Exchange of block bytes, no row-Python."""
     from colbert_live_spark.entry_queries import built_index
@@ -97,8 +97,8 @@ def test_wand_search_filtered_plan(spark):
 
 
 def test_segment_search_plan(spark):
-    """Segmented serving fast path: one MapInPandas task per (segment,
-    postings file), no cogroup, no block-byte shuffle (VERDICT r3 ask #1)."""
+    """Segmented serving: one MapInPandas task per (segment, postings
+    file), no cogroup, no block-byte shuffle (VERDICT r3 ask #1)."""
     from colbert_live_spark.entry_queries import built_live_root
     from colbert_live_spark.index.segments import segment_search
     from colbert_live_spark.queryset import DOC_QUERIES
@@ -114,8 +114,8 @@ def test_segment_search_plan(spark):
 
 
 def test_segment_search_tombstoned_plan(spark):
-    """Tombstones below the broadcast cap keep the file-task topology (the
-    exclude set rides the broadcast, not a cogroup)."""
+    """Tombstones keep the file-task topology: each task reads its own
+    shard's tombstone slice, nothing cogroups with the blocks."""
     from colbert_live_spark.entry_queries import built_deleted_root
     from colbert_live_spark.index.segments import segment_search
     from colbert_live_spark.queryset import DOC_QUERIES

@@ -1,5 +1,6 @@
 """Incremental segments: rank-identity under incremental ingest, compaction
-equivalence, streaming ingestion liveness."""
+equivalence, streaming ingestion liveness, arrival-order independence of
+natural-key (preserve_ids) ingest."""
 from __future__ import annotations
 
 import math
@@ -58,26 +59,6 @@ def test_incremental_matches_oracle(spark, seg_root, oracle_index):
     """Global stats across segments → scores identical to full rebuild."""
     got = _collect(segment_search(spark, seg_root, DOC_QUERIES, k=K))
     _assert_matches_oracle(got, oracle_index)
-
-
-def test_local_serving_matches_cluster(spark, seg_root):
-    """segment_search_local == segment_search on a 3-segment root, both
-    disjunctive and conjunctive (the segmented twin of the monolithic
-    wand_search_local identity)."""
-    from colbert_live_spark.index.segments import segment_search_local
-    for conj in (False, True):
-        cluster = _collect(segment_search(spark, seg_root, DOC_QUERIES,
-                                          k=K, conjunctive=conj))
-        local = {}
-        for r in segment_search_local(seg_root, DOC_QUERIES, k=K,
-                                      conjunctive=conj).itertuples():
-            local.setdefault(r.query_id, []).append((r.doc_id, r.score))
-        assert local.keys() == cluster.keys(), conj
-        for qid in cluster:
-            assert ([d for d, _ in local[qid]]
-                    == [d for d, _ in cluster[qid]]), (conj, qid)
-            for (_, s1), (_, s2) in zip(local[qid], cluster[qid]):
-                assert math.isclose(s1, s2, abs_tol=ATOL)
 
 
 def test_incremental_conjunctive_matches_relational(spark, seg_root,
@@ -144,3 +125,25 @@ def test_streaming_ingest(spark, documents, tmp_path_factory, oracle_index):
     assert sum(s["n_docs"] for s in m["segments"]) == n
     got = _collect(segment_search(spark, root, DOC_QUERIES, k=K))
     _assert_matches_oracle(got, oracle_index)
+
+
+def test_preserve_ids_order_invariant(spark, documents, tmp_path_factory):
+    """With preserve_ids, ingesting the same batches in EITHER order yields
+    identical search results with the original corpus ids."""
+    docs = documents.filter(F.col("doc_id") < 300)
+    lo = docs.filter(F.col("doc_id") < 150)
+    hi = docs.filter(F.col("doc_id") >= 150)
+    roots = []
+    for name, batches in [("ab", [lo, hi]), ("ba", [hi, lo])]:
+        root = str(tmp_path_factory.mktemp("pids") / name)
+        for b in batches:
+            add_segment(spark, b, root, n_shards=2, salt_rows=100,
+                        preserve_ids=True)
+        roots.append(root)
+    a = _collect(segment_search(spark, roots[0], DOC_QUERIES, k=K))
+    b = _collect(segment_search(spark, roots[1], DOC_QUERIES, k=K))
+    assert a == b and a
+    # ids are the corpus ids, not offset ones
+    all_ids = {r.doc_id for r in docs.select("doc_id").collect()}
+    for hits in a.values():
+        assert {d for d, _ in hits} <= all_ids

@@ -179,3 +179,16 @@ def test_conjunctive_shard_semantics():
     assert [d for d, _ in g] == [d for d, _ in expect]
     for (_, s1), (_, s2) in zip(g, expect):
         assert math.isclose(s1, s2, rel_tol=1e-12)
+
+
+def test_conjunctive_term_absent_from_index_returns_no_rows():
+    """A conjunctive query whose second term is absent from the whole index
+    (nothing to resolve, so only one term reaches the scorer) returns no
+    rows, even though its other term has postings here; the same query
+    scored disjunctively does match."""
+    rng = np.random.default_rng(17)
+    blocks, _ = _shard(rng)
+    qm, nq = {"q": [(1, 2.5)]}, {"q": 2}
+    assert len(score_shard_queries(blocks, qm, nq, AVGDL, K,
+                                   conjunctive=True)) == 0
+    assert len(score_shard_queries(blocks, qm, nq, AVGDL, K))

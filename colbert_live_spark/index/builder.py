@@ -26,8 +26,9 @@ The doc-shard salt serves two masters at once:
   list into doc-disjoint sub-lists of ≤ ``salt_rows`` rows, so the largest
   (term, salt) merge group is bounded regardless of Zipf head terms;
 - **batched serving**: because the shard is doc-complete across terms and
-  written as one file, one serving task per file scores ALL queries of a
-  batch locally and only k rows per (query, shard) merge globally.
+  written as one file, files are doc-disjoint: a serving task scores ALL
+  queries of a batch over any subset of files (at most one task per core)
+  and only k rows per (query, task) merge globally.
   Compressed blocks never move, independent of batch size (see
   operators/wand.py).
 
@@ -56,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_live_spark.index import codec, fsio
+from colbert_live_spark.session import is_bare_scan, spread_input
 
 RUN_SCHEMA = "term string, doc_id long, tf int, dl int"
 BLOCK_SCHEMA = ("term_id long, salt int, block_id int, first_doc long, "
@@ -131,20 +133,6 @@ def _append_ledger(spark: SparkSession, out_dir: str, row: tuple) -> None:
         f"{out_dir}/ledger/commit-{uuid.uuid4().hex}.parquet", table)
 
 
-def _is_bare_scan(docs: DataFrame) -> bool:
-    """True iff ``docs`` is an untransformed file scan (its analyzed logical
-    plan is a bare relation). Only then may build_runs re-read the input
-    files per commit group — re-reading a *transformed* DataFrame's files
-    would silently discard the transformation (filters, id shifts, ...)."""
-    try:
-        plan = docs._jdf.queryExecution().analyzed()
-        name = plan.getClass().getSimpleName()
-        return name in ("LogicalRelation", "LogicalRelationWithTable") \
-            and plan.children().isEmpty()
-    except Exception:
-        return False
-
-
 def build_runs(
     spark: SparkSession,
     docs: DataFrame,
@@ -164,7 +152,7 @@ def build_runs(
     pool (Spark schedules concurrent jobs fine); each group still commits
     its ledger row independently, so resume semantics are unchanged.
     """
-    files = sorted(docs.inputFiles()) if _is_bare_scan(docs) else []
+    files = sorted(docs.inputFiles()) if is_bare_scan(docs) else []
     done = completed_group_files(out_dir)
     if files:
         if n_groups is None:
@@ -190,7 +178,6 @@ def build_runs(
     def process(gid: int) -> int:
         t0 = time.time()
         if groups[gid] is not None:
-            from colbert_live_spark.session import spread_input
             # a group with one small file (or one giant row group) would
             # tokenize on a single core — spread it (no-op when the files
             # already split into enough scan tasks; guide §2.5)
@@ -488,13 +475,13 @@ def merge_index(
     # hash repartition, not repartitionByRange: the range sampler would scan
     # the whole join twice. Partitioning by SALT ALONE (layout salt_v3, one
     # output file per doc shard) makes every output file a complete
-    # mini-index of its doc subset — serving then assigns one task per
-    # FILE, each reading its own blocks directly (term_id predicate pushed
-    # to parquet row-group pruning) with NO shuffle of block bytes
-    # (operators/wand.py). Partition volume stays balanced under
-    # Zipf skew because hash(doc_id) spreads every term's postings
-    # uniformly across the doc_shards salts; the per-(term,salt) group
-    # bound (≤ salt_rows) is unchanged.
+    # mini-index of its doc subset — serving then runs at most one task
+    # per core, each scoring a doc-disjoint file subset and reading its own
+    # blocks directly (term_id predicate pushed to parquet row-group
+    # pruning) with NO shuffle of block bytes (operators/wand.py).
+    # Partition volume stays balanced under Zipf skew because hash(doc_id)
+    # spreads every term's postings uniformly across the doc_shards salts;
+    # the per-(term,salt) group bound (≤ salt_rows) is unchanged.
     if pre_encode:
         # Pack partial runs BEFORE the shuffle, so the Exchange moves
         # ~6-10 B/posting of fixed-width packed bytes instead of
@@ -651,18 +638,20 @@ def merge_index(
     # partitionBy(salt): EXACTLY one file per doc shard (each shuffle
     # partition holds whole salts, so each salt is written by exactly one
     # task into its own salt=<s>/ directory; maxRecordsPerFile=0 overrides
-    # any session-level split). The serving file tasks then get D
-    # equal-volume units of work — hash occupancy of D salts into D hash
-    # partitions would otherwise leave ~1/e of files empty-sized and some
-    # with 2-3 salts (measured max/mean 1.69 at 1M docs → straggler tail at
-    # high core counts). Scoring is salt-oblivious within a file.
+    # any session-level split). Serving packs D equal-volume files into at
+    # most one task per core, each scoring a doc-disjoint file subset —
+    # hash occupancy of D salts into D hash partitions would otherwise
+    # leave ~1/e of files empty-sized and some with 2-3 salts (measured
+    # max/mean 1.69 at 1M docs → straggler tail at high core counts).
+    # Scoring is salt-oblivious within a file.
     (blocks_df.write.partitionBy("salt").option("maxRecordsPerFile", 0)
      .mode("overwrite").parquet(f"{out_dir}/postings"))
 
-    # VERIFY the one-file-per-salt invariant before stamping salt_v3: each
-    # serving task scores one postings file, so a salt split across two
-    # files (speculative writes, a future writer change) would emit partial
-    # per-file scores and merge them as duplicates silently.
+    # VERIFY the one-file-per-salt invariant before stamping salt_v3:
+    # serving packs whole files into doc-disjoint task subsets, so a salt
+    # split across two files (speculative writes, a future writer change)
+    # could land in two tasks, emit partial scores for the same docs and
+    # merge them as duplicates silently.
     per_salt: dict[str, int] = {}
     for f in fsio.list_files(f"{out_dir}/postings", ".parquet"):
         key = f.rsplit("/", 2)[-2]

@@ -25,8 +25,9 @@ the Lucene/LSM pattern:
   the phases).
 - ``segment_search`` / ``segment_search_local``: the serving core of
   operators/wand.py — one driver-side plan with corpus statistics computed
-  globally across segments minus tombstones, run as one Spark task per
-  (segment, postings file) or in-process.
+  globally across segments minus tombstones, run in-process or as at most
+  one Spark task per core, each scoring a doc-disjoint subset of the
+  (segment, postings file) pairs.
 - ``compact``: folds all segments' stage-1 runs into one new segment via
   the ordinary merge (the LSM compaction), physically dropping tombstoned
   docs, then swaps the manifest. It also migrates roots whose tombstones
@@ -427,9 +428,9 @@ def segment_search(
 ) -> DataFrame:
     """Batched top-k across all active segments, scores identical to a
     monolithic index rebuilt over exactly the live (non-deleted) docs:
-    :func:`~colbert_live_spark.operators.wand.resolve` + one Spark task
-    per (segment, postings file), each excluding its own salt's slice of
-    the tombstones."""
+    :func:`~colbert_live_spark.operators.wand.resolve` + at most one Spark
+    task per core, each scoring a doc-disjoint subset of the (segment,
+    postings file) pairs and excluding its files' salts' tombstones."""
     return run_spark(spark, resolve(root, queries), k, prune, conjunctive)
 
 

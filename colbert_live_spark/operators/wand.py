@@ -18,16 +18,20 @@ tombstones, an identity term map and weight scale 1.
    - the plan lists every postings file with its salt (doc shard), the
      segment-to-global term-id map, the ``w_scale`` bound factor and the
      tombstone files of that salt.
-2. Two executors run a plan:
-   - :func:`run_local` scores all files as ONE logical shard in-process
-     (zero Spark jobs — the "one user waits" path);
-   - :func:`run_spark` runs ONE TASK PER POSTINGS FILE (``mapInPandas``).
-     A doc's postings live wholly inside one file (the builder writes each
-     doc shard, salt = hash(doc_id) mod D, into exactly one file, and doc
-     ids are unique across segments), so per-file exact top-k candidates
-     union to a superset of the global top-k. With a ``doc_filter`` the
-     8-byte filter ids group by doc shard and each group task scores that
-     shard's files; it is the only shuffle before the D·k-per-query merge.
+2. Two executors run a plan, both through :func:`score_files`, which
+   scores a subset of the plan's files as ONE logical shard. A doc's
+   postings live wholly inside one file (the builder writes each doc shard,
+   salt = hash(doc_id) mod D, into exactly one file, and doc ids are unique
+   across segments), so file subsets are doc-disjoint and the exact top-k
+   of each subset unions to a superset of the global top-k:
+   - :func:`run_local` scores all files in-process (zero Spark jobs — the
+     "one user waits" path);
+   - :func:`run_spark` runs AT MOST ONE TASK PER CORE (``mapInPandas``
+     over ``spark.range``), each scoring a doc-disjoint file subset. A
+     Python worker round costs far more than decoding one file, so fewer,
+     fatter tasks win. With a ``doc_filter`` the 8-byte filter ids group by
+     doc shard and each group task scores that shard's files; it is the
+     only shuffle before the merge of ≤ k rows per query and task.
      Compressed block bytes never enter an Exchange.
 
 The layout is checked, never worked around: a shard split across several
@@ -61,7 +65,7 @@ from pyspark.sql import functions as F
 
 from colbert_live_spark.functions.tokenize import py_tokenize
 from colbert_live_spark.index import fsio
-from colbert_live_spark.index.codec import bm25_weight_np
+from colbert_live_spark.index.codec import bm25_weight_np, decode_blocks
 
 OUT_SCHEMA = "query_id string, rank int, doc_id long, score double"
 
@@ -75,14 +79,6 @@ def expand_budget(k: int, a: float = 94.9, b: float = 11.0,
     lists: docs outside the top expand_budget(k) by upper bound can never
     enter the final top-k."""
     return int(max(k, a + b * k + c * k * math.log(max(k, 2))))
-
-
-def _decode_many(first_docs, ns, docs_blobs, tfs_blobs, dls_blobs):
-    """Decode a set of blocks into flat (doc_ids, tfs, dls) arrays —
-    single-pass vectorized (see codec.decode_blocks)."""
-    from colbert_live_spark.index.codec import decode_blocks
-    return decode_blocks(first_docs, ns, list(docs_blobs), list(tfs_blobs),
-                         list(dls_blobs))
 
 
 def _merge_acc(acc_d, acc_s, new_d, new_s):
@@ -181,12 +177,16 @@ def _member_mask(ids: np.ndarray, members: np.ndarray) -> np.ndarray:
 
 
 class ShardLists:
-    """One doc shard's matched posting lists: lazy decode + idf-free weight
-    cache. A list is decoded at most once per (shard, batch) no matter how
-    many queries subscribe to its term — together with the shard grouping,
-    this is what makes batched throughput independent of batch size.
-    Optional ``filter_ids`` (permitted) / ``exclude_ids`` (tombstoned) apply
-    once at decode time (they are query-independent)."""
+    """One logical shard's matched posting lists: lazy decode + idf-free
+    weight cache. A list is decoded at most once per (shard, batch) no
+    matter how many queries subscribe to its term — together with the shard
+    grouping, this is what makes batched throughput independent of batch
+    size. Optional ``filter_ids`` (permitted) / ``exclude_ids`` (tombstoned)
+    apply once at decode time (they are query-independent).
+
+    The block frame is grouped by term with one stable argsort: a term's
+    blocks need not be contiguous (several files concatenated), and each
+    list keeps its blocks' frame order before the doc-id sort in get()."""
 
     def __init__(self, pdf: pd.DataFrame, avgdl: float,
                  filter_ids: np.ndarray | None = None,
@@ -194,19 +194,26 @@ class ShardLists:
         self._avgdl = avgdl
         self._filter = filter_ids
         self._exclude = exclude_ids
-        self._groups: dict[int, pd.DataFrame] = {}
-        self._sigma: dict[int, float] = {}
-        self._sizes: dict[int, int] = {}
-        if len(pdf):
-            for tid, sub in pdf.groupby("term_id", sort=False):
-                tid = int(tid)
-                self._groups[tid] = sub
-                self._sigma[tid] = float(sub["max_weight"].max())
-                self._sizes[tid] = int(sub["n"].sum())
+        tid = pdf["term_id"].to_numpy(np.int64)
+        order = np.argsort(tid, kind="stable")
+        tid = tid[order]
+        starts = np.flatnonzero(np.diff(tid, prepend=tid[:1] - 1))
+        ends = np.append(starts[1:], tid.size)
+        self._first = pdf["first_doc"].to_numpy(np.int64)[order]
+        self._n = pdf["n"].to_numpy(np.int64)[order]
+        self._blobs = [pdf[c].to_numpy(object)[order]
+                       for c in ("docs", "tfs", "dls")]
+        terms = tid[starts].tolist()
+        self._span = dict(zip(terms, zip(starts.tolist(), ends.tolist())))
+        weights = pdf["max_weight"].to_numpy(np.float64)[order]
+        self._sigma = dict(zip(terms, np.maximum.reduceat(
+            weights, starts).tolist()))
+        self._sizes = dict(zip(terms, np.add.reduceat(self._n,
+                                                      starts).tolist()))
         self._cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
     def __contains__(self, tid: int) -> bool:
-        return tid in self._groups
+        return tid in self._span
 
     def sigma_base(self, tid: int) -> float:
         return self._sigma[tid]
@@ -218,12 +225,9 @@ class ShardLists:
         """(doc_ids sorted, idf-free weights) for the shard-local list."""
         hit = self._cache.get(tid)
         if hit is None:
-            rows = self._groups[tid]
-            d, tf, dl = _decode_many(rows["first_doc"].to_numpy(),
-                                     rows["n"].to_numpy(),
-                                     rows["docs"].to_list(),
-                                     rows["tfs"].to_list(),
-                                     rows["dls"].to_list())
+            sl = slice(*self._span[tid])
+            d, tf, dl = decode_blocks(self._first[sl], self._n[sl],
+                                      *(b[sl] for b in self._blobs))
             if d.size and not np.all(d[:-1] <= d[1:]):
                 order = np.argsort(d, kind="stable")
                 d, tf, dl = d[order], tf[order], dl[order]
@@ -629,13 +633,34 @@ def _read_ids(paths) -> np.ndarray:
         .to_numpy() for p in paths])).astype(np.int64)
 
 
+def score_files(plan: Plan, files: list[FileTask], k: int, prune: bool,
+                conjunctive: bool, filter_ids: np.ndarray | None = None,
+                exclude_ids: np.ndarray | None = None) -> pd.DataFrame:
+    """Exact top-k partial of ``files`` (any subset of ``plan.files``)
+    scored as ONE logical shard. Files hold disjoint doc ids, so partials of
+    disjoint subsets merge into the global top-k. ``exclude_ids`` defaults
+    to the ids of the subset's distinct tombstone files."""
+    if exclude_ids is None:
+        exclude_ids = _read_ids(sorted({t for f in files for t in f.tombs}))
+    return score_shard_queries(_read_blocks(files), plan.qmeta, plan.nq_map,
+                               plan.avgdl, k, prune, conjunctive, filter_ids,
+                               exclude_ids)
+
+
 # ----------------------------------------------------------- executors
 
-def _empty_ranked() -> pd.DataFrame:
-    return pd.DataFrame({"query_id": pd.array([], dtype="str"),
-                         "rank": pd.array([], dtype="int32"),
-                         "doc_id": pd.array([], dtype="int64"),
-                         "score": pd.array([], dtype="float64")})
+def rank_partials(partial: pd.DataFrame, k: int) -> pd.DataFrame:
+    """In-process :func:`merge_topk`: (query_id, rank, doc_id, score), the
+    top ``k`` per query in (score DESC, doc_id) order."""
+    qids, q = np.unique(partial["query_id"].to_numpy(), return_inverse=True)
+    d, s = partial["doc_id"].to_numpy(), partial["score"].to_numpy()
+    order = np.lexsort((d, -s, q))
+    q = q[order]
+    rank = np.arange(q.size) - np.searchsorted(q, q) + 1
+    keep = rank <= k
+    return pd.DataFrame({"query_id": qids[q[keep]],
+                         "rank": rank[keep].astype(np.int32),
+                         "doc_id": d[order][keep], "score": s[order][keep]})
 
 
 def run_local(plan: Plan | None, k: int, prune: bool = True,
@@ -644,63 +669,50 @@ def run_local(plan: Plan | None, k: int, prune: bool = True,
     """In-process executor: every file of the plan scored as ONE logical
     shard, then one top-k finalisation — zero Spark jobs."""
     if plan is None or not plan.files:
-        return _empty_ranked()
+        return rank_partials(_empty_partial(), k)
     src = plan.source
     if src.excl is None:
         src.excl = _read_ids([f for fs in src.tombs.values() for f in fs])
-    partial = score_shard_queries(_read_blocks(plan.files), plan.qmeta,
-                                  plan.nq_map, plan.avgdl, k, prune,
-                                  conjunctive, filter_ids, src.excl)
-    if not len(partial):
-        return _empty_ranked()
-    # (query_id, score DESC, doc_id) order; ≤ k rows per query already
-    qids, q = np.unique(partial["query_id"].to_numpy(), return_inverse=True)
-    d, s = partial["doc_id"].to_numpy(), partial["score"].to_numpy()
-    order = np.lexsort((d, -s, q))
-    q = q[order]
-    rank = np.arange(q.size) - np.searchsorted(q, q) + 1
-    return pd.DataFrame({"query_id": qids[q], "rank": rank.astype(np.int32),
-                         "doc_id": d[order], "score": s[order]})
+    return rank_partials(score_files(plan, plan.files, k, prune, conjunctive,
+                                     filter_ids, src.excl), k)
 
 
 def run_spark(spark: SparkSession, plan: Plan | None, k: int,
               prune: bool = True, conjunctive: bool = False,
               doc_filter: DataFrame | None = None) -> DataFrame:
-    """Spark executor: one ``mapInPandas`` task per postings file; with a
-    ``doc_filter``, one ``groupBy(shard)`` task per shard over that
-    shard's files. Both end in :func:`merge_topk`."""
+    """Spark executor: ``p = min(files, defaultParallelism)`` tasks over
+    ``spark.range`` (no Python-side RDD), task ``i`` scoring the doc-disjoint
+    subset ``files[i::p]`` — at most one task, hence one Python worker
+    round, per core. With a ``doc_filter``, one ``groupBy(shard)`` task per
+    shard over that shard's files. Both end in :func:`merge_topk`."""
     if plan is None or not plan.files:
         return spark.createDataFrame([], OUT_SCHEMA)
-    avgdl, n = plan.avgdl, len(plan.files)
-    bc = spark.sparkContext.broadcast((plan.qmeta, plan.nq_map, plan.files))
-
-    def score(tasks: list[FileTask], filter_ids=None) -> pd.DataFrame:
-        qm, nq, _ = bc.value
-        return score_shard_queries(_read_blocks(tasks), qm, nq, avgdl, k,
-                                   prune, conjunctive, filter_ids,
-                                   _read_ids(tasks[0].tombs))
+    bc = spark.sparkContext.broadcast(plan._replace(source=None))
 
     if doc_filter is None:
-        def run_files(it):
-            files = bc.value[2]
+        p = min(len(plan.files), spark.sparkContext.defaultParallelism)
+
+        def run_subsets(it):
+            pl = bc.value
             for pdf in it:
-                for i in pdf["i"]:
-                    out = score([files[int(i)]])
+                for i in pdf["id"]:
+                    out = score_files(pl, pl.files[int(i)::p], k, prune,
+                                      conjunctive)
                     if len(out):
                         yield out
 
-        idx = spark.createDataFrame(
-            spark.sparkContext.parallelize([(i,) for i in range(n)], n),
-            "i int")
-        partial = idx.mapInPandas(run_files, schema=PARTIAL_SCHEMA)
+        partial = spark.range(0, p, 1, p).mapInPandas(run_subsets,
+                                                      schema=PARTIAL_SCHEMA)
     else:
         # A doc only scores in its own shard: shards without permitted ids
         # are never read.
         def run_shard(key: tuple, filt: pd.DataFrame) -> pd.DataFrame:
-            mine = [f for f in bc.value[2] if f.salt == int(key[0])]
+            pl = bc.value
+            mine = [f for f in pl.files if f.salt == int(key[0])]
             if not mine:
                 return _empty_partial()
-            return score(mine, np.unique(filt["doc_id"].to_numpy(np.int64)))
+            return score_files(pl, mine, k, prune, conjunctive,
+                               np.unique(filt["doc_id"].to_numpy(np.int64)))
 
         partial = (doc_filter
                    .select(F.col(doc_filter.columns[0]).cast("long")

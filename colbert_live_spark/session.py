@@ -17,6 +17,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def is_bare_scan(df) -> bool:
+    """True iff ``df`` is an untransformed file scan (its analyzed logical
+    plan is a bare relation). Only then may a caller re-read or re-split its
+    input files — doing so to a *transformed* DataFrame would silently
+    discard the transformation (filters, id shifts, ...)."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        name = plan.getClass().getSimpleName()
+        return name in ("LogicalRelation", "LogicalRelationWithTable") \
+            and plan.children().isEmpty()
+    except Exception:
+        return False
+
+
 def spread_input(df, target: int | None = None):
     """Input-skew guard (guide §2.5 "one huge unsplittable file"): when a
     scan yields fewer partitions than the session's parallelism — a single
@@ -27,9 +41,13 @@ def spread_input(df, target: int | None = None):
     real scale, where input files provide the parallelism, nothing is ever
     shuffled. Row-identical either way (round-robin placement only).
 
-    Only call this on freshly-read scans: ``df.rdd`` is driver-side split
-    planning for a file scan (no job), but would trigger execution under an
-    adaptive plan with exchanges."""
+    Raises ValueError unless ``df`` is a freshly-read scan: ``df.rdd`` is
+    driver-side split planning for a file scan (no job), but would trigger
+    execution under an adaptive plan with exchanges."""
+    if not is_bare_scan(df):
+        raise ValueError("spread_input needs an untransformed file scan "
+                         "(spark.read.parquet(...)); spread before "
+                         "transforming the DataFrame")
     sc = df.sparkSession.sparkContext
     target = target or sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

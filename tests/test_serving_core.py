@@ -1,14 +1,17 @@
 """The serving core (operators/wand.py): one plan per (source, batch), run
-in-process or as Spark file tasks. Every source kind × executor × query
-mode answers exactly like the BM25 oracle; layouts that break the
-one-file-per-shard invariants raise instead of degrading; and the Spark
-job count of each serving call has a ceiling."""
+in-process or as at most one Spark task per core over doc-disjoint file
+subsets. Every source kind × executor × query mode answers exactly like the
+BM25 oracle; any packing of the files into subsets merges to the same
+answer; layouts that break the one-file-per-shard invariants raise instead
+of degrading; and the Spark job and task counts of a serving call have
+ceilings."""
 from __future__ import annotations
 
 import math
 import shutil
 import uuid
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +19,8 @@ from colbert_live_spark.entry_queries import (
     built_deleted_root, built_index, built_live_root)
 from colbert_live_spark.index.segments import (
     compact, segment_search, segment_search_local)
-from colbert_live_spark.operators.wand import wand_search, wand_search_local
+from colbert_live_spark.operators.wand import (
+    rank_partials, resolve, score_files, wand_search, wand_search_local)
 from colbert_live_spark.oracle import build_oracle_index, oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
 
@@ -87,10 +91,38 @@ def test_path_identity_doc_filter(spark, sources, documents, executor):
     _assert_oracle(_ranked(got), docs, doc_filter=en_ids)
 
 
+@pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
+@pytest.mark.parametrize("source", ["two_segment", "tombstoned"])
+def test_file_subsets_merge_to_local_answer(sources, source, mode):
+    """Packing the plan's files into p doc-disjoint subsets (the Spark
+    executor's task split, here scored in-process with no Spark) and
+    merging the p partials gives exactly the in-process answer, ranks and
+    scores, for p in {1, 2, 3, one subset per file}."""
+    path, _, local, docs = sources[source]
+    conj = mode == "conjunctive"
+    want = local(path, DOC_QUERIES, k=K, conjunctive=conj)
+    _assert_oracle(_ranked(want), docs, conjunctive=conj)
+    plan = resolve(path, DOC_QUERIES)
+    files = plan.files
+    spans = []
+    for p in sorted({1, 2, 3, len(files)}):
+        subsets = [files[i::p] for i in range(p)]
+        spans += [(len({f.part for f in sub}),
+                   len({f.salt for f in sub if f.tombs})) for sub in subsets]
+        got = rank_partials(pd.concat(
+            [score_files(plan, sub, K, True, conj) for sub in subsets],
+            ignore_index=True), K)
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+    if source == "two_segment":
+        assert max(parts for parts, _ in spans) == 2
+    else:
+        assert max(salts for _, salts in spans) > 1
+
+
 def test_unpartitioned_tombstones_raise_until_compacted(spark, sources,
                                                         tmp_path):
-    """Tombstones written before shard partitioning cannot be split per
-    file task: both executors refuse the root and name the fix; compact()
+    """Tombstones written before shard partitioning cannot be split by
+    doc shard: both executors refuse the root and name the fix; compact()
     migrates it and serving answers again."""
     import os
 
@@ -115,9 +147,9 @@ def test_unpartitioned_tombstones_raise_until_compacted(spark, sources,
                    sources["tombstoned"][3])
 
 
-def _jobs(spark, call) -> int:
-    """Spark jobs run by ``call`` on this thread (serving submits no job
-    from a thread pool, so the group catches all of them)."""
+def _jobs(spark, call) -> list[int]:
+    """Ids of the Spark jobs run by ``call`` on this thread (serving
+    submits no job from a thread pool, so the group catches all of them)."""
     sc = spark.sparkContext
     group = f"serving-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -125,7 +157,7 @@ def _jobs(spark, call) -> int:
         call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_serving_job_ceilings(spark, sources, documents):
@@ -147,4 +179,22 @@ def test_serving_job_ceilings(spark, sources, documents):
             root, DOC_QUERIES, k=K)),
     }
     for name, (ceiling, call) in calls.items():
-        assert _jobs(spark, call) <= ceiling, name
+        assert len(_jobs(spark, call)) <= ceiling, name
+
+
+def test_scoring_stage_task_ceiling(spark, sources):
+    """segment_search over a root with more postings files than cores
+    scores in at most one task per core: a regression back to one task per
+    file fails here before it shows as wall time."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    for source in ("two_segment", "tombstoned"):
+        root = sources[source][0]
+        assert len(resolve(root, DOC_QUERIES).files) > cores, source
+        jobs = _jobs(spark, lambda: segment_search(
+            spark, root, DOC_QUERIES, k=K).collect())
+        tracker = sc.statusTracker()
+        # the scoring stage is the first one submitted; the merge reads
+        # its shuffle output in later stages
+        scoring = min(s for j in jobs for s in tracker.getJobInfo(j).stageIds)
+        assert tracker.getStageInfo(scoring).numTasks <= cores, source

@@ -60,15 +60,35 @@ def _brute(lists, qterms, k, member=None, exclude=None):
     return sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
+def _files(rng, n_files):
+    """Blocks of ``n_files`` doc-disjoint shards concatenated file after
+    file — the frame a serving task reads for its file subset; with
+    several files, each term's blocks are non-contiguous."""
+    parts = []
+    for f in range(n_files):
+        blocks, _ = _shard(rng)
+        shift = 5000 * f  # past _shard's doc-id range
+        parts.append(blocks.assign(first_doc=blocks["first_doc"] + shift,
+                                   last_doc=blocks["last_doc"] + shift))
+    return pd.concat(parts, ignore_index=True)
+
+
 def test_row_order_independence():
-    rng = np.random.default_rng(3)
-    blocks, _ = _shard(rng)
-    base = score_shard_queries(blocks, QMETA, NQ, AVGDL, K)
-    for seed in (1, 2, 3):
-        shuffled = blocks.sample(frac=1.0, random_state=seed).reset_index(
-            drop=True)
-        got = score_shard_queries(shuffled, QMETA, NQ, AVGDL, K)
-        pd.testing.assert_frame_equal(base, got)
+    """Any row order of the block frame scores bit-identically,
+    disjunctive and conjunctive, for one file and for several doc-disjoint
+    files: the term grouping keeps no positional assumption."""
+    for n_files in (1, 3):
+        blocks = _files(np.random.default_rng(3), n_files)
+        for conj in (False, True):
+            base = score_shard_queries(blocks, QMETA, NQ, AVGDL, K,
+                                       conjunctive=conj)
+            assert len(base)
+            for seed in (1, 2, 3):
+                shuffled = blocks.sample(frac=1.0, random_state=seed
+                                         ).reset_index(drop=True)
+                got = score_shard_queries(shuffled, QMETA, NQ, AVGDL, K,
+                                          conjunctive=conj)
+                pd.testing.assert_frame_equal(base, got, check_exact=True)
 
 
 def test_matches_bruteforce_and_pruned_equals_unpruned():

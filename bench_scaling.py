@@ -74,6 +74,29 @@ def _burn_np(end: float) -> int:
     return max(1, int(1000.0 * best))
 
 
+def physical_core_cpus(n: int,
+                       sysfs: str = "/sys/devices/system/cpu") -> list[int]:
+    """``n`` logical CPUs, one per physical core (the lowest-numbered SMT
+    sibling of each core), from ``cpu*/topology/thread_siblings_list``.
+    Pinning to ``0..n-1`` would hand an SMT host's JVM two hyperthreads of
+    one core at some levels, so the pinned levels would not get ``n``
+    cores' worth of CPU. Raises when the host has fewer than ``n`` physical
+    cores rather than pinning siblings."""
+    import glob
+    import re
+    firsts = set()
+    for path in glob.glob(f"{sysfs}/cpu[0-9]*/topology/thread_siblings_list"):
+        with open(path) as fh:
+            # a cpu list ("0,4", "0-1", "3") is ascending: its first number
+            # is the core's lowest sibling
+            firsts.add(int(re.split(r"[,-]", fh.read().strip())[0]))
+    cores = sorted(firsts)
+    if len(cores) < n:
+        raise RuntimeError(f"--pin needs {n} physical cores; this host has "
+                           f"{len(cores)}")
+    return cores[:n]
+
+
 def bench_queries(n: int) -> list[tuple[str, str]]:
     from colbert_live_spark.sources.webpages import VOCAB
     qs = []
@@ -195,8 +218,9 @@ def main() -> None:
     ap.add_argument("--skip-build", action="store_true")
     ap.add_argument("--pin", action="store_true",
                     help="pin each level's JVM (and its calibration "
-                         "processes) to exactly that many CPUs via "
-                         "taskset -c 0..N-1 — kills the idle-host borrow "
+                         "processes) to exactly that many physical cores "
+                         "(one logical CPU per core, via taskset -c) — "
+                         "kills the idle-host borrow "
                          "confound (a local[2] JVM's GC/shuffle/Python "
                          "threads otherwise spill onto idle cores and "
                          "inflate the low level's throughput; r5 verdict "
@@ -211,6 +235,8 @@ def main() -> None:
         args.build_repeats = args.query_repeats = args.repeats
 
     levels = [int(x) for x in args.levels.split(",")]
+    if args.pin:
+        physical_core_cpus(max(levels))  # fail before any corpus work
     repeats = max(args.build_repeats, args.query_repeats)
     corpus = f"/tmp/cls_bench_corpus_{args.rows}"
     if not os.path.exists(f"{corpus}/_SUCCESS"):
@@ -234,7 +260,7 @@ def main() -> None:
             # children inherit the affinity mask: the calibration measures
             # the same cpuset the pinned JVM will get
             saved = os.sched_getaffinity(0)
-            os.sched_setaffinity(0, set(range(procs)))
+            os.sched_setaffinity(0, set(physical_core_cpus(procs)))
         try:
             with mp.Pool(procs) as p:
                 counts = p.map(fn, [end] * procs)
@@ -259,7 +285,8 @@ def main() -> None:
             if skip:
                 cmd.append("--skip-build")
             if args.pin:
-                cmd = ["taskset", "-c", f"0-{lv - 1}"] + cmd
+                cpus = ",".join(map(str, physical_core_cpus(lv)))
+                cmd = ["taskset", "-c", cpus] + cmd
             subprocess.run(cmd, check=True)
             runs[lv].append(json.load(open(out)))
             print(f"# local[{lv}] rep {rep}: {runs[lv][-1]}", file=sys.stderr)
@@ -328,7 +355,8 @@ def main() -> None:
         + (" — PINNED CPUSETS (taskset)" if args.pin else ""),
         "",
         ("Each level's JVM, Python workers and calibration processes run "
-         f"under `taskset -c 0..N-1`, so local[{lo}] gets EXACTLY {lo} "
+         "under `taskset -c`, one logical CPU per physical core, so "
+         f"local[{lo}] gets EXACTLY {lo} physical "
          "cores — no idle-host borrow (r5 verdict ask #1). Nominal "
          "efficiency is the honest number here; the delivered-CPU/"
          "bandwidth calibrations should sit near the nominal ratio and "

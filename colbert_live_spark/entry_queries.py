@@ -426,35 +426,6 @@ def q_bm25_local_segmented(spark, sf_dir):
     return _round_score(spark.createDataFrame(pdf, schema=_LOCAL_SCHEMA))
 
 
-def built_pre_encoded_index(spark, sf_dir: str) -> str:
-    """Index built with the merge's pre_encode=True shuffle (map-side
-    partial block encode → compressed shuffle → reduce-side re-encode —
-    the network-bound-cluster merge path, index/builder.py). Byte-identical
-    postings are already unit-tested; this root feeds the driver-visible
-    oracle entry so the cluster-targeted codepath cannot rot unnoticed."""
-    import hashlib
-    import os
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.environ.get("SPARK_GRAFT_INDEX_ROOT", "/tmp")
-    out = f"{root}/cls_preenc_v3_{tag}"
-    if not os.path.exists(f"{out}/_INDEX_META.json"):
-        from colbert_live_spark.index.builder import build_index
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        build_index(spark, docs, out, n_groups=4, n_shards=4,
-                    salt_rows=200, pre_encode=True)
-    return out
-
-
-def q_bm25_pre_encoded(spark, sf_dir):
-    """bm25_topk served from an index whose merge ran the pre-encoded
-    shuffle (pre_encode=True) — same SQL oracle as bm25_topk: the
-    hash-match proves the alternate merge topology produces a
-    serving-identical index end to end."""
-    from colbert_live_spark.operators.wand import wand_search
-    idx = built_pre_encoded_index(spark, sf_dir)
-    return _round_score(wand_search(spark, idx, DOC_QUERIES, k=10))
-
-
 def q_doc_keywords(spark, sf_dir):
     """Per-doc top-3 TF-IDF keywords (query-independent doc profiling —
     the keyword-tagging op of a training-data pipeline)."""
@@ -911,7 +882,6 @@ SELECT count(*)::BIGINT AS n_docs, round(avg(len(toks)), {ROUND}) AS avgdl FROM 
         # answer exactly like the relational monolith
         "bm25_topk_local": _bm25_topk_sql(k=10),
         "bm25_local_segmented": _bm25_topk_sql(k=10),
-        "bm25_pre_encoded": _bm25_topk_sql(k=10),
         "bm25_conjunctive": _bm25_topk_sql(k=10, conjunctive=True),
         "bm25_conjunctive_wand": _bm25_topk_sql(k=10, conjunctive=True),
         "bm25_phrase": _phrase_topk_sql(k=10),
@@ -1021,7 +991,6 @@ def _core_query_map():
         "bm25_topk_wand": q_bm25_topk_wand,
         "bm25_topk_local": q_bm25_topk_local,
         "bm25_local_segmented": q_bm25_local_segmented,
-        "bm25_pre_encoded": q_bm25_pre_encoded,
         "bm25_conjunctive": q_bm25_conjunctive,
         "bm25_conjunctive_wand": q_bm25_conjunctive_wand,
         "bm25_phrase": q_bm25_phrase,

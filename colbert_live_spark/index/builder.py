@@ -57,18 +57,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_live_spark.index import codec, fsio
+from colbert_live_spark.index.ids import assign_dense_ids
 from colbert_live_spark.session import is_bare_scan, spread_input
 
 RUN_SCHEMA = "term string, doc_id long, tf int, dl int"
 BLOCK_SCHEMA = ("term_id long, salt int, block_id int, first_doc long, "
                 "last_doc long, n int, max_weight double, "
                 "docs binary, tfs binary, dls binary")
-# pre-shuffle packed partial runs (fixed-width streams + per-chunk width
-# codes; no block_id/last_doc/max_weight — those are assigned after the
-# global per-(term,salt) merge)
-PARTIAL_BLOCK_SCHEMA = ("term_id long, salt int, first_doc long, n int, "
-                        "dw tinyint, tw tinyint, lw tinyint, "
-                        "docs binary, tfs binary, dls binary")
 LEDGER_SCHEMA = ("gid int, stage string, n_docs long, n_postings long, "
                  "bytes long, wall_ms long, files string")
 
@@ -248,20 +243,15 @@ def build_runs(
     return processed
 
 
-def _complete_group_chunks(it, min_rows: int, count_col: str | None = None):
+def _complete_group_chunks(it, min_rows: int):
     """Re-chunk a mapInPandas batch iterator (sorted by (term_id, salt))
     into DataFrames that contain only COMPLETE (term_id, salt) groups, each
     ~``min_rows`` big. Bounds encoder memory to chunk + one group (a group
     is ≤ salt_rows postings by construction) no matter how large the task's
     partition is — a single salt's reduce partition at 10^12 docs is far
-    bigger than executor memory. ``count_col``: when set, rows are weighted
-    by that column (partial blocks count their decoded postings, not their
-    block rows)."""
+    bigger than executor memory."""
     import numpy as np
     import pandas as pd
-
-    def weight(pdf):
-        return int(pdf[count_col].sum()) if count_col else len(pdf)
 
     buf: list[pd.DataFrame] = []
     nrows = 0
@@ -269,7 +259,7 @@ def _complete_group_chunks(it, min_rows: int, count_col: str | None = None):
         if pdf.empty:
             continue
         buf.append(pdf)
-        nrows += weight(pdf)
+        nrows += len(pdf)
         if nrows < min_rows:
             continue
         whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
@@ -284,18 +274,11 @@ def _complete_group_chunks(it, min_rows: int, count_col: str | None = None):
         yield whole.iloc[:cut]
         rest = whole.iloc[cut:].reset_index(drop=True)
         buf = [rest]
-        nrows = weight(rest)
+        nrows = len(rest)
     if buf:
         whole = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
         if len(whole):
             yield whole
-
-
-def _dense_term_ids(spark: SparkSession, terms: DataFrame,
-                    n_parts: int) -> DataFrame:
-    """(term, df) -> (term, df, term_id dense 0..V-1)."""
-    from colbert_live_spark.index.ids import assign_dense_ids
-    return assign_dense_ids(terms, "term", "term_id", n_parts)
 
 
 def merge_index(
@@ -307,29 +290,15 @@ def merge_index(
     doc_meta: DataFrame | None = None,
     doc_shards: int | None = None,
     doc_shards_headroom: int = 1,
-    pre_encode: bool = False,
-    slim_shuffle: bool = True,
 ) -> None:
     """Stage 2: runs → dictionary + compressed term-sharded postings + stats.
 
-    ``slim_shuffle`` (default ON): keep per-doc ``dl`` OUT of the merge
-    shuffle — it would repeat on every one of a doc's ~dl posting rows,
-    ~20% of the bytes through the shuffle and the row sort (the two
-    bandwidth-bound merge passes). Each salt's (doc_id → dl) map is
-    written once to a ``dlmap`` sidecar (n_docs rows ≪ postings) and
-    gathered back at encode time from a cache-resident sorted array.
-    Blocks are byte-identical either way (tested); the flag exists to
-    keep the fatter-row alternative measurable.
-
-    ``pre_encode``: fixed-width-pack partial runs on the map side so the
-    merge Exchange moves ~6-10 B/posting instead of ~30-50 B/posting of
-    raw rows. Results are byte-identical (tested) either way. DEFAULT OFF:
-    this targets network-shuffle clusters, where shuffle bytes cross NICs;
-    on this sandbox's single-bus local mode the raw shuffle never leaves
-    the page cache and the pack path's extra Arrow crossing + numpy passes
-    measurably LOSE (1M docs, merge phase: raw 120s vs pack 237s at 8
-    cores, 242s vs 339s at 2 — recorded negative result, BENCH/ANALYSIS).
-    On a real cluster turn it on when the merge is network-bound.
+    The postings come from one merge shuffle of ``(term_id, salt, doc_id,
+    tf)`` rows, hash-partitioned by salt and sorted by (term_id, salt,
+    doc_id), then block-encoded per complete (term_id, salt) group in one
+    ``mapInPandas`` pass. Per-doc ``dl`` stays out of that shuffle: each
+    salt's (doc_id → dl) map is written once to a ``dlmap`` sidecar and
+    gathered back at encode time (see the comment above ``shuffle_cols``).
 
     ``doc_shards`` (D): the global doc-shard count. salt = hash(doc_id) mod D
     for EVERY term, so shard s is a complete mini-index of its doc subset —
@@ -386,7 +355,7 @@ def merge_index(
         else:
             df_t = runs.groupBy("term").agg(
                 F.count(F.lit(1)).cast("long").alias("df"))
-        rd = _dense_term_ids(spark, df_t, n_parts=max(4, n_shards))
+        rd = assign_dense_ids(df_t, "term", "term_id", max(4, n_shards))
         # df_max needs only the df column (not n_docs from the stats
         # chain) — compute it here so doc_shards is known the moment both
         # chains join (the persisted dense-id input makes this agg cheap)
@@ -434,23 +403,21 @@ def merge_index(
 
     # The merge-shuffle: postings + term ids, salted by global doc shard so
     # each (term_id, salt) group is contiguous and sorted by doc_id.
-    # ``dl`` does NOT ride the shuffle on the default path: it is per-DOC
-    # data that would repeat on every one of the doc's ~dl posting rows —
-    # ~20% of the bytes through the merge's two bandwidth-bound passes
-    # (shuffle write/read and the row sort), which are exactly where the
-    # measured 1M-doc scaling sits at the host's delivered-bandwidth
-    # envelope. Instead each salt's (doc_id → dl) map is written once to a
-    # dlmap sidecar (n_docs rows total, ≪ postings by the avgdl factor)
-    # and gathered back at encode time from an in-cache sorted array
-    # (n_docs/doc_shards entries — the same docs-per-shard bound the
-    # serving topology already assumes). Blocks come out byte-identical.
-    slim = slim_shuffle and not pre_encode
+    # ``dl`` does NOT ride the shuffle: it is per-DOC data that would repeat
+    # on every one of the doc's ~dl posting rows — ~20% of the bytes
+    # through the merge's two bandwidth-bound passes (shuffle write/read
+    # and the row sort), which are exactly where the measured 1M-doc
+    # scaling sits at the host's delivered-bandwidth envelope. Instead
+    # each salt's (doc_id → dl) map is written once to a dlmap sidecar
+    # (n_docs rows total, ≪ postings by the avgdl factor) and gathered
+    # back at encode time from an in-cache sorted array (n_docs/doc_shards
+    # entries — the same docs-per-shard bound the serving topology already
+    # assumes). A posting whose doc is missing from the dlmap raises:
+    # stage-1 runs and doclens must agree.
     shuffle_cols = ["term_id",
                     F.pmod(F.xxhash64("doc_id"), F.lit(doc_shards))
                      .cast("int").alias("salt"),
                     "doc_id", F.col("tf").cast("int").alias("tf")]
-    if not slim:
-        shuffle_cols.append("dl")
     tagged = (runs.join(F.broadcast(dict_df.select("term", "term_id")),
                         "term")
               .select(*shuffle_cols))
@@ -467,10 +434,7 @@ def merge_index(
     # finish before the encode tasks run — encode reads dlmap, serving
     # reads dict); overlap them (guide §2.6)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(write_dict)]
-        if slim:
-            futs.append(pool.submit(write_dlmap))
-        for f in futs:
+        for f in [pool.submit(write_dict), pool.submit(write_dlmap)]:
             f.result()
     # hash repartition, not repartitionByRange: the range sampler would scan
     # the whole join twice. Partitioning by SALT ALONE (layout salt_v3, one
@@ -482,159 +446,55 @@ def merge_index(
     # Partition volume stays balanced under Zipf skew because hash(doc_id)
     # spreads every term's postings uniformly across the doc_shards salts;
     # the per-(term,salt) group bound (≤ salt_rows) is unchanged.
-    if pre_encode:
-        # Pack partial runs BEFORE the shuffle, so the Exchange moves
-        # ~6-10 B/posting of fixed-width packed bytes instead of
-        # ~30-50 B/posting of raw rows — the merge-shuffle was the measured
-        # 1M-doc build scaling bottleneck (one-bus shuffle volume does not
-        # parallelize). Two measured dead ends shaped this design:
-        # (a) a Spark sortWithinPartitions of the raw posting rows before
-        # packing cost 33% of absolute build throughput — each map task
-        # instead np.lexsorts its ~4M-row chunks in-process; a group split
-        # across chunks just yields more partial fragments, which the
-        # reduce merges anyway; (b) varint-encoding the partials cost ~25
-        # whole-array passes per stream and DOUBLED build wall — the
-        # fixed-width pack codec (astype+tobytes / frombuffer+cumsum,
-        # per-chunk width selection) keeps ~80% of the byte reduction at
-        # ~10× less CPU. The reduce side Spark-sorts only the packed RUN
-        # rows (~|distinct (term,salt)| × chunks, ≪ postings), then
-        # unpacks, np.lexsorts, and varint-encodes final blocks —
-        # byte-identical to encoding the raw rows directly (tested), since
-        # the merged (doc, tf, dl) arrays are identical.
+    parted = (tagged.repartition(doc_shards, "salt")
+                    .sortWithinPartitions("term_id", "salt", "doc_id"))
+    dlmap_dir = f"{out_dir}/dlmap"
 
-        def encode_partials(it):
-            import numpy as np
-            import pandas as pd
+    def encode_partition(it):
+        import numpy as np
+        import pandas as pd
+        import pyarrow.dataset as pads
 
-            def flush(buf):
-                chunk = (pd.concat(buf, ignore_index=True)
-                         if len(buf) > 1 else buf[0])
-                t = chunk["term_id"].to_numpy(np.int64)
-                s = chunk["salt"].to_numpy(np.int32)
-                d = chunk["doc_id"].to_numpy(np.int64)
-                tf = chunk["tf"].to_numpy(np.int64)
-                dl = chunk["dl"].to_numpy(np.int64)
-                o = np.lexsort((d, s, t))
-                cols = codec.pack_lists_columns(t[o], s[o], d[o], tf[o],
-                                                dl[o])
-                return pd.DataFrame(cols)
+        # {salt -> (sorted doc_ids, dls)}: ≤ #salts in this task's
+        # partition entries, each n_docs/doc_shards × 16 B — L2/L3
+        # resident at the design point, loaded once per salt per task
+        cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
-            buf: list = []
-            n = 0
-            for pdf in it:
-                if pdf.empty:
-                    continue
-                buf.append(pdf)
-                n += len(pdf)
-                if n >= 4_000_000:
-                    yield flush(buf)
-                    buf, n = [], 0
-            if buf:
-                yield flush(buf)
+        def dls_for(salts, d):
+            out = np.empty(len(d), np.int64)
+            for s in np.unique(salts):
+                ent = cache.get(int(s))
+                if ent is None:
+                    fs, p = fsio.resolve(f"{dlmap_dir}/salt={int(s)}")
+                    t = pads.dataset(p, format="parquet",
+                                     filesystem=fs).to_table()
+                    ids = t.column("doc_id").to_numpy()
+                    dls = t.column("dl").to_numpy()
+                    o = np.argsort(ids, kind="stable")
+                    ent = cache[int(s)] = (ids[o], dls[o])
+                ids, dls = ent
+                mask = salts == s
+                idx = np.searchsorted(ids, d[mask])
+                if (idx >= len(ids)).any() or (ids[idx] != d[mask]).any():
+                    raise RuntimeError(
+                        f"dlmap salt={int(s)} is missing doc ids "
+                        "present in the postings shuffle — stage-1 "
+                        "doclens and runs disagree")
+                out[mask] = dls[idx]
+            return out
 
-        partials = tagged.mapInPandas(encode_partials,
-                                      schema=PARTIAL_BLOCK_SCHEMA)
-        parted = (partials.repartition(doc_shards, "salt")
-                  .sortWithinPartitions("term_id", "salt", "first_doc"))
+        for chunk in _complete_group_chunks(it, 2_000_000):
+            salts = chunk["salt"].to_numpy(np.int32)
+            d = chunk["doc_id"].to_numpy(np.int64)
+            cols = codec.encode_lists_columns(
+                chunk["term_id"].to_numpy(np.int64), salts, d,
+                chunk["tf"].to_numpy(np.int64), dls_for(salts, d),
+                avgdl, block_size)
+            yield pd.DataFrame(cols)[
+                ["term_id", "salt", "block_id", "first_doc", "last_doc",
+                 "n", "max_weight", "docs", "tfs", "dls"]]
 
-        def merge_partials(it):
-            import numpy as np
-            import pandas as pd
-            # chunk bound: complete groups only, so the in-memory merge is
-            # ≤ chunk + one (term,salt) group (≤ salt_rows) regardless of
-            # how large one salt's reduce partition grows at scale
-            for chunk in _complete_group_chunks(it, 2_000_000,
-                                                count_col="n"):
-                d, tf, dl = codec.unpack_blocks(
-                    chunk["first_doc"].to_numpy(np.int64),
-                    chunk["n"].to_numpy(np.int64),
-                    chunk["dw"].to_numpy(np.int8),
-                    chunk["tw"].to_numpy(np.int8),
-                    chunk["lw"].to_numpy(np.int8),
-                    chunk["docs"].to_list(), chunk["tfs"].to_list(),
-                    chunk["dls"].to_list())
-                ns = chunk["n"].to_numpy(np.int64)
-                row_t = np.repeat(chunk["term_id"].to_numpy(np.int64), ns)
-                row_s = np.repeat(chunk["salt"].to_numpy(np.int32), ns)
-                # partial sub-lists of one group interleave doc ranges →
-                # global per-group doc order needs one lexsort; groups stay
-                # contiguous (term_id, salt are the major keys)
-                order = np.lexsort((d, row_s, row_t))
-                cols = codec.encode_lists_columns(
-                    row_t[order], row_s[order], d[order], tf[order],
-                    dl[order], avgdl, block_size, partial=False)
-                yield pd.DataFrame(cols)[
-                    ["term_id", "salt", "block_id", "first_doc", "last_doc",
-                     "n", "max_weight", "docs", "tfs", "dls"]]
-
-        blocks_df = parted.mapInPandas(merge_partials, schema=BLOCK_SCHEMA)
-    else:
-        parted = (tagged.repartition(doc_shards, "salt")
-                        .sortWithinPartitions("term_id", "salt", "doc_id"))
-        dlmap_dir = f"{out_dir}/dlmap"
-
-        def encode_partition_fat(it):
-            import numpy as np
-            import pandas as pd
-            for chunk in _complete_group_chunks(it, 2_000_000):
-                cols = codec.encode_lists_columns(
-                    chunk["term_id"].to_numpy(np.int64),
-                    chunk["salt"].to_numpy(np.int32),
-                    chunk["doc_id"].to_numpy(np.int64),
-                    chunk["tf"].to_numpy(np.int64),
-                    chunk["dl"].to_numpy(np.int64),
-                    avgdl, block_size, partial=False)
-                yield pd.DataFrame(cols)[
-                    ["term_id", "salt", "block_id", "first_doc", "last_doc",
-                     "n", "max_weight", "docs", "tfs", "dls"]]
-
-        def encode_partition(it):
-            import numpy as np
-            import pandas as pd
-            import pyarrow.dataset as pads
-
-            # {salt -> (sorted doc_ids, dls)}: ≤ #salts in this task's
-            # partition entries, each n_docs/doc_shards × 16 B — L2/L3
-            # resident at the design point, loaded once per salt per task
-            cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-            def dls_for(salts, d):
-                out = np.empty(len(d), np.int64)
-                for s in np.unique(salts):
-                    ent = cache.get(int(s))
-                    if ent is None:
-                        fs, p = fsio.resolve(f"{dlmap_dir}/salt={int(s)}")
-                        t = pads.dataset(p, format="parquet",
-                                         filesystem=fs).to_table()
-                        ids = t.column("doc_id").to_numpy()
-                        dls = t.column("dl").to_numpy()
-                        o = np.argsort(ids, kind="stable")
-                        ent = cache[int(s)] = (ids[o], dls[o])
-                    ids, dls = ent
-                    mask = salts == s
-                    idx = np.searchsorted(ids, d[mask])
-                    if (idx >= len(ids)).any() or (ids[idx] != d[mask]).any():
-                        raise RuntimeError(
-                            f"dlmap salt={int(s)} is missing doc ids "
-                            "present in the postings shuffle — stage-1 "
-                            "doclens and runs disagree")
-                    out[mask] = dls[idx]
-                return out
-
-            for chunk in _complete_group_chunks(it, 2_000_000):
-                salts = chunk["salt"].to_numpy(np.int32)
-                d = chunk["doc_id"].to_numpy(np.int64)
-                cols = codec.encode_lists_columns(
-                    chunk["term_id"].to_numpy(np.int64), salts, d,
-                    chunk["tf"].to_numpy(np.int64), dls_for(salts, d),
-                    avgdl, block_size, partial=False)
-                yield pd.DataFrame(cols)[
-                    ["term_id", "salt", "block_id", "first_doc", "last_doc",
-                     "n", "max_weight", "docs", "tfs", "dls"]]
-
-        blocks_df = parted.mapInPandas(
-            encode_partition if slim else encode_partition_fat,
-            schema=BLOCK_SCHEMA)
+    blocks_df = parted.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
     # partitionBy(salt): EXACTLY one file per doc shard (each shuffle
     # partition holds whole salts, so each salt is written by exactly one
     # task into its own salt=<s>/ directory; maxRecordsPerFile=0 overrides
@@ -695,7 +555,6 @@ def build_index(
     doc_shards: int | None = None,
     doc_shards_headroom: int = 1,
     max_concurrency: int = 1,
-    pre_encode: bool = False,
 ) -> None:
     """Full build: checkpointed runs then merge. Safe to re-invoke after a
     failure — completed run groups are skipped via the ledger."""
@@ -703,5 +562,4 @@ def build_index(
                max_concurrency=max_concurrency)
     merge_index(spark, out_dir, n_shards=n_shards, salt_rows=salt_rows,
                 doc_meta=doc_meta, doc_shards=doc_shards,
-                doc_shards_headroom=doc_shards_headroom,
-                pre_encode=pre_encode)
+                doc_shards_headroom=doc_shards_headroom)

@@ -34,23 +34,7 @@ _THRESH = np.array([1 << (7 * i) for i in range(1, 10)], dtype=np.uint64)
 def varint_encode(values: np.ndarray) -> bytes:
     """LEB128-encode a uint64 array. Vectorized: loops only over the ≤10
     byte positions, never over values."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    lengths = np.ones(v.shape, dtype=np.int64)
-    for t in _THRESH:
-        lengths += (v >= t)
-    ends = np.cumsum(lengths)
-    starts = ends - lengths
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    maxlen = int(lengths.max())
-    for i in range(maxlen):
-        mask = lengths > i
-        byte = ((v[mask] >> np.uint64(7 * i)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (lengths[mask] - 1 > i)
-        byte = byte | (cont.astype(np.uint8) << 7)
-        out[starts[mask] + i] = byte
-    return out.tobytes()
+    return _varint_offsets(values)[0]
 
 
 def varint_decode(data: bytes, n: int | None = None) -> np.ndarray:
@@ -167,7 +151,6 @@ def encode_lists_columns(
     dls: np.ndarray,
     avgdl: float,
     block_size: int = BLOCK_SIZE,
-    partial: bool = False,
 ) -> dict:
     """Vectorized block encoding of MANY posting (sub-)lists in one pass.
 
@@ -177,27 +160,21 @@ def encode_lists_columns(
     at every group start), but with no per-group Python — group/block
     segmentation, delta computation, varint encoding, and byte slicing are
     whole-array numpy operations. This is the index-build hot loop: the
-    map side pre-encodes partial blocks BEFORE the merge shuffle (so the
-    shuffle moves compressed bytes, not raw posting rows) and the reduce
-    side re-encodes the globally merged lists.
-
-    ``partial=True`` omits block_id / last_doc / max_weight (assigned only
-    after the global merge) and returns the pre-shuffle schema.
+    merge's reduce side calls it once per chunk of complete (term_id, salt)
+    groups of the shuffled, doc-sorted posting rows.
     """
     n = doc_ids.size
     if n == 0:
-        empty = {
+        return {
             "term_id": np.zeros(0, dtype=np.int64),
             "salt": np.zeros(0, dtype=np.int32),
+            "block_id": np.zeros(0, dtype=np.int32),
             "first_doc": np.zeros(0, dtype=np.int64),
+            "last_doc": np.zeros(0, dtype=np.int64),
             "n": np.zeros(0, dtype=np.int32),
+            "max_weight": np.zeros(0, dtype=np.float64),
             "docs": [], "tfs": [], "dls": [],
         }
-        if not partial:
-            empty["block_id"] = np.zeros(0, dtype=np.int32)
-            empty["last_doc"] = np.zeros(0, dtype=np.int64)
-            empty["max_weight"] = np.zeros(0, dtype=np.float64)
-        return empty
     new_group = np.empty(n, dtype=bool)
     new_group[0] = True
     new_group[1:] = (term_ids[1:] != term_ids[:-1]) | (salts[1:] != salts[:-1])
@@ -225,153 +202,25 @@ def encode_lists_columns(
     l_byte_ends = l_ends[ends - 1]
     l_byte_starts = np.concatenate([[0], l_byte_ends[:-1]])
 
-    out = {
+    # block ordinal within its group: block index minus the group's first
+    # block index (group starts are always block starts)
+    block_of_group_start = np.cumsum(new_group[starts]) - 1
+    first_block_of_group = np.flatnonzero(new_group[starts])
+    weights = bm25_weight_np(tfs, dls, avgdl)
+    return {
         "term_id": term_ids[starts].astype(np.int64),
         "salt": salts[starts].astype(np.int32),
+        "block_id": (np.arange(n_blocks, dtype=np.int64)
+                     - first_block_of_group[block_of_group_start]
+                     ).astype(np.int32),
         "first_doc": doc_ids[starts].astype(np.int64),
+        "last_doc": doc_ids[ends - 1].astype(np.int64),
         "n": (ends - starts).astype(np.int32),
+        "max_weight": np.maximum.reduceat(weights, starts).astype(np.float64),
         "docs": [d_bytes[a:b] for a, b in zip(d_byte_starts, d_byte_ends)],
         "tfs": [t_bytes[a:b] for a, b in zip(t_byte_starts, t_byte_ends)],
         "dls": [l_bytes[a:b] for a, b in zip(l_byte_starts, l_byte_ends)],
     }
-    if not partial:
-        # block ordinal within its group: block index minus the group's
-        # first block index (group starts are always block starts)
-        block_of_group_start = np.cumsum(new_group[starts]) - 1
-        first_block_of_group = np.flatnonzero(new_group[starts])
-        out["block_id"] = (np.arange(n_blocks, dtype=np.int64)
-                           - first_block_of_group[block_of_group_start]
-                           ).astype(np.int32)
-        out["last_doc"] = doc_ids[ends - 1].astype(np.int64)
-        weights = bm25_weight_np(tfs, dls, avgdl)
-        out["max_weight"] = np.maximum.reduceat(weights, starts).astype(
-            np.float64)
-    return out
-
-
-# --------------------------------------------------- fixed-width pack codec
-#
-# The build's PRE-SHUFFLE partial runs use fixed-width packing, not varint:
-# varint costs ~25 whole-array passes per stream per encode (measured: it
-# DOUBLED 1M-doc build wall), while astype+tobytes is 2-3 passes and
-# frombuffer+cumsum decodes for free. ~5-8× fewer shuffle bytes than raw
-# Spark rows (the goal), ~10× cheaper CPU than varint. Width per stream is
-# chosen PER CHUNK (smallest unsigned type that fits the chunk max —
-# tail-term doc gaps at 10^12 docs exceed u32, so widths are data-driven,
-# never assumed).
-
-_WIDTH_DTYPES = {1: np.uint8, 2: np.uint16, 4: np.uint32, 8: np.uint64}
-
-
-def _pick_width(v: np.ndarray) -> int:
-    if v.size == 0:
-        return 1
-    m = int(v.max())
-    for w in (1, 2, 4):
-        if m < (1 << (8 * w)):
-            return w
-    return 8
-
-
-def pack_lists_columns(term_ids, salts, doc_ids, tfs, dls) -> dict:
-    """One packed run per (term_id, salt) group of the sorted input chunk
-    (rows sorted by (term_id, salt, doc_id), doc unique per group).
-    Returns columns: term_id, salt, first_doc, n, dw, tw, lw, docs
-    (doc-deltas), tfs, dls — fixed-width little-endian streams."""
-    n = doc_ids.size
-    if n == 0:
-        return {"term_id": np.zeros(0, np.int64),
-                "salt": np.zeros(0, np.int32),
-                "first_doc": np.zeros(0, np.int64),
-                "n": np.zeros(0, np.int32),
-                "dw": np.zeros(0, np.int8), "tw": np.zeros(0, np.int8),
-                "lw": np.zeros(0, np.int8),
-                "docs": [], "tfs": [], "dls": []}
-    new_group = np.empty(n, dtype=bool)
-    new_group[0] = True
-    new_group[1:] = (term_ids[1:] != term_ids[:-1]) | (salts[1:] != salts[:-1])
-    starts = np.flatnonzero(new_group)
-    ends = np.concatenate([starts[1:], [n]])
-
-    deltas = np.diff(doc_ids.astype(np.uint64))
-    keep = ~new_group[1:]
-    kept = deltas[keep]
-    dw = _pick_width(kept)
-    tw = _pick_width(tfs)
-    lw = _pick_width(dls)
-    d_bytes = kept.astype(_WIDTH_DTYPES[dw]).tobytes()
-    t_bytes = tfs.astype(_WIDTH_DTYPES[tw]).tobytes()
-    l_bytes = dls.astype(_WIDTH_DTYPES[lw]).tobytes()
-
-    kept_per = ends - starts - 1
-    d_val_ends = np.cumsum(kept_per)
-    d_val_starts = d_val_ends - kept_per
-    ns = ends - starts
-    return {
-        "term_id": term_ids[starts].astype(np.int64),
-        "salt": salts[starts].astype(np.int32),
-        "first_doc": doc_ids[starts].astype(np.int64),
-        "n": ns.astype(np.int32),
-        "dw": np.full(starts.size, dw, np.int8),
-        "tw": np.full(starts.size, tw, np.int8),
-        "lw": np.full(starts.size, lw, np.int8),
-        "docs": [d_bytes[a * dw:b * dw]
-                 for a, b in zip(d_val_starts, d_val_ends)],
-        "tfs": [t_bytes[a * tw:b * tw] for a, b in zip(starts, ends)],
-        "dls": [l_bytes[a * lw:b * lw] for a, b in zip(starts, ends)],
-    }
-
-
-def _unpack_stream(blobs: list, ns: np.ndarray, widths: np.ndarray
-                   ) -> np.ndarray:
-    """Decode fixed-width streams (possibly mixed widths across rows) into
-    one int64 array in row order — vectorized scatter per width class."""
-    total = int(ns.sum())
-    out = np.empty(total, dtype=np.int64)
-    row_starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-    for w, dt in _WIDTH_DTYPES.items():
-        idx = np.flatnonzero(widths == w)
-        if idx.size == 0:
-            continue
-        lens = ns[idx]
-        vals = np.frombuffer(b"".join(blobs[i] for i in idx), dtype=dt
-                             ).astype(np.int64)
-        sel_total = int(lens.sum())
-        if sel_total == 0:
-            continue
-        seg_start = np.repeat(row_starts[idx], lens)
-        within = (np.arange(sel_total)
-                  - np.repeat(np.cumsum(lens) - lens, lens))
-        out[seg_start + within] = vals
-    return out
-
-
-def unpack_blocks(first_docs, ns, dws, tws, lws, docs_blobs, tfs_blobs,
-                  dls_blobs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of :func:`pack_lists_columns` for MANY runs at once; output
-    row order = input run order (same contract as decode_blocks)."""
-    ns = np.asarray(ns, dtype=np.int64)
-    first_docs = np.asarray(first_docs, dtype=np.int64)
-    total = int(ns.sum())
-    if total == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    tf = _unpack_stream(list(tfs_blobs), ns, np.asarray(tws))
-    dl = _unpack_stream(list(dls_blobs), ns, np.asarray(lws))
-    deltas = _unpack_stream(list(docs_blobs), ns - 1, np.asarray(dws))
-    starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-    vstarts = np.concatenate([[0], np.cumsum(ns - 1)[:-1]])
-    cs = np.cumsum(deltas)
-    prev_cs = np.where(vstarts > 0, cs[np.maximum(vstarts - 1, 0)], 0) \
-        if cs.size else np.zeros(len(ns), dtype=np.int64)
-    d = np.empty(total, dtype=np.int64)
-    d[starts] = first_docs
-    mask = np.ones(total, dtype=bool)
-    mask[starts] = False
-    if deltas.size:
-        base = np.repeat(first_docs - prev_cs, ns)
-        d[mask] = base[mask] + cs
-    return d, tf, dl
 
 
 def encode_posting_list(

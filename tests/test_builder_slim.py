@@ -1,12 +1,16 @@
-"""The slim merge shuffle (dl stripped from posting rows, gathered back
-from the per-salt dlmap sidecar at encode time) must produce postings
-byte-identical to the fat-row path — same blocks, same bounds, same
-compressed bytes."""
+"""The merge shuffle carries no ``dl`` (it is gathered back from the
+per-salt dlmap sidecar at encode time); the written postings must equal a
+reference encode of the same postings with ``dl`` joined in directly —
+same blocks, same bounds, same compressed bytes."""
 from __future__ import annotations
 
+import json
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from colbert_live_spark.index import codec
 from colbert_live_spark.index.builder import build_runs, merge_index
 
 
@@ -19,21 +23,35 @@ def _postings_pdf(spark, out):
     return pdf.reset_index(drop=True)
 
 
-def test_slim_and_fat_merge_byte_identical(spark, documents,
-                                           tmp_path_factory):
-    base = tmp_path_factory.mktemp("slimfat")
-    docs = documents.filter(F.col("doc_id") < 300)
-    outs = {}
-    for name, slim in (("s", True), ("f", False)):
-        out = str(base / name)
-        build_runs(spark, docs, out, n_groups=2)
-        merge_index(spark, out, n_shards=4, salt_rows=100,
-                    slim_shuffle=slim)
-        outs[name] = _postings_pdf(spark, out)
-    a, b = outs["s"], outs["f"]
-    assert len(a) == len(b) and len(a) > 0
-    for col in a.columns:
-        assert (a[col] == b[col]).all(), f"column {col} differs"
+def test_postings_match_reference_encode(spark, documents, tmp_path):
+    out = str(tmp_path / "idx")
+    build_runs(spark, documents.filter(F.col("doc_id") < 300), out,
+               n_groups=2)
+    merge_index(spark, out, n_shards=4, salt_rows=100)
+    with open(f"{out}/_INDEX_META.json") as fh:
+        meta = json.load(fh)
+
+    def read(sub):
+        return (spark.read.option("recursiveFileLookup", "true")
+                .parquet(f"{out}/{sub}"))
+
+    rows = (read("runs").select("term", "doc_id", "tf")
+            .join(read("doclens").select("doc_id", "dl"), "doc_id")
+            .join(read("dict").select("term", "term_id"), "term")
+            .select("term_id",
+                    F.pmod(F.xxhash64("doc_id"), F.lit(meta["doc_shards"]))
+                    .cast("int").alias("salt"),
+                    "doc_id", "tf", "dl")
+            .toPandas())
+    t, s, d, tf, dl = (rows[c].to_numpy(np.int64)
+                       for c in ("term_id", "salt", "doc_id", "tf", "dl"))
+    o = np.lexsort((d, s, t))
+    want = codec.encode_lists_columns(t[o], s[o], d[o], tf[o], dl[o],
+                                      meta["avgdl"], meta["block_size"])
+    got = _postings_pdf(spark, out)
+    assert len(got) == len(want["block_id"]) > 0
+    for col in got.columns:
+        assert list(got[col]) == list(want[col]), f"column {col} differs"
 
 
 def test_dlmap_missing_doc_fails_loudly(spark, documents, tmp_path):

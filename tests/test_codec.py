@@ -102,7 +102,7 @@ def test_block_max_weight_is_max():
         assert blk["max_weight"] == w.max()
 
 
-# ------------------------------------------------ multi-list + pack codecs
+# ------------------------------------------------------ multi-list codec
 
 def test_encode_lists_columns_matches_per_group():
     """The vectorized multi-list encoder must be byte-identical to calling
@@ -137,45 +137,3 @@ def test_encode_lists_columns_matches_per_group():
             ref[k].extend(list(cols[k]))
     for k in multi:
         assert list(multi[k]) == list(ref[k]), k
-
-
-def test_pack_unpack_roundtrip_mixed_widths():
-    """Fixed-width pack codec: roundtrip identity including u64 doc deltas
-    (10^12-doc gaps) and mixed per-chunk widths concatenated at the merge."""
-    import numpy as np
-    from colbert_live_spark.index.codec import (pack_lists_columns,
-                                                unpack_blocks)
-    rng = np.random.RandomState(5)
-    rows = []
-    for t in range(5):
-        for s in range(2):
-            if t == 4:
-                d = np.unique(rng.randint(0, 10**12, 50).astype(np.int64))
-            else:
-                d = np.sort(rng.choice(10_000, size=rng.randint(2, 200),
-                                       replace=False)).astype(np.int64)
-            n = d.size
-            rows.append((t, s, d, rng.randint(1, 300, n),
-                         rng.randint(5, 70_000, n)))
-    term = np.concatenate([np.full(r[2].size, r[0]) for r in rows]).astype(np.int64)
-    salt = np.concatenate([np.full(r[2].size, r[1]) for r in rows]).astype(np.int32)
-    doc = np.concatenate([r[2] for r in rows]).astype(np.int64)
-    tf = np.concatenate([r[3] for r in rows]).astype(np.int64)
-    dl = np.concatenate([r[4] for r in rows]).astype(np.int64)
-    # split into two "chunks" with independent width choices
-    cut = term.size // 2
-    parts = [pack_lists_columns(term[:cut], salt[:cut], doc[:cut],
-                                tf[:cut], dl[:cut]),
-             pack_lists_columns(term[cut:], salt[cut:], doc[cut:],
-                                tf[cut:], dl[cut:])]
-    import numpy as np
-    fd = np.concatenate([p["first_doc"] for p in parts])
-    ns = np.concatenate([p["n"] for p in parts])
-    dw = np.concatenate([p["dw"] for p in parts])
-    tw = np.concatenate([p["tw"] for p in parts])
-    lw = np.concatenate([p["lw"] for p in parts])
-    db = list(parts[0]["docs"]) + list(parts[1]["docs"])
-    tb = list(parts[0]["tfs"]) + list(parts[1]["tfs"])
-    lb = list(parts[0]["dls"]) + list(parts[1]["dls"])
-    d2, tf2, dl2 = unpack_blocks(fd, ns, dw, tw, lw, db, tb, lb)
-    assert (d2 == doc).all() and (tf2 == tf).all() and (dl2 == dl).all()

@@ -5,6 +5,10 @@ races between concurrent callers and a committing writer, are the failure
 modes these tests pin down."""
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
+from colbert_live_spark.index.builder import build_index
 from colbert_live_spark.index.segments import (
     add_segment, delete_docs, segment_search_local)
 from colbert_live_spark.operators import wand
@@ -12,6 +16,14 @@ from colbert_live_spark.operators import wand
 
 def _ids(pdf):
     return set(int(x) for x in pdf["doc_id"])
+
+
+@pytest.fixture(scope="module")
+def small_index(spark, documents, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("lruidx") / "idx")
+    build_index(spark, documents.filter(F.col("doc_id") < 200), out,
+                n_groups=2, n_shards=4, salt_rows=100)
+    return out
 
 
 def test_cache_hit_equals_cold_and_ingest_invalidates(spark, tmp_path):
@@ -188,4 +200,35 @@ def test_cache_bookkeeping_is_thread_safe(monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors[:3]
     assert len(lru) <= 4 and len(wand._CACHE) <= 2
+    wand._CACHE.clear()
+
+
+def test_local_dict_cache_is_bounded_lru(small_index, tmp_path, monkeypatch):
+    """The driver-side serving cache is bounded per root (terms, absent
+    terms included) and across roots; evicted entries are point-read
+    again with the same answer."""
+    monkeypatch.setattr(wand, "_CACHE_TERMS_MAX", 8)
+    wand._CACHE.clear()
+    # flood with distinct absent terms — every one is a negative entry
+    for i in range(50):
+        assert wand.resolve(small_index, [("q", f"zz_absent_{i:04d}")]) \
+            is None
+    assert len(wand._CACHE[small_index].terms) <= 8
+    # a real term evicted earlier must still resolve correctly (falls back
+    # to the point-lookup path), and LRU touch keeps it resident
+    first = wand.resolve(small_index, [("q", "spark")]).qmeta
+    assert first["q"]
+    for i in range(20):
+        wand.resolve(small_index, [("q", f"zz_more_{i:04d} spark")])
+    assert "spark" in wand._CACHE[small_index].terms
+    assert wand.resolve(small_index, [("q", "spark")]).qmeta == first
+    assert len(wand._CACHE[small_index].terms) <= 8
+    # the root map is an LRU too: a second index evicts the first
+    monkeypatch.setattr(wand, "_CACHE_ROOTS_MAX", 1)
+    import shutil
+    other = str(tmp_path / "copy")
+    shutil.copytree(small_index, other)
+    wand.resolve(other, [("q", "spark")])
+    assert list(wand._CACHE) == [other]
+    assert wand.resolve(small_index, [("q", "spark")]).qmeta == first
     wand._CACHE.clear()

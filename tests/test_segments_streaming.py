@@ -1,15 +1,18 @@
 """Incremental segments: rank-identity under incremental ingest, compaction
 equivalence, streaming ingestion liveness, arrival-order independence of
-natural-key (preserve_ids) ingest."""
+natural-key (preserve_ids) ingest, the root's id mode, and manifest stream
+namespacing (legacy roots, replayed micro-batches)."""
 from __future__ import annotations
 
+import json
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from colbert_live_spark.index.segments import (
-    add_segment, compact, segment_search,
+    MANIFEST, _read_manifest, add_segment, compact, segment_search,
+    segment_search_local, update_docs,
 )
 from colbert_live_spark.oracle import build_oracle_index, oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
@@ -147,3 +150,128 @@ def test_preserve_ids_order_invariant(spark, documents, tmp_path_factory):
     all_ids = {r.doc_id for r in docs.select("doc_id").collect()}
     for hits in a.values():
         assert {d for d, _ in hits} <= all_ids
+
+
+def test_id_mode_change_refused(spark, documents, tmp_path):
+    """add_segment records the root's id mode and refuses a preserve/offset
+    change across batches (the ids would double-count)."""
+    root = str(tmp_path / "mode_root")
+    docs = documents.limit(20)
+    add_segment(spark, docs, root, salt_rows=100)
+    assert _read_manifest(root)["id_mode"] == "offset"
+    with pytest.raises(ValueError, match="id_mode"):
+        add_segment(spark, docs, root, salt_rows=100, preserve_ids=True)
+    # same mode keeps working
+    assert add_segment(spark, docs, root, salt_rows=100)
+
+
+def test_empty_first_batch_does_not_fix_id_mode(spark, documents, tmp_path):
+    """An empty first batch must not fix the root's id mode: the first real
+    preserve_ids batch would then raise."""
+    root = str(tmp_path / "emptyfirst")
+    empty = documents.limit(0)
+    # empty first micro-batch under the DEFAULT offset mode
+    assert add_segment(spark, empty, root, salt_rows=100) is None
+    # the first real batch arrives preserve_ids=True — must NOT raise
+    assert add_segment(spark, documents.limit(10), root, salt_rows=100,
+                       preserve_ids=True)
+    assert _read_manifest(root)["id_mode"] == "preserve"
+    assert len(segment_search_local(root, [("q", "spark")], k=5)) >= 0
+
+
+def test_update_docs_refuses_preserve_roots(spark, documents, tmp_path):
+    """update_docs on an id_mode='preserve' root would re-add docs under the
+    SAME ids it tombstones (tombstone exclusion hides them, compact() drops
+    them), so it must refuse such roots."""
+    root = str(tmp_path / "proot")
+    docs = documents.limit(20)
+    add_segment(spark, docs, root, salt_rows=100, preserve_ids=True)
+    changed = docs.limit(5).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" rev2")))
+    with pytest.raises(ValueError, match="preserve"):
+        update_docs(spark, changed, root,
+                    docs.limit(5).select("doc_id"), salt_rows=100)
+    # the refusal must leave the root untouched (no staged tombstones)
+    m = _read_manifest(root)
+    assert m["tombstones"]["n_deleted"] == 0
+    assert len(m["segments"]) == 1
+
+
+def test_legacy_root_stream_namespace_seeded(spark, documents, tmp_path):
+    """Simulate a pre-namespacing root: batches committed under the default
+    token, manifest lacking the ns_version marker. A named stream resuming
+    it must treat batch ids <= the legacy token as replays."""
+    root = str(tmp_path / "legacy_root")
+    docs = documents.limit(30)
+    assert add_segment(spark, docs, root, salt_rows=100, batch_id=2)
+    # strip the namespacing marker — this is what a pre-r4 manifest looks
+    # like (batches recorded only under last_batch_id)
+    m = json.loads(open(f"{root}/{MANIFEST}").read())
+    assert m["last_batch_id"] == 2
+    del m["ns_version"]
+    m.pop("stream_batch_ids", None)
+    open(f"{root}/{MANIFEST}", "w").write(json.dumps(m))
+
+    # the one in-flight replayed micro-batch a checkpoint resume can
+    # deliver: same batch id, named stream — must be dropped
+    assert add_segment(spark, docs, root, salt_rows=100, batch_id=2,
+                       stream_id="ckpt-a") is None
+    assert len(_read_manifest(root)["segments"]) == 1
+    # the next genuinely new batch ingests, and upgrades the root
+    assert add_segment(spark, docs.withColumn(
+        "doc_id", F.col("doc_id") + 1000), root, salt_rows=100, batch_id=3,
+        stream_id="ckpt-a")
+    m2 = _read_manifest(root)
+    assert m2["ns_version"] == 2
+    assert m2["stream_batch_ids"]["ckpt-a"] == 3
+    # post-migration, a DIFFERENT new named stream starts at -1 as usual
+    assert add_segment(spark, docs.withColumn(
+        "doc_id", F.col("doc_id") + 2000), root, salt_rows=100, batch_id=0,
+        stream_id="ckpt-b")
+
+
+def test_manual_add_keeps_legacy_migration_marker(spark, documents,
+                                                  tmp_path):
+    """A manual add (batch_id=None) to a legacy root must not stamp
+    ns_version=2 before the legacy token is seeded into the namespaced map:
+    a named stream resuming afterwards would re-ingest its replayed
+    micro-batch as a duplicate segment."""
+    root = str(tmp_path / "legacy2")
+    docs = documents.limit(20)
+    assert add_segment(spark, docs, root, salt_rows=100, batch_id=2)
+    # strip the namespacing marker — a pre-r4 manifest
+    m = json.loads(open(f"{root}/{MANIFEST}").read())
+    assert m["last_batch_id"] == 2
+    del m["ns_version"]
+    m.pop("stream_batch_ids", None)
+    open(f"{root}/{MANIFEST}", "w").write(json.dumps(m))
+
+    # ONE manual (non-streaming) add — previously stamped ns_version=2 and
+    # erased the migration marker
+    assert add_segment(spark, docs.withColumn(
+        "doc_id", F.col("doc_id") + 500), root, salt_rows=100)
+    m2 = _read_manifest(root)
+    assert m2.get("ns_version", 1) < 2, \
+        "manual add erased the legacy migration marker"
+
+    # a named stream resuming the root must still treat the replayed
+    # legacy batch id as a replay (dropped), not a fresh ingest
+    n_before = len(m2["segments"])
+    assert add_segment(spark, docs, root, salt_rows=100, batch_id=2,
+                       stream_id="ckpt-z") is None
+    assert len(_read_manifest(root)["segments"]) == n_before
+
+
+def test_cli_ingest_stream_key_col(spark, documents, tmp_path):
+    """A stream with no doc_id column and a non-'url' natural key must
+    ingest via --key-col (advice r4: the default was hardcoded)."""
+    from colbert_live_spark.cli import main
+    inp = str(tmp_path / "in")
+    (documents.limit(25).select(
+        F.concat(F.lit("k"), F.col("doc_id")).alias("page_key"), "text")
+     .coalesce(1).write.parquet(inp))
+    root, ckpt = str(tmp_path / "root"), str(tmp_path / "ckpt")
+    main(["ingest-stream", "--root", root, "--input", inp,
+          "--checkpoint", ckpt, "--key-col", "page_key"])
+    m = _read_manifest(root)
+    assert sum(s["n_docs"] for s in m["segments"]) == 25

@@ -364,10 +364,10 @@ def built_index(spark, sf_dir: str) -> str:
         import hashlib
         import os
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        # v2: doc-sharded layout (salt = global doc shard) — the version tag
-        # keeps stale round-1 layouts from being reused across processes
+        # the version tag keeps index dirs of older layouts from being
+        # reused across processes
         root = os.environ.get("SPARK_GRAFT_INDEX_ROOT", "/tmp")
-        out = f"{root}/cls_index_v3_{tag}"
+        out = f"{root}/cls_index_v4_{tag}"
         if not os.path.exists(f"{out}/_INDEX_META.json"):
             from colbert_live_spark.index.builder import build_index
             # bare scan (no spread_input): build_runs' file-group mode +
@@ -492,43 +492,44 @@ def q_bm25_tag_filtered(spark, sf_dir):
                                     doc_filter=keep))
 
 
+def _cached_root(kind: str, sf_dir: str, build) -> str:
+    """``/tmp/cls_<kind>_<md5(sf_dir)>``, built once by ``build(root)`` and
+    reused by later processes. Sentinel-guarded: a process killed
+    mid-setup must not leave a half-built root to be reused, so a root
+    without ``_READY`` is removed and rebuilt."""
+    import hashlib
+    import os
+    import shutil
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    root = f"/tmp/cls_{kind}_{tag}"
+    ready = f"{root}/_READY"
+    if not os.path.exists(ready):
+        shutil.rmtree(root, ignore_errors=True)
+        build(root)
+        open(ready, "w").close()
+    return root
+
+
 _DELETE_PRED_SQL = "doc_id % 7 = 3"
 
 
 def built_deleted_root(spark, sf_dir: str) -> str:
     """Segment root over the documents corpus with docs (doc_id % 7 == 3)
     tombstoned — built once per sf_dir per process under /tmp."""
-    import hashlib
-    import os
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_segdel_v5_{tag}"
-    ready = f"{root}/_READY"
-    if not os.path.exists(ready):
-        # sentinel-guarded: a process killed mid-setup must not leave a
-        # half-built root to be reused by later processes
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
         from colbert_live_spark.index.segments import add_segment, delete_docs
         docs = _docs(spark, sf_dir)
         add_segment(spark, docs, root, n_shards=4, salt_rows=200)
         delete_docs(spark, root,
                     docs.filter(F.expr(_DELETE_PRED_SQL)).select("doc_id"))
-        open(ready, "w").close()
-    return root
+    return _cached_root("segdel_v6", sf_dir, build)
 
 
 def built_live_root(spark, sf_dir: str) -> str:
     """Two-segment live root over the documents corpus (ingested in two
     increments with contiguous id ranges, so global ids equal the
     monolithic corpus ids) — built once per sf_dir per process."""
-    import hashlib
-    import os
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_seglive_v5_{tag}"
-    ready = f"{root}/_READY"
-    if not os.path.exists(ready):
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
         from colbert_live_spark.index.segments import add_segment
         docs = _docs(spark, sf_dir)
         half = docs.count() // 2
@@ -538,8 +539,7 @@ def built_live_root(spark, sf_dir: str) -> str:
                     docs.filter(F.col("doc_id") >= half)
                     .withColumn("doc_id", F.col("doc_id") - half),
                     root, n_shards=4, salt_rows=200)
-        open(ready, "w").close()
-    return root
+    return _cached_root("seglive_v6", sf_dir, build)
 
 
 def q_bm25_incremental(spark, sf_dir):
@@ -575,14 +575,8 @@ def built_compacted_root(spark, sf_dir: str) -> str:
     """Segment root with the same tombstoned state as built_deleted_root,
     then compact()ed: tombstoned docs physically dropped, tombstone set
     cleared — built once per sf_dir per process under /tmp."""
-    import hashlib
-    import os
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_segcomp_v5_{tag}"
-    ready = f"{root}/_READY"
-    if not os.path.exists(ready):
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
+        import os
         from colbert_live_spark.index.segments import (
             add_segment, compact, delete_docs)
         docs = _docs(spark, sf_dir)
@@ -593,8 +587,7 @@ def built_compacted_root(spark, sf_dir: str) -> str:
         # compaction must physically drop the tombstone state
         assert not os.path.exists(f"{root}/tombstones"), \
             "compact() left tombstone files behind"
-        open(ready, "w").close()
-    return root
+    return _cached_root("segcomp_v6", sf_dir, build)
 
 
 def q_bm25_after_compact(spark, sf_dir):
@@ -614,22 +607,14 @@ def built_streamed_root(spark, sf_dir: str) -> str:
     ``preserve_ids`` keeps the corpus doc ids, so the result is independent
     of the file order the stream source happens to list — any order yields
     the same root contents."""
-    import hashlib
-    import os
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_segstream_v5_{tag}"
-    ready = f"{root}/_READY"
-    if not os.path.exists(ready):
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
         from colbert_live_spark.streaming.incremental import ingest_stream
         docs = _docs(spark, sf_dir)
         stage = f"{root}/_stage"
         docs.repartition(3).write.mode("overwrite").parquet(stage)
         ingest_stream(spark, stage, docs.schema, f"{root}/live",
                       checkpoint=f"{root}/_ckpt", preserve_ids=True)
-        open(ready, "w").close()
-    return f"{root}/live"
+    return f"{_cached_root('segstream_v6', sf_dir, build)}/live"
 
 
 def q_bm25_streamed(spark, sf_dir):
@@ -652,14 +637,7 @@ def built_updated_root(spark, sf_dir: str) -> str:
     segment — the reference's "modify documents", README.md:21-23). The
     re-added docs get deterministic new global ids = old id + N (N = corpus
     size), which the oracle mirrors."""
-    import hashlib
-    import os
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_segupd_v5_{tag}"
-    ready = f"{root}/_READY"
-    if not os.path.exists(ready):
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
         from colbert_live_spark.index.segments import add_segment, update_docs
         docs = _docs(spark, sf_dir)
         add_segment(spark, docs, root, n_shards=4, salt_rows=200)
@@ -669,8 +647,7 @@ def built_updated_root(spark, sf_dir: str) -> str:
         update_docs(spark, changed, root,
                     docs.filter(F.expr(_UPDATE_PRED_SQL)).select("doc_id"),
                     n_shards=4, salt_rows=200)
-        open(ready, "w").close()
-    return root
+    return _cached_root("segupd_v6", sf_dir, build)
 
 
 def q_bm25_after_update(spark, sf_dir):

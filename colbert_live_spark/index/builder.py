@@ -6,14 +6,17 @@ The Spark re-expression of the reference's ingest path
 
 Stage 1 — ``build_runs``: input docs are split into commit groups (by input
 file when available — the real-scale path where groups = ingest increments —
-else by hash of doc id). Each group is one Spark job producing a sorted
-posting run ``(term, doc_id, tf, dl)`` under ``runs/gid=N/`` plus a ledger row
+else by hash of doc id). Each group writes a posting run ``(term, doc_id,
+tf)`` under ``runs/gid=N/``, its partial term dfs under ``dfs/gid=N/`` and its
+doc lengths ``(doc_id, dl)`` under ``doclens/gid=N/`` (``_write_group`` — the
+one stage-1 writer, shared with ``segments.compact``), plus a ledger row
 (lineage: group id, files, row counts, postings/sec, bytes, wall ms). A killed
 build resumes by anti-joining pending groups against the ledger — completed
 groups are never re-read.
 
 Stage 2 — ``merge_index``: one idempotent job (overwrite semantics):
-dictionary with dense term ids + exact df/idf, a global doc-shard salt
+dictionary with dense term ids + exact df/idf, the per-doc ``docs`` table
+(doc lengths + doc metadata, partitioned by doc shard), a global doc-shard salt
 (``salt = hash(doc_id) mod doc_shards`` — the same shard for every term, so
 one shard holds the complete mini-index of its doc subset), then the big
 merge-shuffle: hash ``repartition(term_id, salt)`` + ``sortWithinPartitions``
@@ -52,15 +55,17 @@ from __future__ import annotations
 import json
 import math
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_live_spark.index import codec, fsio
 from colbert_live_spark.index.ids import assign_dense_ids
+from colbert_live_spark.operators import bm25
 from colbert_live_spark.session import is_bare_scan, spread_input
 
-RUN_SCHEMA = "term string, doc_id long, tf int, dl int"
+RUN_SCHEMA = "term string, doc_id long, tf int"
 BLOCK_SCHEMA = ("term_id long, salt int, block_id int, first_doc long, "
                 "last_doc long, n int, max_weight double, "
                 "docs binary, tfs binary, dls binary")
@@ -68,32 +73,14 @@ LEDGER_SCHEMA = ("gid int, stage string, n_docs long, n_postings long, "
                  "bytes long, wall_ms long, files string")
 
 
-def _tokenized(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    from colbert_live_spark.functions.tokenize import tokenize_expr
-    return docs.select(F.col(id_col).alias("doc_id"),
-                       tokenize_expr(text_col).alias("tokens"))
-
-
-def _runs_from_tokens(toks: DataFrame) -> DataFrame:
-    return (toks.select("doc_id", F.size("tokens").alias("dl"),
-                        F.explode("tokens").alias("term"))
-                .groupBy("term", "doc_id", "dl")
-                .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-                .select("term", "doc_id", "tf", "dl"))
-
-
 # driver-side metadata IO goes through the pyarrow.fs abstraction so the
 # ledger/manifest work on object stores (index/fsio.py); Spark handles the
 # big data through its own Hadoop FS layer
-_dir_bytes = fsio.dir_bytes
-_parquet_rows = fsio.parquet_rows
-
-
 def _ledger_files(out_dir: str) -> list[str]:
     return fsio.list_files(f"{out_dir}/ledger", ".parquet")
 
 
-def completed_groups(spark: SparkSession, out_dir: str) -> set[int]:
+def completed_groups(out_dir: str) -> set[int]:
     return set(completed_group_files(out_dir))
 
 
@@ -109,7 +96,7 @@ def completed_group_files(out_dir: str) -> dict[int, list[str]]:
     return done
 
 
-def _append_ledger(spark: SparkSession, out_dir: str, row: tuple) -> None:
+def _append_ledger(out_dir: str, row: tuple) -> None:
     """Driver-side pyarrow append — the commit record must not cost a Spark
     job (it was 1-6s of fixed overhead per group as a Spark write). One file
     per commit keeps appends atomic (write temp + move via fsio — works on
@@ -126,6 +113,42 @@ def _append_ledger(spark: SparkSession, out_dir: str, row: tuple) -> None:
                          ("files", pa.string())]))
     fsio.write_parquet_atomic(
         f"{out_dir}/ledger/commit-{uuid.uuid4().hex}.parquet", table)
+
+
+def _write_group(spark: SparkSession, out_dir: str, gid: int,
+                 runs: DataFrame, doclens: DataFrame) -> None:
+    """The one stage-1 writer (builds and compaction): ``runs`` ``(term,
+    doc_id, tf)`` to ``runs/gid=N``, that group's partial term dfs to
+    ``dfs/gid=N`` and ``doclens`` ``(doc_id, dl)`` to ``doclens/gid=N``."""
+    run_path = f"{out_dir}/runs/gid={gid}"
+
+    def write_runs_then_dfs():
+        runs.write.mode("overwrite").parquet(run_path)
+        # per-group partial term dfs (vocab-sized): groups partition
+        # docs, so global df = Σ group dfs. Checkpointing this here
+        # moves the merge's dictionary pass OFF its critical path — the
+        # merge phase scales worst (measured 2.0-2.6× at 1M on 2→8
+        # cores vs 2.9-4.35× for the runs phase), so every full runs
+        # scan moved into stage 1 improves whole-build scaling; it also
+        # re-aggregates per GROUP on resume, never globally.
+        (spark.read.parquet(run_path).groupBy("term")
+         .agg(F.count(F.lit(1)).cast("long").alias("df"))
+         .coalesce(1).write.mode("overwrite")
+         .parquet(f"{out_dir}/dfs/gid={gid}"))
+
+    def write_doclens():
+        doclens.write.mode("overwrite").parquet(
+            f"{out_dir}/doclens/gid={gid}")
+
+    # the doclens job is independent of the runs/dfs chain — submit
+    # both and let Spark overlap them (guide §2.6: the scheduler runs
+    # concurrent jobs fine; actions are only sequential because driver
+    # code calls them sequentially). The caller's ledger commit still
+    # happens strictly after BOTH outputs exist.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for f in [pool.submit(write_runs_then_dfs),
+                  pool.submit(write_doclens)]:
+            f.result()
 
 
 def build_runs(
@@ -181,46 +204,17 @@ def build_runs(
         else:
             part = docs.filter(
                 F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups)) == gid)
-        toks = _tokenized(part, id_col, text_col)
-        run_path = f"{out_dir}/runs/gid={gid}"
-
-        def write_runs_then_dfs():
-            _runs_from_tokens(toks).write.mode("overwrite").parquet(run_path)
-            # per-group partial term dfs (vocab-sized): groups partition
-            # docs, so global df = Σ group dfs. Checkpointing this here
-            # moves the merge's dictionary pass OFF its critical path — the
-            # merge phase scales worst (measured 2.0-2.6× at 1M on 2→8
-            # cores vs 2.9-4.35× for the runs phase), so every full runs
-            # scan moved into stage 1 improves whole-build scaling; it also
-            # re-aggregates per GROUP on resume, never globally.
-            (spark.read.parquet(run_path).groupBy("term")
-             .agg(F.count(F.lit(1)).cast("long").alias("df"))
-             .coalesce(1).write.mode("overwrite")
-             .parquet(f"{out_dir}/dfs/gid={gid}"))
-
-        def write_doclens():
-            # second pass re-tokenizes: cheaper than caching the token
-            # arrays
-            toks.select("doc_id", F.size("tokens").alias("dl")).write.mode(
-                "overwrite").parquet(f"{out_dir}/doclens/gid={gid}")
-
-        # the doclens job is independent of the runs/dfs chain — submit
-        # both and let Spark overlap them (guide §2.6: the scheduler runs
-        # concurrent jobs fine; actions are only sequential because driver
-        # code calls them sequentially). The ledger commit below still
-        # happens strictly after BOTH outputs exist.
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fr = pool.submit(write_runs_then_dfs)
-            fd = pool.submit(write_doclens)
-            fr.result()
-            fd.result()
+        # doclens re-tokenizes: cheaper than caching the token arrays
+        _write_group(spark, out_dir, gid,
+                     bm25.postings(part, id_col, text_col),
+                     bm25.doc_stats(part, id_col, text_col))
         # counts from parquet footers — driver-side, no Spark jobs
-        n_docs = _parquet_rows(f"{out_dir}/doclens/gid={gid}")
-        n_post = _parquet_rows(run_path)
+        run_path = f"{out_dir}/runs/gid={gid}"
+        n_docs = fsio.parquet_rows(f"{out_dir}/doclens/gid={gid}")
+        n_post = fsio.parquet_rows(run_path)
         wall_ms = int((time.time() - t0) * 1000)
-        _append_ledger(spark, out_dir, (
-            gid, "runs", n_docs, n_post, _dir_bytes(run_path), wall_ms,
+        _append_ledger(out_dir, (
+            gid, "runs", n_docs, n_post, fsio.dir_bytes(run_path), wall_ms,
             json.dumps(groups[gid] or [])))
         return gid
 
@@ -231,7 +225,6 @@ def build_runs(
         # the next group's scan (at 1000 groups a strictly sequential driver
         # serializes the cluster); ledger appends are one-file-per-commit so
         # they are concurrency-safe
-        from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
             processed = sorted(pool.map(process, pending))
     else:
@@ -291,14 +284,17 @@ def merge_index(
     doc_shards: int | None = None,
     doc_shards_headroom: int = 1,
 ) -> None:
-    """Stage 2: runs → dictionary + compressed term-sharded postings + stats.
+    """Stage 2: runs, dfs and doclens → dictionary (from dfs only), the
+    ``docs`` table, compressed term-sharded postings and ``_INDEX_META.json``
+    (n_docs / avgdl / sum_dl straight from doclens).
 
     The postings come from one merge shuffle of ``(term_id, salt, doc_id,
     tf)`` rows, hash-partitioned by salt and sorted by (term_id, salt,
     doc_id), then block-encoded per complete (term_id, salt) group in one
-    ``mapInPandas`` pass. Per-doc ``dl`` stays out of that shuffle: each
-    salt's (doc_id → dl) map is written once to a ``dlmap`` sidecar and
-    gathered back at encode time (see the comment above ``shuffle_cols``).
+    ``mapInPandas`` pass. Per-doc ``dl`` stays out of that shuffle: the
+    ``docs`` table is written partitioned by salt and each salt's (doc_id →
+    dl) map is gathered back from ``docs/salt=<s>`` at encode time (see the
+    comment above ``shuffle_cols``). Raises if a runs group has no dfs.
 
     ``doc_shards`` (D): the global doc-shard count. salt = hash(doc_id) mod D
     for EVERY term, so shard s is a complete mini-index of its doc subset —
@@ -313,48 +309,45 @@ def merge_index(
     grows ~headroom× beyond that batch).
     """
     t0 = time.time()
-    runs = (spark.read.option("recursiveFileLookup", "true")
-            .parquet(f"{out_dir}/runs"))
+    read = spark.read.option("recursiveFileLookup", "true").parquet
 
-    # The docs/stats chain and the dictionary's expensive part (dfs agg +
+    # stage 1 writes runs and dfs together per group (_write_group): a runs
+    # group without its dfs is a damaged index dir, not a reason to fall
+    # back to aggregating the full runs
+    def _gid_dirs(sub: str) -> set[str]:
+        return {f.rsplit("/", 2)[-2] for f in
+                fsio.list_files(f"{out_dir}/{sub}", ".parquet")}
+
+    missing = sorted(_gid_dirs("runs") - _gid_dirs("dfs"))
+    if missing:
+        raise RuntimeError(
+            f"{out_dir}: runs groups {missing} have no dfs — stage 1 writes "
+            "both per group; rebuild those groups")
+    doclens = read(f"{out_dir}/doclens").select("doc_id", "dl")
+
+    # The corpus stats and the dictionary's expensive part (dfs agg +
     # range-partitioned dense-id assignment, which materializes a persisted
     # relation and collects per-partition counts) are INDEPENDENT — only
     # the final idf projection needs n_docs. Submit both chains from a
     # 2-thread pool so their jobs overlap (guide §2.6); everything after
     # joins on both results.
     def stats_chain():
-        dstats = (spark.read.option("recursiveFileLookup", "true")
-                  .parquet(f"{out_dir}/doclens").select("doc_id", "dl"))
-        if doc_meta is not None:
-            dstats = dstats.join(doc_meta, "doc_id", "left")
-        dstats.write.mode("overwrite").parquet(f"{out_dir}/docs")
-        dstats = spark.read.parquet(f"{out_dir}/docs")
-        st = dstats.agg(F.count(F.lit(1)).alias("n_docs"),
-                        F.avg("dl").alias("avgdl"),
-                        F.sum("dl").cast("long").alias("sum_dl")).collect()[0]
+        st = doclens.agg(F.count(F.lit(1)).alias("n_docs"),
+                         F.avg("dl").alias("avgdl"),
+                         F.sum("dl").cast("long").alias("sum_dl")).collect()[0]
         # avgdl is NULL over an empty corpus (empty ingest batch) — a crash
         # here would poison the segment-root manifest path (advice r2)
-        return (dstats, st.n_docs, float(st.avgdl or 0.0),
-                int(st.sum_dl or 0))
+        return st.n_docs, float(st.avgdl or 0.0), int(st.sum_dl or 0)
 
     def dict_chain():
-        # dictionary dfs: prefer the stage-1 per-group partials
-        # (vocab-sized scan instead of a full postings scan — the merge
-        # phase is the worst-scaling one); fall back to the full runs
-        # aggregation for roots whose runs were produced without dfs
-        # (e.g. compact()'s rewrite path)
-        def _gid_dirs(sub: str) -> set[str]:
-            return {f.rsplit("/", 2)[-2] for f in
-                    fsio.list_files(f"{out_dir}/{sub}", ".parquet")}
-
-        if _gid_dirs("dfs") and _gid_dirs("dfs") >= _gid_dirs("runs"):
-            df_t = (spark.read.option("recursiveFileLookup", "true")
-                    .parquet(f"{out_dir}/dfs")
-                    .groupBy("term").agg(
-                        F.sum("df").cast("long").alias("df")))
-        else:
-            df_t = runs.groupBy("term").agg(
-                F.count(F.lit(1)).cast("long").alias("df"))
+        # dictionary dfs from the stage-1 per-group partials: a
+        # vocab-sized scan instead of a full postings scan (the merge
+        # phase is the worst-scaling one); schema given, as inferring it
+        # costs one more Spark job
+        df_t = (spark.read.schema("term string, df long")
+                .option("recursiveFileLookup", "true")
+                .parquet(f"{out_dir}/dfs").groupBy("term")
+                .agg(F.sum("df").cast("long").alias("df")))
         rd = assign_dense_ids(df_t, "term", "term_id", max(4, n_shards))
         # df_max needs only the df column (not n_docs from the stats
         # chain) — compute it here so doc_shards is known the moment both
@@ -363,20 +356,11 @@ def merge_index(
                 else int(rd.agg(F.max("df")).collect()[0][0] or 1))
         return rd, dmax
 
-    from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_stats = pool.submit(stats_chain)
         f_dict = pool.submit(dict_chain)
-        dstats, n_docs, avgdl, sum_dl = f_stats.result()
+        n_docs, avgdl, sum_dl = f_stats.result()
         raw_dict, df_max = f_dict.result()
-
-    # stats table written driver-side (single row — not worth a Spark job)
-    import pyarrow as pa
-    fsio.write_parquet_atomic(
-        f"{out_dir}/stats/stats.parquet",
-        pa.table({"n_docs": [int(n_docs)], "avgdl": [avgdl]},
-                 schema=pa.schema([("n_docs", pa.int64()),
-                                   ("avgdl", pa.float64())])))
 
     dict_df = raw_dict.select(
         "term", "term_id", "df",
@@ -385,6 +369,8 @@ def merge_index(
     if doc_shards is None:
         doc_shards = max(n_shards,
                          math.ceil(df_max / salt_rows) * doc_shards_headroom)
+    salt = (F.pmod(F.xxhash64("doc_id"), F.lit(doc_shards))
+            .cast("int").alias("salt"))
 
     def write_dict():
         # few files (query-time dictionary point-lookups pay per-file
@@ -401,6 +387,15 @@ def merge_index(
         # NOT re-read from disk: assign_dense_ids keeps its input
         # persisted, so reuse stays deterministic and we skip a read-back
 
+    def write_docs():
+        # one cheap n_docs-row job: (doc_id, dl, doc_meta...), one dir per
+        # doc shard — the encode's dl gather source
+        docs = (doclens if doc_meta is None
+                else doclens.join(doc_meta, "doc_id", "left"))
+        (docs.select("*", salt).repartition(doc_shards, "salt")
+         .write.partitionBy("salt").mode("overwrite")
+         .parquet(f"{out_dir}/docs"))
+
     # The merge-shuffle: postings + term ids, salted by global doc shard so
     # each (term_id, salt) group is contiguous and sorted by doc_id.
     # ``dl`` does NOT ride the shuffle: it is per-DOC data that would repeat
@@ -408,33 +403,23 @@ def merge_index(
     # through the merge's two bandwidth-bound passes (shuffle write/read
     # and the row sort), which are exactly where the measured 1M-doc
     # scaling sits at the host's delivered-bandwidth envelope. Instead
-    # each salt's (doc_id → dl) map is written once to a dlmap sidecar
-    # (n_docs rows total, ≪ postings by the avgdl factor) and gathered
-    # back at encode time from an in-cache sorted array (n_docs/doc_shards
-    # entries — the same docs-per-shard bound the serving topology already
-    # assumes). A posting whose doc is missing from the dlmap raises:
-    # stage-1 runs and doclens must agree.
-    shuffle_cols = ["term_id",
-                    F.pmod(F.xxhash64("doc_id"), F.lit(doc_shards))
-                     .cast("int").alias("salt"),
-                    "doc_id", F.col("tf").cast("int").alias("tf")]
-    tagged = (runs.join(F.broadcast(dict_df.select("term", "term_id")),
-                        "term")
+    # each salt's (doc_id → dl) map is gathered back at encode time from
+    # ``docs/salt=<s>`` (n_docs rows total, ≪ postings by the avgdl factor)
+    # as an in-cache sorted array (n_docs/doc_shards entries — the same
+    # docs-per-shard bound the serving topology already assumes). A
+    # posting whose doc is missing from docs raises: stage-1 runs and
+    # doclens must agree.
+    shuffle_cols = ["term_id", salt, "doc_id",
+                    F.col("tf").cast("int").alias("tf")]
+    tagged = (read(f"{out_dir}/runs")
+              .join(F.broadcast(dict_df.select("term", "term_id")), "term")
               .select(*shuffle_cols))
 
-    def write_dlmap():
-        # one cheap n_docs-row job: per-salt (doc_id, dl), one dir per salt
-        (dstats.select(F.pmod(F.xxhash64("doc_id"), F.lit(doc_shards))
-                        .cast("int").alias("salt"), "doc_id", "dl")
-         .repartition(doc_shards, "salt")
-         .write.partitionBy("salt").mode("overwrite")
-         .parquet(f"{out_dir}/dlmap"))
-
-    # dict and dlmap writes are independent of each other (and both must
-    # finish before the encode tasks run — encode reads dlmap, serving
+    # dict and docs writes are independent of each other (and both must
+    # finish before the encode tasks run — encode reads docs, serving
     # reads dict); overlap them (guide §2.6)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(write_dict), pool.submit(write_dlmap)]:
+        for f in [pool.submit(write_dict), pool.submit(write_docs)]:
             f.result()
     # hash repartition, not repartitionByRange: the range sampler would scan
     # the whole join twice. Partitioning by SALT ALONE (layout salt_v3, one
@@ -448,7 +433,6 @@ def merge_index(
     # the per-(term,salt) group bound (≤ salt_rows) is unchanged.
     parted = (tagged.repartition(doc_shards, "salt")
                     .sortWithinPartitions("term_id", "salt", "doc_id"))
-    dlmap_dir = f"{out_dir}/dlmap"
 
     def encode_partition(it):
         import numpy as np
@@ -465,9 +449,10 @@ def merge_index(
             for s in np.unique(salts):
                 ent = cache.get(int(s))
                 if ent is None:
-                    fs, p = fsio.resolve(f"{dlmap_dir}/salt={int(s)}")
+                    fs, p = fsio.resolve(f"{out_dir}/docs/salt={int(s)}")
                     t = pads.dataset(p, format="parquet",
-                                     filesystem=fs).to_table()
+                                     filesystem=fs).to_table(
+                        columns=["doc_id", "dl"])
                     ids = t.column("doc_id").to_numpy()
                     dls = t.column("dl").to_numpy()
                     o = np.argsort(ids, kind="stable")
@@ -477,7 +462,7 @@ def merge_index(
                 idx = np.searchsorted(ids, d[mask])
                 if (idx >= len(ids)).any() or (ids[idx] != d[mask]).any():
                     raise RuntimeError(
-                        f"dlmap salt={int(s)} is missing doc ids "
+                        f"docs salt={int(s)} is missing doc ids "
                         "present in the postings shuffle — stage-1 "
                         "doclens and runs disagree")
                 out[mask] = dls[idx]
@@ -522,9 +507,9 @@ def merge_index(
             f"{out_dir}/postings: {split} hold several files each; every "
             "doc shard must be written as one file")
 
-    n_blocks = _parquet_rows(f"{out_dir}/postings")
-    _append_ledger(spark, out_dir, (
-        -1, "merge", n_docs, n_blocks, _dir_bytes(f"{out_dir}/postings"),
+    n_blocks = fsio.parquet_rows(f"{out_dir}/postings")
+    _append_ledger(out_dir, (
+        -1, "merge", n_docs, n_blocks, fsio.dir_bytes(f"{out_dir}/postings"),
         int((time.time() - t0) * 1000), "[]"))
     fsio.write_text_atomic(
         f"{out_dir}/_INDEX_META.json",

@@ -42,8 +42,6 @@ count. Nothing is collected to the driver except tiny metadata.
 from __future__ import annotations
 
 import json
-import os
-import shutil
 import time
 
 import pandas as pd
@@ -51,7 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_live_spark.index import fsio
-from colbert_live_spark.index.builder import build_index, merge_index
+from colbert_live_spark.index.builder import (
+    _write_group, build_index, merge_index)
 from colbert_live_spark.operators.wand import (
     resolve, run_local, run_spark, shard_expr)
 
@@ -257,9 +256,9 @@ def _global_stats(m: dict) -> tuple[int, float]:
 
 
 def _union_segment_dirs(spark: SparkSession, root: str, m: dict,
-                        sub: str) -> DataFrame:
+                        sub: str, cols: list[str]) -> DataFrame:
     parts = [spark.read.option("recursiveFileLookup", "true")
-             .parquet(f"{root}/segments/{s['name']}/{sub}")
+             .parquet(f"{root}/segments/{s['name']}/{sub}").select(*cols)
              for s in m["segments"]]
     out = parts[0]
     for p in parts[1:]:
@@ -268,11 +267,14 @@ def _union_segment_dirs(spark: SparkSession, root: str, m: dict,
 
 
 def _all_runs(spark: SparkSession, root: str, m: dict) -> DataFrame:
-    return _union_segment_dirs(spark, root, m, "runs")
+    # projected: runs of segments written before runs dropped their unread
+    # ``dl`` column still union with current ones
+    return _union_segment_dirs(spark, root, m, "runs",
+                               ["term", "doc_id", "tf"])
 
 
 def _all_doclens(spark: SparkSession, root: str, m: dict) -> DataFrame:
-    return _union_segment_dirs(spark, root, m, "doclens")
+    return _union_segment_dirs(spark, root, m, "doclens", ["doc_id", "dl"])
 
 
 def _require_doc_sharded(m: dict, op: str) -> None:
@@ -286,10 +288,12 @@ def _require_doc_sharded(m: dict, op: str) -> None:
             "(manifest lacks doc_shards); run compact() to migrate it")
 
 
-def _tombstone_ids(spark: SparkSession, root: str, m: dict) -> DataFrame | None:
+def _tombstone_ids(spark: SparkSession, root: str, m: dict) -> DataFrame:
+    """The root's tombstoned doc ids. With none, an empty relation the
+    optimizer sees as empty, so an anti-join against it is planned away."""
     files = m["tombstones"]["files"]
     if not files:
-        return None
+        return spark.sql("SELECT CAST(NULL AS BIGINT) AS doc_id WHERE false")
     # recursive: reads shard-partitioned and older flat tombstone dirs alike
     # (compact() is the migration path for the latter)
     return (spark.read.option("recursiveFileLookup", "true")
@@ -332,10 +336,8 @@ def _stage_delete(spark: SparkSession, root: str, m: dict,
         bound = None
         ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long")
                              .alias("doc_id"))
-    ids = ids.distinct()
-    prior = _tombstone_ids(spark, root, m)
-    if prior is not None:
-        ids = ids.join(prior, "doc_id", "left_anti")
+    ids = ids.distinct().join(_tombstone_ids(spark, root, m), "doc_id",
+                              "left_anti")
     # Broadcast only when the delete set is actually small: a mass delete
     # (dropping a whole source) force-broadcast would OOM the driver. For
     # DataFrame callers the count is one tiny job; above the threshold we
@@ -455,37 +457,21 @@ def compact(spark: SparkSession, root: str, n_shards: int = 4,
     """Fold all segments into one (runs are re-merged, doc ids preserved),
     physically dropping tombstoned docs and clearing the tombstone set.
 
-    Reuses every segment's checkpointed stage-1 runs — compaction never
-    re-tokenizes. Old segments are dropped from the manifest (directories
-    left for the caller/GC to remove)."""
+    Reuses every segment's checkpointed stage-1 runs and doclens —
+    compaction never re-tokenizes; they are rewritten as the new segment's
+    stage-1 group 0 (runs, dfs, doclens). Old segments are dropped from the
+    manifest (directories left for the caller/GC to remove)."""
     m = _read_manifest(root)
     assert m["segments"], "nothing to compact"
     seg = f"seg{m['seq']:05d}"
     seg_dir = f"{root}/segments/{seg}"
-    tombs = _tombstone_ids(spark, root, m)
-    local = "://" not in root
-    if tombs is None and local:
-        # local fast path: reuse run files byte-for-byte; on object stores
-        # (or with tombstones to drop) the Spark rewrite below is the path
-        for sub in ("runs", "doclens"):
-            for s in m["segments"]:
-                src = f"{root}/segments/{s['name']}/{sub}"
-                for gid_dir in os.listdir(src):
-                    # no '=' in the name — it would be misread as a partition key
-                    dst = (f"{seg_dir}/{sub}/"
-                           f"{s['name']}-{gid_dir.replace('gid=', 'g')}")
-                    shutil.copytree(f"{src}/{gid_dir}", dst)
-    else:
-        # physical drop / object-store path: rewrite runs/doclens minus
-        # tombstones (one job each)
-        runs_all = _all_runs(spark, root, m)
-        dropset = tombs if tombs is not None else \
-            spark.createDataFrame([], "doc_id long")
-        t = F.broadcast(dropset)
-        (runs_all.join(t, "doc_id", "left_anti")
-         .write.mode("overwrite").parquet(f"{seg_dir}/runs/g0"))
-        (_all_doclens(spark, root, m).join(t, "doc_id", "left_anti")
-         .write.mode("overwrite").parquet(f"{seg_dir}/doclens/g0"))
+    # one stage-1 group over every segment's runs/doclens minus the
+    # tombstoned docs (physical drop), written by the builder's own writer
+    drop = F.broadcast(_tombstone_ids(spark, root, m))
+    _write_group(spark, seg_dir, 0,
+                 _all_runs(spark, root, m).join(drop, "doc_id", "left_anti"),
+                 _all_doclens(spark, root, m).join(drop, "doc_id",
+                                                   "left_anti"))
     merge_index(spark, seg_dir, n_shards=n_shards, salt_rows=salt_rows,
                 doc_shards=m["doc_shards"] or DEFAULT_DOC_SHARDS)
     meta = json.loads(fsio.read_text(f"{seg_dir}/_INDEX_META.json"))

@@ -68,8 +68,8 @@ def postings(docs: DataFrame, id_col: str = "doc_id",
 def postings_dl(docs: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
     """(term, doc_id, tf, dl) — postings with the doc length riding each
-    row (the index builder's run shape, ``index/builder.py
-    _runs_from_tokens``). Scoring paths use this to skip the
+    row (the index builder's runs are :func:`postings` instead: its merge
+    gathers ``dl`` per doc shard). Scoring paths use this to skip the
     corpus-cardinality doc-length join entirely (guide §2.4: remove
     shuffles outright): dl is per-doc data already known at tokenize time,
     so carrying 4 bytes per posting beats shuffling and joining an n_docs

@@ -1,7 +1,9 @@
 """Tombstone deletes/updates: delete→search must equal a from-scratch
 rebuild without the deleted docs (stats exactly corrected: N, avgdl, df→idf);
-compaction physically drops tombstones; updates are delete+re-add
-(reference parity: "add, modify, or remove documents", README.md:21-23)."""
+compaction physically drops tombstones, also on roots whose older segments'
+runs still carry ``dl``; empty and DataFrame-shaped delete sets; updates are
+delete+re-add (reference parity: "add, modify, or remove documents",
+README.md:21-23)."""
 from __future__ import annotations
 
 import json
@@ -117,3 +119,65 @@ def test_update_docs_modifies(spark, documents, tmp_path_factory):
     assert victim not in [d for d, _ in got2.get("u2", [])]
     expect2 = oracle_search(oi, first_term, k=K)
     assert [d for d, _ in got2.get("u2", [])] == [d for d, _ in expect2]
+
+
+def _rows(df):
+    return sorted((r.query_id, r.rank, r.doc_id, round(r.score, 6))
+                  for r in df.collect())
+
+
+def test_delete_docs_empty_and_dataframe_input(spark, documents,
+                                               tmp_path_factory):
+    """Deleting zero (or already-deleted) ids must return 0 without writing
+    tombstone files; DataFrame-shaped delete sets go through the size-gated
+    join path and still produce rebuild-identical corrections."""
+    root = str(tmp_path_factory.mktemp("deldf") / "live")
+    add_segment(spark, documents.filter(F.col("doc_id") < 200), root,
+                salt_rows=100)
+    assert delete_docs(spark, root, []) == 0
+    ids_df = spark.range(0, 50).select(F.col("id").alias("doc_id"))
+    assert delete_docs(spark, root, ids_df) == 50
+    assert delete_docs(spark, root, ids_df) == 0  # already tombstoned
+    got = _rows(segment_search(spark, root, DOC_QUERIES, k=K))
+    rebuilt_root = str(tmp_path_factory.mktemp("deldf") / "rebuilt")
+    add_segment(spark,
+                documents.filter((F.col("doc_id") >= 50)
+                                 & (F.col("doc_id") < 200)),
+                rebuilt_root, salt_rows=100)
+    want = _rows(segment_search(spark, rebuilt_root, DOC_QUERIES, k=K))
+    assert got == want
+
+
+def test_compact_root_with_legacy_runs(spark, documents, tmp_path_factory,
+                                       reduced_oracle):
+    """A segment written while runs still carried ``dl`` on every row
+    unions with current segments: delete_docs and compact still answer
+    exactly like the oracle over the reduced corpus."""
+    import shutil
+    root = str(tmp_path_factory.mktemp("legacyruns") / "live")
+    half = documents.count() // 2
+    add_segment(spark, documents.filter(F.col("doc_id") < half), root,
+                salt_rows=100)
+    add_segment(spark,
+                documents.filter(F.col("doc_id") >= half)
+                .withColumn("doc_id", F.col("doc_id") - half), root,
+                salt_rows=100)
+    seg = f"{root}/segments/seg00000"
+    legacy = str(tmp_path_factory.mktemp("legacyruns") / "runs")
+    (spark.read.parquet(f"{seg}/runs").drop("gid")
+     .join(spark.read.parquet(f"{seg}/doclens").drop("gid"), "doc_id")
+     .select("term", "doc_id", "tf", "dl")
+     .write.parquet(f"{legacy}/gid=0"))
+    shutil.rmtree(f"{seg}/runs")
+    shutil.move(legacy, f"{seg}/runs")
+    assert "dl" in (spark.read.option("recursiveFileLookup", "true")
+                    .parquet(f"{seg}/runs").columns)
+    ids = [r.doc_id for r in documents.select("doc_id").collect()
+           if DELETED(r.doc_id)]
+    assert delete_docs(spark, root, ids) == len(ids)
+    _assert_matches(_collect(segment_search(spark, root, DOC_QUERIES, k=K)),
+                    reduced_oracle)
+    compact(spark, root, salt_rows=100)
+    _assert_matches(_collect(segment_search(spark, root, DOC_QUERIES, k=K)),
+                    reduced_oracle)
+

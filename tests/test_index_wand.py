@@ -1,20 +1,28 @@
 """Compressed-index build + WAND query path: rank-identity vs oracle,
-pruned == unpruned (safe pruning), checkpoint/resume equivalence, the
-one-file-per-salt layout invariant."""
+pruned == unpruned (safe pruning), checkpoint/resume equivalence (and its
+refusal of drifted inputs), transformed inputs indexed as given, concurrent
+group builds, the index dir layout (each fact stored once, one file per
+salt) and the build's Spark job ceiling."""
 from __future__ import annotations
 
+import glob
 import math
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
-from colbert_live_spark.index.builder import build_index, build_runs, merge_index
+from colbert_live_spark.index.builder import (
+    RUN_SCHEMA, build_index, build_runs, merge_index)
 from colbert_live_spark.operators.wand import wand_search
 from colbert_live_spark.oracle import oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
 
 K = 10
 ATOL = 1e-9
+# jobs of one build_index (n_groups=4) on the documents fixture: 44 when it
+# is the first reader of the cached fixture, 43 after
+BUILD_JOB_CEILING = 44
 
 
 @pytest.fixture(scope="module")
@@ -58,7 +66,7 @@ def test_checkpoint_resume_equivalence(spark, documents, tmp_path_factory,
     with pytest.raises(RuntimeError, match="injected failure"):
         build_runs(spark, documents, out, n_groups=4, fail_after_group=2)
     from colbert_live_spark.index.builder import completed_groups
-    done = completed_groups(spark, out)
+    done = completed_groups(out)
     assert len(done) == 2
     processed = build_runs(spark, documents, out, n_groups=4)
     assert len(processed) == 2 and set(processed).isdisjoint(done)
@@ -280,3 +288,111 @@ def test_local_dict_hot_cache(index_dir, monkeypatch):
     r2 = wand_search_local(index_dir, qs, k=K)
     assert len(calls) == n1, "second batch re-read the dictionary"
     assert r1.equals(r2)
+
+
+def test_transformed_input_is_not_rereread_from_files(spark, documents,
+                                                      tmp_path_factory):
+    """A filtered/shifted DataFrame must be indexed AS GIVEN — the per-file
+    grouping path once re-read raw files and silently discarded the
+    transformation (indexing all 500 docs with unshifted ids)."""
+    base = tmp_path_factory.mktemp("xform")
+    raw = str(base / "raw")
+    # a real on-disk scan (the cached `documents` fixture hides the bug:
+    # cached plans return no inputFiles)
+    documents.write.parquet(raw)
+    docs = spark.read.parquet(raw)
+    out = str(base / "idx")
+    transformed = (docs.filter(F.col("doc_id") < 7)
+                   .withColumn("doc_id", F.col("doc_id") + 100))
+    build_index(spark, transformed, out, n_groups=2, n_shards=4,
+                salt_rows=100)
+    ids = sorted(r.doc_id for r in
+                 spark.read.parquet(f"{out}/docs").select("doc_id").collect())
+    assert ids == [100 + i for i in range(7)]
+
+
+def test_concurrent_group_build_identical(spark, documents,
+                                          tmp_path_factory):
+    """build_runs with a driver thread pool (max_concurrency > 1) must
+    produce the same index as the sequential build — same ledger groups,
+    identical search results."""
+    from colbert_live_spark.index.builder import merge_index
+    base = tmp_path_factory.mktemp("conc")
+    seq_dir, conc_dir = str(base / "seq"), str(base / "conc")
+    for out, conc in ((seq_dir, 1), (conc_dir, 3)):
+        build_runs(spark, documents, out, n_groups=4, max_concurrency=conc)
+        merge_index(spark, out, n_shards=4, salt_rows=100)
+    from colbert_live_spark.index.builder import completed_groups
+    assert completed_groups(seq_dir) == completed_groups(
+        conc_dir) == {0, 1, 2, 3}
+    a = {(r.query_id, r.rank): (r.doc_id, round(r.score, 9))
+         for r in wand_search(spark, seq_dir, DOC_QUERIES, k=K).collect()}
+    b = {(r.query_id, r.rank): (r.doc_id, round(r.score, 9))
+         for r in wand_search(spark, conc_dir, DOC_QUERIES, k=K).collect()}
+    assert a == b and len(a) > 0
+
+
+def test_resume_assignment_drift_fails_loudly(spark, documents,
+                                              tmp_path_factory):
+    """Completed groups whose recorded file lists no longer match the
+    current assignment must abort the resume (silent reuse would skip or
+    double-index docs)."""
+    base = tmp_path_factory.mktemp("drift")
+    raw = str(base / "raw")
+    documents.repartition(4).write.parquet(raw)
+    docs = spark.read.parquet(raw)
+    out = str(base / "idx")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_runs(spark, docs, out, n_groups=2, fail_after_group=1)
+    # a file appears between crash and resume → assignment drift
+    src = glob.glob(f"{raw}/part-*.parquet")[0]
+    shutil.copy(src, f"{raw}/part-zzz-extra.parquet")
+    docs2 = spark.read.parquet(raw)
+    with pytest.raises(RuntimeError, match="resume mismatch"):
+        build_runs(spark, docs2, out, n_groups=2)
+
+
+def test_index_dir_layout(spark, index_dir):
+    """Each fact is stored once: exactly these top-level entries, stage-1
+    runs without ``dl``, and ``docs`` partitioned by the postings salt (the
+    encode's dl gather source)."""
+    import json
+    import os
+    assert set(os.listdir(index_dir)) == {
+        "_INDEX_META.json", "dfs", "dict", "doclens", "docs", "ledger",
+        "postings", "runs"}
+    runs = (spark.read.option("recursiveFileLookup", "true")
+            .parquet(f"{index_dir}/runs"))
+    assert runs.schema.simpleString() == spark.createDataFrame(
+        [], RUN_SCHEMA).schema.simpleString() == \
+        "struct<term:string,doc_id:bigint,tf:int>"
+    meta = json.loads(open(f"{index_dir}/_INDEX_META.json").read())
+    docs = spark.read.parquet(f"{index_dir}/docs")
+    assert docs.count() == meta["n_docs"] > 0
+    assert docs.filter(
+        F.pmod(F.xxhash64("doc_id"), F.lit(meta["doc_shards"]))
+        != F.col("salt")).count() == 0
+
+
+def _last_job_id(spark) -> int:
+    """Newest job id in the status store once every submitted job's events
+    are processed (the store lists newest first)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_build_job_ceiling(spark, documents, tmp_path):
+    """Spark jobs of one build_index, counted from the status store so the
+    jobs its thread pools submit outside any job group count too: a
+    regression in job rounds fails here before it shows as wall time."""
+    before = _last_job_id(spark)
+    build_index(spark, documents, str(tmp_path / "idx"), n_groups=4,
+                n_shards=4, salt_rows=100)
+    after = _last_job_id(spark)
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    n = sum(1 for i in range(jobs.size())
+            if before < jobs.apply(i).jobId() <= after)
+    assert 0 < n <= BUILD_JOB_CEILING, n
+

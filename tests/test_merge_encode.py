@@ -1,7 +1,8 @@
-"""The merge shuffle carries no ``dl`` (it is gathered back from the
-per-salt dlmap sidecar at encode time); the written postings must equal a
+"""The merge shuffle carries no ``dl`` (it is gathered back from
+``docs/salt=<s>`` at encode time); the written postings must equal a
 reference encode of the same postings with ``dl`` joined in directly —
-same blocks, same bounds, same compressed bytes."""
+same blocks, same bounds, same compressed bytes. A doc missing from
+``docs`` and a runs group without its dfs both fail loudly."""
 from __future__ import annotations
 
 import json
@@ -54,21 +55,33 @@ def test_postings_match_reference_encode(spark, documents, tmp_path):
         assert list(got[col]) == list(want[col]), f"column {col} differs"
 
 
-def test_dlmap_missing_doc_fails_loudly(spark, documents, tmp_path):
-    """A doc present in runs but absent from dlmap (stage-1 corruption)
+def test_missing_doc_length_fails_loudly(spark, documents, tmp_path):
+    """A doc present in runs but absent from docs (stage-1 corruption)
     must raise, not silently mis-score."""
     import glob
     import os
     out = str(tmp_path / "idx")
     docs = documents.filter(F.col("doc_id") < 100)
     build_runs(spark, docs, out, n_groups=1)
-    # first merge writes dlmap; sabotage it, then re-merge reusing it is
-    # not possible (merge rewrites dlmap) — instead sabotage doclens so
-    # dlmap comes out missing docs that runs still carry
+    # the merge rewrites docs from doclens, so sabotage doclens: docs
+    # comes out missing docs that runs still carry
     for f in glob.glob(f"{out}/doclens/*/*.parquet"):
         os.remove(f)
     docs.limit(10).select(
         "doc_id", F.lit(5).alias("dl")).write.mode("append").parquet(
         glob.glob(f"{out}/doclens/*")[0])
-    with pytest.raises(Exception, match="dlmap|missing"):
+    with pytest.raises(Exception, match="docs salt=.* is missing doc ids"):
         merge_index(spark, out, n_shards=4, salt_rows=100)
+
+
+def test_merge_refuses_runs_without_dfs(spark, documents, tmp_path):
+    """The dictionary comes from the stage-1 dfs only: a runs group whose
+    dfs is gone raises instead of falling back to a runs aggregation."""
+    import shutil
+    out = str(tmp_path / "idx")
+    build_runs(spark, documents.filter(F.col("doc_id") < 100), out,
+               n_groups=2)
+    shutil.rmtree(f"{out}/dfs/gid=1")
+    with pytest.raises(RuntimeError, match="no dfs"):
+        merge_index(spark, out, n_shards=4, salt_rows=100)
+

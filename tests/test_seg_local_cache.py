@@ -1,6 +1,7 @@
 """The driver-side serving cache (operators/wand.py): dictionary, delta
 and tombstone reads are cached per (root, manifest text), so any commit —
-ingest, delete — rewrites the manifest and MUST invalidate. Staleness, and
+ingest, delete — rewrites the manifest and MUST invalidate, as must a
+rebuild of an index at the same path. Staleness, and
 races between concurrent callers and a committing writer, are the failure
 modes these tests pin down."""
 from __future__ import annotations
@@ -12,6 +13,10 @@ from colbert_live_spark.index.builder import build_index
 from colbert_live_spark.index.segments import (
     add_segment, delete_docs, segment_search_local)
 from colbert_live_spark.operators import wand
+from colbert_live_spark.operators.wand import wand_search_local
+from colbert_live_spark.queryset import DOC_QUERIES
+
+K = 10
 
 
 def _ids(pdf):
@@ -232,3 +237,27 @@ def test_local_dict_cache_is_bounded_lru(small_index, tmp_path, monkeypatch):
     assert list(wand._CACHE) == [other]
     assert wand.resolve(small_index, [("q", "spark")]).qmeta == first
     wand._CACHE.clear()
+
+
+def test_local_dict_cache_invalidated_on_rebuild(spark, documents,
+                                                 tmp_path_factory):
+    """A long-lived serving process must not apply a stale dictionary
+    (term_ids reassigned) to a rebuilt index at the same path."""
+    out = str(tmp_path_factory.mktemp("dcache") / "idx")
+    build_index(spark, documents.filter(F.col("doc_id") < 200), out,
+                n_shards=2, salt_rows=100)
+    first = wand_search_local(out, DOC_QUERIES, k=K)  # warms the cache
+    assert len(first)
+    # rebuild at the SAME path over a different corpus slice: term ids,
+    # idf, avgdl all change (delete first — an existing dir would
+    # otherwise be a ledger-resume no-op)
+    import shutil
+    shutil.rmtree(out)
+    build_index(spark, documents.filter(F.col("doc_id") >= 200), out,
+                n_shards=2, salt_rows=100)
+    got = wand_search_local(out, DOC_QUERIES, k=K)
+    from colbert_live_spark.operators import wand as wand_mod
+    wand_mod._CACHE.clear()
+    fresh = wand_search_local(out, DOC_QUERIES, k=K)
+    assert got.equals(fresh)
+    assert not got.equals(first)

@@ -1,7 +1,8 @@
 """Incremental segments: rank-identity under incremental ingest, compaction
 equivalence, streaming ingestion liveness, arrival-order independence of
 natural-key (preserve_ids) ingest, the root's id mode, and manifest stream
-namespacing (legacy roots, replayed micro-batches)."""
+namespacing (legacy roots, replayed micro-batches, two streams), empty
+batches, and compaction of a legacy pre-doc-shard root."""
 from __future__ import annotations
 
 import json
@@ -93,6 +94,12 @@ def test_compaction_preserves_results(spark, seg_root, oracle_index):
     with open(f"{seg_root}/MANIFEST.json") as f:
         m = json.load(f)
     assert [s["name"] for s in m["segments"]] == [seg]
+    # no tombstones, still the one stage-1 writer: group 0 of the new
+    # segment holds runs, dfs and doclens
+    import glob
+    for sub in ("runs", "dfs", "doclens"):
+        assert glob.glob(
+            f"{seg_root}/segments/{seg}/{sub}/gid=0/*.parquet"), sub
 
 
 def test_streaming_ingest(spark, documents, tmp_path_factory, oracle_index):
@@ -275,3 +282,107 @@ def test_cli_ingest_stream_key_col(spark, documents, tmp_path):
           "--checkpoint", ckpt, "--key-col", "page_key"])
     m = _read_manifest(root)
     assert sum(s["n_docs"] for s in m["segments"]) == 25
+
+
+def _rows(df):
+    return sorted((r.query_id, r.rank, r.doc_id, round(r.score, 6))
+                  for r in df.collect())
+
+
+def test_streaming_replay_is_noop(spark, documents, tmp_path_factory):
+    """At-least-once foreachBatch replays must not re-ingest (idempotent
+    sink via manifest last_batch_id)."""
+    from colbert_live_spark.index.segments import add_segment
+    root = str(tmp_path_factory.mktemp("replay") / "live")
+    small = documents.limit(20)
+    assert add_segment(spark, small, root, salt_rows=100,
+                       batch_id=0) is not None
+    with open(f"{root}/MANIFEST.json") as f:
+        before = json.load(f)
+    # replay of batch 0: must be a no-op
+    assert add_segment(spark, small, root, salt_rows=100, batch_id=0) is None
+    with open(f"{root}/MANIFEST.json") as f:
+        after = json.load(f)
+    assert before == after
+    assert len(after["segments"]) == 1
+    # the NEXT batch ingests normally
+    assert add_segment(spark, small, root, salt_rows=100,
+                       batch_id=1) is not None
+
+
+def test_compact_migrates_legacy_root(spark, documents, tmp_path_factory):
+    """A pre-doc-shard (round-1) root must come out of compact() fully
+    migrated: manifest doc_shards recorded, segment_search serving again,
+    and a subsequent add_segment reusing the SAME modulus (not auto-sizing
+    a mismatched one)."""
+    root = str(tmp_path_factory.mktemp("legacy") / "live")
+    add_segment(spark, documents.filter(F.col("doc_id") < 300), root,
+                salt_rows=100)
+    expected = _rows(segment_search(spark, root, DOC_QUERIES, k=K))
+    # simulate a round-1 manifest: doc_shards was never recorded
+    mp = f"{root}/MANIFEST.json"
+    with open(mp) as f:
+        m = json.load(f)
+    m["doc_shards"] = None
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="compact"):
+        segment_search(spark, root, DOC_QUERIES, k=K)
+    compact(spark, root, salt_rows=100)
+    with open(mp) as f:
+        m2 = json.load(f)
+    assert m2["doc_shards"] is not None
+    got = _rows(segment_search(spark, root, DOC_QUERIES, k=K))
+    assert got == expected
+    # post-migration ingest must share the compacted segment's modulus
+    add_segment(spark, documents.filter((F.col("doc_id") >= 300)
+                                        & (F.col("doc_id") < 400))
+                .withColumn("doc_id", F.col("doc_id") - 300),
+                root, salt_rows=100)
+    with open(mp) as f:
+        m3 = json.load(f)
+    assert m3["doc_shards"] == m2["doc_shards"]
+    meta = json.loads(open(
+        f"{root}/segments/{m3['segments'][-1]['name']}/_INDEX_META.json"
+    ).read())
+    assert int(meta["doc_shards"]) == m2["doc_shards"]
+
+
+def test_add_segment_empty_batch_is_noop(spark, documents,
+                                         tmp_path_factory):
+    """An empty input batch must not crash (max(doc_id)=None) nor register
+    a doc-less segment, but must still commit its batch_id."""
+    root = str(tmp_path_factory.mktemp("empty") / "live")
+    empty = documents.filter(F.lit(False))
+    assert add_segment(spark, empty, root, salt_rows=100,
+                       batch_id=0) is None
+    with open(f"{root}/MANIFEST.json") as f:
+        m = json.load(f)
+    assert m["segments"] == []
+    assert m["last_batch_id"] == 0
+    # replay of the empty batch is still a no-op; the next batch ingests
+    assert add_segment(spark, documents.limit(20), root, salt_rows=100,
+                       batch_id=0) is None
+    assert add_segment(spark, documents.limit(20), root, salt_rows=100,
+                       batch_id=1) is not None
+
+
+def test_two_streams_do_not_swallow_each_others_batches(
+        spark, documents, tmp_path_factory):
+    """Two streaming queries with separate checkpoints both start at
+    batch_id 0; namespacing by stream_id must let both ingest."""
+    root = str(tmp_path_factory.mktemp("twostreams") / "live")
+    a = documents.filter(F.col("doc_id") < 50)
+    b = (documents.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100))
+         .withColumn("doc_id", F.col("doc_id") - 50))
+    assert add_segment(spark, a, root, salt_rows=100, batch_id=0,
+                       stream_id="ckpt-A") is not None
+    assert add_segment(spark, b, root, salt_rows=100, batch_id=0,
+                       stream_id="ckpt-B") is not None
+    # per-stream replays are still no-ops
+    assert add_segment(spark, a, root, salt_rows=100, batch_id=0,
+                       stream_id="ckpt-A") is None
+    with open(f"{root}/MANIFEST.json") as f:
+        m = json.load(f)
+    assert len(m["segments"]) == 2
+    assert m["stream_batch_ids"] == {"ckpt-A": 0, "ckpt-B": 0}

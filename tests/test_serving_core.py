@@ -1,10 +1,10 @@
 """The serving core (operators/wand.py): one plan per (source, batch), run
 in-process or as at most one Spark task per core over doc-disjoint file
 subsets. Every source kind × executor × query mode answers exactly like the
-BM25 oracle; any packing of the files into subsets merges to the same
-answer; layouts that break the one-file-per-shard invariants raise instead
-of degrading; and the Spark job and task counts of a serving call have
-ceilings."""
+BM25 oracle (conjunctive mode composed with a doc filter too); any packing
+of the files into subsets merges to the same answer; layouts that break
+the one-file-per-shard invariants raise instead of degrading; and the Spark
+job and task counts of a serving call have ceilings."""
 from __future__ import annotations
 
 import math
@@ -198,3 +198,26 @@ def test_scoring_stage_task_ceiling(spark, sources):
         # its shuffle output in later stages
         scoring = min(s for j in jobs for s in tracker.getJobInfo(j).stageIds)
         assert tracker.getStageInfo(scoring).numTasks <= cores, source
+
+
+def test_conjunctive_composes_with_doc_filter(spark, documents, oracle_index,
+                                              tmp_path_factory):
+    """conjunctive=True + doc_filter was silently ignored in round 1 (the
+    filter branch won); now it must mean intersection ∩ filter."""
+    from colbert_live_spark.entry_queries import built_index
+    from colbert_live_spark.oracle import oracle_search
+    idx = built_index(spark, "/root/testdata/sf0.001")
+    en = documents.filter(F.col("lang") == "en").select("doc_id")
+    en_ids = {r.doc_id for r in en.collect()}
+    got = {}
+    res = wand_search(spark, idx, DOC_QUERIES, k=K, conjunctive=True,
+                      doc_filter=en)
+    for r in res.orderBy("query_id", "rank").collect():
+        got.setdefault(r.query_id, []).append((r.doc_id, r.score))
+    for qid, qtext in DOC_QUERIES:
+        expect = oracle_search(oracle_index, qtext, k=K, conjunctive=True,
+                               doc_filter=en_ids)
+        g = got.get(qid, [])
+        assert [d for d, _ in g] == [d for d, _ in expect], (qid, qtext)
+        for (_, s1), (_, s2) in zip(g, expect):
+            assert math.isclose(s1, s2, abs_tol=ATOL)

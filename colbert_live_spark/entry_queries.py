@@ -367,7 +367,7 @@ def built_index(spark, sf_dir: str) -> str:
         # the version tag keeps index dirs of older layouts from being
         # reused across processes
         root = os.environ.get("SPARK_GRAFT_INDEX_ROOT", "/tmp")
-        out = f"{root}/cls_index_v4_{tag}"
+        out = f"{root}/cls_index_v5_{tag}"
         if not os.path.exists(f"{out}/_INDEX_META.json"):
             from colbert_live_spark.index.builder import build_index
             # bare scan (no spread_input): build_runs' file-group mode +
@@ -522,7 +522,7 @@ def built_deleted_root(spark, sf_dir: str) -> str:
         add_segment(spark, docs, root, n_shards=4, salt_rows=200)
         delete_docs(spark, root,
                     docs.filter(F.expr(_DELETE_PRED_SQL)).select("doc_id"))
-    return _cached_root("segdel_v6", sf_dir, build)
+    return _cached_root("segdel_v7", sf_dir, build)
 
 
 def built_live_root(spark, sf_dir: str) -> str:
@@ -539,7 +539,7 @@ def built_live_root(spark, sf_dir: str) -> str:
                     docs.filter(F.col("doc_id") >= half)
                     .withColumn("doc_id", F.col("doc_id") - half),
                     root, n_shards=4, salt_rows=200)
-    return _cached_root("seglive_v6", sf_dir, build)
+    return _cached_root("seglive_v7", sf_dir, build)
 
 
 def q_bm25_incremental(spark, sf_dir):
@@ -587,7 +587,7 @@ def built_compacted_root(spark, sf_dir: str) -> str:
         # compaction must physically drop the tombstone state
         assert not os.path.exists(f"{root}/tombstones"), \
             "compact() left tombstone files behind"
-    return _cached_root("segcomp_v6", sf_dir, build)
+    return _cached_root("segcomp_v7", sf_dir, build)
 
 
 def q_bm25_after_compact(spark, sf_dir):
@@ -614,7 +614,7 @@ def built_streamed_root(spark, sf_dir: str) -> str:
         docs.repartition(3).write.mode("overwrite").parquet(stage)
         ingest_stream(spark, stage, docs.schema, f"{root}/live",
                       checkpoint=f"{root}/_ckpt", preserve_ids=True)
-    return f"{_cached_root('segstream_v6', sf_dir, build)}/live"
+    return f"{_cached_root('segstream_v7', sf_dir, build)}/live"
 
 
 def q_bm25_streamed(spark, sf_dir):
@@ -647,7 +647,7 @@ def built_updated_root(spark, sf_dir: str) -> str:
         update_docs(spark, changed, root,
                     docs.filter(F.expr(_UPDATE_PRED_SQL)).select("doc_id"),
                     n_shards=4, salt_rows=200)
-    return _cached_root("segupd_v6", sf_dir, build)
+    return _cached_root("segupd_v7", sf_dir, build)
 
 
 def q_bm25_after_update(spark, sf_dir):

@@ -57,6 +57,7 @@ import math
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,6 +72,28 @@ BLOCK_SCHEMA = ("term_id long, salt int, block_id int, first_doc long, "
                 "docs binary, tfs binary, dls binary")
 LEDGER_SCHEMA = ("gid int, stage string, n_docs long, n_postings long, "
                  "bytes long, wall_ms long, files string")
+# the one on-disk layout, stamped on every index meta and root manifest:
+# one postings file per doc shard (merge_index verifies it before stamping)
+LAYOUT = "salt_v3"
+
+
+def require_layout(meta: dict, path: str) -> None:
+    """Raise unless ``meta`` (an index meta or a root manifest) carries the
+    current :data:`LAYOUT`: an older layout is rebuilt, not converted."""
+    if meta.get("layout") != LAYOUT:
+        raise ValueError(
+            f"{path} has layout {meta.get('layout')!r}, not {LAYOUT!r}; "
+            "rebuild it with the current builder")
+
+
+def _in_parallel(spark: SparkSession, *calls):
+    """Run ``calls`` on their own driver threads so their Spark jobs
+    overlap; results in order. Each call inherits the caller's local
+    properties and tags, so its jobs stay in the caller's job group."""
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [pool.submit(inherit(c)) for c in calls]
+        return [f.result() for f in futures]
 
 
 # driver-side metadata IO goes through the pyarrow.fs abstraction so the
@@ -140,15 +163,10 @@ def _write_group(spark: SparkSession, out_dir: str, gid: int,
         doclens.write.mode("overwrite").parquet(
             f"{out_dir}/doclens/gid={gid}")
 
-    # the doclens job is independent of the runs/dfs chain — submit
-    # both and let Spark overlap them (guide §2.6: the scheduler runs
-    # concurrent jobs fine; actions are only sequential because driver
-    # code calls them sequentially). The caller's ledger commit still
-    # happens strictly after BOTH outputs exist.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(write_runs_then_dfs),
-                  pool.submit(write_doclens)]:
-            f.result()
+    # the doclens job is independent of the runs/dfs chain — overlap
+    # them. The caller's ledger commit still happens strictly after BOTH
+    # outputs exist.
+    _in_parallel(spark, write_runs_then_dfs, write_doclens)
 
 
 def build_runs(
@@ -226,7 +244,8 @@ def build_runs(
         # serializes the cluster); ledger appends are one-file-per-commit so
         # they are concurrency-safe
         with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            processed = sorted(pool.map(process, pending))
+            processed = sorted(pool.map(
+                inheritable_thread_target(spark)(process), pending))
     else:
         for gid in pending:
             processed.append(process(gid))
@@ -286,7 +305,8 @@ def merge_index(
 ) -> None:
     """Stage 2: runs, dfs and doclens → dictionary (from dfs only), the
     ``docs`` table, compressed term-sharded postings and ``_INDEX_META.json``
-    (n_docs / avgdl / sum_dl straight from doclens).
+    (n_docs / avgdl / sum_dl / max_doc_id straight from doclens, and the
+    :data:`LAYOUT` stamp).
 
     The postings come from one merge shuffle of ``(term_id, salt, doc_id,
     tf)`` rows, hash-partitioned by salt and sorted by (term_id, salt,
@@ -328,16 +348,17 @@ def merge_index(
     # The corpus stats and the dictionary's expensive part (dfs agg +
     # range-partitioned dense-id assignment, which materializes a persisted
     # relation and collects per-partition counts) are INDEPENDENT — only
-    # the final idf projection needs n_docs. Submit both chains from a
-    # 2-thread pool so their jobs overlap (guide §2.6); everything after
-    # joins on both results.
+    # the final idf projection needs n_docs. Run both chains at once so
+    # their jobs overlap; everything after joins on both results.
     def stats_chain():
         st = doclens.agg(F.count(F.lit(1)).alias("n_docs"),
                          F.avg("dl").alias("avgdl"),
-                         F.sum("dl").cast("long").alias("sum_dl")).collect()[0]
-        # avgdl is NULL over an empty corpus (empty ingest batch) — a crash
-        # here would poison the segment-root manifest path (advice r2)
-        return st.n_docs, float(st.avgdl or 0.0), int(st.sum_dl or 0)
+                         F.sum("dl").cast("long").alias("sum_dl"),
+                         F.max("doc_id").alias("max_doc_id")).collect()[0]
+        # avgdl and max_doc_id are NULL over an empty corpus (empty ingest
+        # batch) — a crash here would poison the segment-root manifest path
+        return (st.n_docs, float(st.avgdl or 0.0), int(st.sum_dl or 0),
+                st.max_doc_id)
 
     def dict_chain():
         # dictionary dfs from the stage-1 per-group partials: a
@@ -356,11 +377,8 @@ def merge_index(
                 else int(rd.agg(F.max("df")).collect()[0][0] or 1))
         return rd, dmax
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_stats = pool.submit(stats_chain)
-        f_dict = pool.submit(dict_chain)
-        n_docs, avgdl, sum_dl = f_stats.result()
-        raw_dict, df_max = f_dict.result()
+    (n_docs, avgdl, sum_dl, max_doc_id), (raw_dict, df_max) = _in_parallel(
+        spark, stats_chain, dict_chain)
 
     dict_df = raw_dict.select(
         "term", "term_id", "df",
@@ -417,10 +435,8 @@ def merge_index(
 
     # dict and docs writes are independent of each other (and both must
     # finish before the encode tasks run — encode reads docs, serving
-    # reads dict); overlap them (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(write_dict), pool.submit(write_docs)]:
-            f.result()
+    # reads dict); overlap them
+    _in_parallel(spark, write_dict, write_docs)
     # hash repartition, not repartitionByRange: the range sampler would scan
     # the whole join twice. Partitioning by SALT ALONE (layout salt_v3, one
     # output file per doc shard) makes every output file a complete
@@ -492,7 +508,7 @@ def merge_index(
     (blocks_df.write.partitionBy("salt").option("maxRecordsPerFile", 0)
      .mode("overwrite").parquet(f"{out_dir}/postings"))
 
-    # VERIFY the one-file-per-salt invariant before stamping salt_v3:
+    # VERIFY the one-file-per-salt invariant before stamping LAYOUT:
     # serving packs whole files into doc-disjoint task subsets, so a salt
     # split across two files (speculative writes, a future writer change)
     # could land in two tasks, emit partial scores for the same docs and
@@ -516,10 +532,8 @@ def merge_index(
         json.dumps({"n_shards": n_shards, "salt_rows": salt_rows,
                     "block_size": block_size, "n_docs": int(n_docs),
                     "avgdl": avgdl, "sum_dl": sum_dl,
-                    "doc_shards": int(doc_shards),
-                    # salt_v3: every doc shard's blocks live wholly in ONE
-                    # postings file (verified above)
-                    "layout": "salt_v3"}))
+                    "max_doc_id": max_doc_id,
+                    "doc_shards": int(doc_shards), "layout": LAYOUT}))
     # release the dense-id persist (it leaked one cached DataFrame per
     # merge_index call — one per segment / streaming micro-batch)
     cached = getattr(raw_dict, "_cls_persisted", None)

@@ -30,8 +30,10 @@ the Lucene/LSM pattern:
   (segment, postings file) pairs.
 - ``compact``: folds all segments' stage-1 runs into one new segment via
   the ordinary merge (the LSM compaction), physically dropping tombstoned
-  docs, then swaps the manifest. It also migrates roots whose tombstones
-  predate shard partitioning (serving refuses those).
+  docs, then swaps the manifest.
+
+A root's MANIFEST carries the builder's ``LAYOUT`` stamp from its first
+write; every reader and writer refuses any other layout (``require_layout``).
 
 Scale: a segment is the unit of ingest atomicity; query cost grows with
 segment count only in the driver-side dictionary point-reads (concurrent,
@@ -50,12 +52,11 @@ from pyspark.sql import functions as F
 
 from colbert_live_spark.index import fsio
 from colbert_live_spark.index.builder import (
-    _write_group, build_index, merge_index)
+    LAYOUT, _write_group, build_index, merge_index, require_layout)
 from colbert_live_spark.operators.wand import (
     resolve, run_local, run_spark, shard_expr)
 
 MANIFEST = "MANIFEST.json"
-DEFAULT_DOC_SHARDS = 16
 
 
 def _manifest_text(root: str) -> str | None:
@@ -63,24 +64,22 @@ def _manifest_text(root: str) -> str | None:
     return fsio.read_text(p) if fsio.exists(p) else None
 
 
-def _parse_manifest(text: str | None) -> dict:
+def _parse_manifest(text: str | None, root: str) -> dict:
+    """The manifest of ``root`` from its text, a fresh stamped one when the
+    root has none yet."""
     if text is None:
-        # ns_version 2 marks roots created AFTER stream-id namespacing; its
-        # absence identifies legacy roots for add_segment's migration seed.
-        return {"segments": [], "next_doc_base": 0, "seq": 0,
-                "doc_shards": None, "last_batch_id": -1, "ns_version": 2,
+        return {"layout": LAYOUT, "segments": [], "next_doc_base": 0,
+                "seq": 0, "doc_shards": None, "last_batch_id": -1,
+                "stream_batch_ids": {},
                 "tombstones": {"files": [], "delta_files": [],
                                "n_deleted": 0, "deleted_dl": 0}}
     m = json.loads(text)
-    m.setdefault("doc_shards", None)
-    m.setdefault("last_batch_id", -1)
-    m.setdefault("tombstones", {"files": [], "delta_files": [],
-                                "n_deleted": 0, "deleted_dl": 0})
+    require_layout(m, root)
     return m
 
 
 def _read_manifest(root: str) -> dict:
-    return _parse_manifest(_manifest_text(root))
+    return _parse_manifest(_manifest_text(root), root)
 
 
 def _write_manifest(root: str, m: dict) -> None:
@@ -154,40 +153,16 @@ def _stage_add(
     Staging is what makes :func:`update_docs` atomic — both its phases
     mutate one manifest dict and a single swap publishes them together.
     Replay no-ops leave ``m`` untouched and return None."""
-    sid = stream_id if stream_id is not None else "_default"
-    streams = m.get("stream_batch_ids", {})
-    if sid == "_default":
-        last = streams.get(sid, m["last_batch_id"])
-    elif sid in streams:
-        last = streams[sid]
-    elif m.get("ns_version", 1) < 2 and m["last_batch_id"] >= 0:
-        # Legacy-root migration guard (advice r4): this root committed
-        # batches BEFORE stream-id namespacing existed, under the default
-        # token. A named stream resuming it would otherwise start its
-        # namespace at -1 and re-ingest one in-flight replayed micro-batch
-        # as a duplicate segment. Seed the new namespace from the legacy
-        # token (single-writer-per-default-namespace was that era's
-        # contract, so the legacy batches were this stream's).
-        last = m["last_batch_id"]
-    else:
-        last = -1
-    if batch_id is not None and batch_id <= last:
+    # one batch-id record per stream: last_batch_id for the default
+    # stream, stream_batch_ids[stream_id] for named ones
+    ids, key = ((m, "last_batch_id") if stream_id is None
+                else (m["stream_batch_ids"], stream_id))
+    if batch_id is not None and batch_id <= ids.get(key, -1):
         return None  # replayed micro-batch: already ingested
 
     def commit_batch_id() -> None:
         if batch_id is not None:
-            m.setdefault("stream_batch_ids", {})[sid] = batch_id
-            if sid == "_default":
-                m["last_batch_id"] = batch_id
-        # Upgrade the namespace version only once the legacy token is
-        # either absent (nothing to migrate) or actually seeded into the
-        # namespaced map (advice r5): a plain manual add (batch_id=None)
-        # on a legacy root must NOT erase the migration marker, or a named
-        # stream later resuming that root would start its namespace at -1
-        # and re-ingest the replayed micro-batch as a duplicate segment —
-        # the exact hazard the r4 guard closes.
-        if m["last_batch_id"] < 0 or m.get("stream_batch_ids"):
-            m["ns_version"] = 2
+            ids[key] = batch_id
 
     # Record the root's id mode on first ingest and refuse mode changes
     # (advice r4): a preserve_ids batch whose natural ids collide with
@@ -227,30 +202,21 @@ def _stage_add(
     m["id_mode"] = mode  # only a batch that actually commits docs fixes it
     if first:
         m["doc_shards"] = int(meta["doc_shards"])
-    max_id = spark.read.parquet(f"{seg_dir}/docs").agg(
-        F.max("doc_id")).collect()[0][0]
     m["segments"].append({"name": seg, "n_docs": meta["n_docs"],
-                          "avgdl": meta["avgdl"],
-                          "sum_dl": meta.get("sum_dl"), "doc_base": base,
-                          "ts": int(time.time())})
+                          "avgdl": meta["avgdl"], "sum_dl": meta["sum_dl"],
+                          "doc_base": base, "ts": int(time.time())})
     # max() keeps the base monotone when preserve_ids batches arrive out of
     # id order (next_doc_base only matters for future offset-mode batches)
-    m["next_doc_base"] = max(m["next_doc_base"], int(max_id) + 1)
+    m["next_doc_base"] = max(m["next_doc_base"], meta["max_doc_id"] + 1)
     m["seq"] += 1
     commit_batch_id()
     return seg
 
 
-def _seg_sum_dl(s: dict) -> int:
-    if s.get("sum_dl") is not None:
-        return int(s["sum_dl"])
-    return int(round(s["avgdl"] * s["n_docs"]))
-
-
 def _global_stats(m: dict) -> tuple[int, float]:
     """(N, avgdl) over live (non-tombstoned) docs — exact: integer dl sums."""
     n = sum(s["n_docs"] for s in m["segments"]) - m["tombstones"]["n_deleted"]
-    total_dl = (sum(_seg_sum_dl(s) for s in m["segments"])
+    total_dl = (sum(s["sum_dl"] for s in m["segments"])
                 - m["tombstones"]["deleted_dl"])
     return n, (total_dl / n if n else 0.0)
 
@@ -267,8 +233,8 @@ def _union_segment_dirs(spark: SparkSession, root: str, m: dict,
 
 
 def _all_runs(spark: SparkSession, root: str, m: dict) -> DataFrame:
-    # projected: runs of segments written before runs dropped their unread
-    # ``dl`` column still union with current ones
+    # projected to the run columns: a union by name must not depend on
+    # whatever else a segment's runs files hold
     return _union_segment_dirs(spark, root, m, "runs",
                                ["term", "doc_id", "tf"])
 
@@ -277,25 +243,14 @@ def _all_doclens(spark: SparkSession, root: str, m: dict) -> DataFrame:
     return _union_segment_dirs(spark, root, m, "doclens", ["doc_id", "dl"])
 
 
-def _require_doc_sharded(m: dict, op: str) -> None:
-    """Pre-doc-shard (round-1 layout) roots have segments but no recorded
-    doc_shards; grouping their per-term salts as doc shards would silently
-    split a doc's postings across groups → wrong scores. Fail loudly; a
-    `compact` rewrites the root into the current layout."""
-    if m["segments"] and m["doc_shards"] is None:
-        raise ValueError(
-            f"{op}: this segment root predates the doc-shard layout "
-            "(manifest lacks doc_shards); run compact() to migrate it")
-
-
 def _tombstone_ids(spark: SparkSession, root: str, m: dict) -> DataFrame:
     """The root's tombstoned doc ids. With none, an empty relation the
     optimizer sees as empty, so an anti-join against it is planned away."""
     files = m["tombstones"]["files"]
     if not files:
         return spark.sql("SELECT CAST(NULL AS BIGINT) AS doc_id WHERE false")
-    # recursive: reads shard-partitioned and older flat tombstone dirs alike
-    # (compact() is the migration path for the latter)
+    # recursive: reads every file under the shard=<salt>/ dirs; compact()
+    # reads a flat dir serving refuses just the same and folds it away
     return (spark.read.option("recursiveFileLookup", "true")
             .parquet(*[f"{root}/{f}" for f in files]).select("doc_id"))
 
@@ -322,7 +277,6 @@ def _stage_delete(spark: SparkSession, root: str, m: dict,
     paths (seq and file count are unchanged until the commit) and
     overwrites them."""
     assert m["segments"], "nothing to delete from"
-    _require_doc_sharded(m, "delete_docs")
     if isinstance(doc_ids, list):
         # list callers (the common API/CLI shape): the broadcast decision
         # needs only an UPPER bound on the id count, which len() gives for
@@ -473,16 +427,10 @@ def compact(spark: SparkSession, root: str, n_shards: int = 4,
                  _all_doclens(spark, root, m).join(drop, "doc_id",
                                                    "left_anti"))
     merge_index(spark, seg_dir, n_shards=n_shards, salt_rows=salt_rows,
-                doc_shards=m["doc_shards"] or DEFAULT_DOC_SHARDS)
+                doc_shards=m["doc_shards"])
     meta = json.loads(fsio.read_text(f"{seg_dir}/_INDEX_META.json"))
-    # Record the (possibly just-fixed) doc-shard modulus: a legacy
-    # (pre-doc-shard) root compacted here must come out fully migrated, or
-    # segment_search/delete_docs keep refusing it and a later add_segment
-    # would auto-size a DIFFERENT modulus than the compacted segment's
-    # stored salts (silently wrong tombstone and filter shard keys).
-    m["doc_shards"] = int(meta["doc_shards"])
     m["segments"] = [{"name": seg, "n_docs": meta["n_docs"],
-                      "avgdl": meta["avgdl"], "sum_dl": meta.get("sum_dl"),
+                      "avgdl": meta["avgdl"], "sum_dl": meta["sum_dl"],
                       "doc_base": 0, "ts": int(time.time())}]
     m["seq"] += 1
     m["tombstones"] = {"files": [], "delta_files": [],

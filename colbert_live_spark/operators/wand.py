@@ -34,9 +34,10 @@ tombstones, an identity term map and weight scale 1.
      only shuffle before the merge of ≤ k rows per query and task.
      Compressed block bytes never enter an Exchange.
 
-The layout is checked, never worked around: a shard split across several
-postings files, or tombstones not partitioned by ``shard=<salt>``, raises
-and asks for a rebuild or a compact().
+The layout is checked, never worked around: a source without the builder's
+layout stamp, a shard split across several postings files, or tombstones
+not partitioned by ``shard=<salt>``, raises and asks for a rebuild or a
+compact().
 
 Safe-pruning invariant (tested): pruned output == unpruned output exactly.
 Term lists are processed in one global order per query; θ = k-th largest
@@ -65,6 +66,7 @@ from pyspark.sql import functions as F
 
 from colbert_live_spark.functions.tokenize import py_tokenize
 from colbert_live_spark.index import fsio
+from colbert_live_spark.index.builder import require_layout
 from colbert_live_spark.index.codec import bm25_weight_np, decode_blocks
 
 OUT_SCHEMA = "query_id string, rank int, doc_id long, score double"
@@ -534,20 +536,15 @@ def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
     if text is None:
         text = fsio.read_text(f"{path}/_INDEX_META.json")
         meta = json.loads(text)
-        if meta.get("doc_shards") is None or meta.get("layout") != "salt_v3":
-            raise ValueError(
-                f"{path} has layout {meta.get('layout')!r} (doc_shards="
-                f"{meta.get('doc_shards')}), not one postings file per doc "
-                "shard; rebuild the index with the current builder")
+        require_layout(meta, path)
         m = None
         n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
         doc_shards = int(meta["doc_shards"])
         parts = [(path, avgdl)]
     else:
-        m = segments._parse_manifest(text)
+        m = segments._parse_manifest(text, path)
         if not m["segments"]:
             return None
-        segments._require_doc_sharded(m, "search")
         n_docs, avgdl = segments._global_stats(m)
         doc_shards = m["doc_shards"]
         parts = [(f"{path}/segments/{s['name']}", float(s["avgdl"]))

@@ -43,15 +43,6 @@ def ingest_stream(
     checkpoint must also use a new checkpoint path (same rule as any
     Structured Streaming sink).
 
-    One-time migration note: roots whose batches were committed BEFORE
-    stream-id namespacing existed recorded them under the default token
-    (``last_batch_id``). :func:`add_segment` now guards this in code: on
-    first use of a named stream against a legacy manifest (no
-    ``ns_version`` marker, ``last_batch_id`` >= 0, no entry for the
-    stream) it seeds the new namespace from the legacy token, so the one
-    in-flight replayed micro-batch a resume can deliver is dropped as the
-    replay it is instead of re-ingesting as a duplicate segment.
-
     ``preserve_ids``: forward to :func:`add_segment` — for corpora with
     globally unique natural keys, results become independent of the order
     in which the file source lists its inputs."""

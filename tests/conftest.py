@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 import pytest
 
@@ -12,6 +13,23 @@ from colbert_live_spark.session import get_spark
 # precisely so those worker processes can resolve it (test_schemed_serving).
 os.environ.setdefault("SPARK_GRAFT_MOCKFS_BASE",
                       tempfile.mkdtemp(prefix="mockfs_"))
+
+
+def jobs_of(spark, call) -> list[int]:
+    """Ids of the Spark jobs ``call`` runs, counted through a unique job
+    group: the engine's driver thread pools inherit it, so their jobs
+    count too. The listener bus is drained before the ids are read, so
+    every job the call submitted is in the status store."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -2,7 +2,8 @@
 pruned == unpruned (safe pruning), checkpoint/resume equivalence (and its
 refusal of drifted inputs), transformed inputs indexed as given, concurrent
 group builds, the index dir layout (each fact stored once, one file per
-salt) and the build's Spark job ceiling."""
+salt), the refusal of any other layout, and the Spark job ceilings of a
+build and of a segment root's writes."""
 from __future__ import annotations
 
 import glob
@@ -14,15 +15,24 @@ from pyspark.sql import functions as F
 
 from colbert_live_spark.index.builder import (
     RUN_SCHEMA, build_index, build_runs, merge_index)
-from colbert_live_spark.operators.wand import wand_search
+from colbert_live_spark.index.segments import (
+    add_segment, compact, delete_docs, segment_search, segment_search_local,
+    update_docs)
+from colbert_live_spark.operators.wand import wand_search, wand_search_local
 from colbert_live_spark.oracle import oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
+from conftest import jobs_of
 
 K = 10
 ATOL = 1e-9
 # jobs of one build_index (n_groups=4) on the documents fixture: 44 when it
 # is the first reader of the cached fixture, 43 after
 BUILD_JOB_CEILING = 44
+# jobs of each write on a fresh segment root over the documents fixture
+# (add_segment: 26 when it is the first reader of the cached fixture, 25
+# after)
+WRITE_JOB_CEILINGS = {"add_segment": 26, "delete_docs": 17,
+                      "compact": 30}
 
 
 @pytest.fixture(scope="module")
@@ -122,7 +132,6 @@ def test_query_time_doc_filter_matches_oracle(spark, index_dir, documents,
 def test_local_mode_doc_filter(spark, index_dir, documents, oracle_index):
     """Local mode composes with a doc filter (global stats preserved) —
     same answers as the oracle with the filter applied."""
-    from colbert_live_spark.operators.wand import wand_search_local
     from colbert_live_spark.oracle import oracle_search
     en_ids = sorted(r.doc_id for r in
                     documents.filter(documents.lang == "en")
@@ -169,7 +178,6 @@ def test_dictionary_ids_unique(spark, index_dir):
 def test_intersection_missing_term_empty(spark, index_dir):
     """A conjunctive query with one term absent from the index matches no
     doc, on both executors."""
-    from colbert_live_spark.operators.wand import wand_search_local
     qs = [("qc", "spark zzzmissing")]
     assert wand_search(spark, index_dir, qs, k=K,
                        conjunctive=True).count() == 0
@@ -213,23 +221,44 @@ def test_postings_one_file_per_salt_despite_session_split(
     assert got == want
 
 
-def test_unverified_layout_raises(spark, index_dir, tmp_path):
-    """An index whose meta is not salt_v3 (a doc shard may span several
-    postings files) is refused on both executors, never served through a
-    slower path."""
+def test_unverified_layout_raises(spark, documents, index_dir, tmp_path):
+    """Sources of any other layout are refused by every entry point and
+    left unchanged, never served or written through a slower path: an
+    index dir whose meta names another layout (a doc shard may span
+    several postings files) and a segment root whose manifest has no
+    layout stamp."""
     import json
-    import shutil
 
-    from colbert_live_spark.operators.wand import wand_search_local
-    legacy = str(tmp_path / "idx")
-    shutil.copytree(index_dir, legacy)
-    meta = json.loads(open(f"{legacy}/_INDEX_META.json").read())
-    meta["layout"] = "salt_v2"
-    open(f"{legacy}/_INDEX_META.json", "w").write(json.dumps(meta))
-    with pytest.raises(ValueError, match="rebuild"):
-        wand_search(spark, legacy, DOC_QUERIES, k=K)
-    with pytest.raises(ValueError, match="rebuild"):
-        wand_search_local(legacy, DOC_QUERIES, k=K)
+    def edit(meta_file, change):
+        meta = json.loads(open(meta_file).read())
+        change(meta)
+        open(meta_file, "w").write(json.dumps(meta))
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_dir, idx)
+    edit(f"{idx}/_INDEX_META.json", lambda m: m.update(layout="salt_v2"))
+    root = str(tmp_path / "root")
+    docs = documents.limit(50)
+    add_segment(spark, docs, root, salt_rows=100)
+    edit(f"{root}/MANIFEST.json", lambda m: m.pop("layout"))
+    old = {
+        f"{idx}/_INDEX_META.json": [
+            lambda: wand_search(spark, idx, DOC_QUERIES, k=K),
+            lambda: wand_search_local(idx, DOC_QUERIES, k=K)],
+        f"{root}/MANIFEST.json": [
+            lambda: segment_search(spark, root, DOC_QUERIES, k=K),
+            lambda: segment_search_local(root, DOC_QUERIES, k=K),
+            lambda: add_segment(spark, docs, root, salt_rows=100),
+            lambda: delete_docs(spark, root, [1]),
+            lambda: update_docs(spark, docs, root, [1], salt_rows=100),
+            lambda: compact(spark, root, salt_rows=100)],
+    }
+    for meta_file, calls in old.items():
+        before = open(meta_file, "rb").read()
+        for call in calls:
+            with pytest.raises(ValueError, match="rebuild"):
+                call()
+            assert open(meta_file, "rb").read() == before
 
 
 def test_local_dict_point_lookup_prunes_rowgroups(tmp_path):
@@ -271,7 +300,6 @@ def test_local_dict_hot_cache(index_dir, monkeypatch):
     """Repeat queries must be served from the hot-term cache (including
     negative entries for absent terms) with zero dictionary reads."""
     from colbert_live_spark.operators import wand as wand_mod
-    from colbert_live_spark.operators.wand import wand_search_local
     wand_mod._CACHE.clear()
     calls: list[list[str]] = []
     orig = wand_mod._point_lookup
@@ -374,25 +402,52 @@ def test_index_dir_layout(spark, index_dir):
         != F.col("salt")).count() == 0
 
 
-def _last_job_id(spark) -> int:
-    """Newest job id in the status store once every submitted job's events
-    are processed (the store lists newest first)."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc._jsc.sc().statusStore().jobsList(None)
-    return jobs.apply(0).jobId() if jobs.size() else -1
-
-
 def test_build_job_ceiling(spark, documents, tmp_path):
-    """Spark jobs of one build_index, counted from the status store so the
-    jobs its thread pools submit outside any job group count too: a
-    regression in job rounds fails here before it shows as wall time."""
-    before = _last_job_id(spark)
-    build_index(spark, documents, str(tmp_path / "idx"), n_groups=4,
-                n_shards=4, salt_rows=100)
-    after = _last_job_id(spark)
-    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-    n = sum(1 for i in range(jobs.size())
-            if before < jobs.apply(i).jobId() <= after)
+    """Spark jobs of one build_index: a regression in job rounds fails here
+    before it shows as wall time."""
+    n = len(jobs_of(spark, lambda: build_index(
+        spark, documents, str(tmp_path / "idx"), n_groups=4, n_shards=4,
+        salt_rows=100)))
     assert 0 < n <= BUILD_JOB_CEILING, n
 
+
+def test_write_job_ceilings(spark, documents, tmp_path):
+    """Spark jobs of each write on a segment root: the first ingest, a
+    delete and a compaction."""
+    root = str(tmp_path / "root")
+    calls = {
+        "add_segment": lambda: add_segment(spark, documents, root,
+                                           salt_rows=100),
+        "delete_docs": lambda: delete_docs(spark, root,
+                                           list(range(3, 1000, 7))),
+        "compact": lambda: compact(spark, root, salt_rows=100),
+    }
+    for name, call in calls.items():
+        n = len(jobs_of(spark, call))
+        assert 0 < n <= WRITE_JOB_CEILINGS[name], (name, n)
+
+
+def test_job_group_sees_pool_jobs(spark, documents, tmp_path):
+    """The jobs the builder submits from its driver thread pools stay in
+    the caller's job group: for a build, an ingest and a compaction the
+    group holds every job id the call used up."""
+    sc = spark.sparkContext
+
+    def newest_job_id() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    root = str(tmp_path / "root")
+    calls = {
+        "build_index": lambda: build_index(
+            spark, documents, str(tmp_path / "idx"), n_groups=4,
+            n_shards=4, salt_rows=100),
+        "add_segment": lambda: add_segment(spark, documents, root,
+                                           salt_rows=100),
+        "compact": lambda: compact(spark, root, salt_rows=100),
+    }
+    for name, call in calls.items():
+        before = newest_job_id()
+        n = len(jobs_of(spark, call))
+        assert n == newest_job_id() - before > 0, name

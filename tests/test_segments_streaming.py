@@ -1,8 +1,7 @@
 """Incremental segments: rank-identity under incremental ingest, compaction
 equivalence, streaming ingestion liveness, arrival-order independence of
-natural-key (preserve_ids) ingest, the root's id mode, and manifest stream
-namespacing (legacy roots, replayed micro-batches, two streams), empty
-batches, and compaction of a legacy pre-doc-shard root."""
+natural-key (preserve_ids) ingest, the root's id mode, manifest stream
+namespacing (replayed micro-batches, two streams) and empty batches."""
 from __future__ import annotations
 
 import json
@@ -12,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from colbert_live_spark.index.segments import (
-    MANIFEST, _read_manifest, add_segment, compact, segment_search,
+    _read_manifest, add_segment, compact, segment_search,
     segment_search_local, update_docs,
 )
 from colbert_live_spark.oracle import build_oracle_index, oracle_search
@@ -204,71 +203,6 @@ def test_update_docs_refuses_preserve_roots(spark, documents, tmp_path):
     assert len(m["segments"]) == 1
 
 
-def test_legacy_root_stream_namespace_seeded(spark, documents, tmp_path):
-    """Simulate a pre-namespacing root: batches committed under the default
-    token, manifest lacking the ns_version marker. A named stream resuming
-    it must treat batch ids <= the legacy token as replays."""
-    root = str(tmp_path / "legacy_root")
-    docs = documents.limit(30)
-    assert add_segment(spark, docs, root, salt_rows=100, batch_id=2)
-    # strip the namespacing marker — this is what a pre-r4 manifest looks
-    # like (batches recorded only under last_batch_id)
-    m = json.loads(open(f"{root}/{MANIFEST}").read())
-    assert m["last_batch_id"] == 2
-    del m["ns_version"]
-    m.pop("stream_batch_ids", None)
-    open(f"{root}/{MANIFEST}", "w").write(json.dumps(m))
-
-    # the one in-flight replayed micro-batch a checkpoint resume can
-    # deliver: same batch id, named stream — must be dropped
-    assert add_segment(spark, docs, root, salt_rows=100, batch_id=2,
-                       stream_id="ckpt-a") is None
-    assert len(_read_manifest(root)["segments"]) == 1
-    # the next genuinely new batch ingests, and upgrades the root
-    assert add_segment(spark, docs.withColumn(
-        "doc_id", F.col("doc_id") + 1000), root, salt_rows=100, batch_id=3,
-        stream_id="ckpt-a")
-    m2 = _read_manifest(root)
-    assert m2["ns_version"] == 2
-    assert m2["stream_batch_ids"]["ckpt-a"] == 3
-    # post-migration, a DIFFERENT new named stream starts at -1 as usual
-    assert add_segment(spark, docs.withColumn(
-        "doc_id", F.col("doc_id") + 2000), root, salt_rows=100, batch_id=0,
-        stream_id="ckpt-b")
-
-
-def test_manual_add_keeps_legacy_migration_marker(spark, documents,
-                                                  tmp_path):
-    """A manual add (batch_id=None) to a legacy root must not stamp
-    ns_version=2 before the legacy token is seeded into the namespaced map:
-    a named stream resuming afterwards would re-ingest its replayed
-    micro-batch as a duplicate segment."""
-    root = str(tmp_path / "legacy2")
-    docs = documents.limit(20)
-    assert add_segment(spark, docs, root, salt_rows=100, batch_id=2)
-    # strip the namespacing marker — a pre-r4 manifest
-    m = json.loads(open(f"{root}/{MANIFEST}").read())
-    assert m["last_batch_id"] == 2
-    del m["ns_version"]
-    m.pop("stream_batch_ids", None)
-    open(f"{root}/{MANIFEST}", "w").write(json.dumps(m))
-
-    # ONE manual (non-streaming) add — previously stamped ns_version=2 and
-    # erased the migration marker
-    assert add_segment(spark, docs.withColumn(
-        "doc_id", F.col("doc_id") + 500), root, salt_rows=100)
-    m2 = _read_manifest(root)
-    assert m2.get("ns_version", 1) < 2, \
-        "manual add erased the legacy migration marker"
-
-    # a named stream resuming the root must still treat the replayed
-    # legacy batch id as a replay (dropped), not a fresh ingest
-    n_before = len(m2["segments"])
-    assert add_segment(spark, docs, root, salt_rows=100, batch_id=2,
-                       stream_id="ckpt-z") is None
-    assert len(_read_manifest(root)["segments"]) == n_before
-
-
 def test_cli_ingest_stream_key_col(spark, documents, tmp_path):
     """A stream with no doc_id column and a non-'url' natural key must
     ingest via --key-col (advice r4: the default was hardcoded)."""
@@ -282,11 +216,6 @@ def test_cli_ingest_stream_key_col(spark, documents, tmp_path):
           "--checkpoint", ckpt, "--key-col", "page_key"])
     m = _read_manifest(root)
     assert sum(s["n_docs"] for s in m["segments"]) == 25
-
-
-def _rows(df):
-    return sorted((r.query_id, r.rank, r.doc_id, round(r.score, 6))
-                  for r in df.collect())
 
 
 def test_streaming_replay_is_noop(spark, documents, tmp_path_factory):
@@ -308,44 +237,6 @@ def test_streaming_replay_is_noop(spark, documents, tmp_path_factory):
     # the NEXT batch ingests normally
     assert add_segment(spark, small, root, salt_rows=100,
                        batch_id=1) is not None
-
-
-def test_compact_migrates_legacy_root(spark, documents, tmp_path_factory):
-    """A pre-doc-shard (round-1) root must come out of compact() fully
-    migrated: manifest doc_shards recorded, segment_search serving again,
-    and a subsequent add_segment reusing the SAME modulus (not auto-sizing
-    a mismatched one)."""
-    root = str(tmp_path_factory.mktemp("legacy") / "live")
-    add_segment(spark, documents.filter(F.col("doc_id") < 300), root,
-                salt_rows=100)
-    expected = _rows(segment_search(spark, root, DOC_QUERIES, k=K))
-    # simulate a round-1 manifest: doc_shards was never recorded
-    mp = f"{root}/MANIFEST.json"
-    with open(mp) as f:
-        m = json.load(f)
-    m["doc_shards"] = None
-    with open(mp, "w") as f:
-        json.dump(m, f)
-    with pytest.raises(ValueError, match="compact"):
-        segment_search(spark, root, DOC_QUERIES, k=K)
-    compact(spark, root, salt_rows=100)
-    with open(mp) as f:
-        m2 = json.load(f)
-    assert m2["doc_shards"] is not None
-    got = _rows(segment_search(spark, root, DOC_QUERIES, k=K))
-    assert got == expected
-    # post-migration ingest must share the compacted segment's modulus
-    add_segment(spark, documents.filter((F.col("doc_id") >= 300)
-                                        & (F.col("doc_id") < 400))
-                .withColumn("doc_id", F.col("doc_id") - 300),
-                root, salt_rows=100)
-    with open(mp) as f:
-        m3 = json.load(f)
-    assert m3["doc_shards"] == m2["doc_shards"]
-    meta = json.loads(open(
-        f"{root}/segments/{m3['segments'][-1]['name']}/_INDEX_META.json"
-    ).read())
-    assert int(meta["doc_shards"]) == m2["doc_shards"]
 
 
 def test_add_segment_empty_batch_is_noop(spark, documents,

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import math
 import shutil
-import uuid
 
 import pandas as pd
 import pytest
@@ -23,6 +22,7 @@ from colbert_live_spark.operators.wand import (
     rank_partials, resolve, score_files, wand_search, wand_search_local)
 from colbert_live_spark.oracle import build_oracle_index, oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
+from conftest import jobs_of
 
 K = 10
 ATOL = 1e-9
@@ -123,7 +123,7 @@ def test_unpartitioned_tombstones_raise_until_compacted(spark, sources,
                                                         tmp_path):
     """Tombstones written before shard partitioning cannot be split by
     doc shard: both executors refuse the root and name the fix; compact()
-    migrates it and serving answers again."""
+    rewrites them shard-partitioned and serving answers again."""
     import os
 
     import pyarrow.dataset as pads
@@ -147,19 +147,6 @@ def test_unpartitioned_tombstones_raise_until_compacted(spark, sources,
                    sources["tombstoned"][3])
 
 
-def _jobs(spark, call) -> list[int]:
-    """Ids of the Spark jobs run by ``call`` on this thread (serving
-    submits no job from a thread pool, so the group catches all of them)."""
-    sc = spark.sparkContext
-    group = f"serving-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return sc.statusTracker().getJobIdsForGroup(group)
-
-
 def test_serving_job_ceilings(spark, sources, documents):
     """Job-count ceilings per serving call (the result collected as is):
     a regression in job rounds fails here before it shows as wall time."""
@@ -179,7 +166,7 @@ def test_serving_job_ceilings(spark, sources, documents):
             root, DOC_QUERIES, k=K)),
     }
     for name, (ceiling, call) in calls.items():
-        assert len(_jobs(spark, call)) <= ceiling, name
+        assert len(jobs_of(spark, call)) <= ceiling, name
 
 
 def test_scoring_stage_task_ceiling(spark, sources):
@@ -191,7 +178,7 @@ def test_scoring_stage_task_ceiling(spark, sources):
     for source in ("two_segment", "tombstoned"):
         root = sources[source][0]
         assert len(resolve(root, DOC_QUERIES).files) > cores, source
-        jobs = _jobs(spark, lambda: segment_search(
+        jobs = jobs_of(spark, lambda: segment_search(
             spark, root, DOC_QUERIES, k=K).collect())
         tracker = sc.statusTracker()
         # the scoring stage is the first one submitted; the merge reads

@@ -9,11 +9,11 @@ cut (`colbert_live/colbert_live.py:189-200`), exact rescore
 This engine re-expresses that capability Spark-first as:
 
 - tokenize with JVM built-ins / vectorized Arrow UDFs (never per-row Python),
-- per-partition sorted posting lists, delta+varint block compression with
-  per-block max-score metadata (``index/codec.py``),
+- per-partition sorted posting lists, delta+varint list compression with
+  a per-list max-score bound (``index/codec.py``),
 - merge into term-sharded global postings with salting for head-term skew,
 - query = broadcast query terms ⋈ postings → exact BM25 (k1=1.2, b=0.75)
-  or block-max WAND pruned scoring → top-k, rank-identical to a pure-Python
+  or MaxScore-pruned scoring → top-k, rank-identical to a pure-Python
   oracle (the analog of the reference's brute-force oracle ``tests/db.py:29-39``).
 """
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_live_spark.functions.tokenize import DUCKDB_TOKENIZE
+from colbert_live_spark.index.builder import LAYOUT
 from colbert_live_spark.operators import bm25
 from colbert_live_spark.queryset import DOC_QUERIES
 
@@ -364,10 +365,10 @@ def built_index(spark, sf_dir: str) -> str:
         import hashlib
         import os
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        # the version tag keeps index dirs of older layouts from being
+        # the layout tag keeps index dirs of older layouts from being
         # reused across processes
         root = os.environ.get("SPARK_GRAFT_INDEX_ROOT", "/tmp")
-        out = f"{root}/cls_index_v5_{tag}"
+        out = f"{root}/cls_index_{LAYOUT}_{tag}"
         if not os.path.exists(f"{out}/_INDEX_META.json"):
             from colbert_live_spark.index.builder import build_index
             # bare scan (no spread_input): build_runs' file-group mode +
@@ -383,16 +384,17 @@ def built_index(spark, sf_dir: str) -> str:
 
 def q_bm25_topk_wand(spark, sf_dir):
     """Same answer as bm25_topk but served from the compressed term-sharded
-    index via block-max-pruned scoring (oracle: identical SQL — the driver's
-    hash-match proves the codec+WAND path is rank/score-identical)."""
+    index via MaxScore-pruned scoring (oracle: identical SQL — a hash-match
+    proves the codec+WAND path is rank/score-identical)."""
     from colbert_live_spark.operators.wand import wand_search
     idx = built_index(spark, sf_dir)
     return _round_score(wand_search(spark, idx, DOC_QUERIES, k=10))
 
 
 def q_bm25_conjunctive_wand(spark, sf_dir):
-    """Posting-list intersection over the compressed index (merge-based
-    with skip-pointer block pruning) — same oracle as bm25_conjunctive."""
+    """Posting-list intersection over the compressed index (smallest
+    decoded list first, binary-searched into the others) — same oracle as
+    bm25_conjunctive."""
     from colbert_live_spark.operators.wand import wand_search
     idx = built_index(spark, sf_dir)
     return _round_score(wand_search(spark, idx, DOC_QUERIES, k=10,
@@ -450,7 +452,7 @@ def q_bm25_phrase(spark, sf_dir):
 
 def q_bm25_phrase_wand(spark, sf_dir):
     """Phrase top-k from the compressed index with the reference's rescore
-    budget: conjunctive block-max WAND top-64 per query, text gathered and
+    budget: conjunctive compressed-index top-64 per query, text gathered and
     phrase-verified — oracle mirrors the cap exactly (same cut before the
     verify), so the hash-match proves the indexed path's candidate cut,
     gather, and verify are all rank/score-identical."""
@@ -493,15 +495,16 @@ def q_bm25_tag_filtered(spark, sf_dir):
 
 
 def _cached_root(kind: str, sf_dir: str, build) -> str:
-    """``/tmp/cls_<kind>_<md5(sf_dir)>``, built once by ``build(root)`` and
-    reused by later processes. Sentinel-guarded: a process killed
-    mid-setup must not leave a half-built root to be reused, so a root
-    without ``_READY`` is removed and rebuilt."""
+    """``/tmp/cls_<kind>_<LAYOUT>_<md5(sf_dir)>``, built once by
+    ``build(root)`` and reused by later processes (the layout tag keeps
+    roots of older layouts from being reused). Sentinel-guarded: a process
+    killed mid-setup must not leave a half-built root to be reused, so a
+    root without ``_READY`` is removed and rebuilt."""
     import hashlib
     import os
     import shutil
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = f"/tmp/cls_{kind}_{tag}"
+    root = f"/tmp/cls_{kind}_{LAYOUT}_{tag}"
     ready = f"{root}/_READY"
     if not os.path.exists(ready):
         shutil.rmtree(root, ignore_errors=True)
@@ -522,7 +525,7 @@ def built_deleted_root(spark, sf_dir: str) -> str:
         add_segment(spark, docs, root, n_shards=4, salt_rows=200)
         delete_docs(spark, root,
                     docs.filter(F.expr(_DELETE_PRED_SQL)).select("doc_id"))
-    return _cached_root("segdel_v7", sf_dir, build)
+    return _cached_root("segdel", sf_dir, build)
 
 
 def built_live_root(spark, sf_dir: str) -> str:
@@ -539,7 +542,7 @@ def built_live_root(spark, sf_dir: str) -> str:
                     docs.filter(F.col("doc_id") >= half)
                     .withColumn("doc_id", F.col("doc_id") - half),
                     root, n_shards=4, salt_rows=200)
-    return _cached_root("seglive_v7", sf_dir, build)
+    return _cached_root("seglive", sf_dir, build)
 
 
 def q_bm25_incremental(spark, sf_dir):
@@ -587,7 +590,7 @@ def built_compacted_root(spark, sf_dir: str) -> str:
         # compaction must physically drop the tombstone state
         assert not os.path.exists(f"{root}/tombstones"), \
             "compact() left tombstone files behind"
-    return _cached_root("segcomp_v7", sf_dir, build)
+    return _cached_root("segcomp", sf_dir, build)
 
 
 def q_bm25_after_compact(spark, sf_dir):
@@ -614,7 +617,7 @@ def built_streamed_root(spark, sf_dir: str) -> str:
         docs.repartition(3).write.mode("overwrite").parquet(stage)
         ingest_stream(spark, stage, docs.schema, f"{root}/live",
                       checkpoint=f"{root}/_ckpt", preserve_ids=True)
-    return f"{_cached_root('segstream_v7', sf_dir, build)}/live"
+    return f"{_cached_root('segstream', sf_dir, build)}/live"
 
 
 def q_bm25_streamed(spark, sf_dir):
@@ -647,7 +650,7 @@ def built_updated_root(spark, sf_dir: str) -> str:
         update_docs(spark, changed, root,
                     docs.filter(F.expr(_UPDATE_PRED_SQL)).select("doc_id"),
                     n_shards=4, salt_rows=200)
-    return _cached_root("segupd_v7", sf_dir, build)
+    return _cached_root("segupd", sf_dir, build)
 
 
 def q_bm25_after_update(spark, sf_dir):

@@ -20,9 +20,9 @@ dictionary with dense term ids + exact df/idf, the per-doc ``docs`` table
 (``salt = hash(doc_id) mod doc_shards`` — the same shard for every term, so
 one shard holds the complete mini-index of its doc subset), then the big
 merge-shuffle: hash ``repartition(term_id, salt)`` + ``sortWithinPartitions``
-+ streaming group-encode in ``mapInPandas`` → block-compressed term-sharded
-postings, written sorted by term_id so parquet row-group stats prune
-query-time term lookups.
++ streaming group-encode in ``mapInPandas`` → compressed term-sharded
+postings, one row per (term_id, salt) list, written sorted by term_id so
+parquet row-group stats prune query-time term lookups.
 
 The doc-shard salt serves two masters at once:
 - **skew**: ``doc_shards >= ceil(max df / salt_rows)`` splits every posting
@@ -32,7 +32,7 @@ The doc-shard salt serves two masters at once:
   written as one file, files are doc-disjoint: a serving task scores ALL
   queries of a batch over any subset of files (at most one task per core)
   and only k rows per (query, task) merge globally.
-  Compressed blocks never move, independent of batch size (see
+  Compressed lists never move, independent of batch size (see
   operators/wand.py).
 
 Scale notes:
@@ -40,10 +40,11 @@ Scale notes:
   the doc-shard salt bounds the largest group to ~``salt_rows`` rows
   regardless of Zipf skew.
 - doc-sharding cost: a tail term with df < doc_shards spreads over df
-  single-posting blocks (block metadata overhead ~50 B/row). Bounded: tail
-  terms are a minority of postings under Zipf, and D is chosen from df_max,
-  not vocabulary size. This is the price of batch-scalable serving and is
-  measured in BENCH (compressed index bytes).
+  single-posting lists, each row repeating its own term_id, first_doc, n
+  and max_weight. Bounded: tail terms are a minority of postings under
+  Zipf, and D is chosen from df_max, not vocabulary size. This is the
+  price of batch-scalable serving and is measured in BENCH (compressed
+  index bytes).
 - the dictionary build shuffles one small row per distinct (term) — vocab,
   not corpus, sized.
 - dense doc ids are taken from the input when present (our corpora provide
@@ -67,14 +68,14 @@ from colbert_live_spark.operators import bm25
 from colbert_live_spark.session import is_bare_scan, spread_input
 
 RUN_SCHEMA = "term string, doc_id long, tf int"
-BLOCK_SCHEMA = ("term_id long, salt int, block_id int, first_doc long, "
-                "last_doc long, n int, max_weight double, "
-                "docs binary, tfs binary, dls binary")
+LIST_SCHEMA = ("term_id long, salt int, first_doc long, n int, "
+               "max_weight double, docs binary, tfs binary, dls binary")
 LEDGER_SCHEMA = ("gid int, stage string, n_docs long, n_postings long, "
                  "bytes long, wall_ms long, files string")
 # the one on-disk layout, stamped on every index meta and root manifest:
-# one postings file per doc shard (merge_index verifies it before stamping)
-LAYOUT = "salt_v3"
+# one postings file per doc shard (merge_index verifies it before stamping),
+# one postings row per (term_id, salt) list
+LAYOUT = "salt_v4"
 
 
 def require_layout(meta: dict, path: str) -> None:
@@ -298,7 +299,6 @@ def merge_index(
     out_dir: str,
     n_shards: int = 16,
     salt_rows: int = 1_000_000,
-    block_size: int = codec.BLOCK_SIZE,
     doc_meta: DataFrame | None = None,
     doc_shards: int | None = None,
     doc_shards_headroom: int = 1,
@@ -310,15 +310,16 @@ def merge_index(
 
     The postings come from one merge shuffle of ``(term_id, salt, doc_id,
     tf)`` rows, hash-partitioned by salt and sorted by (term_id, salt,
-    doc_id), then block-encoded per complete (term_id, salt) group in one
-    ``mapInPandas`` pass. Per-doc ``dl`` stays out of that shuffle: the
-    ``docs`` table is written partitioned by salt and each salt's (doc_id →
-    dl) map is gathered back from ``docs/salt=<s>`` at encode time (see the
-    comment above ``shuffle_cols``). Raises if a runs group has no dfs.
+    doc_id), then encoded into one row per complete (term_id, salt) group
+    in one ``mapInPandas`` pass. Per-doc ``dl`` stays out of that shuffle:
+    the ``docs`` table is written partitioned by salt and each salt's
+    (doc_id → dl) map is gathered back from ``docs/salt=<s>`` at encode
+    time (see the comment above ``shuffle_cols``). Raises if a runs group
+    has no dfs.
 
     ``doc_shards`` (D): the global doc-shard count. salt = hash(doc_id) mod D
     for EVERY term, so shard s is a complete mini-index of its doc subset —
-    the batched-serving topology groups blocks by shard and scores all
+    the batched-serving topology groups lists by shard and scores all
     queries per shard (operators/wand.py). Defaults to
     max(n_shards, ceil(max df / salt_rows) · doc_shards_headroom) so the
     largest (term, salt) merge group stays ≤ ``salt_rows`` rows (the
@@ -438,12 +439,12 @@ def merge_index(
     # reads dict); overlap them
     _in_parallel(spark, write_dict, write_docs)
     # hash repartition, not repartitionByRange: the range sampler would scan
-    # the whole join twice. Partitioning by SALT ALONE (layout salt_v3, one
-    # output file per doc shard) makes every output file a complete
+    # the whole join twice. Partitioning by SALT ALONE (one output file
+    # per doc shard, see LAYOUT) makes every output file a complete
     # mini-index of its doc subset — serving then runs at most one task
     # per core, each scoring a doc-disjoint file subset and reading its own
-    # blocks directly (term_id predicate pushed to parquet row-group
-    # pruning) with NO shuffle of block bytes (operators/wand.py).
+    # lists directly (term_id predicate pushed to parquet row-group
+    # pruning) with NO shuffle of list bytes (operators/wand.py).
     # Partition volume stays balanced under Zipf skew because hash(doc_id)
     # spreads every term's postings uniformly across the doc_shards salts;
     # the per-(term,salt) group bound (≤ salt_rows) is unchanged.
@@ -489,13 +490,10 @@ def merge_index(
             d = chunk["doc_id"].to_numpy(np.int64)
             cols = codec.encode_lists_columns(
                 chunk["term_id"].to_numpy(np.int64), salts, d,
-                chunk["tf"].to_numpy(np.int64), dls_for(salts, d),
-                avgdl, block_size)
-            yield pd.DataFrame(cols)[
-                ["term_id", "salt", "block_id", "first_doc", "last_doc",
-                 "n", "max_weight", "docs", "tfs", "dls"]]
+                chunk["tf"].to_numpy(np.int64), dls_for(salts, d), avgdl)
+            yield pd.DataFrame(cols)
 
-    blocks_df = parted.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
+    lists_df = parted.mapInPandas(encode_partition, schema=LIST_SCHEMA)
     # partitionBy(salt): EXACTLY one file per doc shard (each shuffle
     # partition holds whole salts, so each salt is written by exactly one
     # task into its own salt=<s>/ directory; maxRecordsPerFile=0 overrides
@@ -505,7 +503,7 @@ def merge_index(
     # leave ~1/e of files empty-sized and some with 2-3 salts (measured
     # max/mean 1.69 at 1M docs → straggler tail at high core counts).
     # Scoring is salt-oblivious within a file.
-    (blocks_df.write.partitionBy("salt").option("maxRecordsPerFile", 0)
+    (lists_df.write.partitionBy("salt").option("maxRecordsPerFile", 0)
      .mode("overwrite").parquet(f"{out_dir}/postings"))
 
     # VERIFY the one-file-per-salt invariant before stamping LAYOUT:
@@ -523,14 +521,16 @@ def merge_index(
             f"{out_dir}/postings: {split} hold several files each; every "
             "doc shard must be written as one file")
 
-    n_blocks = fsio.parquet_rows(f"{out_dir}/postings")
+    # runs hold one row per posting (builds and compaction alike)
+    n_postings = fsio.parquet_rows(f"{out_dir}/runs")
     _append_ledger(out_dir, (
-        -1, "merge", n_docs, n_blocks, fsio.dir_bytes(f"{out_dir}/postings"),
+        -1, "merge", n_docs, n_postings,
+        fsio.dir_bytes(f"{out_dir}/postings"),
         int((time.time() - t0) * 1000), "[]"))
     fsio.write_text_atomic(
         f"{out_dir}/_INDEX_META.json",
         json.dumps({"n_shards": n_shards, "salt_rows": salt_rows,
-                    "block_size": block_size, "n_docs": int(n_docs),
+                    "n_docs": int(n_docs),
                     "avgdl": avgdl, "sum_dl": sum_dl,
                     "max_doc_id": max_doc_id,
                     "doc_shards": int(doc_shards), "layout": LAYOUT}))

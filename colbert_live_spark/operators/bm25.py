@@ -16,7 +16,7 @@ accumulate (`:189-194`) → top-k (`:205-208`). Here:
 - top-k = ``row_number`` over (query_id) or ``TakeOrderedAndProject``.
 
 Everything in this module is JVM-side whole-stage-codegen — zero Python UDFs.
-The compressed/block-max path lives in ``operators/wand.py``.
+The compressed, MaxScore-pruned path lives in ``operators/wand.py``.
 
 Scale notes (1000-executor / 10^12-doc design):
 - stats (N, avgdl) and per-term df are tiny relative to postings; they join

@@ -14,7 +14,7 @@ sequence containment on the candidates' stored text). Two variants:
 - :func:`phrase_search_indexed` — the compressed-index serving path with
   the reference's rescore-budget semantics (`n_maxsim_candidates`,
   `colbert_live/colbert_live.py:199-200`): candidates are the conjunctive
-  BM25 top-C from block-max WAND, then phrase-verified. A phrase doc
+  BM25 top-C from the compressed index, then phrase-verified. A phrase doc
   ranked below C by bare BM25 is missed — the documented recall cost of a
   bounded rescore, same trade as maxsim_topk_ivf_capped.
 
@@ -102,7 +102,7 @@ def phrase_search_indexed(
     text_col: str = "text",
 ) -> DataFrame:
     """Phrase top-k served from the compressed term-sharded index:
-    conjunctive block-max WAND produces the BM25 top-``candidates`` per
+    the conjunctive serving core produces the BM25 top-``candidates`` per
     query (the rescore budget), the candidates' text is gathered and
     phrase-verified, survivors re-ranked to top-k. ``docs`` provides the
     (doc_id, text) payloads — the blob-store gather of the reference's

@@ -32,7 +32,7 @@ tombstones, an identity term map and weight scale 1.
      fatter tasks win. With a ``doc_filter`` the 8-byte filter ids group by
      doc shard and each group task scores that shard's files; it is the
      only shuffle before the merge of ≤ k rows per query and task.
-     Compressed block bytes never enter an Exchange.
+     Compressed list bytes never enter an Exchange.
 
 The layout is checked, never worked around: a source without the builder's
 layout stamp, a shard split across several postings files, or tombstones
@@ -186,9 +186,10 @@ class ShardLists:
     size. Optional ``filter_ids`` (permitted) / ``exclude_ids`` (tombstoned)
     apply once at decode time (they are query-independent).
 
-    The block frame is grouped by term with one stable argsort: a term's
-    blocks need not be contiguous (several files concatenated), and each
-    list keeps its blocks' frame order before the doc-id sort in get()."""
+    The postings frame holds one row per (term, file) list and is grouped
+    by term with one stable argsort: a term's rows need not be contiguous
+    (several files concatenated), and each term keeps its rows' frame
+    order before the doc-id sort in get()."""
 
     def __init__(self, pdf: pd.DataFrame, avgdl: float,
                  filter_ids: np.ndarray | None = None,
@@ -338,7 +339,7 @@ def score_shard_queries(
     exclude_ids: np.ndarray | None = None,
 ) -> pd.DataFrame:
     """Score EVERY query of the batch against one doc shard's matched
-    blocks; emit ≤ k exact candidates per query. Queries iterate in sorted
+    lists; emit ≤ k exact candidates per query. Queries iterate in sorted
     qid order (determinism is data-defined, not partitioning-defined)."""
     if not len(pdf):
         return _empty_partial()
@@ -510,7 +511,7 @@ class FileTask(NamedTuple):
     part: int               # which index/segment of the source
     tids: list[int]         # the part's matched term ids (read predicate)
     term_map: dict | None   # part term id -> global term id; None = same
-    w_scale: float          # stored block-max bound factor (avgdl drift)
+    w_scale: float          # stored list-max bound factor (avgdl drift)
     tombs: tuple[str, ...]  # tombstone files of this salt
 
 
@@ -527,7 +528,7 @@ def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
     """The plan for ``queries`` over an index dir or a segment root (told
     apart by its MANIFEST.json); None when nothing can match.
 
-    Stored block ``max_weight`` bounds were computed with the segment's own
+    Stored list ``max_weight`` bounds were computed with the segment's own
     avgdl; w grows at most linearly in avgdl, so scaling by
     max(1, avgdl_global / avgdl_segment) keeps it a true upper bound (safe
     pruning under avgdl drift)."""
@@ -598,25 +599,27 @@ def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
     return Plan(qmeta, nq_map, avgdl, doc_shards, files, src)
 
 
-def _read_blocks(tasks: list[FileTask]) -> pd.DataFrame:
-    """The matched blocks of ``tasks``' files in global term ids, with the
-    block-max bounds scaled; one pyarrow read per index/segment."""
+def _read_lists(tasks: list[FileTask]) -> pd.DataFrame:
+    """The matched lists of ``tasks``' files in global term ids, with the
+    list-max bounds scaled; one pyarrow read per index/segment."""
     import pyarrow.dataset as pads
     frames = []
     for _, grp in itertools.groupby(tasks, key=lambda f: f.part):
         grp = list(grp)
         f0 = grp[0]
         fs, _ = fsio.resolve(f0.path)
-        blocks = (pads.dataset([fsio.resolve(f.path)[1] for f in grp],
-                               format="parquet", filesystem=fs)
-                  .to_table(filter=pruning_isin("term_id", f0.tids))
-                  .to_pandas())
+        lists = (pads.dataset([fsio.resolve(f.path)[1] for f in grp],
+                              format="parquet", filesystem=fs)
+                 .to_table(columns=["term_id", "first_doc", "n",
+                                    "max_weight", "docs", "tfs", "dls"],
+                           filter=pruning_isin("term_id", f0.tids))
+                 .to_pandas())
         if f0.term_map is not None:
-            blocks["term_id"] = (blocks["term_id"].map(f0.term_map)
-                                 .astype(np.int64))
+            lists["term_id"] = (lists["term_id"].map(f0.term_map)
+                                .astype(np.int64))
         if f0.w_scale != 1.0:
-            blocks["max_weight"] = blocks["max_weight"] * f0.w_scale
-        frames.append(blocks)
+            lists["max_weight"] = lists["max_weight"] * f0.w_scale
+        frames.append(lists)
     return frames[0] if len(frames) == 1 else pd.concat(frames,
                                                         ignore_index=True)
 
@@ -639,7 +642,7 @@ def score_files(plan: Plan, files: list[FileTask], k: int, prune: bool,
     to the ids of the subset's distinct tombstone files."""
     if exclude_ids is None:
         exclude_ids = _read_ids(sorted({t for f in files for t in f.tombs}))
-    return score_shard_queries(_read_blocks(files), plan.qmeta, plan.nq_map,
+    return score_shard_queries(_read_lists(files), plan.qmeta, plan.nq_map,
                                plan.avgdl, k, prune, conjunctive, filter_ids,
                                exclude_ids)
 

@@ -1,13 +1,16 @@
 """Codec unit tests — property-based roundtrips (the unit-test layer the
-reference lacks; SURVEY.md §5 'we add')."""
+reference lacks; SURVEY.md §5 'we add'): varints, and the list codec over
+random multi-list input (one postings row per (term_id, salt) list)."""
 from __future__ import annotations
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from colbert_live_spark.index.builder import LIST_SCHEMA
 from colbert_live_spark.index.codec import (
-    BLOCK_SIZE, decode_block, encode_posting_list, varint_decode, varint_encode,
+    bm25_weight_np, decode_blocks, encode_lists_columns, varint_decode,
+    varint_encode,
 )
 
 
@@ -30,110 +33,103 @@ def test_varint_compression_ratio():
     assert len(varint_encode(small)) == 10_000  # 1 byte each
 
 
+AVGDL = 123.4
+
+
+@st.composite
+def _lists(draw):
+    """Random (term_id, salt) lists, sorted by key, each a sorted unique
+    doc-id set with its tfs and dls."""
+    keys = sorted(draw(st.sets(st.tuples(st.integers(0, 40),
+                                         st.integers(0, 7)),
+                               min_size=1, max_size=10)))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    out = []
+    for t, s in keys:
+        docs = np.array(sorted(draw(st.sets(
+            st.integers(0, 10**12), min_size=1, max_size=300))), np.int64)
+        out.append((t, s, docs,
+                    rng.integers(1, 60, docs.size).astype(np.int64),
+                    rng.integers(1, 5000, docs.size).astype(np.int64)))
+    return out
+
+
+def _encode(groups):
+    def cat(i, dtype):
+        return np.concatenate([np.broadcast_to(g[i], g[2].shape)
+                               for g in groups]).astype(dtype)
+    return encode_lists_columns(cat(0, np.int64), cat(1, np.int32),
+                                cat(2, np.int64), cat(3, np.int64),
+                                cat(4, np.int64), AVGDL)
+
+
+def _decode(cols, rows):
+    return decode_blocks(cols["first_doc"][rows], cols["n"][rows],
+                         *([cols[c][i] for i in rows]
+                           for c in ("docs", "tfs", "dls")))
+
+
 @settings(max_examples=100, deadline=None)
-@given(st.sets(st.integers(min_value=0, max_value=10**12), min_size=1, max_size=600),
-       st.integers(min_value=1, max_value=50))
-def test_posting_roundtrip(doc_set, tf_max):
-    rng = np.random.default_rng(42)
-    doc_ids = np.array(sorted(doc_set), dtype=np.int64)
-    tfs = rng.integers(1, tf_max + 1, doc_ids.size).astype(np.int64)
-    dls = rng.integers(1, 500, doc_ids.size).astype(np.int64)
-    blocks = encode_posting_list(doc_ids, tfs, dls, avgdl=100.0)
-    got_d, got_t, got_l = [], [], []
-    for i, blk in enumerate(blocks):
-        assert blk["block_id"] == i
-        d, t, l = decode_block(blk["first_doc"], blk["n"], blk["docs"],
-                               blk["tfs"], blk["dls"])
-        assert blk["first_doc"] == d[0] and blk["last_doc"] == d[-1]
-        got_d.append(d); got_t.append(t); got_l.append(l)
-    assert np.array_equal(np.concatenate(got_d), doc_ids)
-    assert np.array_equal(np.concatenate(got_t), tfs)
-    assert np.array_equal(np.concatenate(got_l), dls)
+@given(_lists())
+def test_posting_roundtrip(groups):
+    """One row per group carrying its key, first doc, size and list-max
+    weight; each row decodes to exactly its group's (doc, tf, dl)."""
+    cols = _encode(groups)
+    assert len(cols["n"]) == len(groups)
+    for i, (t, s, docs, tfs, dls) in enumerate(groups):
+        assert (cols["term_id"][i], cols["salt"][i]) == (t, s)
+        assert cols["first_doc"][i] == docs[0]
+        assert cols["n"][i] == docs.size
+        assert cols["max_weight"][i] == bm25_weight_np(tfs, dls, AVGDL).max()
+        for got, want in zip(_decode(cols, [i]), (docs, tfs, dls)):
+            assert np.array_equal(got, want)
 
 
 @settings(max_examples=60, deadline=None)
-@given(st.sets(st.integers(min_value=0, max_value=10**10), min_size=1,
-               max_size=800),
-       st.integers(min_value=2, max_value=64))
-def test_decode_blocks_vectorized_roundtrip(doc_set, block_size):
-    from colbert_live_spark.index.codec import decode_blocks
-    rng = np.random.default_rng(9)
-    doc_ids = np.array(sorted(doc_set), dtype=np.int64)
-    tfs = rng.integers(1, 30, doc_ids.size).astype(np.int64)
-    dls = rng.integers(1, 900, doc_ids.size).astype(np.int64)
-    blocks = encode_posting_list(doc_ids, tfs, dls, 100.0, block_size)
-    d, t, l = decode_blocks([b["first_doc"] for b in blocks],
-                            [b["n"] for b in blocks],
-                            [b["docs"] for b in blocks],
-                            [b["tfs"] for b in blocks],
-                            [b["dls"] for b in blocks])
-    assert np.array_equal(d, doc_ids)
-    assert np.array_equal(t, tfs)
-    assert np.array_equal(l, dls)
+@given(_lists(), st.randoms(use_true_random=False))
+def test_decode_blocks_vectorized_roundtrip(groups, rnd):
+    """Any row order decodes in one pass to the groups' concatenation in
+    that order."""
+    cols = _encode(groups)
+    order = list(range(len(groups)))
+    rnd.shuffle(order)
+    for j, got in enumerate(_decode(cols, order)):
+        assert np.array_equal(
+            got, np.concatenate([groups[i][2 + j] for i in order]))
 
 
 def test_decode_blocks_multi_list_order():
-    """Blocks from different sub-lists decode in given order (interleaved
-    salted lists)."""
-    from colbert_live_spark.index.codec import decode_blocks
+    """Lists of different (term, salt) keys decode in the given row order
+    (a term's lists from several files, concatenated)."""
     a = np.array([5, 100, 2000], dtype=np.int64)
     b = np.array([1, 50], dtype=np.int64)
     ones = np.ones(3, np.int64)
-    ba = encode_posting_list(a, ones, ones * 10, 10.0, block_size=2)
-    bb = encode_posting_list(b, ones[:2], ones[:2] * 10, 10.0, block_size=2)
-    blocks = ba + bb
-    d, t, l = decode_blocks([x["first_doc"] for x in blocks],
-                            [x["n"] for x in blocks],
-                            [x["docs"] for x in blocks],
-                            [x["tfs"] for x in blocks],
-                            [x["dls"] for x in blocks])
-    assert list(d) == [5, 100, 2000, 1, 50]
+    cols = _encode([(7, 0, a, ones, ones * 10), (7, 1, b, ones[:2],
+                                                 ones[:2] * 10)])
+    assert list(_decode(cols, [0, 1])[0]) == [5, 100, 2000, 1, 50]
+    assert list(_decode(cols, [1, 0])[0]) == [1, 50, 5, 100, 2000]
 
 
-def test_block_max_weight_is_max():
-    from colbert_live_spark.index.codec import bm25_weight_np
-    doc_ids = np.arange(300, dtype=np.int64)
-    tfs = (doc_ids % 7 + 1).astype(np.int64)
-    dls = (doc_ids % 90 + 10).astype(np.int64)
-    blocks = encode_posting_list(doc_ids, tfs, dls, avgdl=50.0)
-    assert len(blocks) == 3  # 300 docs / 128
-    for b0, blk in zip(range(0, 300, BLOCK_SIZE), blocks):
-        w = bm25_weight_np(tfs[b0:b0 + BLOCK_SIZE], dls[b0:b0 + BLOCK_SIZE], 50.0)
-        assert blk["max_weight"] == w.max()
+def test_list_max_weight_is_max():
+    """A list of any length is one row (no split at a block size) whose
+    max_weight is the max over the whole list."""
+    docs = np.arange(0, 3000, 3, dtype=np.int64)
+    tfs = (docs % 7 + 1).astype(np.int64)
+    dls = (docs % 90 + 10).astype(np.int64)
+    cols = _encode([(5, 2, docs, tfs, dls)])
+    assert list(cols["n"]) == [docs.size]
+    assert cols["max_weight"][0] == bm25_weight_np(tfs, dls, AVGDL).max()
+    for got, want in zip(_decode(cols, [0]), (docs, tfs, dls)):
+        assert np.array_equal(got, want)
 
 
-# ------------------------------------------------------ multi-list codec
-
-def test_encode_lists_columns_matches_per_group():
-    """The vectorized multi-list encoder must be byte-identical to calling
-    the single-list encoder per (term, salt) group."""
-    import numpy as np
-    from colbert_live_spark.index.codec import (encode_lists_columns,
-                                                encode_posting_list_columns)
-    rng = np.random.RandomState(11)
-    rows = []
-    for t in range(4):
-        for s in range(3):
-            n = rng.randint(1, 400)
-            d = np.sort(rng.choice(10_000, size=n, replace=False))
-            rows.append((t, s, d, rng.randint(1, 20, n),
-                         rng.randint(5, 500, n)))
-    term = np.concatenate([np.full(r[2].size, r[0]) for r in rows]).astype(np.int64)
-    salt = np.concatenate([np.full(r[2].size, r[1]) for r in rows]).astype(np.int32)
-    doc = np.concatenate([r[2] for r in rows]).astype(np.int64)
-    tf = np.concatenate([r[3] for r in rows]).astype(np.int64)
-    dl = np.concatenate([r[4] for r in rows]).astype(np.int64)
-    multi = encode_lists_columns(term, salt, doc, tf, dl, 123.4, 128)
-    ref = {k: [] for k in multi}
-    for (t, s, d, tfs, dls) in rows:
-        cols = encode_posting_list_columns(
-            d.astype(np.int64), np.asarray(tfs, np.int64),
-            np.asarray(dls, np.int64), 123.4, 128)
-        nb = len(cols["block_id"])
-        ref["term_id"].extend([t] * nb)
-        ref["salt"].extend([s] * nb)
-        for k in ("block_id", "first_doc", "last_doc", "n", "max_weight",
-                  "docs", "tfs", "dls"):
-            ref[k].extend(list(cols[k]))
-    for k in multi:
-        assert list(multi[k]) == list(ref[k]), k
+def test_columns_follow_the_postings_schema():
+    """The encoder's columns are the builder's postings schema, in order,
+    for empty and non-empty input."""
+    names = [c.split(" ")[0] for c in LIST_SCHEMA.split(", ")]
+    one = np.ones(1, np.int64)
+    assert list(_encode([(0, 0, one, one, one)])) == names
+    z = np.zeros(0, np.int64)
+    empty = encode_lists_columns(z, z.astype(np.int32), z, z, z, AVGDL)
+    assert list(empty) == names
+    assert all(len(v) == 0 for v in empty.values())

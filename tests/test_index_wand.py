@@ -2,8 +2,8 @@
 pruned == unpruned (safe pruning), checkpoint/resume equivalence (and its
 refusal of drifted inputs), transformed inputs indexed as given, concurrent
 group builds, the index dir layout (each fact stored once, one file per
-salt), the refusal of any other layout, and the Spark job ceilings of a
-build and of a segment root's writes."""
+salt, one postings row per list), the refusal of any other layout, and
+the Spark job ceilings of a build and of a segment root's writes."""
 from __future__ import annotations
 
 import glob
@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from colbert_live_spark.index.builder import (
-    RUN_SCHEMA, build_index, build_runs, merge_index)
+    LAYOUT, LIST_SCHEMA, RUN_SCHEMA, build_index, build_runs, merge_index)
 from colbert_live_spark.index.segments import (
     add_segment, compact, delete_docs, segment_search, segment_search_local,
     update_docs)
@@ -86,12 +86,16 @@ def test_checkpoint_resume_equivalence(spark, documents, tmp_path_factory,
         expect = oracle_search(oracle_index, qtext, k=K)
         assert [d for d, _ in got.get(qid, [])] == [d for d, _ in expect]
     # ledger has lineage + metrics rows for all 4 groups + merge stage
-    ledger = spark.read.parquet(f"{out}/ledger")
-    rows = {(r.gid, r.stage) for r in ledger.collect()}
+    ledger = spark.read.parquet(f"{out}/ledger").collect()
+    rows = {(r.gid, r.stage) for r in ledger}
     assert {(g, "runs") for g in range(4)}.issubset(rows)
     assert (-1, "merge") in rows
-    mrow = [r for r in ledger.collect() if r.stage == "runs"][0]
-    assert mrow.n_postings > 0 and mrow.bytes > 0 and mrow.wall_ms >= 0
+    runs_rows = [r for r in ledger if r.stage == "runs"]
+    rrow = runs_rows[0]
+    assert rrow.n_postings > 0 and rrow.bytes > 0 and rrow.wall_ms >= 0
+    # the merge row counts postings (not postings-file rows)
+    merge_row = next(r for r in ledger if r.stage == "merge")
+    assert merge_row.n_postings == sum(r.n_postings for r in runs_rows)
     shutil.rmtree(out, ignore_errors=True)
 
 
@@ -190,8 +194,9 @@ def test_intersection_missing_term_empty(spark, index_dir):
 def test_postings_one_file_per_salt_despite_session_split(
         spark, documents, tmp_path_factory):
     """A session-level file split (spark.sql.files.maxRecordsPerFile) must
-    not split a doc shard's postings: the build stays salt_v3 with one
-    file per salt dir and answers identically to a clean build."""
+    not split a doc shard's postings: the build keeps the current layout
+    with one file per salt dir and answers identically to a clean
+    build."""
     import json
     import os
 
@@ -208,7 +213,7 @@ def test_postings_one_file_per_salt_despite_session_split(
     build_index(spark, docs, clean_out, n_groups=2, n_shards=4,
                 salt_rows=100)
     meta = json.loads(open(f"{split_out}/_INDEX_META.json").read())
-    assert meta["layout"] == "salt_v3"
+    assert meta["layout"] == LAYOUT
     salts = [d for d in os.listdir(f"{split_out}/postings")
              if d.startswith("salt=")]
     assert salts
@@ -224,9 +229,9 @@ def test_postings_one_file_per_salt_despite_session_split(
 def test_unverified_layout_raises(spark, documents, index_dir, tmp_path):
     """Sources of any other layout are refused by every entry point and
     left unchanged, never served or written through a slower path: an
-    index dir whose meta names another layout (a doc shard may span
-    several postings files) and a segment root whose manifest has no
-    layout stamp."""
+    index dir whose meta names the retired ``salt_v3`` layout (one
+    postings row per 128-posting block), and a segment root whose manifest
+    names it or has no layout stamp."""
     import json
 
     def edit(meta_file, change):
@@ -236,24 +241,28 @@ def test_unverified_layout_raises(spark, documents, index_dir, tmp_path):
 
     idx = str(tmp_path / "idx")
     shutil.copytree(index_dir, idx)
-    edit(f"{idx}/_INDEX_META.json", lambda m: m.update(layout="salt_v2"))
     root = str(tmp_path / "root")
     docs = documents.limit(50)
     add_segment(spark, docs, root, salt_rows=100)
-    edit(f"{root}/MANIFEST.json", lambda m: m.pop("layout"))
-    old = {
-        f"{idx}/_INDEX_META.json": [
-            lambda: wand_search(spark, idx, DOC_QUERIES, k=K),
-            lambda: wand_search_local(idx, DOC_QUERIES, k=K)],
-        f"{root}/MANIFEST.json": [
-            lambda: segment_search(spark, root, DOC_QUERIES, k=K),
-            lambda: segment_search_local(root, DOC_QUERIES, k=K),
-            lambda: add_segment(spark, docs, root, salt_rows=100),
-            lambda: delete_docs(spark, root, [1]),
-            lambda: update_docs(spark, docs, root, [1], salt_rows=100),
-            lambda: compact(spark, root, salt_rows=100)],
-    }
-    for meta_file, calls in old.items():
+    idx_calls = [
+        lambda: wand_search(spark, idx, DOC_QUERIES, k=K),
+        lambda: wand_search_local(idx, DOC_QUERIES, k=K)]
+    root_calls = [
+        lambda: segment_search(spark, root, DOC_QUERIES, k=K),
+        lambda: segment_search_local(root, DOC_QUERIES, k=K),
+        lambda: add_segment(spark, docs, root, salt_rows=100),
+        lambda: delete_docs(spark, root, [1]),
+        lambda: update_docs(spark, docs, root, [1], salt_rows=100),
+        lambda: compact(spark, root, salt_rows=100)]
+    old = [
+        (f"{idx}/_INDEX_META.json", lambda m: m.update(layout="salt_v3"),
+         idx_calls),
+        (f"{root}/MANIFEST.json", lambda m: m.update(layout="salt_v3"),
+         root_calls),
+        (f"{root}/MANIFEST.json", lambda m: m.pop("layout"), root_calls),
+    ]
+    for meta_file, change, calls in old:
+        edit(meta_file, change)
         before = open(meta_file, "rb").read()
         for call in calls:
             with pytest.raises(ValueError, match="rebuild"):
@@ -400,6 +409,38 @@ def test_index_dir_layout(spark, index_dir):
     assert docs.filter(
         F.pmod(F.xxhash64("doc_id"), F.lit(meta["doc_shards"]))
         != F.col("salt")).count() == 0
+
+
+def test_postings_one_row_per_list(spark, documents, tmp_path):
+    """The postings hold exactly the builder's columns (nothing per
+    128-posting block) and one row per (term_id, salt) list of runs ⋈ dict,
+    however long the list: one doc shard, so head-term lists run to
+    hundreds of postings; the rows' sizes sum to the runs' postings."""
+    import json
+    out = str(tmp_path / "idx")
+    build_index(spark, documents, out, n_groups=2, n_shards=1)
+    meta = json.loads(open(f"{out}/_INDEX_META.json").read())
+    assert meta["doc_shards"] == 1
+
+    def read(sub):
+        return (spark.read.option("recursiveFileLookup", "true")
+                .parquet(f"{out}/{sub}"))
+
+    postings = spark.read.parquet(f"{out}/postings")
+    want = spark.createDataFrame([], LIST_SCHEMA).schema
+    assert ({f.name: f.dataType for f in postings.schema}
+            == {f.name: f.dataType for f in want})
+    runs = read("runs")
+    lists = (runs.join(read("dict"), "term")
+             .select("term_id", F.pmod(F.xxhash64("doc_id"),
+                                       F.lit(meta["doc_shards"]))
+                     .cast("int").alias("salt")).distinct())
+    rows = postings.select("term_id", "salt").collect()
+    assert len(rows) == len(set(rows))
+    assert set(rows) == set(lists.collect())
+    n = postings.agg(F.sum("n").alias("s"), F.max("n").alias("m")).first()
+    assert n.s == runs.count()
+    assert n.m > 128
 
 
 def test_build_job_ceiling(spark, documents, tmp_path):

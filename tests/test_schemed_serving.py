@@ -59,7 +59,7 @@ def mock_index(spark, documents, mockfs_base):
 
 
 def test_cluster_serving_through_schemed_root(spark, mock_index):
-    """wand_search's salt_v3 fast path (per-file executor tasks) on
+    """wand_search's executor tasks (each scoring a file subset) on
     mock:// == the same index served via its local path."""
     local, mock = mock_index
     got = _collect(wand_search(spark, mock, DOC_QUERIES, k=K))

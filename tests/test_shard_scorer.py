@@ -8,20 +8,20 @@ import math
 import numpy as np
 import pandas as pd
 
-from colbert_live_spark.index.codec import bm25_weight_np, encode_posting_list
+from colbert_live_spark.index.codec import bm25_weight_np, encode_lists_columns
 from colbert_live_spark.operators.wand import score_shard_queries
 
 AVGDL = 100.0
 K = 5
 
 
-def _make_blocks(term_id, doc_ids, rng, salt=0, block_size=16):
+def _make_list(term_id, doc_ids, rng, salt=0):
+    """One postings row: the encoded (term_id, salt) list of ``doc_ids``."""
     tfs = rng.integers(1, 6, doc_ids.size).astype(np.int64)
     dls = rng.integers(50, 200, doc_ids.size).astype(np.int64)
-    pdf = pd.DataFrame(encode_posting_list(doc_ids, tfs, dls, AVGDL,
-                                           block_size=block_size))
-    pdf.insert(0, "salt", salt)
-    pdf.insert(0, "term_id", term_id)
+    pdf = pd.DataFrame(encode_lists_columns(
+        np.full(doc_ids.size, term_id, np.int64),
+        np.full(doc_ids.size, salt, np.int32), doc_ids, tfs, dls, AVGDL))
     return pdf, dict(zip(doc_ids.tolist(), tfs.tolist())), dict(
         zip(doc_ids.tolist(), dls.tolist()))
 
@@ -30,11 +30,11 @@ def _shard(rng, n_docs=5000):
     t1 = np.sort(rng.choice(n_docs, 400, replace=False)).astype(np.int64)
     t2 = np.sort(rng.choice(n_docs, 1500, replace=False)).astype(np.int64)
     t3 = np.sort(rng.choice(n_docs, 60, replace=False)).astype(np.int64)
-    b1, tf1, dl1 = _make_blocks(1, t1, rng)
-    b2, tf2, dl2 = _make_blocks(2, t2, rng)
-    b3, tf3, dl3 = _make_blocks(3, t3, rng)
-    blocks = pd.concat([b1, b2, b3], ignore_index=True)
-    return blocks, {1: (tf1, dl1), 2: (tf2, dl2), 3: (tf3, dl3)}
+    b1, tf1, dl1 = _make_list(1, t1, rng)
+    b2, tf2, dl2 = _make_list(2, t2, rng)
+    b3, tf3, dl3 = _make_list(3, t3, rng)
+    frame = pd.concat([b1, b2, b3], ignore_index=True)
+    return frame, {1: (tf1, dl1), 2: (tf2, dl2), 3: (tf3, dl3)}
 
 
 QMETA = {
@@ -61,30 +61,29 @@ def _brute(lists, qterms, k, member=None, exclude=None):
 
 
 def _files(rng, n_files):
-    """Blocks of ``n_files`` doc-disjoint shards concatenated file after
-    file — the frame a serving task reads for its file subset; with
-    several files, each term's blocks are non-contiguous."""
+    """Postings rows of ``n_files`` doc-disjoint shards concatenated file
+    after file — the frame a serving task reads for its file subset; with
+    several files, each term's rows are non-contiguous."""
     parts = []
     for f in range(n_files):
-        blocks, _ = _shard(rng)
+        frame, _ = _shard(rng)
         shift = 5000 * f  # past _shard's doc-id range
-        parts.append(blocks.assign(first_doc=blocks["first_doc"] + shift,
-                                   last_doc=blocks["last_doc"] + shift))
+        parts.append(frame.assign(first_doc=frame["first_doc"] + shift))
     return pd.concat(parts, ignore_index=True)
 
 
 def test_row_order_independence():
-    """Any row order of the block frame scores bit-identically,
+    """Any row order of the postings frame scores bit-identically,
     disjunctive and conjunctive, for one file and for several doc-disjoint
     files: the term grouping keeps no positional assumption."""
     for n_files in (1, 3):
-        blocks = _files(np.random.default_rng(3), n_files)
+        frame = _files(np.random.default_rng(3), n_files)
         for conj in (False, True):
-            base = score_shard_queries(blocks, QMETA, NQ, AVGDL, K,
+            base = score_shard_queries(frame, QMETA, NQ, AVGDL, K,
                                        conjunctive=conj)
             assert len(base)
             for seed in (1, 2, 3):
-                shuffled = blocks.sample(frac=1.0, random_state=seed
+                shuffled = frame.sample(frac=1.0, random_state=seed
                                          ).reset_index(drop=True)
                 got = score_shard_queries(shuffled, QMETA, NQ, AVGDL, K,
                                           conjunctive=conj)
@@ -93,9 +92,9 @@ def test_row_order_independence():
 
 def test_matches_bruteforce_and_pruned_equals_unpruned():
     rng = np.random.default_rng(7)
-    blocks, lists = _shard(rng)
-    pruned = score_shard_queries(blocks, QMETA, NQ, AVGDL, K, prune=True)
-    full = score_shard_queries(blocks, QMETA, NQ, AVGDL, K, prune=False)
+    frame, lists = _shard(rng)
+    pruned = score_shard_queries(frame, QMETA, NQ, AVGDL, K, prune=True)
+    full = score_shard_queries(frame, QMETA, NQ, AVGDL, K, prune=False)
     pd.testing.assert_frame_equal(pruned, full)
     got = {}
     for r in pruned.itertuples():
@@ -110,12 +109,12 @@ def test_matches_bruteforce_and_pruned_equals_unpruned():
 
 def test_filter_and_exclude_compose():
     rng = np.random.default_rng(11)
-    blocks, lists = _shard(rng)
+    frame, lists = _shard(rng)
     member = np.array(sorted(d for d in range(5000) if d % 3 == 0),
                       dtype=np.int64)
     excl = np.array(sorted(d for d in range(5000) if d % 10 == 0),
                     dtype=np.int64)
-    got_df = score_shard_queries(blocks, QMETA, NQ, AVGDL, K,
+    got_df = score_shard_queries(frame, QMETA, NQ, AVGDL, K,
                                  filter_ids=member, exclude_ids=excl)
     got = {}
     for r in got_df.itertuples():
@@ -149,16 +148,16 @@ def test_property_scorer_vs_bruteforce():
             sz = int(rng.integers(1, max(2, n_docs // 2)))
             ids = np.sort(rng.choice(n_docs, sz, replace=False)).astype(
                 np.int64)
-            b, tf, dl = _make_blocks(tid, ids, rng, block_size=8)
+            b, tf, dl = _make_list(tid, ids, rng)
             parts.append(b)
             lists[tid] = (tf, dl)
             coef = float(rng.uniform(0.05, 8.0))
             qterms.append((tid, coef))
-        blocks = pd.concat(parts, ignore_index=True)
+        frame = pd.concat(parts, ignore_index=True)
         qm = {"q": sorted(qterms, key=lambda x: (-x[1], x[0]))}
         nq = {"q": len(qterms)}
-        pruned = score_shard_queries(blocks, qm, nq, AVGDL, k, prune=True)
-        full = score_shard_queries(blocks, qm, nq, AVGDL, k, prune=False)
+        pruned = score_shard_queries(frame, qm, nq, AVGDL, k, prune=True)
+        full = score_shard_queries(frame, qm, nq, AVGDL, k, prune=False)
         pd.testing.assert_frame_equal(pruned, full)
         # brute sums in the scorer's term order so quasi-tied docs rank
         # identically (ULP-level float order sensitivity)
@@ -175,10 +174,10 @@ def test_conjunctive_shard_semantics():
     """A query term absent from the shard ⇒ empty (its docs can't be in
     this shard); present terms intersect exactly."""
     rng = np.random.default_rng(13)
-    blocks, lists = _shard(rng)
+    frame, lists = _shard(rng)
     qm = {"qi": [(1, 2.5), (2, 0.4)], "qmiss": [(1, 2.5)]}
     nq = {"qi": 2, "qmiss": 2}  # qmiss had 2 raw terms, only 1 matched here
-    got_df = score_shard_queries(blocks, qm, nq, AVGDL, K, conjunctive=True)
+    got_df = score_shard_queries(frame, qm, nq, AVGDL, K, conjunctive=True)
     got = {}
     for r in got_df.itertuples():
         got.setdefault(r.query_id, []).append((r.doc_id, r.score))
@@ -207,8 +206,8 @@ def test_conjunctive_term_absent_from_index_returns_no_rows():
     rows, even though its other term has postings here; the same query
     scored disjunctively does match."""
     rng = np.random.default_rng(17)
-    blocks, _ = _shard(rng)
+    frame, _ = _shard(rng)
     qm, nq = {"q": [(1, 2.5)]}, {"q": 2}
-    assert len(score_shard_queries(blocks, qm, nq, AVGDL, K,
+    assert len(score_shard_queries(frame, qm, nq, AVGDL, K,
                                    conjunctive=True)) == 0
-    assert len(score_shard_queries(blocks, qm, nq, AVGDL, K))
+    assert len(score_shard_queries(frame, qm, nq, AVGDL, K))

@@ -40,8 +40,8 @@ Scale notes:
   the doc-shard salt bounds the largest group to ~``salt_rows`` rows
   regardless of Zipf skew.
 - doc-sharding cost: a tail term with df < doc_shards spreads over df
-  single-posting lists, each row repeating its own term_id, first_doc, n
-  and max_weight. Bounded: tail terms are a minority of postings under
+  single-posting lists, each row repeating its own term_id, first_doc and
+  n. Bounded: tail terms are a minority of postings under
   Zipf, and D is chosen from df_max, not vocabulary size. This is the
   price of batch-scalable serving and is measured in BENCH (compressed
   index bytes).
@@ -69,13 +69,13 @@ from colbert_live_spark.session import is_bare_scan, spread_input
 
 RUN_SCHEMA = "term string, doc_id long, tf int"
 LIST_SCHEMA = ("term_id long, salt int, first_doc long, n int, "
-               "max_weight double, docs binary, tfs binary, dls binary")
+               "docs binary, tfs binary, dls binary")
 LEDGER_SCHEMA = ("gid int, stage string, n_docs long, n_postings long, "
                  "bytes long, wall_ms long, files string")
 # the one on-disk layout, stamped on every index meta and root manifest:
 # one postings file per doc shard (merge_index verifies it before stamping),
-# one postings row per (term_id, salt) list
-LAYOUT = "salt_v4"
+# one postings row per (term_id, salt) list, no stored score bound
+LAYOUT = "salt_v5"
 
 
 def require_layout(meta: dict, path: str) -> None:
@@ -490,7 +490,7 @@ def merge_index(
             d = chunk["doc_id"].to_numpy(np.int64)
             cols = codec.encode_lists_columns(
                 chunk["term_id"].to_numpy(np.int64), salts, d,
-                chunk["tf"].to_numpy(np.int64), dls_for(salts, d), avgdl)
+                chunk["tf"].to_numpy(np.int64), dls_for(salts, d))
             yield pd.DataFrame(cols)
 
     lists_df = parted.mapInPandas(encode_partition, schema=LIST_SCHEMA)

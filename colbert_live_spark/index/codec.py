@@ -1,29 +1,25 @@
 """Posting-list codec: docID-delta + LEB128 varint, one row per posting
-list, with the list's first doc and max-impact bound for MaxScore pruning.
+list, with the list's first doc stored in its own column.
 
 Pure numpy, fully vectorized (bounded loops over byte positions, never over
 values) — runs inside Arrow UDF stages with zero per-row Python. This is the
 storage-reduction analog of the reference's doc-embedding pooling
 (`colbert_live/colbert_live.py:119-129`): the reference halves its index by
-pooling token vectors; we compress postings ~4-8× with delta+varint and
-bound each list's score contribution with its stored max weight.
+pooling token vectors; we compress postings ~4-8× with delta+varint.
 
 List layout (one row per (term_id, salt) list in the postings table):
-  term_id, salt, first_doc, n, max_weight,
+  term_id, salt, first_doc, n,
   docs (varint deltas, first doc stored in the column),
   tfs (varint), dls (varint)
 
-``max_weight`` is the list max of the idf-free BM25 term weight
-tf·(k1+1)/(tf+k1·(1−b+b·dl/avgdl)); multiplying by qtf·idf at query time
-gives the list's max impact. Storing it idf-free keeps lists valid across
-index merges that change df.
+No score bound is stored: the serving core decodes every matched list and
+takes each list's exact max weight under the query-time avgdl
+(operators/wand.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-from colbert_live_spark import BM25_B, BM25_K1
 
 _THRESH = np.array([1 << (7 * i) for i in range(1, 10)], dtype=np.uint64)
 
@@ -56,12 +52,6 @@ def varint_decode(data: bytes, n: int | None = None) -> np.ndarray:
     return out
 
 
-def bm25_weight_np(tf: np.ndarray, dl: np.ndarray, avgdl: float,
-                   k1: float = BM25_K1, b: float = BM25_B) -> np.ndarray:
-    tf = tf.astype(np.float64)
-    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
-
-
 def _varint_offsets(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     """Encode the whole array once; return (bytes, end-offset per value).
     LEB128 concatenation is self-delimiting, so any value-aligned byte
@@ -89,7 +79,6 @@ def encode_lists_columns(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    avgdl: float,
 ) -> dict:
     """Vectorized encoding of MANY posting (sub-)lists in one pass, one
     output row per (term_id, salt) list.
@@ -108,7 +97,6 @@ def encode_lists_columns(
             "salt": np.zeros(0, dtype=np.int32),
             "first_doc": np.zeros(0, dtype=np.int64),
             "n": np.zeros(0, dtype=np.int32),
-            "max_weight": np.zeros(0, dtype=np.float64),
             "docs": [], "tfs": [], "dls": [],
         }
     new_group = np.empty(n, dtype=bool)
@@ -132,13 +120,11 @@ def encode_lists_columns(
         byte_starts = np.concatenate([[0], byte_ends[:-1]])
         return [data[a:b] for a, b in zip(byte_starts, byte_ends)]
 
-    weights = bm25_weight_np(tfs, dls, avgdl)
     return {
         "term_id": term_ids[starts].astype(np.int64),
         "salt": salts[starts].astype(np.int32),
         "first_doc": doc_ids[starts].astype(np.int64),
         "n": (ends - starts).astype(np.int32),
-        "max_weight": np.maximum.reduceat(weights, starts).astype(np.float64),
         "docs": cut(d_bytes, d_byte_ends),
         "tfs": cut(t_bytes, t_ends[ends - 1]),
         "dls": cut(l_bytes, l_ends[ends - 1]),

@@ -72,11 +72,6 @@ def exists(path: str) -> bool:
     return f.get_file_info(p).type != pafs.FileType.NotFound
 
 
-def mkdirs(path: str) -> None:
-    f, p = resolve(path)
-    f.create_dir(p, recursive=True)
-
-
 def read_text(path: str) -> str:
     f, p = resolve(path)
     with f.open_input_stream(p) as s:

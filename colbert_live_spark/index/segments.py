@@ -203,7 +203,7 @@ def _stage_add(
     if first:
         m["doc_shards"] = int(meta["doc_shards"])
     m["segments"].append({"name": seg, "n_docs": meta["n_docs"],
-                          "avgdl": meta["avgdl"], "sum_dl": meta["sum_dl"],
+                          "sum_dl": meta["sum_dl"],
                           "doc_base": base, "ts": int(time.time())})
     # max() keeps the base monotone when preserve_ids batches arrive out of
     # id order (next_doc_base only matters for future offset-mode batches)
@@ -275,8 +275,10 @@ def _stage_delete(spark: SparkSession, root: str, m: dict,
     and delta files and mutates ``m``; the CALLER writes the manifest (see
     :func:`_stage_add`). Retrying after a crash regenerates the same staged
     paths (seq and file count are unchanged until the commit) and
-    overwrites them."""
-    assert m["segments"], "nothing to delete from"
+    overwrites them. A root without segments has nothing to delete: 0,
+    with no Spark work."""
+    if not m["segments"]:
+        return 0
     if isinstance(doc_ids, list):
         # list callers (the common API/CLI shape): the broadcast decision
         # needs only an UPPER bound on the id count, which len() gives for
@@ -416,7 +418,8 @@ def compact(spark: SparkSession, root: str, n_shards: int = 4,
     stage-1 group 0 (runs, dfs, doclens). Old segments are dropped from the
     manifest (directories left for the caller/GC to remove)."""
     m = _read_manifest(root)
-    assert m["segments"], "nothing to compact"
+    if not m["segments"]:
+        raise ValueError(f"{root} has no segments to compact")
     seg = f"seg{m['seq']:05d}"
     seg_dir = f"{root}/segments/{seg}"
     # one stage-1 group over every segment's runs/doclens minus the
@@ -430,7 +433,7 @@ def compact(spark: SparkSession, root: str, n_shards: int = 4,
                 doc_shards=m["doc_shards"])
     meta = json.loads(fsio.read_text(f"{seg_dir}/_INDEX_META.json"))
     m["segments"] = [{"name": seg, "n_docs": meta["n_docs"],
-                      "avgdl": meta["avgdl"], "sum_dl": meta["sum_dl"],
+                      "sum_dl": meta["sum_dl"],
                       "doc_base": 0, "ts": int(time.time())}]
     m["seq"] += 1
     m["tombstones"] = {"files": [], "delta_files": [],

@@ -307,18 +307,6 @@ def maxsim_topk_ivf(emb: DataFrame, query_doc_ids: list[int], k: int = 10,
             .select("query_id", "rank", "doc_id", "score"))
 
 
-def ivf_assign(emb: DataFrame, n_centroids: int, id_col: str = "vec_id",
-               vec_col: str = "embedding", kmeans_iters: int = 2,
-               train_sample: int | None = None) -> DataFrame:
-    """(id, v, n, centroid_id): assign each vector to its nearest k-means
-    centroid."""
-    base = _with_norm(emb, id_col, vec_col)
-    cents = kmeans_centroids(emb, n_centroids, kmeans_iters,
-                             id_col=id_col, vec_col=vec_col,
-                             train_sample=train_sample)
-    return _assign(base, cents)
-
-
 def knn_ivf(emb: DataFrame, query_ids: list[int], k: int = 10,
             n_centroids: int = 16, nprobe: int = 4,
             id_col: str = "vec_id", vec_col: str = "embedding",

@@ -3,7 +3,7 @@ scale path for the reference's search (`colbert_live/colbert_live.py:146-208`).
 
 One query path serves both a monolithic index and a live segment root
 (index/segments.py). A monolithic index is a one-segment root with no
-tombstones, an identity term map and weight scale 1.
+tombstones and an identity term map.
 
 1. :func:`resolve` turns the source plus a batch of queries into one
    :class:`Plan`, entirely on the driver with zero Spark jobs:
@@ -16,8 +16,7 @@ tombstones, an identity term map and weight scale 1.
      are global across segments, so answers equal a rebuild over the live
      docs;
    - the plan lists every postings file with its salt (doc shard), the
-     segment-to-global term-id map, the ``w_scale`` bound factor and the
-     tombstone files of that salt.
+     segment-to-global term-id map and the tombstone files of that salt.
 2. Two executors run a plan, both through :func:`score_files`, which
    scores a subset of the plan's files as ONE logical shard. A doc's
    postings live wholly inside one file (the builder writes each doc shard,
@@ -44,9 +43,11 @@ Term lists are processed in one global order per query; θ = k-th largest
 accumulated score (a valid lower bound: scores only grow). New docs are
 admitted only while Σ max-impact of the remaining lists ≥ θ — a doc first
 seen later can never reach θ; accumulated docs always receive exact
-contributions, so surviving scores are exact. This is the inverted-index
-re-expression of the reference's two-phase cheap-candidates→exact-rescore
-design (`colbert_live/colbert_live.py:189-204`).
+contributions, so surviving scores are exact. A list's max impact is
+qtf·idf times the exact max weight of its decoded, filtered postings
+(:class:`ShardLists`), so no bound is stored in the index. This is the
+inverted-index re-expression of the reference's two-phase
+cheap-candidates→exact-rescore design (`colbert_live/colbert_live.py:189-204`).
 """
 
 from __future__ import annotations
@@ -64,10 +65,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from colbert_live_spark import BM25_B, BM25_K1
 from colbert_live_spark.functions.tokenize import py_tokenize
 from colbert_live_spark.index import fsio
 from colbert_live_spark.index.builder import require_layout
-from colbert_live_spark.index.codec import bm25_weight_np, decode_blocks
+from colbert_live_spark.index.codec import decode_blocks
 
 OUT_SCHEMA = "query_id string, rank int, doc_id long, score double"
 
@@ -170,6 +172,13 @@ def _empty_partial() -> pd.DataFrame:
                          "score": pd.array([], dtype="float64")})
 
 
+def bm25_weight_np(tf: np.ndarray, dl: np.ndarray, avgdl: float,
+                   k1: float = BM25_K1, b: float = BM25_B) -> np.ndarray:
+    """The idf-free BM25 term weight tf·(k1+1)/(tf+k1·(1−b+b·dl/avgdl))."""
+    tf = tf.astype(np.float64)
+    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
+
+
 def _member_mask(ids: np.ndarray, members: np.ndarray) -> np.ndarray:
     """Boolean mask: ids[i] in members (members sorted unique)."""
     if members.size == 0:
@@ -179,41 +188,49 @@ def _member_mask(ids: np.ndarray, members: np.ndarray) -> np.ndarray:
 
 
 class ShardLists:
-    """One logical shard's matched posting lists: lazy decode + idf-free
-    weight cache. A list is decoded at most once per (shard, batch) no
-    matter how many queries subscribe to its term — together with the shard
-    grouping, this is what makes batched throughput independent of batch
-    size. Optional ``filter_ids`` (permitted) / ``exclude_ids`` (tombstoned)
-    apply once at decode time (they are query-independent).
+    """One logical shard's matched posting lists, decoded in ONE pass: one
+    :func:`decode_blocks` call over every row of the frame, the query-
+    independent ``filter_ids`` (permitted) / ``exclude_ids`` (tombstoned)
+    masks applied once, one sort by (term_id, doc_id) and one weight pass
+    under the global ``avgdl``. Every query of the batch then slices the
+    same arrays, so the per-call Python cost is paid once per shard, not
+    once per term — together with the shard grouping, this is what makes
+    batched throughput independent of batch size.
 
-    The postings frame holds one row per (term, file) list and is grouped
-    by term with one stable argsort: a term's rows need not be contiguous
-    (several files concatenated), and each term keeps its rows' frame
-    order before the doc-id sort in get()."""
+    The postings frame holds one row per (term, file) list; a term's rows
+    need not be contiguous (several files concatenated). A term is present
+    when the frame has a row for it, even if the masks empty its list.
+    Its MaxScore bound σ is the exact max of its filtered weights (0 for an
+    emptied list): a valid upper bound, tight by construction."""
 
     def __init__(self, pdf: pd.DataFrame, avgdl: float,
                  filter_ids: np.ndarray | None = None,
                  exclude_ids: np.ndarray | None = None):
-        self._avgdl = avgdl
-        self._filter = filter_ids
-        self._exclude = exclude_ids
-        tid = pdf["term_id"].to_numpy(np.int64)
-        order = np.argsort(tid, kind="stable")
+        n = pdf["n"].to_numpy(np.int64)
+        row_tid = pdf["term_id"].to_numpy(np.int64)
+        d, tf, dl = decode_blocks(pdf["first_doc"].to_numpy(np.int64), n,
+                                  *(pdf[c].tolist()
+                                    for c in ("docs", "tfs", "dls")))
+        tid = np.repeat(row_tid, n)
+        keep = np.ones(d.size, dtype=bool)
+        if filter_ids is not None:
+            keep &= _member_mask(d, filter_ids)
+        if exclude_ids is not None:
+            keep &= ~_member_mask(d, exclude_ids)
+        d, tf, dl, tid = d[keep], tf[keep], dl[keep], tid[keep]
+        order = np.lexsort((d, tid))
         tid = tid[order]
-        starts = np.flatnonzero(np.diff(tid, prepend=tid[:1] - 1))
-        ends = np.append(starts[1:], tid.size)
-        self._first = pdf["first_doc"].to_numpy(np.int64)[order]
-        self._n = pdf["n"].to_numpy(np.int64)[order]
-        self._blobs = [pdf[c].to_numpy(object)[order]
-                       for c in ("docs", "tfs", "dls")]
-        terms = tid[starts].tolist()
-        self._span = dict(zip(terms, zip(starts.tolist(), ends.tolist())))
-        weights = pdf["max_weight"].to_numpy(np.float64)[order]
-        self._sigma = dict(zip(terms, np.maximum.reduceat(
-            weights, starts).tolist()))
-        self._sizes = dict(zip(terms, np.add.reduceat(self._n,
-                                                      starts).tolist()))
-        self._cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._d = d[order]
+        self._w = bm25_weight_np(tf[order], dl[order], avgdl)
+        terms = np.unique(row_tid)
+        lo = np.searchsorted(tid, terms, "left")
+        hi = np.searchsorted(tid, terms, "right")
+        sigma = np.zeros(terms.size, dtype=np.float64)
+        full = hi > lo
+        if full.any():
+            sigma[full] = np.maximum.reduceat(self._w, lo[full])
+        self._span = dict(zip(terms.tolist(), zip(lo.tolist(), hi.tolist())))
+        self._sigma = dict(zip(terms.tolist(), sigma.tolist()))
 
     def __contains__(self, tid: int) -> bool:
         return tid in self._span
@@ -222,27 +239,13 @@ class ShardLists:
         return self._sigma[tid]
 
     def size(self, tid: int) -> int:
-        return self._sizes[tid]
+        lo, hi = self._span[tid]
+        return hi - lo
 
     def get(self, tid: int) -> tuple[np.ndarray, np.ndarray]:
         """(doc_ids sorted, idf-free weights) for the shard-local list."""
-        hit = self._cache.get(tid)
-        if hit is None:
-            sl = slice(*self._span[tid])
-            d, tf, dl = decode_blocks(self._first[sl], self._n[sl],
-                                      *(b[sl] for b in self._blobs))
-            if d.size and not np.all(d[:-1] <= d[1:]):
-                order = np.argsort(d, kind="stable")
-                d, tf, dl = d[order], tf[order], dl[order]
-            if self._filter is not None:
-                keep = _member_mask(d, self._filter)
-                d, tf, dl = d[keep], tf[keep], dl[keep]
-            if self._exclude is not None and self._exclude.size:
-                keep = ~_member_mask(d, self._exclude)
-                d, tf, dl = d[keep], tf[keep], dl[keep]
-            hit = (d, bm25_weight_np(tf, dl, self._avgdl))
-            self._cache[tid] = hit
-        return hit
+        lo, hi = self._span[tid]
+        return self._d[lo:hi], self._w[lo:hi]
 
 
 def _score_one(lists: ShardLists, qterms: list[tuple[int, float]], k: int,
@@ -267,8 +270,6 @@ def _score_one(lists: ShardLists, qterms: list[tuple[int, float]], k: int,
                  if acc_s.size >= k else 0.0)
         if prune and admission and suffix[ti] < theta:
             admission = False
-        if prune and not admission and acc_d.size == 0:
-            break
         d, wb = lists.get(tid)
         if d.size == 0:
             continue
@@ -511,7 +512,6 @@ class FileTask(NamedTuple):
     part: int               # which index/segment of the source
     tids: list[int]         # the part's matched term ids (read predicate)
     term_map: dict | None   # part term id -> global term id; None = same
-    w_scale: float          # stored list-max bound factor (avgdl drift)
     tombs: tuple[str, ...]  # tombstone files of this salt
 
 
@@ -526,12 +526,7 @@ class Plan(NamedTuple):
 
 def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
     """The plan for ``queries`` over an index dir or a segment root (told
-    apart by its MANIFEST.json); None when nothing can match.
-
-    Stored list ``max_weight`` bounds were computed with the segment's own
-    avgdl; w grows at most linearly in avgdl, so scaling by
-    max(1, avgdl_global / avgdl_segment) keeps it a true upper bound (safe
-    pruning under avgdl drift)."""
+    apart by its MANIFEST.json); None when nothing can match."""
     from colbert_live_spark.index import segments
     text = segments._manifest_text(path)
     if text is None:
@@ -541,20 +536,18 @@ def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
         m = None
         n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
         doc_shards = int(meta["doc_shards"])
-        parts = [(path, avgdl)]
+        dirs = [path]
     else:
         m = segments._parse_manifest(text, path)
         if not m["segments"]:
             return None
         n_docs, avgdl = segments._global_stats(m)
         doc_shards = m["doc_shards"]
-        parts = [(f"{path}/segments/{s['name']}", float(s["avgdl"]))
-                 for s in m["segments"]]
+        dirs = [f"{path}/segments/{s['name']}" for s in m["segments"]]
     if n_docs <= 0:
         return None
 
     src = _source(path, text)
-    dirs = [d for d, _ in parts]
     terms = sorted({t for _, q in queries for t in py_tokenize(q)})
     hits = _cached(src.terms, terms, lambda ts: _point_lookup(dirs, ts))
     df = {t: sum(v for _, v in per.values()) for t, per in hits.items()
@@ -563,7 +556,7 @@ def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
         gone = _cached(src.deltas, sorted(df), lambda ts: _df_deltas(
             path, m["tombstones"]["delta_files"], ts))
         df = {t: v - gone[t] for t, v in df.items() if v > gone[t]}
-    if len(parts) == 1:
+    if len(dirs) == 1:
         gid = {t: hits[t][dirs[0]][0] for t in df}
     else:
         gid = {t: i for i, t in enumerate(sorted(df))}
@@ -582,11 +575,10 @@ def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
                 tombs.setdefault(salt, []).extend(fs)
         src.tombs = {s: tuple(fs) for s, fs in tombs.items()}
     files = []
-    for i, (d, part_avgdl) in enumerate(parts):
+    for i, d in enumerate(dirs):
         tmap = {hits[t][d][0]: gid[t] for t in df if d in hits[t]}
         if not tmap:
             continue
-        w_scale = max(1.0, avgdl / part_avgdl) if part_avgdl else 1.0
         for salt, fs in sorted(_partition_files(f"{d}/postings",
                                                 "salt").items()):
             if len(fs) > 1:
@@ -594,14 +586,14 @@ def resolve(path: str, queries: list[tuple[str, str]]) -> Plan | None:
                     f"{d}: doc shard {salt} spans {len(fs)} postings files; "
                     "rebuild the index or compact() the root")
             files.append(FileTask(fs[0], salt, i, sorted(tmap),
-                                  None if len(parts) == 1 else tmap,
-                                  w_scale, src.tombs.get(salt, ())))
+                                  None if len(dirs) == 1 else tmap,
+                                  src.tombs.get(salt, ())))
     return Plan(qmeta, nq_map, avgdl, doc_shards, files, src)
 
 
 def _read_lists(tasks: list[FileTask]) -> pd.DataFrame:
-    """The matched lists of ``tasks``' files in global term ids, with the
-    list-max bounds scaled; one pyarrow read per index/segment."""
+    """The matched lists of ``tasks``' files in global term ids; one
+    pyarrow read per index/segment."""
     import pyarrow.dataset as pads
     frames = []
     for _, grp in itertools.groupby(tasks, key=lambda f: f.part):
@@ -611,14 +603,12 @@ def _read_lists(tasks: list[FileTask]) -> pd.DataFrame:
         lists = (pads.dataset([fsio.resolve(f.path)[1] for f in grp],
                               format="parquet", filesystem=fs)
                  .to_table(columns=["term_id", "first_doc", "n",
-                                    "max_weight", "docs", "tfs", "dls"],
+                                    "docs", "tfs", "dls"],
                            filter=pruning_isin("term_id", f0.tids))
                  .to_pandas())
         if f0.term_map is not None:
             lists["term_id"] = (lists["term_id"].map(f0.term_map)
                                 .astype(np.int64))
-        if f0.w_scale != 1.0:
-            lists["max_weight"] = lists["max_weight"] * f0.w_scale
         frames.append(lists)
     return frames[0] if len(frames) == 1 else pd.concat(frames,
                                                         ignore_index=True)

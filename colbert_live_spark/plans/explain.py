@@ -30,15 +30,3 @@ def assert_pushed_filters(df: DataFrame, fragment: str) -> None:
 def assert_broadcast_join(df: DataFrame) -> None:
     plan = physical_plan(df)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-
-
-def count_shuffles(df: DataFrame) -> int:
-    return physical_plan(df).count("Exchange")
-
-
-def codegen_fraction(df: DataFrame) -> float:
-    """Rough share of plan nodes inside WholeStageCodegen spans."""
-    plan = physical_plan(df)
-    lines = [ln for ln in plan.splitlines() if ln.strip().startswith(("*", "+- *"))]
-    all_nodes = [ln for ln in plan.splitlines() if "+-" in ln or ln.startswith("*")]
-    return len(lines) / max(1, len(all_nodes))

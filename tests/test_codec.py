@@ -9,8 +9,7 @@ from hypothesis import strategies as st
 
 from colbert_live_spark.index.builder import LIST_SCHEMA
 from colbert_live_spark.index.codec import (
-    bm25_weight_np, decode_blocks, encode_lists_columns, varint_decode,
-    varint_encode,
+    decode_blocks, encode_lists_columns, varint_decode, varint_encode,
 )
 
 
@@ -31,9 +30,6 @@ def test_varint_edge_values():
 def test_varint_compression_ratio():
     small = np.arange(10_000, dtype=np.uint64) % 100
     assert len(varint_encode(small)) == 10_000  # 1 byte each
-
-
-AVGDL = 123.4
 
 
 @st.composite
@@ -60,7 +56,7 @@ def _encode(groups):
                                for g in groups]).astype(dtype)
     return encode_lists_columns(cat(0, np.int64), cat(1, np.int32),
                                 cat(2, np.int64), cat(3, np.int64),
-                                cat(4, np.int64), AVGDL)
+                                cat(4, np.int64))
 
 
 def _decode(cols, rows):
@@ -72,15 +68,14 @@ def _decode(cols, rows):
 @settings(max_examples=100, deadline=None)
 @given(_lists())
 def test_posting_roundtrip(groups):
-    """One row per group carrying its key, first doc, size and list-max
-    weight; each row decodes to exactly its group's (doc, tf, dl)."""
+    """One row per group carrying its key, first doc and size; each row
+    decodes to exactly its group's (doc, tf, dl)."""
     cols = _encode(groups)
     assert len(cols["n"]) == len(groups)
     for i, (t, s, docs, tfs, dls) in enumerate(groups):
         assert (cols["term_id"][i], cols["salt"][i]) == (t, s)
         assert cols["first_doc"][i] == docs[0]
         assert cols["n"][i] == docs.size
-        assert cols["max_weight"][i] == bm25_weight_np(tfs, dls, AVGDL).max()
         for got, want in zip(_decode(cols, [i]), (docs, tfs, dls)):
             assert np.array_equal(got, want)
 
@@ -110,19 +105,6 @@ def test_decode_blocks_multi_list_order():
     assert list(_decode(cols, [1, 0])[0]) == [1, 50, 5, 100, 2000]
 
 
-def test_list_max_weight_is_max():
-    """A list of any length is one row (no split at a block size) whose
-    max_weight is the max over the whole list."""
-    docs = np.arange(0, 3000, 3, dtype=np.int64)
-    tfs = (docs % 7 + 1).astype(np.int64)
-    dls = (docs % 90 + 10).astype(np.int64)
-    cols = _encode([(5, 2, docs, tfs, dls)])
-    assert list(cols["n"]) == [docs.size]
-    assert cols["max_weight"][0] == bm25_weight_np(tfs, dls, AVGDL).max()
-    for got, want in zip(_decode(cols, [0]), (docs, tfs, dls)):
-        assert np.array_equal(got, want)
-
-
 def test_columns_follow_the_postings_schema():
     """The encoder's columns are the builder's postings schema, in order,
     for empty and non-empty input."""
@@ -130,6 +112,6 @@ def test_columns_follow_the_postings_schema():
     one = np.ones(1, np.int64)
     assert list(_encode([(0, 0, one, one, one)])) == names
     z = np.zeros(0, np.int64)
-    empty = encode_lists_columns(z, z.astype(np.int32), z, z, z, AVGDL)
+    empty = encode_lists_columns(z, z.astype(np.int32), z, z, z)
     assert list(empty) == names
     assert all(len(v) == 0 for v in empty.values())

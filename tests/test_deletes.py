@@ -1,13 +1,14 @@
 """Tombstone deletes/updates: delete→search must equal a from-scratch
 rebuild without the deleted docs (stats exactly corrected: N, avgdl, df→idf);
 compaction physically drops tombstones, also on roots whose older segments'
-runs still carry ``dl``; empty and DataFrame-shaped delete sets; updates are
-delete+re-add (reference parity: "add, modify, or remove documents",
-README.md:21-23)."""
+runs still carry ``dl``; empty and DataFrame-shaped delete sets; roots with
+no segments; updates are delete+re-add (reference parity: "add, modify, or
+remove documents", README.md:21-23)."""
 from __future__ import annotations
 
 import json
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +18,7 @@ from colbert_live_spark.index.segments import (
 )
 from colbert_live_spark.oracle import build_oracle_index, oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
+from conftest import jobs_of
 
 K = 10
 ATOL = 1e-9
@@ -146,6 +148,29 @@ def test_delete_docs_empty_and_dataframe_input(spark, documents,
                 rebuilt_root, salt_rows=100)
     want = _rows(segment_search(spark, rebuilt_root, DOC_QUERIES, k=K))
     assert got == want
+
+
+def test_empty_root_delete_update_compact(spark, documents,
+                                          tmp_path_factory):
+    """On a root with no segments, delete_docs has nothing to delete (0,
+    no Spark job, nothing written) whatever the ids, update_docs ingests
+    its batch, and compact refuses with a ValueError."""
+    root = str(tmp_path_factory.mktemp("emptyroot") / "live")
+    ids_df = spark.range(0, 5).select(F.col("id").alias("doc_id"))
+    for ids in ([], [1, 2], ids_df):
+        got = []
+        assert jobs_of(spark, lambda: got.append(
+            delete_docs(spark, root, ids))) == []
+        assert got == [0]
+    assert not os.path.exists(root)
+    with pytest.raises(ValueError, match="no segments"):
+        compact(spark, root, salt_rows=100)
+    docs = documents.filter(F.col("doc_id") < 40)
+    assert update_docs(spark, docs, root, [1], salt_rows=100) is not None
+    with open(f"{root}/MANIFEST.json") as f:
+        m = json.load(f)
+    assert [s["n_docs"] for s in m["segments"]] == [40]
+    assert m["tombstones"]["n_deleted"] == 0
 
 
 def test_compact_root_with_legacy_runs(spark, documents, tmp_path_factory,

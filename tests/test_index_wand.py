@@ -229,8 +229,8 @@ def test_postings_one_file_per_salt_despite_session_split(
 def test_unverified_layout_raises(spark, documents, index_dir, tmp_path):
     """Sources of any other layout are refused by every entry point and
     left unchanged, never served or written through a slower path: an
-    index dir whose meta names the retired ``salt_v3`` layout (one
-    postings row per 128-posting block), and a segment root whose manifest
+    index dir whose meta names the retired ``salt_v4`` layout (a stored
+    per-list score bound column), and a segment root whose manifest
     names it or has no layout stamp."""
     import json
 
@@ -255,9 +255,9 @@ def test_unverified_layout_raises(spark, documents, index_dir, tmp_path):
         lambda: update_docs(spark, docs, root, [1], salt_rows=100),
         lambda: compact(spark, root, salt_rows=100)]
     old = [
-        (f"{idx}/_INDEX_META.json", lambda m: m.update(layout="salt_v3"),
+        (f"{idx}/_INDEX_META.json", lambda m: m.update(layout="salt_v4"),
          idx_calls),
-        (f"{root}/MANIFEST.json", lambda m: m.update(layout="salt_v3"),
+        (f"{root}/MANIFEST.json", lambda m: m.update(layout="salt_v4"),
          root_calls),
         (f"{root}/MANIFEST.json", lambda m: m.pop("layout"), root_calls),
     ]

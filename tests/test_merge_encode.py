@@ -1,7 +1,7 @@
 """The merge shuffle carries no ``dl`` (it is gathered back from
 ``docs/salt=<s>`` at encode time); the written postings must equal a
 reference encode of the same postings with ``dl`` joined in directly —
-same lists, same bounds, same compressed bytes. A doc missing from
+same lists, same compressed bytes. A doc missing from
 ``docs`` and a runs group without its dfs both fail loudly."""
 from __future__ import annotations
 
@@ -47,8 +47,7 @@ def test_postings_match_reference_encode(spark, documents, tmp_path):
     t, s, d, tf, dl = (rows[c].to_numpy(np.int64)
                        for c in ("term_id", "salt", "doc_id", "tf", "dl"))
     o = np.lexsort((d, s, t))
-    want = codec.encode_lists_columns(t[o], s[o], d[o], tf[o], dl[o],
-                                      meta["avgdl"])
+    want = codec.encode_lists_columns(t[o], s[o], d[o], tf[o], dl[o])
     got = _postings_pdf(spark, out)
     assert len(got) == len(want["n"]) > 0
     for col in got.columns:

@@ -1,6 +1,7 @@
 """Pure-pandas unit tests for the shard-batch scorer (no Spark session):
 row-order independence (shuffle-robust determinism), filter/exclude
-composition, and exactness vs a brute-force reference."""
+composition, exactness vs a brute-force reference, exact MaxScore bounds
+and one decode pass per shard."""
 from __future__ import annotations
 
 import math
@@ -8,8 +9,10 @@ import math
 import numpy as np
 import pandas as pd
 
-from colbert_live_spark.index.codec import bm25_weight_np, encode_lists_columns
-from colbert_live_spark.operators.wand import score_shard_queries
+from colbert_live_spark.index.codec import encode_lists_columns
+from colbert_live_spark.operators import wand
+from colbert_live_spark.operators.wand import (ShardLists, bm25_weight_np,
+                                               score_shard_queries)
 
 AVGDL = 100.0
 K = 5
@@ -21,7 +24,7 @@ def _make_list(term_id, doc_ids, rng, salt=0):
     dls = rng.integers(50, 200, doc_ids.size).astype(np.int64)
     pdf = pd.DataFrame(encode_lists_columns(
         np.full(doc_ids.size, term_id, np.int64),
-        np.full(doc_ids.size, salt, np.int32), doc_ids, tfs, dls, AVGDL))
+        np.full(doc_ids.size, salt, np.int32), doc_ids, tfs, dls))
     return pdf, dict(zip(doc_ids.tolist(), tfs.tolist())), dict(
         zip(doc_ids.tolist(), dls.tolist()))
 
@@ -211,3 +214,44 @@ def test_conjunctive_term_absent_from_index_returns_no_rows():
     assert len(score_shard_queries(frame, qm, nq, AVGDL, K,
                                    conjunctive=True)) == 0
     assert len(score_shard_queries(frame, qm, nq, AVGDL, K))
+
+
+def test_bounds_are_exact_list_maxima():
+    """Each term's MaxScore bound is the exact max weight of its list after
+    the filter and tombstone masks, also when a mask removes the doc that
+    holds the unmasked list's max weight."""
+    rng = np.random.default_rng(19)
+    frame, lists = _shard(rng)
+    top = []
+    for tf, dl in lists.values():
+        docs = np.array(sorted(tf), dtype=np.int64)
+        w = bm25_weight_np(np.array([tf[d] for d in docs]),
+                           np.array([dl[d] for d in docs]), AVGDL)
+        top.append(int(docs[np.argmax(w)]))
+    top = np.array(sorted(top), dtype=np.int64)
+    everyone = np.arange(5000, dtype=np.int64)
+    for filt, excl in ((None, top), (np.setdiff1d(everyone, top), None)):
+        sl = ShardLists(frame, AVGDL, filter_ids=filt, exclude_ids=excl)
+        for t in lists:
+            d, w = sl.get(t)
+            assert not np.isin(top, d).any()
+            assert sl.sigma_base(t) == w.max()
+
+
+def test_one_decode_per_shard(monkeypatch):
+    """Scoring a multi-term batch over a several-file frame decodes every
+    list in one decode_blocks call, disjunctive and conjunctive."""
+    frame = _files(np.random.default_rng(23), 3)
+    real = wand.decode_blocks
+    calls = []
+
+    def counting(*args):
+        calls.append(len(args[0]))
+        return real(*args)
+
+    monkeypatch.setattr(wand, "decode_blocks", counting)
+    for conj in (False, True):
+        calls.clear()
+        assert len(score_shard_queries(frame, QMETA, NQ, AVGDL, K,
+                                       conjunctive=conj))
+        assert calls == [len(frame)]

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: batched disjunctive BM25
     top-10 for the reference query set, served from the COMPRESSED
-    term-sharded index via MaxScore-pruned scoring (the 100 TB serving
+    doc-sharded index via MaxScore-pruned scoring (the 100 TB serving
     path — no corpus-cardinality relation is ever broadcast; doc lengths
     ride inside the posting lists)."""
     from colbert_live_spark.entry_queries import q_bm25_topk_wand

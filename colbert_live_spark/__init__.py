@@ -9,9 +9,11 @@ cut (`colbert_live/colbert_live.py:189-200`), exact rescore
 This engine re-expresses that capability Spark-first as:
 
 - tokenize with JVM built-ins / vectorized Arrow UDFs (never per-row Python),
-- per-partition sorted posting lists, delta+varint list compression with
-  a per-list max-score bound (``index/codec.py``),
-- merge into term-sharded global postings with salting for head-term skew,
+- per-partition sorted posting lists, delta+varint list compression
+  (``index/codec.py``),
+- merge into global postings partitioned by doc shard
+  (``salt = hash(doc_id) mod D``, one row per (term_id, salt) list), which
+  also splits head-term lists,
 - query = broadcast query terms ⋈ postings → exact BM25 (k1=1.2, b=0.75)
   or MaxScore-pruned scoring → top-k, rank-identical to a pure-Python
   oracle (the analog of the reference's brute-force oracle ``tests/db.py:29-39``).

@@ -28,7 +28,10 @@ def _get_spark(app: str):
     if active is not None:
         return active
     if SparkConf().contains("spark.master"):
-        # launched via spark-submit: inherit master/conf from the submit
+        # launched via spark-submit: inherit master/conf from the submit.
+        # No spark.python.daemon.module here (get_spark sets it): under
+        # --py-files the package reaches a worker's path only per task,
+        # after the daemon has started, so the daemon could not import it.
         spark = (SparkSession.builder.appName(app)
                  .config("spark.sql.execution.arrow.pyspark.enabled", "true")
                  .getOrCreate())

@@ -354,7 +354,7 @@ _INDEX_CACHE: dict[str, str] = {}
 
 
 def built_index(spark, sf_dir: str) -> str:
-    """Build (once per sf_dir per process) the compressed term-sharded index
+    """Build (once per sf_dir per process) the compressed doc-sharded index
     for the documents corpus under /tmp; returns the index dir.
 
     ``SPARK_GRAFT_INDEX_ROOT``: when set, indexes build under that directory
@@ -383,7 +383,7 @@ def built_index(spark, sf_dir: str) -> str:
 
 
 def q_bm25_topk_wand(spark, sf_dir):
-    """Same answer as bm25_topk but served from the compressed term-sharded
+    """Same answer as bm25_topk but served from the compressed doc-sharded
     index via MaxScore-pruned scoring (oracle: identical SQL — a hash-match
     proves the codec+WAND path is rank/score-identical)."""
     from colbert_live_spark.operators.wand import wand_search

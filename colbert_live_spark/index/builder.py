@@ -20,9 +20,9 @@ dictionary with dense term ids + exact df/idf, the per-doc ``docs`` table
 (``salt = hash(doc_id) mod doc_shards`` — the same shard for every term, so
 one shard holds the complete mini-index of its doc subset), then the big
 merge-shuffle: hash ``repartition(term_id, salt)`` + ``sortWithinPartitions``
-+ streaming group-encode in ``mapInPandas`` → compressed term-sharded
-postings, one row per (term_id, salt) list, written sorted by term_id so
-parquet row-group stats prune query-time term lookups.
++ streaming group-encode in ``mapInPandas`` → compressed postings
+partitioned by doc shard, one row per (term_id, salt) list, written sorted
+by term_id so parquet row-group stats prune query-time term lookups.
 
 The doc-shard salt serves two masters at once:
 - **skew**: ``doc_shards >= ceil(max df / salt_rows)`` splits every posting
@@ -304,9 +304,9 @@ def merge_index(
     doc_shards_headroom: int = 1,
 ) -> None:
     """Stage 2: runs, dfs and doclens → dictionary (from dfs only), the
-    ``docs`` table, compressed term-sharded postings and ``_INDEX_META.json``
-    (n_docs / avgdl / sum_dl / max_doc_id straight from doclens, and the
-    :data:`LAYOUT` stamp).
+    ``docs`` table, compressed postings partitioned by doc shard and
+    ``_INDEX_META.json`` (n_docs / avgdl / sum_dl / max_doc_id straight from
+    doclens, and the :data:`LAYOUT` stamp).
 
     The postings come from one merge shuffle of ``(term_id, salt, doc_id,
     tf)`` rows, hash-partitioned by salt and sorted by (term_id, salt,

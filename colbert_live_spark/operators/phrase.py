@@ -101,7 +101,7 @@ def phrase_search_indexed(
     candidates: int = 64,
     text_col: str = "text",
 ) -> DataFrame:
-    """Phrase top-k served from the compressed term-sharded index:
+    """Phrase top-k served from the compressed doc-sharded index:
     the conjunctive serving core produces the BM25 top-``candidates`` per
     query (the rescore budget), the candidates' text is gathered and
     phrase-verified, survivors re-ranked to top-k. ``docs`` provides the

@@ -27,9 +27,11 @@ tombstones and an identity term map.
      "one user waits" path);
    - :func:`run_spark` runs AT MOST ONE TASK PER CORE (``mapInPandas``
      over ``spark.range``), each scoring a doc-disjoint file subset. A
-     Python worker round costs far more than decoding one file, so fewer,
-     fatter tasks win. With a ``doc_filter`` the 8-byte filter ids group by
-     doc shard and each group task scores that shard's files; it is the
+     Python task round costs ~0.15 s (a no-op 4-task round on
+     ``local[4]``, against ~0.11 s for a JVM-only job), more than decoding
+     one file, so fewer, fatter tasks win. With a ``doc_filter`` the
+     8-byte filter ids group by doc shard and each group task scores that
+     shard's files; it is the
      only shuffle before the merge of ≤ k rows per query and task.
      Compressed list bytes never enter an Exchange.
 

@@ -7,7 +7,16 @@ chosen to also be correct at 1000-executor / 100 TB scale:
 - Arrow enabled for every JVM<->Python boundary,
 - shuffle partitions sized to cores locally (cluster deployments override via
   ``spark-submit --conf``; the engine never hard-codes partition counts into
-  logic — layout decisions use ``df.rdd.getNumPartitions()`` or explicit args).
+  logic — layout decisions use ``df.rdd.getNumPartitions()`` or explicit args),
+- Python workers fork from ``colbert_live_spark.daemon``
+  (``spark.python.daemon.module``), which makes zipimport cache invalidation
+  lazy on CPython 3.10-3.12 as 3.13 does (gh-103200): worker setup calls
+  ``importlib.invalidate_caches()`` once per task, which otherwise makes
+  each zipimporter (on ``pyspark.zip``, py4j's zip, the spark-core jar)
+  re-read its archive's central directory. Only sessions made here run it;
+  a spark-submit session keeps pyspark's daemon. Workers must import this
+  package (from the driver's working directory or ``PYTHONPATH``), as the
+  engine's own UDFs already must; otherwise no Python task starts.
 """
 
 from __future__ import annotations
@@ -102,6 +111,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
+        # workers fork from a daemon that makes per-task zip-cache
+        # invalidation lazy (see colbert_live_spark/daemon.py)
+        .config("spark.python.daemon.module", "colbert_live_spark.daemon")
     )
     # local-mode shuffle goes through spark.local.dir; on this sandbox the
     # default /tmp is a virtual disk while /dev/shm is a 126G tmpfs — keep

@@ -19,8 +19,9 @@ dictionary with dense term ids + exact df/idf, the per-doc ``docs`` table
 (doc lengths + doc metadata, partitioned by doc shard), a global doc-shard salt
 (``salt = hash(doc_id) mod doc_shards`` — the same shard for every term, so
 one shard holds the complete mini-index of its doc subset), then the big
-merge-shuffle: hash ``repartition(term_id, salt)`` + ``sortWithinPartitions``
-+ streaming group-encode in ``mapInPandas`` → compressed postings
+merge-shuffle: hash ``repartition(doc_shards, "salt")`` +
+``sortWithinPartitions`` + streaming group-encode in ``mapInPandas`` →
+compressed postings
 partitioned by doc shard, one row per (term_id, salt) list, written sorted
 by term_id so parquet row-group stats prune query-time term lookups.
 
@@ -31,14 +32,15 @@ The doc-shard salt serves two masters at once:
 - **batched serving**: because the shard is doc-complete across terms and
   written as one file, files are doc-disjoint: a serving task scores ALL
   queries of a batch over any subset of files (at most one task per core)
-  and only k rows per (query, task) merge globally.
+  and only k rows per (query, task) reach the driver's merge.
   Compressed lists never move, independent of batch size (see
   operators/wand.py).
 
 Scale notes:
-- the ONLY large shuffle is the hash repartition of runs on (term_id, salt);
-  the doc-shard salt bounds the largest group to ~``salt_rows`` rows
-  regardless of Zipf skew.
+- the ONLY large shuffle is the hash repartition of runs on the salt
+  alone, one partition per doc shard; the doc-shard salt bounds the
+  largest (term, salt) group to ~``salt_rows`` rows regardless of Zipf
+  skew.
 - doc-sharding cost: a tail term with df < doc_shards spreads over df
   single-posting lists, each row repeating its own term_id, first_doc and
   n. Bounded: tail terms are a minority of postings under

@@ -388,7 +388,9 @@ def segment_search(
     monolithic index rebuilt over exactly the live (non-deleted) docs:
     :func:`~colbert_live_spark.operators.wand.resolve` + at most one Spark
     task per core, each scoring a doc-disjoint subset of the (segment,
-    postings file) pairs and excluding its files' salts' tombstones."""
+    postings file) pairs and excluding its files' salts' tombstones. The
+    batch runs when this is called; the returned frame holds its ranked
+    rows on the driver."""
     return run_spark(spark, resolve(root, queries), k, prune, conjunctive)
 
 

@@ -31,9 +31,14 @@ tombstones and an identity term map.
      ``local[4]``, against ~0.11 s for a JVM-only job), more than decoding
      one file, so fewer, fatter tasks win. With a ``doc_filter`` the
      8-byte filter ids group by doc shard and each group task scores that
-     shard's files; it is the
-     only shuffle before the merge of ≤ k rows per query and task.
-     Compressed list bytes never enter an Exchange.
+     shard's files; that grouping is the only shuffle. Compressed list
+     bytes never enter an Exchange.
+3. Both executors end in the same driver-side finaliser,
+   :func:`rank_partials`, over ≤ k rows per query and scored subset: the
+   Spark executor collects its partials through Arrow in its one scoring
+   job, so no second distributed round ranks them (the reference, too,
+   ends in an in-process top-k over a bounded candidate set,
+   `colbert_live/colbert_live.py:199-208`).
 
 The layout is checked, never worked around: a source without the builder's
 layout stamp, a shard split across several postings files, or tombstones
@@ -60,10 +65,12 @@ import math
 import re
 import threading
 from collections import OrderedDict
+from contextlib import contextmanager
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -378,12 +385,6 @@ def shard_expr(doc_id_col, doc_shards: int):
                   F.lit(doc_shards)).cast("int")
 
 
-def merge_topk(partial: DataFrame, k: int) -> DataFrame:
-    """Global merge of per-shard candidates: D·k tiny rows per query."""
-    from colbert_live_spark.operators.bm25 import topk
-    return topk(partial, k)
-
-
 # ------------------------------------------------------ driver-side cache
 
 # One entry per index dir or segment root, valid for ONE meta/manifest text:
@@ -642,8 +643,9 @@ def score_files(plan: Plan, files: list[FileTask], k: int, prune: bool,
 # ----------------------------------------------------------- executors
 
 def rank_partials(partial: pd.DataFrame, k: int) -> pd.DataFrame:
-    """In-process :func:`merge_topk`: (query_id, rank, doc_id, score), the
-    top ``k`` per query in (score DESC, doc_id) order."""
+    """The one finaliser of both executors: (query_id, rank, doc_id, score),
+    the top ``k`` per query of the doc-disjoint partials, in (score DESC,
+    doc_id) order."""
     qids, q = np.unique(partial["query_id"].to_numpy(), return_inverse=True)
     d, s = partial["doc_id"].to_numpy(), partial["score"].to_numpy()
     order = np.lexsort((d, -s, q))
@@ -669,51 +671,72 @@ def run_local(plan: Plan | None, k: int, prune: bool = True,
                                      filter_ids, src.excl), k)
 
 
-def run_spark(spark: SparkSession, plan: Plan | None, k: int,
-              prune: bool = True, conjunctive: bool = False,
-              doc_filter: DataFrame | None = None) -> DataFrame:
-    """Spark executor: ``p = min(files, defaultParallelism)`` tasks over
-    ``spark.range`` (no Python-side RDD), task ``i`` scoring the doc-disjoint
-    subset ``files[i::p]`` — at most one task, hence one Python worker
-    round, per core. With a ``doc_filter``, one ``groupBy(shard)`` task per
-    shard over that shard's files. Both end in :func:`merge_topk`."""
-    if plan is None or not plan.files:
-        return spark.createDataFrame([], OUT_SCHEMA)
+@contextmanager
+def scoring_frame(spark: SparkSession, plan: Plan, k: int, prune: bool = True,
+                  conjunctive: bool = False,
+                  doc_filter: DataFrame | None = None):
+    """The distributed scoring stage of a non-empty plan, as a frame of
+    PARTIAL_SCHEMA rows, ≤ k per query and task: ``p = min(files,
+    defaultParallelism)`` tasks over ``spark.range`` (no Python-side RDD),
+    task ``i`` scoring the doc-disjoint subset ``files[i::p]`` — at most
+    one task, hence one Python worker round, per core. With a
+    ``doc_filter``, one ``groupBy(shard)`` task per shard over that shard's
+    files. The plan rides a broadcast that is destroyed on exit, so the
+    frame must run inside the ``with`` block."""
     bc = spark.sparkContext.broadcast(plan._replace(source=None))
+    try:
+        if doc_filter is None:
+            p = min(len(plan.files), spark.sparkContext.defaultParallelism)
 
-    if doc_filter is None:
-        p = min(len(plan.files), spark.sparkContext.defaultParallelism)
+            def run_subsets(it):
+                pl = bc.value
+                for pdf in it:
+                    for i in pdf["id"]:
+                        out = score_files(pl, pl.files[int(i)::p], k, prune,
+                                          conjunctive)
+                        if len(out):
+                            yield out
 
-        def run_subsets(it):
-            pl = bc.value
-            for pdf in it:
-                for i in pdf["id"]:
-                    out = score_files(pl, pl.files[int(i)::p], k, prune,
-                                      conjunctive)
-                    if len(out):
-                        yield out
-
-        partial = spark.range(0, p, 1, p).mapInPandas(run_subsets,
+            yield spark.range(0, p, 1, p).mapInPandas(run_subsets,
                                                       schema=PARTIAL_SCHEMA)
-    else:
-        # A doc only scores in its own shard: shards without permitted ids
-        # are never read.
-        def run_shard(key: tuple, filt: pd.DataFrame) -> pd.DataFrame:
-            pl = bc.value
-            mine = [f for f in pl.files if f.salt == int(key[0])]
-            if not mine:
-                return _empty_partial()
-            return score_files(pl, mine, k, prune, conjunctive,
-                               np.unique(filt["doc_id"].to_numpy(np.int64)))
+        else:
+            # A doc only scores in its own shard: shards without permitted
+            # ids are never read.
+            def run_shard(key: tuple, filt: pd.DataFrame) -> pd.DataFrame:
+                pl = bc.value
+                mine = [f for f in pl.files if f.salt == int(key[0])]
+                if not mine:
+                    return _empty_partial()
+                ids = np.unique(filt["doc_id"].to_numpy(np.int64))
+                return score_files(pl, mine, k, prune, conjunctive, ids)
 
-        partial = (doc_filter
+            yield (doc_filter
                    .select(F.col(doc_filter.columns[0]).cast("long")
                            .alias("doc_id"))
                    .withColumn("shard", shard_expr(F.col("doc_id"),
                                                    plan.doc_shards))
                    .groupBy("shard")
                    .applyInPandas(run_shard, schema=PARTIAL_SCHEMA))
-    return merge_topk(partial, k)
+    finally:
+        bc.destroy()
+
+
+def run_spark(spark: SparkSession, plan: Plan | None, k: int,
+              prune: bool = True, conjunctive: bool = False,
+              doc_filter: DataFrame | None = None) -> DataFrame:
+    """Spark executor: runs the :func:`scoring_frame` job, collects its
+    partials through Arrow and ranks them on the driver with
+    :func:`rank_partials`, the finaliser :func:`run_local` uses too. The
+    batch runs when this is called; the result is a local relation, so
+    reading it back runs no Python task and no shuffle."""
+    partial = _empty_partial()
+    if plan is not None and plan.files:
+        with scoring_frame(spark, plan, k, prune, conjunctive,
+                           doc_filter) as frame:
+            partial = frame.toPandas()
+    return spark.createDataFrame(
+        pa.Table.from_pandas(rank_partials(partial, k), preserve_index=False),
+        OUT_SCHEMA)
 
 
 # ------------------------------------------------------- public entry points
@@ -759,6 +782,9 @@ def wand_search(
     docs — the composable metadata predicate, distributed end to end (the
     ids shuffle by doc shard, never to the driver; reference analog: tag
     filter inside the ANN scan, `example/cmdline/db.py:82-88`). Corpus
-    statistics stay GLOBAL, matching the reference's semantics."""
+    statistics stay GLOBAL, matching the reference's semantics.
+
+    The batch runs when this is called; the returned frame holds its
+    ranked rows on the driver."""
     return run_spark(spark, resolve(index_dir, queries), k, prune,
                      conjunctive, doc_filter)

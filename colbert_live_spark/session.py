@@ -14,9 +14,11 @@ chosen to also be correct at 1000-executor / 100 TB scale:
   ``importlib.invalidate_caches()`` once per task, which otherwise makes
   each zipimporter (on ``pyspark.zip``, py4j's zip, the spark-core jar)
   re-read its archive's central directory. Only sessions made here run it;
-  a spark-submit session keeps pyspark's daemon. Workers must import this
-  package (from the driver's working directory or ``PYTHONPATH``), as the
-  engine's own UDFs already must; otherwise no Python task starts.
+  a spark-submit session keeps pyspark's daemon.
+- the directory this package is imported from goes on the workers' path
+  (``spark.executorEnv.PYTHONPATH``, which Spark merges with the worker's
+  own), so the daemon and the engine's UDFs import it whatever the
+  driver's working directory and ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -24,6 +26,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# get_spark only makes local[...] sessions: their workers share this
+# process's file system, so the package's parent dir is valid there too
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def is_bare_scan(df) -> bool:
@@ -114,6 +120,7 @@ def get_spark(
         # workers fork from a daemon that makes per-task zip-cache
         # invalidation lazy (see colbert_live_spark/daemon.py)
         .config("spark.python.daemon.module", "colbert_live_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     # local-mode shuffle goes through spark.local.dir; on this sandbox the
     # default /tmp is a virtual disk while /dev/shm is a 126G tmpfs — keep

@@ -18,7 +18,8 @@ from colbert_live_spark.index.builder import (
 from colbert_live_spark.index.segments import (
     add_segment, compact, delete_docs, segment_search, segment_search_local,
     update_docs)
-from colbert_live_spark.operators.wand import wand_search, wand_search_local
+from colbert_live_spark.operators.wand import (
+    resolve, scoring_frame, wand_search, wand_search_local)
 from colbert_live_spark.oracle import oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
 from conftest import jobs_of
@@ -155,14 +156,15 @@ def test_local_mode_doc_filter(spark, index_dir, documents, oracle_index):
 
 
 def test_doc_filter_is_distributed(spark, index_dir, documents):
-    """The filtered path must shuffle the filter ids by doc shard (a
-    FlatMapGroupsInPandas over the id rows), never collect them to the
-    driver — and it must NOT move block bytes (no cogroup of the postings
-    scan)."""
+    """The filtered path's scoring stage must shuffle the filter ids by doc
+    shard (a FlatMapGroupsInPandas over the id rows), never collect them
+    to the driver — and it must NOT move list bytes (no cogroup of the
+    postings scan)."""
     from pyspark.sql import functions as F
     en = documents.filter(F.col("lang") == "en").select("doc_id")
-    df = wand_search(spark, index_dir, DOC_QUERIES, k=K, doc_filter=en)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with scoring_frame(spark, resolve(index_dir, DOC_QUERIES), K,
+                       doc_filter=en) as df:
+        plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan, plan[:2000]
     assert "FlatMapCoGroupsInPandas" not in plan
     assert "BatchEvalPython" not in plan

@@ -53,78 +53,88 @@ def test_no_row_python_in_all_entry_queries(spark):
         assert_no_python_row_udf(df)
 
 
+def _serving_plans(spark, path, search, doc_filter=None):
+    """(scoring-stage plan, returned frame's plan) of one serving batch:
+    the scoring stage is the frame ``run_spark`` itself collects."""
+    from colbert_live_spark.operators.wand import resolve, scoring_frame
+    from colbert_live_spark.queryset import DOC_QUERIES
+    kw = {} if doc_filter is None else {"doc_filter": doc_filter}
+    with scoring_frame(spark, resolve(path, DOC_QUERIES), 10,
+                       **kw) as scoring:
+        plan = physical_plan(scoring)
+    return plan, physical_plan(search(spark, path, DOC_QUERIES, k=10, **kw))
+
+
+def _assert_ranked_on_driver(result_plan: str):
+    """The batch is ranked on the driver: the returned frame is a bare
+    local relation, with no Exchange and no Window after the scoring job."""
+    assert result_plan.strip().startswith("LocalTableScan"), result_plan
+    assert len(result_plan.strip().splitlines()) == 1, result_plan
+    assert "Exchange" not in result_plan, result_plan
+    assert "Window" not in result_plan, result_plan
+
+
 def test_wand_search_plan(spark):
-    """Serving plan shape: one MapInPandas task per
-    postings file, NO shuffle of block bytes anywhere — the only Exchange
-    in the plan is the tiny D·k-per-query merge keyed on query_id."""
+    """Serving plan shape: at most one MapInPandas task per core scores
+    the postings files, NO shuffle of list bytes anywhere, and the ≤ k
+    rows per query and task are ranked on the driver."""
     from colbert_live_spark.entry_queries import built_index
     from colbert_live_spark.operators.wand import wand_search
-    from colbert_live_spark.queryset import DOC_QUERIES
     idx = built_index(spark, "/root/testdata/sf0.001")
-    df = wand_search(spark, idx, DOC_QUERIES, k=10)
-    plan = physical_plan(df)
+    plan, result = _serving_plans(spark, idx, wand_search)
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan
     assert "BatchEvalPython" not in plan
-    # block bytes must never shuffle: no Exchange keyed on the shard salt
+    # list bytes must never shuffle: no Exchange keyed on the shard salt
     assert "hashpartitioning(salt" not in plan
-    # the global merge's row_number top-k must compile to WindowGroupLimit
-    # (partial per-map-partition top-k BEFORE the shuffle) — this is what
-    # bounds merge shuffle volume at partitions×k per query independent of
-    # the doc-shard count D (SCALE.md §2)
-    assert "WindowGroupLimit" in plan
+    _assert_ranked_on_driver(result)
 
 
 def test_wand_search_filtered_plan(spark):
     """The doc_filter path shuffles ONLY the 8-byte filter-id rows
-    (grouped by doc shard); blocks are pyarrow-read inside each group task
-    — no cogroup, no Exchange of block bytes, no row-Python."""
+    (grouped by doc shard); lists are pyarrow-read inside each group task
+    — no cogroup, no Exchange of list bytes, no row-Python."""
     from colbert_live_spark.entry_queries import built_index
     from colbert_live_spark.operators.wand import wand_search
-    from colbert_live_spark.queryset import DOC_QUERIES
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     idx = built_index(spark, "/root/testdata/sf0.001")
     en = docs.filter(F.col("lang") == "en").select("doc_id")
-    df = wand_search(spark, idx, DOC_QUERIES, k=10, doc_filter=en)
-    plan = physical_plan(df)
+    plan, result = _serving_plans(spark, idx, wand_search, doc_filter=en)
     assert "FlatMapGroupsInPandas" in plan
     assert "FlatMapCoGroupsInPandas" not in plan
     assert "BatchEvalPython" not in plan
-    # the only pre-merge Exchange keys on the filter ids' shard column —
-    # block bytes (the postings scan) never appear upstream of a shuffle
+    # the only Exchange keys on the filter ids' shard column — list bytes
+    # (the postings scan) never appear upstream of a shuffle
     assert "hashpartitioning(salt" not in plan
-    assert "WindowGroupLimit" in plan
+    _assert_ranked_on_driver(result)
 
 
 def test_segment_search_plan(spark):
-    """Segmented serving: one MapInPandas task per (segment, postings
-    file), no cogroup, no block-byte shuffle (VERDICT r3 ask #1)."""
+    """Segmented serving: MapInPandas tasks over (segment, postings file)
+    subsets, no cogroup, no list-byte shuffle, ranked on the driver."""
     from colbert_live_spark.entry_queries import built_live_root
     from colbert_live_spark.index.segments import segment_search
-    from colbert_live_spark.queryset import DOC_QUERIES
     root = built_live_root(spark, "/root/testdata/sf0.001")
-    df = segment_search(spark, root, DOC_QUERIES, k=10)
-    plan = physical_plan(df)
+    plan, result = _serving_plans(spark, root, segment_search)
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan
     assert "FlatMapCoGroupsInPandas" not in plan
     assert "BatchEvalPython" not in plan
     assert "hashpartitioning(salt" not in plan
-    assert "WindowGroupLimit" in plan
+    _assert_ranked_on_driver(result)
 
 
 def test_segment_search_tombstoned_plan(spark):
     """Tombstones keep the file-task topology: each task reads its own
-    shard's tombstone slice, nothing cogroups with the blocks."""
+    shard's tombstone slice, nothing cogroups with the lists."""
     from colbert_live_spark.entry_queries import built_deleted_root
     from colbert_live_spark.index.segments import segment_search
-    from colbert_live_spark.queryset import DOC_QUERIES
     root = built_deleted_root(spark, "/root/testdata/sf0.001")
-    df = segment_search(spark, root, DOC_QUERIES, k=10)
-    plan = physical_plan(df)
+    plan, result = _serving_plans(spark, root, segment_search)
     assert "MapInPandas" in plan
     assert "FlatMapCoGroupsInPandas" not in plan
     assert "hashpartitioning(salt" not in plan
+    _assert_ranked_on_driver(result)
 
 
 def test_phrase_verify_tokenizes_candidates_only(spark):

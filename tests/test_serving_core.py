@@ -154,11 +154,11 @@ def test_serving_job_ceilings(spark, sources, documents):
     root = sources["tombstoned"][0]
     en = documents.filter(F.col("lang") == "en").select("doc_id")
     calls = {
-        "wand_search": (2, lambda: wand_search(
+        "wand_search": (1, lambda: wand_search(
             spark, idx, DOC_QUERIES, k=K).collect()),
-        "wand_search doc_filter": (3, lambda: wand_search(
+        "wand_search doc_filter": (2, lambda: wand_search(
             spark, idx, DOC_QUERIES, k=K, doc_filter=en).collect()),
-        "segment_search tombstoned": (2, lambda: segment_search(
+        "segment_search tombstoned": (1, lambda: segment_search(
             spark, root, DOC_QUERIES, k=K).collect()),
         "wand_search_local": (0, lambda: wand_search_local(
             idx, DOC_QUERIES, k=K)),
@@ -181,10 +181,27 @@ def test_scoring_stage_task_ceiling(spark, sources):
         jobs = jobs_of(spark, lambda: segment_search(
             spark, root, DOC_QUERIES, k=K).collect())
         tracker = sc.statusTracker()
-        # the scoring stage is the first one submitted; the merge reads
-        # its shuffle output in later stages
+        # the scoring stage is the first one submitted; the batch is
+        # ranked on the driver, so no later stage reads its output
         scoring = min(s for j in jobs for s in tracker.getJobInfo(j).stageIds)
         assert tracker.getStageInfo(scoring).numTasks <= cores, source
+
+
+def test_spark_serving_leaves_no_broadcast_files(spark, sources, documents):
+    """Each Spark serving batch broadcasts its plan and destroys it once
+    the partials are collected: repeated calls leave no file behind in
+    the driver's temp dir."""
+    import os
+    idx = sources["monolithic"][0]
+    root = sources["tombstoned"][0]
+    en = documents.filter(F.col("lang") == "en").select("doc_id")
+    temp = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp))
+    for _ in range(3):
+        wand_search(spark, idx, DOC_QUERIES, k=K).collect()
+        wand_search(spark, idx, DOC_QUERIES, k=K, doc_filter=en).collect()
+        segment_search(spark, root, DOC_QUERIES, k=K).collect()
+    assert len(os.listdir(temp)) == before
 
 
 def test_conjunctive_composes_with_doc_filter(spark, documents, oracle_index,

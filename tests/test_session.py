@@ -1,5 +1,6 @@
 """Session helpers: ``spread_input`` only spreads bare file scans; Python
-workers start through the engine's daemon (lazy zip-cache invalidation)."""
+workers start through the engine's daemon (lazy zip-cache invalidation),
+from any driver working directory."""
 from __future__ import annotations
 
 import os
@@ -110,3 +111,37 @@ def test_lazy_zip_invalidation_rereads_changed_archive():
                          capture_output=True, text=True, timeout=60)
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "ok"
+
+
+_WORKER_IMPORT_SCRIPT = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from colbert_live_spark.session import get_spark
+
+def where(batches):
+    import colbert_live_spark
+    for pdf in batches:
+        yield pdf.assign(path=colbert_live_spark.__file__)
+
+spark = get_spark("worker-import", cores=1)
+rows = spark.range(1, numPartitions=1).mapInPandas(
+    where, "id long, path string").collect()
+spark.stop()
+print(rows[0].path)
+"""
+
+
+def test_workers_import_package_from_any_cwd(tmp_path):
+    """Python workers start and import the engine when the driver runs
+    outside the checkout with no ``PYTHONPATH``: the session puts the
+    package's parent dir on the workers' path. Runs in a subprocess: it
+    needs its own JVM and working directory."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, "-c", _WORKER_IMPORT_SCRIPT, repo],
+                         cwd=tmp_path, env=env, capture_output=True,
+                         text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert out.stdout.strip().splitlines()[-1].startswith(
+        os.path.join(repo, "colbert_live_spark")), out.stdout

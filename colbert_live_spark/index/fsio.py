@@ -89,12 +89,14 @@ def write_text_atomic(path: str, text: str) -> None:
 
 
 def write_parquet_atomic(path: str, table) -> None:
+    """Write ``table`` to ``path`` atomically, zstd like the Spark-written
+    index files (``builder.index_writer``)."""
     import pyarrow.parquet as pq
     f, p = resolve(path)
     parent = p.rsplit("/", 1)[0]
     f.create_dir(parent, recursive=True)
     tmp = f"{parent}/.tmp-{uuid.uuid4().hex}"
-    pq.write_table(table, tmp, filesystem=f)
+    pq.write_table(table, tmp, filesystem=f, compression="zstd")
     f.move(tmp, p)
 
 

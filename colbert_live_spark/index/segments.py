@@ -52,7 +52,8 @@ from pyspark.sql import functions as F
 
 from colbert_live_spark.index import fsio
 from colbert_live_spark.index.builder import (
-    LAYOUT, _write_group, build_index, merge_index, require_layout)
+    LAYOUT, _write_group, build_index, index_writer, merge_index,
+    require_layout)
 from colbert_live_spark.operators.wand import (
     resolve, run_local, run_spark, shard_expr)
 
@@ -323,12 +324,12 @@ def _stage_delete(spark: SparkSession, root: str, m: dict,
     delta_rel = f"tombstones/delta-{tag}"
     # partitioned by doc shard (= the postings salt), so each serving file
     # task reads only its own salt's slice of the tombstones
-    (docdl.select("doc_id")
-     .withColumn("shard", shard_expr(F.col("doc_id"), m["doc_shards"]))
-     .repartition(1).write.partitionBy("shard").mode("overwrite")
-     .parquet(f"{root}/{tomb_rel}"))
-    agg.repartition(1).write.mode("overwrite").parquet(
-        f"{root}/{delta_rel}")
+    (index_writer(docdl.select("doc_id")
+                  .withColumn("shard",
+                              shard_expr(F.col("doc_id"), m["doc_shards"]))
+                  .repartition(1))
+     .partitionBy("shard").parquet(f"{root}/{tomb_rel}"))
+    index_writer(agg.repartition(1)).parquet(f"{root}/{delta_rel}")
     t = m["tombstones"]
     t["files"].append(tomb_rel)
     t["delta_files"].append(delta_rel)

@@ -32,6 +32,17 @@ def jobs_of(spark, call) -> list[int]:
     return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def ranked(result) -> dict:
+    """{query_id -> [(doc_id, score)] in rank order} of a search result,
+    a Spark DataFrame or a pandas frame."""
+    if hasattr(result, "toPandas"):
+        result = result.toPandas()
+    out: dict = {}
+    for r in result.sort_values(["query_id", "rank"]).itertuples():
+        out.setdefault(r.query_id, []).append((r.doc_id, r.score))
+    return out
+
+
 @pytest.fixture(scope="session")
 def mockfs_base():
     return os.environ["SPARK_GRAFT_MOCKFS_BASE"]

@@ -2,27 +2,31 @@
 pruned == unpruned (safe pruning), checkpoint/resume equivalence (and its
 refusal of drifted inputs), transformed inputs indexed as given, concurrent
 group builds, the index dir layout (each fact stored once, one file per
-salt, one postings row per list), the refusal of any other layout, and
-the Spark job ceilings of a build and of a segment root's writes."""
+salt, one postings row per list), the index file format (zstd, v2 pages,
+sorted stage-1 files) and the serving of files in the older snappy/v1
+format, the refusal of any other layout, and the Spark job ceilings of a
+build and of a segment root's writes."""
 from __future__ import annotations
 
 import glob
 import math
+import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from colbert_live_spark.index.builder import (
-    LAYOUT, LIST_SCHEMA, RUN_SCHEMA, build_index, build_runs, merge_index)
+    LAYOUT, LIST_SCHEMA, RUN_SCHEMA, build_index, build_runs,
+    completed_group_files, merge_index)
 from colbert_live_spark.index.segments import (
     add_segment, compact, delete_docs, segment_search, segment_search_local,
     update_docs)
 from colbert_live_spark.operators.wand import (
     resolve, scoring_frame, wand_search, wand_search_local)
-from colbert_live_spark.oracle import oracle_search
+from colbert_live_spark.oracle import build_oracle_index, oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
-from conftest import jobs_of
+from conftest import jobs_of, ranked
 
 K = 10
 ATOL = 1e-9
@@ -45,11 +49,30 @@ def index_dir(spark, documents, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def tombstoned_root(spark, documents, tmp_path_factory):
+    """A root of two segments (the corpus in two id-contiguous halves, so
+    global ids equal the corpus ids) with docs 3, 10, 17, ... deleted."""
+    root = str(tmp_path_factory.mktemp("root") / "root")
+    half = documents.count() // 2
+    add_segment(spark, documents.filter(F.col("doc_id") < half), root,
+                salt_rows=100)
+    add_segment(spark, documents.filter(F.col("doc_id") >= half)
+                .withColumn("doc_id", F.col("doc_id") - half), root,
+                salt_rows=100)
+    assert delete_docs(spark, root, list(range(3, 1000, 7))) > 0
+    return root
+
+
 def _collect(df):
     out = {}
     for r in df.orderBy("query_id", "rank").collect():
         out.setdefault(r.query_id, []).append((r.doc_id, r.score))
     return out
+
+
+def _parquet_files(top: str) -> list[str]:
+    return sorted(glob.glob(f"{top}/**/*.parquet", recursive=True))
 
 
 def test_wand_rank_identical_to_oracle(spark, index_dir, oracle_index):
@@ -76,8 +99,7 @@ def test_checkpoint_resume_equivalence(spark, documents, tmp_path_factory,
     out = str(tmp_path_factory.mktemp("resume") / "idx")
     with pytest.raises(RuntimeError, match="injected failure"):
         build_runs(spark, documents, out, n_groups=4, fail_after_group=2)
-    from colbert_live_spark.index.builder import completed_groups
-    done = completed_groups(out)
+    done = set(completed_group_files(out))
     assert len(done) == 2
     processed = build_runs(spark, documents, out, n_groups=4)
     assert len(processed) == 2 and set(processed).isdisjoint(done)
@@ -361,9 +383,8 @@ def test_concurrent_group_build_identical(spark, documents,
     for out, conc in ((seq_dir, 1), (conc_dir, 3)):
         build_runs(spark, documents, out, n_groups=4, max_concurrency=conc)
         merge_index(spark, out, n_shards=4, salt_rows=100)
-    from colbert_live_spark.index.builder import completed_groups
-    assert completed_groups(seq_dir) == completed_groups(
-        conc_dir) == {0, 1, 2, 3}
+    assert set(completed_group_files(seq_dir)) == set(completed_group_files(
+        conc_dir)) == {0, 1, 2, 3}
     a = {(r.query_id, r.rank): (r.doc_id, round(r.score, 9))
          for r in wand_search(spark, seq_dir, DOC_QUERIES, k=K).collect()}
     b = {(r.query_id, r.rank): (r.doc_id, round(r.score, 9))
@@ -411,6 +432,104 @@ def test_index_dir_layout(spark, index_dir):
     assert docs.filter(
         F.pmod(F.xxhash64("doc_id"), F.lit(meta["doc_shards"]))
         != F.col("salt")).count() == 0
+
+
+def _assert_index_format(files: list[str]) -> None:
+    """Every column chunk zstd, the postings term_id delta-encoded (v2
+    pages), each runs file (term, doc_id)-sorted, each dfs file
+    term-sorted."""
+    import pyarrow.parquet as pq
+    postings = 0
+    for f in files:
+        pf = pq.ParquetFile(f)
+        for g in range(pf.metadata.num_row_groups):
+            rg = pf.metadata.row_group(g)
+            for c in range(rg.num_columns):
+                col = rg.column(c)
+                assert col.compression == "ZSTD", (f, col.path_in_schema)
+                if "/postings/" in f and col.path_in_schema == "term_id":
+                    assert "DELTA_BINARY_PACKED" in col.encodings, f
+                    postings += 1
+        key = (["term", "doc_id"] if "/runs/" in f
+               else ["term"] if "/dfs/" in f else None)
+        if key:
+            rows = pf.read(columns=key).to_pylist()
+            keys = [tuple(r[k] for k in key) for r in rows]
+            assert keys == sorted(keys), f
+    assert postings > 0
+
+
+def test_index_files_zstd_v2_and_sorted(spark, index_dir, tombstoned_root,
+                                        tmp_path):
+    """Every parquet file a build, two ingests, a delete and a compaction
+    write is zstd; the postings carry v2 pages; stage-1 runs and dfs are
+    written sorted (builder.index_writer and its callers)."""
+    root = str(tmp_path / "root")
+    shutil.copytree(tombstoned_root, root)
+    files = _parquet_files(index_dir) + _parquet_files(root)
+    for part in ("/ledger/", "/dict/", "/docs/", "/doclens/",
+                 "/tombstones/tomb-", "/tombstones/delta-"):
+        assert any(part in f for f in files), part
+    _assert_index_format(files)
+    seg = compact(spark, root, salt_rows=100)
+    _assert_index_format(_parquet_files(f"{root}/segments/{seg}"))
+
+
+def _rewrite_snappy_v1(top: str) -> None:
+    """Rewrite every parquet file under ``top`` in place, same rows, with
+    snappy and v1 data pages: the format written before every index file
+    was zstd with v2 pages. The stale Hadoop checksum files go too."""
+    import pyarrow.parquet as pq
+    for f in _parquet_files(top):
+        pq.write_table(pq.ParquetFile(f).read(), f, compression="snappy",
+                       data_page_version="1.0")
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
+def _assert_same_answers(a: dict, b: dict) -> None:
+    assert a.keys() == b.keys() and a
+    for qid in a:
+        assert [d for d, _ in a[qid]] == [d for d, _ in b[qid]], qid
+        for (_, s1), (_, s2) in zip(a[qid], b[qid]):
+            assert math.isclose(s1, s2, abs_tol=ATOL), (qid, s1, s2)
+
+
+def test_old_format_files_still_serve(spark, documents, index_dir,
+                                      tombstoned_root, tmp_path):
+    """An index and a tombstoned two-segment root rewritten snappy with v1
+    pages answer exactly like the zstd/v2 originals on every executor, and
+    the rewritten root still takes a delete and a compaction: Spark and
+    pyarrow read both formats, so LAYOUT does not change with the
+    format."""
+    import pyarrow.parquet as pq
+    idx, root = str(tmp_path / "idx"), str(tmp_path / "root")
+    shutil.copytree(index_dir, idx)
+    shutil.copytree(tombstoned_root, root)
+    _rewrite_snappy_v1(idx)
+    _rewrite_snappy_v1(root)
+    assert {pq.ParquetFile(f).metadata.row_group(0).column(0).compression
+            for f in _parquet_files(idx) + _parquet_files(root)
+            if pq.ParquetFile(f).metadata.num_row_groups} == {"SNAPPY"}
+    for new, old, on_spark, local in (
+            (index_dir, idx, wand_search, wand_search_local),
+            (tombstoned_root, root, segment_search, segment_search_local)):
+        _assert_same_answers(
+            ranked(on_spark(spark, new, DOC_QUERIES, k=K)),
+            ranked(on_spark(spark, old, DOC_QUERIES, k=K)))
+        _assert_same_answers(ranked(local(new, DOC_QUERIES, k=K)),
+                             ranked(local(old, DOC_QUERIES, k=K)))
+    assert delete_docs(spark, root, [0, 1, 2]) == 3
+    compact(spark, root, salt_rows=100)
+    live = [(r.doc_id, r.text)
+            for r in documents.select("doc_id", "text").collect()
+            if r.doc_id > 2 and r.doc_id % 7 != 3]
+    oracle = build_oracle_index(live)
+    got = ranked(segment_search_local(root, DOC_QUERIES, k=K))
+    for qid, qtext in DOC_QUERIES:
+        want = oracle_search(oracle, qtext, k=K)
+        assert [d for d, _ in got.get(qid, [])] == [d for d, _ in want], qid
 
 
 def test_postings_one_row_per_list(spark, documents, tmp_path):

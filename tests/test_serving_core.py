@@ -22,7 +22,7 @@ from colbert_live_spark.operators.wand import (
     rank_partials, resolve, score_files, wand_search, wand_search_local)
 from colbert_live_spark.oracle import build_oracle_index, oracle_search
 from colbert_live_spark.queryset import DOC_QUERIES
-from conftest import jobs_of
+from conftest import jobs_of, ranked
 
 K = 10
 ATOL = 1e-9
@@ -43,15 +43,6 @@ def sources(spark, sf_dir, documents):
         "tombstoned": (built_deleted_root(spark, sf_dir), segment_search,
                        segment_search_local, live),
     }
-
-
-def _ranked(result) -> dict:
-    if hasattr(result, "toPandas"):
-        result = result.toPandas()
-    out: dict = {}
-    for r in result.sort_values(["query_id", "rank"]).itertuples():
-        out.setdefault(r.query_id, []).append((r.doc_id, r.score))
-    return out
 
 
 def _assert_oracle(got: dict, docs, conjunctive=False, doc_filter=None):
@@ -76,7 +67,7 @@ def test_path_identity(spark, sources, source, executor, mode):
         got = on_spark(spark, path, DOC_QUERIES, k=K, conjunctive=conj)
     else:
         got = local(path, DOC_QUERIES, k=K, conjunctive=conj)
-    _assert_oracle(_ranked(got), docs, conjunctive=conj)
+    _assert_oracle(ranked(got), docs, conjunctive=conj)
 
 
 @pytest.mark.parametrize("executor", ["in_process", "spark"])
@@ -88,7 +79,7 @@ def test_path_identity_doc_filter(spark, sources, documents, executor):
         got = wand_search(spark, path, DOC_QUERIES, k=K, doc_filter=en)
     else:
         got = wand_search_local(path, DOC_QUERIES, k=K, filter_ids=en_ids)
-    _assert_oracle(_ranked(got), docs, doc_filter=en_ids)
+    _assert_oracle(ranked(got), docs, doc_filter=en_ids)
 
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
@@ -101,7 +92,7 @@ def test_file_subsets_merge_to_local_answer(sources, source, mode):
     path, _, local, docs = sources[source]
     conj = mode == "conjunctive"
     want = local(path, DOC_QUERIES, k=K, conjunctive=conj)
-    _assert_oracle(_ranked(want), docs, conjunctive=conj)
+    _assert_oracle(ranked(want), docs, conjunctive=conj)
     plan = resolve(path, DOC_QUERIES)
     files = plan.files
     spans = []
@@ -143,7 +134,7 @@ def test_unpartitioned_tombstones_raise_until_compacted(spark, sources,
     with pytest.raises(ValueError, match="compact"):
         segment_search_local(root, DOC_QUERIES, k=K)
     compact(spark, root, n_shards=4, salt_rows=200)
-    _assert_oracle(_ranked(segment_search_local(root, DOC_QUERIES, k=K)),
+    _assert_oracle(ranked(segment_search_local(root, DOC_QUERIES, k=K)),
                    sources["tombstoned"][3])
 
 
